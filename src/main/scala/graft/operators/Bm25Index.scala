@@ -37,9 +37,8 @@ import org.apache.spark.sql.functions._
   *     ([[ParquetTableStore.appendPartitioned]]) — the previous keyed
   *     merge rewrote the whole doc-sized table per batch, O(corpus
   *     docs) bytes of write amplification per append at scale.
-  *   - `<name>_meta` (n_docs, id_fingerprint): staleness identity,
-  *     same commutative (count, bit_xor(xxhash64(id))) fingerprint as
-  *     the other two indexes.
+  *   - `<name>_meta` (n_docs, id_fingerprint): staleness identity over
+  *     the docs table's ids ([[StoredIndex]]).
   *
   * BM25 statistics are corpus-global (N, avgdl, df), so unlike the
   * other indexes the probe's SCORES shift as the corpus grows — that
@@ -56,55 +55,45 @@ import org.apache.spark.sql.functions._
   * idempotent); a re-delivered id whose TEXT changed would strand
   * postings rows of its removed terms — an upsert cannot delete them —
   * so that case FAILS LOUDLY (an in-place document edit is a rebuild
-  * or a delete + append, not an append). The meta fingerprint is
-  * recomputed from stored doc ids after every append, never folded.
-  * Docs whose text tokenizes to nothing have no postings and are not
-  * indexed — the same population [[Bm25.search]] scores. Segment count
+  * or a delete + append, not an append). Delete, compaction, staleness
+  * and crash ordering are the [[StoredIndex]] protocol. Docs whose
+  * text tokenizes to nothing have no postings and are not indexed —
+  * the same population [[Bm25.search]] scores. Segment count
   * tracks ingest history; compact segments on the lakehouse schedule
   * like any other table (SURVEY §7.4).
   */
 object Bm25Index {
+  import StoredIndex.{table, Family, Side, AsStored, IdRanged}
 
-  /** See [[IvfIndex]] for the (count, bit_xor) rationale. */
-  private def fingerprint(docs: DataFrame, idCol: String): (Long, Long) = {
-    val r = docs.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+  private[operators] val Tables = Family("BM25", "n_docs",
+    Seq(Side("_postings", "seg", AsStored), Side("_docs", "seg", IdRanged)))
 
-  /** (id, term, tf, dl) + (id, dl, text_hash) for one batch. */
-  private def statsOf(docs: DataFrame, idCol: String,
-                      textCol: String): (DataFrame, DataFrame) = {
-    val stats = Checkpoints.materialize(Bm25.docTermStats(docs, idCol, textCol))
+  /** (id, term, tf, dl) — materialized through `keep` — + (id, dl,
+    * text_hash) for one batch. */
+  private def statsOf(keep: DataFrame => DataFrame, docs: DataFrame,
+                      idCol: String, textCol: String): (DataFrame, DataFrame) = {
+    val stats = keep(Bm25.docTermStats(docs, idCol, textCol))
     val docRows = stats.select(col("id"), col("dl")).distinct()
       .join(docs.select(col(idCol).as("id"),
         xxhash64(col(textCol)).as("text_hash")), Seq("id"))
     (stats, docRows)
   }
 
-  private def writeMeta(store: ParquetTableStore, name: String): Unit = {
-    val docs = store.read(s"${name}_docs").getOrElse(
-      sys.error(s"BM25 index '$name' has no docs table"))
-    val (n, h) = fingerprint(docs, "id")
-    store.replace(s"${name}_meta",
-      docs.sparkSession.range(1).select(
-        lit(n).as("n_docs"), lit(h).as("id_fingerprint")))
-  }
-
   /** Tokenize and aggregate the corpus once; materialize the postings
     * (segment 0) and the doc-stats side table. */
   def build(store: ParquetTableStore, name: String, docs: DataFrame,
-            idCol: String, textCol: String): Unit = {
-    val (stats, docRows) = statsOf(docs, idCol, textCol)
-    store.replacePartitioned(s"${name}_postings",
-      stats.withColumn("seg", lit(0L)), Seq("seg"))
-    // id-sorted within write tasks: the append guard's id-span predicate
-    // ([[KeyPrune]]) prunes this table at row-group granularity
-    store.replacePartitioned(s"${name}_docs",
-      docRows.withColumn("seg", lit(0L)).sortWithinPartitions(col("id")),
-      Seq("seg"))
-    writeMeta(store, name)
-    Checkpoints.release(stats)
-  }
+            idCol: String, textCol: String): Unit =
+    StoredIndex.withCheckpoints { keep =>
+      val (stats, docRows) = statsOf(keep, docs, idCol, textCol)
+      store.replacePartitioned(s"${name}_postings",
+        stats.withColumn("seg", lit(0L)), Seq("seg"))
+      // id-sorted within write tasks: the append guard's id-span predicate
+      // ([[KeyPrune]]) prunes this table at row-group granularity
+      store.replacePartitioned(s"${name}_docs",
+        docRows.withColumn("seg", lit(0L)).sortWithinPartitions(col("id")),
+        Seq("seg"))
+      StoredIndex.writeMeta(store, name, Tables)
+    }
 
   /** Extend the index with ingest batch `batchId` (> 0; segment 0 is
     * the build): tokenize ONLY the batch, drop docs already indexed
@@ -114,79 +103,59 @@ object Bm25Index {
   def append(store: ParquetTableStore, name: String, batch: DataFrame,
              idCol: String, textCol: String, batchId: Long): Unit = {
     require(batchId > 0, "batchId 0 is the build segment — use ids > 0")
-    val stored = store.read(s"${name}_docs").getOrElse(
-      sys.error(s"BM25 index '$name' has no docs table — not built?"))
-    val (stats, docRows) = statsOf(batch, idCol, textCol)
-    // doc-sized guard, now also id-span-pruned ([[KeyPrune]]): an
-    // all-new-ids batch skips the stored docs scan via row-group stats
-    val prior = KeyPrune.toKeySpan(stored, "id", docRows, "id")
-      .select(col("id"), col("text_hash").as("old_hash"))
-      .join(broadcast(docRows.select(col("id"), col("text_hash"))), Seq("id"))
-    val changed = prior.filter(col("old_hash") =!= col("text_hash"))
-      .limit(5).collect()
-    if (changed.nonEmpty) sys.error(
-      s"BM25 index '$name': batch re-delivers doc id(s) " +
-        changed.map(_.get(0)).mkString(", ") +
-        " with CHANGED text — an upsert cannot delete the postings of " +
-        "removed terms, so stale rows would keep scoring. Use upsertDocs " +
-        "(delete + append), delete(ids) then re-append, or rebuild.")
-    // already-indexed identical docs: skip (replays and re-sends no-op)
-    val seen = prior.select(col("id"))
-    val newStats = stats.join(broadcast(seen), Seq("id"), "left_anti")
-    val newDocs = docRows.join(broadcast(seen), Seq("id"), "left_anti")
-    if (!newStats.isEmpty) {
-      // postings FIRST (keyed merge within the batch's own segment —
-      // idempotent), doc rows SECOND as APPENDED FILES (new ids only, so
-      // nothing to merge — O(batch) bytes, untouched segments untouched
-      // byte-for-byte): the docs table is the classification side of
-      // `prior`, so writing it last means a crash between the two leaves
-      // the batch still classified as new and the re-run's postings
-      // merge converges without duplicates.
-      store.upsertPartitioned(s"${name}_postings",
-        newStats.withColumn("seg", lit(batchId)), Seq("id", "term"), "seg")
-      store.appendPartitioned(s"${name}_docs",
-        newDocs.withColumn("seg", lit(batchId)).sortWithinPartitions(col("id")),
-        "seg")
+    val stored = table(store, name, "_docs")
+    StoredIndex.withCheckpoints { keep =>
+      val (stats, docRows) = statsOf(keep, batch, idCol, textCol)
+      // doc-sized guard, now also id-span-pruned ([[KeyPrune]]): an
+      // all-new-ids batch skips the stored docs scan via row-group stats
+      val prior = KeyPrune.toKeySpan(stored, "id", docRows, "id")
+        .select(col("id"), col("text_hash").as("old_hash"))
+        .join(broadcast(docRows.select(col("id"), col("text_hash"))), Seq("id"))
+      val changed = prior.filter(col("old_hash") =!= col("text_hash"))
+        .limit(5).collect()
+      if (changed.nonEmpty) sys.error(
+        s"BM25 index '$name': batch re-delivers doc id(s) " +
+          changed.map(_.get(0)).mkString(", ") +
+          " with CHANGED text — an upsert cannot delete the postings of " +
+          "removed terms, so stale rows would keep scoring. Use upsertDocs " +
+          "(delete + append), delete(ids) then re-append, or rebuild.")
+      // already-indexed identical docs: skip (replays and re-sends no-op)
+      val seen = prior.select(col("id"))
+      val newStats = stats.join(broadcast(seen), Seq("id"), "left_anti")
+      val newDocs = docRows.join(broadcast(seen), Seq("id"), "left_anti")
+      if (!newStats.isEmpty) {
+        // postings FIRST (keyed merge within the batch's own segment —
+        // idempotent), doc rows SECOND as APPENDED FILES (new ids only, so
+        // nothing to merge — O(batch) bytes, untouched segments untouched
+        // byte-for-byte): the docs table is the classification side of
+        // `prior`, so writing it last means a crash between the two leaves
+        // the batch still classified as new and the re-run's postings
+        // merge converges without duplicates.
+        store.upsertPartitioned(s"${name}_postings",
+          newStats.withColumn("seg", lit(batchId)), Seq("id", "term"), "seg")
+        store.appendPartitioned(s"${name}_docs",
+          newDocs.withColumn("seg", lit(batchId)).sortWithinPartitions(col("id")),
+          "seg")
+      }
+      // unconditional: converges the meta after a crash between the docs
+      // append and the meta write of a prior run of this same batch
+      StoredIndex.writeMeta(store, name, Tables)
     }
-    // unconditional: converges the meta after a crash between the docs
-    // append and the meta write of a prior run of this same batch
-    writeMeta(store, name)
-    Checkpoints.release(stats)
   }
 
   /** Remove `ids` from the index: postings first (the rows whose stale
     * term contributions are the reason in-place edits are forbidden in
-    * [[append]]), the doc-stats rows second, the meta fingerprint LAST —
-    * a crash anywhere leaves the OLD fingerprint, which no longer matches
-    * the post-delete corpus, so [[verifyFresh]] fails loudly instead of
-    * blessing a half-deleted index; re-running the delete converges
-    * (removing absent ids is a no-op at every layer).
-    *
-    * The postings delete is partition-pruned ([[ParquetTableStore
-    * .deletePartitioned]]): a doc's postings live in the segment(s) that
-    * ingested it, so only those directories are rewritten — O(touched
-    * segments), never O(index). The docs delete takes the store's
-    * row-level MERGE-DELETE path (file-group pruned). BM25 stats are
-    * corpus-global, so scores of the REMAINING docs legitimately shift
-    * after a delete (df/N/avgdl reflect the indexed population — exactly
-    * as [[search]] over the reduced corpus would score). Returns the
-    * number of docs removed. `ids`: one column named `idCol`. */
+    * [[append]]), the doc-stats rows second, the meta last
+    * ([[StoredIndex.delete]]). A doc's postings live in the segment(s)
+    * that ingested it, so only those directories are rewritten —
+    * O(touched segments), never O(index). BM25 stats are corpus-global,
+    * so scores of the REMAINING docs legitimately shift after a delete
+    * (df/N/avgdl reflect the indexed population — exactly as [[search]]
+    * over the reduced corpus would score). Returns the number of docs
+    * removed. `ids`: one column named `idCol`. */
   def delete(store: ParquetTableStore, name: String, ids: DataFrame,
-             idCol: String): Long = {
-    // materialized ONCE before the first rewrite (ADVICE r10): an ids
-    // frame whose plan reads one of this index's own tables would
-    // otherwise lazily re-list files the postings delete already
-    // replaced when the docs delete re-evaluates it — the store's
-    // cross-call contract, enforced here instead of left to callers
-    val key = Checkpoints.materialize(
-      ids.select(col(idCol).as("id")).distinct())
-    try {
-      store.deletePartitioned(s"${name}_postings", key, Seq("id"), "seg")
-      val removed = store.deletePartitioned(s"${name}_docs", key, Seq("id"), "seg")
-      writeMeta(store, name)
-      removed
-    } finally Checkpoints.release(key)
-  }
+             idCol: String): Long =
+    StoredIndex.delete(store, name, Tables, ids, idCol)
 
   /** The in-place document edit recipe, composed: delete the batch's
     * already-indexed ids whose text CHANGED, then [[append]] the batch —
@@ -200,11 +169,9 @@ object Bm25Index {
     * the delete path at all. */
   def upsertDocs(store: ParquetTableStore, name: String, batch: DataFrame,
                  idCol: String, textCol: String, batchId: Long): Unit = {
-    val stored = store.read(s"${name}_docs").getOrElse(
-      sys.error(s"BM25 index '$name' has no docs table — not built?"))
     // id-span-pruned like [[append]]'s guard — change detection reads
     // only the row groups the batch's id span overlaps
-    val changed = KeyPrune.toKeySpan(stored, "id", batch, idCol)
+    val changed = KeyPrune.toKeySpan(table(store, name, "_docs"), "id", batch, idCol)
       .select(col("id"), col("text_hash").as("old_hash"))
       .join(broadcast(batch.select(col(idCol).as("id"),
         xxhash64(col(textCol)).as("new_hash"))), Seq("id"))
@@ -215,46 +182,20 @@ object Bm25Index {
   }
 
   /** Rewrite all ingest segments as ONE segment (seg 0) — the Lucene
-    * background merge: segment count tracks ingest history, not data
-    * size, and scan task counts should track data size. One postings
-    * read + one partitioned publish ([[ParquetTableStore
-    * .replacePartitioned]]'s staged-write + swap, so a crash leaves the
-    * old segments intact); search results are unchanged by construction
-    * (scores never depend on segment boundaries). Returns (segments
-    * before, postings rows). */
-  def compactSegments(store: ParquetTableStore, name: String): (Long, Long) = {
-    val postings = store.read(s"${name}_postings").getOrElse(
-      sys.error(s"BM25 index '$name' has no postings table — not built?"))
-    val segs = postings.select(col("seg")).distinct().count()
-    val rows = postings.count()
-    store.replacePartitioned(s"${name}_postings",
-      postings.drop("seg").withColumn("seg", lit(0L)), Seq("seg"))
-    // the docs side table accumulates one segment dir + files per append
-    // too — same merge, id-range-sorted so the append guard's span
-    // predicate keeps pruning at row-group granularity afterwards
-    val docs = store.read(s"${name}_docs").getOrElse(
-      sys.error(s"BM25 index '$name' has no docs table — not built?"))
-    store.replacePartitioned(s"${name}_docs",
-      docs.drop("seg").withColumn("seg", lit(0L))
-        .repartitionByRange(col("id")).sortWithinPartitions(col("id")),
-      Seq("seg"))
-    (segs, rows)
-  }
+    * background merge ([[StoredIndex.compactSegments]]); the docs table
+    * is id-range-sorted so the append guard's span predicate keeps
+    * pruning at row-group granularity. Search results are unchanged by
+    * construction (scores never depend on segment boundaries). Returns
+    * (segments before, doc rows). */
+  def compactSegments(store: ParquetTableStore, name: String): (Long, Long) =
+    StoredIndex.compactSegments(store, name, Tables)
 
-  /** Fail loudly if `corpus` no longer matches the indexed population
-    * (id-column-only scan; see [[IvfIndex.verifyFresh]]). */
+  /** Fail loudly if `corpus` no longer matches the indexed population — a
+    * stale index scores with wrong df/N and misses unindexed docs
+    * ([[StoredIndex.verifyFresh]]). */
   def verifyFresh(store: ParquetTableStore, name: String,
-                  corpus: DataFrame, idCol: String): Unit = {
-    val meta = store.read(s"${name}_meta").getOrElse(
-      sys.error(s"BM25 index '$name' has no meta table — not built?"))
-      .select("n_docs", "id_fingerprint").head()
-    val (n, h) = fingerprint(corpus, idCol)
-    if (meta.getLong(0) != n || meta.getLong(1) != h) sys.error(
-      s"BM25 index '$name' is STALE: built over ${meta.getLong(0)} docs " +
-        s"(fingerprint ${meta.getLong(1)}) but the corpus now has $n " +
-        s"(fingerprint $h). Append the missing batches or rebuild — a " +
-        "stale index scores with wrong df/N and misses unindexed docs.")
-  }
+                  corpus: DataFrame, idCol: String): Unit =
+    StoredIndex.verifyFresh(store, name, Tables, corpus, idCol)
 
   /** Top-k docs per query from the STORED index — bit-equal to
     * [[Bm25.search]] over the indexed corpus. The postings read
@@ -286,11 +227,8 @@ object Bm25Index {
                                queries: DataFrame,
                                allowed: Option[DataFrame], topK: Int,
                                k1: Double, b: Double): DataFrame = {
-    val postings = store.read(s"${name}_postings").getOrElse(
-      sys.error(s"BM25 index '$name' has no postings table — not built?"))
-    val docs = store.read(s"${name}_docs").getOrElse(
-      sys.error(s"BM25 index '$name' has no docs table — not built?"))
-    val n = docs.agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
+    val postings = table(store, name, "_postings")
+    val n = table(store, name, "_docs").agg(count(lit(1)).as("n_docs"), avg(col("dl")).as("avgdl"))
     val terms = queries.select(col("term")).distinct()
       .collect().map(_.getString(0)).toSeq
     val pruned = postings.filter(col("term").isin(terms: _*))

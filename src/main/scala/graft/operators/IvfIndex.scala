@@ -24,32 +24,17 @@ import graft.functions.Vectors
   *     corpus identity for staleness detection.
   *
   * [[append]] extends the index incrementally under the frozen coarse
-  * quantizer (FAISS's `add` vs `train` split) — build/append/probe/
-  * staleness parity with [[MinHashIndex]], so the two incremental
-  * indexes (fuzzy dedup, ANN) share one ingest protocol.
-  *
-  * Staleness: an index probed against a corpus that has since changed
-  * returns silently wrong neighbors — the classic stale-index failure.
-  * The meta table stores a commutative corpus fingerprint (count +
-  * bit_xor(xxhash64(id)) — order-independent, overflow-free, cheap: an
-  * id-column-only scan); [[verifyFresh]] recomputes it and FAILS LOUDLY
-  * on mismatch.
-  * It is a separate call, not part of [[probe]]: the whole point of
-  * probing is to avoid corpus scans, so the caller decides when to
-  * re-attest (each batch, hourly, after every upsert — policy, not
-  * mechanism).
+  * quantizer (FAISS's `add` vs `train` split). Staleness, crash ordering,
+  * delete and compaction are the [[StoredIndex]] protocol: an index
+  * probed against a corpus that has since changed returns silently wrong
+  * neighbors, so [[verifyFresh]] fails loudly instead.
   */
 object IvfIndex {
+  import StoredIndex.{table, Family, Side, IdRanged}
 
-  /** Commutative corpus fingerprint: (count, bit_xor of id hashes).
-    * XOR is order-independent and never overflows (a plain sum of
-    * xxhash64 values trips ANSI overflow); a removed+added id pair
-    * changes the xor, and the count catches the self-cancelling
-    * duplicate-pair case xor alone would miss. */
-  private[operators] def fingerprint(corpus: DataFrame, idCol: String): (Long, Long) = {
-    val r = corpus.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+  private[operators] val Cells = Side("_cells", "cell", IdRanged)
+  private[operators] val Tables = Family("IVF", "n_vectors", Seq(Cells),
+    carried = Seq("n_cells"))
 
   /** Nearest-cell assignment under a FIXED centroid frame: the max_by
     * hash-aggregate argmax (no window — the r5 finding), one pass over
@@ -82,10 +67,8 @@ object IvfIndex {
     * the IVF trio is written ([[IvfPq.build]] encodes per-cell residuals
     * against these centroids, so it must see the assignment first, and
     * re-training here would double the k-means cost for an identical
-    * result). Write order is the trio's crash contract: the meta
-    * fingerprint lands LAST, so a crash anywhere leaves the previous
-    * fingerprint and [[verifyFresh]] fails loudly. `assigned`:
-    * (id, cell, v) under exactly these `centroids`. */
+    * result). The meta lands last ([[StoredIndex]] crash ordering).
+    * `assigned`: (id, cell, v) under exactly these `centroids`. */
   private[operators] def buildAssigned(store: ParquetTableStore, name: String,
                                        centroids: DataFrame,
                                        assigned: DataFrame,
@@ -108,7 +91,7 @@ object IvfIndex {
     val stored = store.read(s"${name}_cells").get
     store.replace(s"${name}_health",
       stored.groupBy(col("cell")).agg(count(lit(1)).as("n_build")))
-    writeMeta(store, name, nCells)
+    StoredIndex.writeMeta(store, name, Tables, Seq(lit(nCells).as("n_cells")))
   }
 
   /** Index-health drift monitor: PSI between the BUILD-time cell
@@ -136,11 +119,8 @@ object IvfIndex {
     val health = store.read(s"${name}_health").getOrElse(
       sys.error(s"IVF index '$name' has no health table — built before " +
         "occupancy tracking; rebuild once to enable checkHealth."))
-    val cells = store.read(s"${name}_cells").getOrElse(
-      sys.error(s"IVF index '$name' has no cells table — not built?"))
-    val nCells = store.read(s"${name}_meta").getOrElse(
-      sys.error(s"IVF index '$name' has no meta table — not built?"))
-      .select("n_cells").head().getInt(0)
+    val cells = table(store, name, "_cells")
+    val nCells = table(store, name, "_meta").select("n_cells").head().getInt(0)
     val spark = cells.sparkSession
     val grid = spark.range(nCells).select(col("id").cast("int").as("cell"))
     val cur = cells.groupBy(col("cell")).agg(count(lit(1)).as("n_cur"))
@@ -161,23 +141,6 @@ object IvfIndex {
         first(col("_tb")).as("n_build"), first(col("_tc")).as("n_current"))
       .select(col("psi"), col("n_build"), col("n_current"),
         (col("psi") > threshold).as("retrain"))
-  }
-
-  /** Recompute the meta fingerprint from the STORED cells table's id
-    * column (an id-only columnar scan — `cell` is a partition column, so
-    * no vector bytes are read). Recomputed, never folded: the
-    * fingerprint can then never drift from the actual index contents
-    * under an append replay — the same rule as
-    * [[MinHashIndex.append]]. */
-  private def writeMeta(store: ParquetTableStore, name: String,
-                        nCells: Int): Unit = {
-    val cells = store.read(s"${name}_cells").getOrElse(
-      sys.error(s"IVF index '$name' has no cells table"))
-    val (n, h) = fingerprint(cells, "id")
-    store.replace(s"${name}_meta",
-      cells.sparkSession.range(1).select(
-        lit(n).as("n_vectors"), lit(h).as("id_fingerprint"),
-        lit(nCells).as("n_cells")))
   }
 
   /** Extend the STORED index with an ingested batch under the FROZEN
@@ -203,46 +166,33 @@ object IvfIndex {
     *   - present, vector changed, DIFFERENT cell → FAILS LOUDLY (a
     *     cell-local write cannot move a row across partitions; the
     *     stale row would keep answering probes). Use [[upsertVectors]].
-    * The meta fingerprint is recomputed from stored ids LAST, so a crash
-    * anywhere leaves the old fingerprint and [[verifyFresh]] fails
-    * loudly; re-running converges (committed ids classify as identical
-    * re-sends). Appended files accumulate per batch — see
+    * Re-running after a crash converges (committed ids classify as
+    * identical re-sends). Appended files accumulate per batch — see
     * [[compactCells]] and the [[IndexMaintenance]] policy. */
   def append(store: ParquetTableStore, name: String, batch: DataFrame,
-             idCol: String, vecCol: String): Unit = {
-    val centroids = store.read(s"${name}_centroids").getOrElse(
-      sys.error(s"IVF index '$name' has no centroids table — not built?"))
-    val stored = store.read(s"${name}_cells").getOrElse(
-      sys.error(s"IVF index '$name' has no cells table — not built?"))
-    // batch-internal dedup BEFORE classification: the append-files fresh
-    // path writes rows verbatim (no keyed merge collapses them any more),
-    // so a batch carrying one id twice would index it twice. Identical
-    // duplicate rows collapse; one id with two DIFFERENT vectors is
-    // ambiguous intent and fails loudly like a moved-cell re-delivery.
-    val rows = Checkpoints.materialize(
-      batch.select(col(idCol).as("id"), col(vecCol).as("v")).distinct())
-    val conflicted = rows.groupBy(col("id")).count()
-      .filter(col("count") > 1).select(col("id")).limit(5).collect()
-    if (conflicted.nonEmpty) {
-      Checkpoints.release(rows)
-      sys.error(s"IVF index '$name': batch carries id(s) " +
-        conflicted.map(_.get(0)).mkString(", ") +
-        " more than once with DIFFERENT vectors — one id, one vector " +
-        "per batch; dedup upstream or split the batch.")
-    }
-    val assigned = Checkpoints.materialize(assignToCells(rows, centroids))
-    Checkpoints.release(rows)
-    val storedSpan = KeyPrune.toKeySpan(stored, "id", assigned, "id")
-      .select(col("id"), col("cell").as("_oc"), col("v").as("_ov"))
-    val annotated = Checkpoints.materialize(
-      assigned.join(storedSpan, Seq("id"), "left"))
-    val moved = annotated
-      .filter(col("_oc").isNotNull && col("_oc") =!= col("cell"))
-      .select(col("id"), col("_oc"), col("cell"))
-      .limit(5).collect()
-    if (moved.nonEmpty) {
-      Checkpoints.release(assigned); Checkpoints.release(annotated)
-      sys.error(
+             idCol: String, vecCol: String): Unit =
+    appendThen(store, name, batch, idCol, vecCol)(())
+
+  /** [[append]], running `beforeWrites` once every guard has passed and
+    * before the first cells write: the compressed families write their
+    * codes there, so a rejected batch writes nothing at all. */
+  private[operators] def appendThen(store: ParquetTableStore, name: String,
+                                    batch: DataFrame, idCol: String,
+                                    vecCol: String)(beforeWrites: => Unit): Unit =
+    StoredIndex.withCheckpoints { keep =>
+      val centroids = table(store, name, "_centroids")
+      val stored = table(store, name, "_cells")
+      val rows = StoredIndex.distinctPerId(keep,
+        batch.select(col(idCol).as("id"), col(vecCol).as("v")), Tables, name, "vectors")
+      val assigned = keep(assignToCells(rows, centroids))
+      val storedSpan = KeyPrune.toKeySpan(stored, "id", assigned, "id")
+        .select(col("id"), col("cell").as("_oc"), col("v").as("_ov"))
+      val annotated = keep(assigned.join(storedSpan, Seq("id"), "left"))
+      val moved = annotated
+        .filter(col("_oc").isNotNull && col("_oc") =!= col("cell"))
+        .select(col("id"), col("_oc"), col("cell"))
+        .limit(5).collect()
+      if (moved.nonEmpty) sys.error(
         s"IVF index '$name': batch re-delivers id(s) " +
           moved.map(r => s"${r.get(0)} (cell ${r.get(1)} -> ${r.get(2)})")
             .mkString(", ") +
@@ -250,25 +200,19 @@ object IvfIndex {
           "cell-local append cannot move rows across cells (the stale " +
           "row would keep answering probes). Rebuild the index, or delete " +
           "the ids first.")
+      beforeWrites
+      val changed = annotated
+        .filter(col("_oc").isNotNull && !(col("_ov") <=> col("v")))
+        .select(col("id"), col("cell"), col("v"))
+      if (!changed.isEmpty)
+        store.upsertPartitioned(s"${name}_cells", changed, Seq("id"), "cell")
+      val fresh = annotated.filter(col("_oc").isNull)
+        .select(col("id"), col("cell"), col("v"))
+      if (!fresh.isEmpty)
+        store.appendPartitioned(s"${name}_cells",
+          fresh.sortWithinPartitions(col("id")), "cell")
+      StoredIndex.writeMeta(store, name, Tables)
     }
-    val nCells = store.read(s"${name}_meta").getOrElse(
-      sys.error(s"IVF index '$name' has no meta table — not built?"))
-      .select("n_cells").head().getInt(0)
-    val changed = annotated
-      .filter(col("_oc").isNotNull && !(col("_ov") <=> col("v")))
-      .select(col("id"), col("cell"), col("v"))
-    if (!changed.isEmpty)
-      store.upsertPartitioned(s"${name}_cells", changed, Seq("id"), "cell",
-        countAfter = false)
-    val fresh = annotated.filter(col("_oc").isNull)
-      .select(col("id"), col("cell"), col("v"))
-    if (!fresh.isEmpty)
-      store.appendPartitioned(s"${name}_cells",
-        fresh.sortWithinPartitions(col("id")), "cell")
-    writeMeta(store, name, nCells)
-    Checkpoints.release(assigned)
-    Checkpoints.release(annotated)
-  }
 
   /** Rewrite the cells table down to a bounded number of id-range-sorted
     * files and swap — [[append]] adds files per ingest batch, so file
@@ -277,24 +221,9 @@ object IvfIndex {
     * directory layout moves). `repartitionByRange(cell, id)` keeps hot
     * cells split across several contiguous-id files (no one-task-per-
     * cell skew) with tight row-group id stats for the guards' span
-    * pruning. Returns (parquet files before, rows). The background-merge
-    * sibling of [[Bm25Index.compactSegments]] /
-    * [[IvfSq.compactCodeSegments]], run on the [[IndexMaintenance]]
-    * schedule. */
-  def compactCells(store: ParquetTableStore, name: String): (Long, Long) = {
-    val cells = store.read(s"${name}_cells").getOrElse(
-      sys.error(s"IVF index '$name' has no cells table — not built?"))
-    val files = cells.inputFiles.length.toLong
-    val rows = cells.count()
-    // range partitioning places rows, sortWithinPartitions ORDERS them —
-    // without the sort each row group spans its file's whole id range
-    // and the guards' span pruning degrades to file granularity (the
-    // compactCodeSegments lesson applies here too)
-    store.replacePartitioned(s"${name}_cells",
-      cells.repartitionByRange(col("cell"), col("id"))
-        .sortWithinPartitions(col("cell"), col("id")), Seq("cell"))
-    (files, rows)
-  }
+    * pruning. Returns (parquet files before, rows). */
+  def compactCells(store: ParquetTableStore, name: String): (Long, Long) =
+    StoredIndex.compactFiles(store, name, Cells)
 
   /** In-place vector update recipe, composed ([[Bm25Index.upsertDocs]]'s
     * analogue for the ANN family): delete the already-indexed ids the
@@ -322,82 +251,60 @@ object IvfIndex {
   private[operators] def movedIds(store: ParquetTableStore, name: String,
                                   batch: DataFrame, idCol: String,
                                   vecCol: String): DataFrame = {
-    val centroids = store.read(s"${name}_centroids").getOrElse(
-      sys.error(s"IVF index '$name' has no centroids table — not built?"))
-    val stored = store.read(s"${name}_cells").getOrElse(
-      sys.error(s"IVF index '$name' has no cells table — not built?"))
     val assigned = assignToCells(
-      batch.select(col(idCol).as("id"), col(vecCol).as("v")), centroids)
+      batch.select(col(idCol).as("id"), col(vecCol).as("v")),
+      table(store, name, "_centroids"))
     // span from the raw batch ids (no assignment pass needed for it);
     // the stored cells scan prunes to the batch's id span — see KeyPrune
-    KeyPrune.toKeySpan(stored, "id", batch, idCol)
+    KeyPrune.toKeySpan(table(store, name, "_cells"), "id", batch, idCol)
       .select(col("id"), col("cell").as("_old_cell"))
       .join(broadcast(assigned.select(col("id"), col("cell"))), Seq("id"))
       .filter(col("_old_cell") =!= col("cell"))
       .select(col("id"))
   }
 
-  /** Remove `ids` from the index: the cells delete is partition-pruned
-    * ([[ParquetTableStore.deletePartitioned]] — only the cell directories
-    * holding the ids are rewritten; a cell emptied entirely is dropped),
-    * and the meta fingerprint is recomputed LAST, so a crash anywhere
-    * leaves the OLD fingerprint ≠ the post-delete corpus and
-    * [[verifyFresh]] fails loudly; re-running the delete converges
-    * (absent ids are a no-op). The coarse quantizer is untouched — cell
-    * REGIONS are defined by the centroids, not by membership, so probes
-    * of the surviving corpus remain exactly the probes a fresh build over
-    * it (same centroids) would answer. Returns vectors removed.
-    * `ids`: one column named `idCol`. */
+  /** Remove `ids` from the index ([[StoredIndex.delete]]: only the cell
+    * directories holding the ids are rewritten; a cell emptied entirely
+    * is dropped). The coarse quantizer is untouched — cell REGIONS are
+    * defined by the centroids, not by membership, so probes of the
+    * surviving corpus remain exactly the probes a fresh build over it
+    * (same centroids) would answer. Returns vectors removed. `ids`: one
+    * column named `idCol`. */
   def delete(store: ParquetTableStore, name: String, ids: DataFrame,
-             idCol: String): Long = {
-    val key = ids.select(col(idCol).as("id")).distinct()
-    val nCells = store.read(s"${name}_meta").getOrElse(
-      sys.error(s"IVF index '$name' has no meta table — not built?"))
-      .select("n_cells").head().getInt(0)
-    val removed = store.deletePartitioned(s"${name}_cells", key, Seq("id"), "cell")
-    writeMeta(store, name, nCells)
-    removed
-  }
+             idCol: String): Long =
+    StoredIndex.delete(store, name, Tables, ids, idCol)
 
   /** Fail loudly if `corpus` no longer matches the fingerprint the index
-    * was built from (an id-column-only scan — cheap relative to any
-    * re-assignment, and the only way to make staleness a crash instead
-    * of silently wrong neighbors). */
+    * was built from — see [[StoredIndex.verifyFresh]]. */
   def verifyFresh(store: ParquetTableStore, name: String,
-                  corpus: DataFrame, idCol: String): Unit = {
-    val meta = store.read(s"${name}_meta").getOrElse(
-      sys.error(s"IVF index '$name' has no meta table — not built?"))
-      .select("n_vectors", "id_fingerprint").head()
-    val (n, h) = fingerprint(corpus, idCol)
-    if (meta.getLong(0) != n || meta.getLong(1) != h) sys.error(
-      s"IVF index '$name' is STALE: built over ${meta.getLong(0)} vectors " +
-        s"(fingerprint ${meta.getLong(1)}) but the corpus now has $n " +
-        s"(fingerprint $h). Rebuild the index before probing — probing a " +
-        "stale index returns silently wrong neighbors.")
-  }
+                  corpus: DataFrame, idCol: String): Unit =
+    StoredIndex.verifyFresh(store, name, Tables, corpus, idCol)
 
-  /** (query_id, qv, id, v): the members of each query's nProbe best
+  /** (query_id, qv, id, v, cell): the members of each query's nProbe best
     * cells — the partition-pruned candidate pool, shared by the float
-    * probe ([[probe]]) and the compressed probe ([[IvfPq.probe]]).
+    * probe ([[probe]]) and the compressed probes ([[IvfSq.probe]],
+    * [[IvfPq.probe]]).
     * Queries assign against the broadcast centroid frame, the cells
     * table is read WITH a cell filter (partition-pruned at the file
-    * level), and no pass over the full corpus happens anywhere. The
-    * RETURNED frame is materialized by default — multi-consumer callers
-    * (IvfPq reads it for the candidate list AND the refine join) do not
-    * re-run the pruned read or the member join per consumer.
-    * `materialized = false` returns the lazy plan instead (single-
-    * consumer paths and plan-shape assertions). */
+    * level), and no pass over the full corpus happens anywhere. With
+    * `allowed` (any frame carrying `idCol`) the pool holds only the
+    * allowed ids — the filtered-search restriction lands on the pool,
+    * upstream of any scoring or shortlist cut. The RETURNED frame is
+    * materialized by default — multi-consumer callers (IvfPq reads it
+    * for the candidate list AND the refine join) do not re-run the
+    * pruned read or the member join per consumer. `materialized = false`
+    * returns the lazy plan instead (single-consumer paths and plan-shape
+    * assertions). */
   private[operators] def probeMembers(store: ParquetTableStore, name: String,
                                       queries: DataFrame, idCol: String,
                                       vecCol: String, nProbe: Int,
-                                      materialized: Boolean = true): DataFrame = {
-    val centroids = store.read(s"${name}_centroids").getOrElse(
-      sys.error(s"IVF index '$name' has no centroids table — not built?"))
+                                      materialized: Boolean = true,
+                                      allowed: Option[DataFrame] = None): DataFrame = {
+    val centroids = table(store, name, "_centroids")
     // through store.read, NOT a raw parquet read: read() runs the
     // mid-swap backup recovery, so a build crashed inside the cells
     // swap window is restored instead of failing every probe forever
-    val cells = store.read(s"${name}_cells").getOrElse(
-      sys.error(s"IVF index '$name' has no cells table — not built?"))
+    val cells = table(store, name, "_cells")
     // materialized: the assignment subplan (queries × centroids dots +
     // TopK aggregate) feeds BOTH the probed-cells collect and the member
     // join — without the checkpoint each consumer re-runs it as its own
@@ -423,10 +330,12 @@ object IvfIndex {
     // `cell` rides along for the residual-ADC consumer ([[IvfPq.probe]]
     // builds one LUT per (query, probed cell) — the residual encoding is
     // relative to the member's cell centroid); float/SQ probes ignore it
-    val pool = cells.filter(col("cell").isin(probedCells.toSeq: _*))
+    val all = cells.filter(col("cell").isin(probedCells.toSeq: _*))
       .join(broadcast(qAssigned), Seq("cell"))
       .filter(col("id") =!= col("query_id"))
       .select(col("query_id"), col("qv"), col("id"), col("v"), col("cell"))
+    val pool = allowed.fold(all)(a =>
+      all.join(a.select(col(idCol).as("id")).distinct(), Seq("id"), "left_semi"))
     if (materialized) Checkpoints.materialize(pool) else pool
   }
 
@@ -435,14 +344,8 @@ object IvfIndex {
     * pool with exact dot products and takes top-k. */
   def probe(store: ParquetTableStore, name: String, queries: DataFrame,
             idCol: String, vecCol: String, topK: Int,
-            nProbe: Int = 4): DataFrame = {
-    // single consumer of the pool → lazy (no materialization job)
-    val scored = probeMembers(store, name, queries, idCol, vecCol, nProbe,
-        materialized = false)
-      .select(col("query_id"), col("id").as("neighbor_id"),
-        Vectors.dotNative(col("qv"), col("v")).as("score"))
-    Similarity.takeTopK(scored, topK)
-  }
+            nProbe: Int = 4): DataFrame =
+    probeRestricted(store, name, queries, idCol, vecCol, None, topK, nProbe)
 
   /** FILTERED top-k — the metadata-predicate search every vector store
     * serves (FAISS's `IDSelector`, the vector-DB "filtered search"):
@@ -463,13 +366,28 @@ object IvfIndex {
   def probeFiltered(store: ParquetTableStore, name: String,
                     queries: DataFrame, idCol: String, vecCol: String,
                     allowed: DataFrame, topK: Int,
-                    nProbe: Int = 4): DataFrame = {
-    val scored = probeMembers(store, name, queries, idCol, vecCol, nProbe,
-        materialized = false)
-      .join(allowed.select(col(idCol).as("id")).distinct(),
-        Seq("id"), "left_semi")
+                    nProbe: Int = 4): DataFrame =
+    probeRestricted(store, name, queries, idCol, vecCol, Some(allowed), topK,
+      nProbe)
+
+  /** Exact top-k of a compressed probe's (query_id, neighbor_id)
+    * shortlist: dot products against the probed cells' stored vectors in
+    * `members` ([[probeMembers]]) — never the raw corpus. */
+  private[operators] def refine(shortlist: DataFrame, members: DataFrame,
+                                topK: Int): DataFrame =
+    Similarity.takeTopK(shortlist
+      .join(members.select(col("query_id"), col("id").as("neighbor_id"),
+        col("v"), col("qv")), Seq("query_id", "neighbor_id"))
+      .select(col("query_id"), col("neighbor_id"),
+        Vectors.dotNative(col("qv"), col("v")).as("score")), topK)
+
+  // single consumer of the pool → lazy (no materialization job)
+  private def probeRestricted(store: ParquetTableStore, name: String,
+                              queries: DataFrame, idCol: String,
+                              vecCol: String, allowed: Option[DataFrame],
+                              topK: Int, nProbe: Int): DataFrame =
+    Similarity.takeTopK(probeMembers(store, name, queries, idCol, vecCol,
+        nProbe, materialized = false, allowed)
       .select(col("query_id"), col("id").as("neighbor_id"),
-        Vectors.dotNative(col("qv"), col("v")).as("score"))
-    Similarity.takeTopK(scored, topK)
-  }
+        Vectors.dotNative(col("qv"), col("v")).as("score")), topK)
 }

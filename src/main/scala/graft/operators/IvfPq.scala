@@ -1,8 +1,7 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.Vectors
 
 /** IVF-ADC: the FAISS `IndexIVFPQ + refine` pipeline composed from this
   * repo's two halves — [[IvfIndex]] supplies the coarse quantizer,
@@ -47,9 +46,10 @@ import graft.functions.Vectors
   * centroids), `<name>_pq_anchors` (cell, anchor — the frozen
   * per-cell reconstruction points) and `<name>_pq_codes` (id, codes —
   * residual codes relative to the id's cell, which the cells table,
-  * not the codes table, records). [[IvfIndex.verifyFresh]] covers
-  * staleness for the whole family (all six tables are built from the
-  * same corpus in the same call).
+  * not the codes table, records). The codes table comes first in
+  * [[StoredIndex]] crash order, the IVF tables and meta after it;
+  * [[verifyFresh]] covers staleness for the whole family plus the
+  * codes≡cells id parity.
   *
   * SIZING `shortlist` (measured, r13 100× smoke): the ADC estimate has
   * a quantization noise floor, and the shortlist stage can only order
@@ -66,6 +66,11 @@ import graft.functions.Vectors
   * measured at the 32/64-bit operating points, NOTES_r13).
   */
 object IvfPq {
+  import StoredIndex.{table, Family, Side, IdSorted}
+
+  private[operators] val Tables = Family("IVF-PQ", "n_vectors",
+    Seq(Side("_pq_codes", "seg", IdSorted, onePerId = true), IvfIndex.Cells),
+    carried = Seq("n_cells"))
 
   /** (cell, anchor): the frozen per-cell reconstruction points — each
     * cell's member MEAN at build time (see the object doc for why the
@@ -102,30 +107,23 @@ object IvfPq {
     * under the frozen codebook. Returns (id, codes). */
   private def encodeResiduals(store: ParquetTableStore, name: String,
                               batch: DataFrame, idCol: String, vecCol: String,
-                              dim: Int, codebook: DataFrame, m: Int): DataFrame = {
-    val centroids = store.read(s"${name}_centroids").getOrElse(
-      sys.error(s"IVF-PQ index '$name' has no centroids table — not built?"))
-    val anchors = store.read(s"${name}_pq_anchors").getOrElse(
-      sys.error(s"IVF-PQ index '$name' has no anchors table — not built?"))
+                              dim: Int, m: Int): DataFrame = {
+    val codebook = table(store, name, "_pq_codebook")
     val assigned = IvfIndex.assignToCells(
-      batch.select(col(idCol).as("id"), col(vecCol).as("v")), centroids)
-    ProductQuantizer.encode(residuals(assigned, anchors), "id", "rv", dim,
-      codebook, m)
+      batch.select(col(idCol).as("id"), col(vecCol).as("v")),
+      table(store, name, "_centroids"))
+    ProductQuantizer.encode(residuals(assigned, table(store, name, "_pq_anchors")),
+      "id", "rv", dim, codebook, m)
   }
 
   def build(store: ParquetTableStore, name: String, corpus: DataFrame,
             idCol: String, vecCol: String, dim: Int, nCells: Int = 16,
             m: Int = 8, ksub: Int = 16, iterations: Int = 5): Unit = {
     // The coarse quantizer trains FIRST — residual encoding needs the
-    // final centroids before any PQ work — but the IVF trio is still
-    // WRITTEN last ([[IvfIndex.buildAssigned]]): the freshness
-    // fingerprint lands at the END of the trio write, so a crash
-    // anywhere in this sequence leaves the PREVIOUS fingerprint in
-    // place and verifyFresh fails loudly against the new corpus. The
-    // reverse order would bless a fresh IVF trio sitting next to STALE
-    // pq tables — probe would silently drop ids that have no code row.
-    // The assignment is computed once and shared by the residual encode
-    // and the cells write (materialized: three consumers).
+    // final centroids before any PQ work — but the IVF tables are still
+    // WRITTEN last ([[IvfIndex.buildAssigned]]), in [[StoredIndex]] crash
+    // order. The assignment is computed once and shared by the residual
+    // encode and the cells write (materialized: three consumers).
     val centroids = Similarity.trainIvfCentroids(
       corpus, idCol, vecCol, nCells, iterations)
     val assigned = Checkpoints.materialize(IvfIndex.assignToCells(
@@ -151,113 +149,46 @@ object IvfPq {
   /** Extend the stored IVF-PQ index with an ingest batch under the
     * FROZEN codebook — FAISS's `add` vs `train` split applied to BOTH
     * quantizers: the batch encodes against the stored PQ codebook (no
-    * retrain) and assigns against the stored coarse centroids
-    * ([[IvfIndex.append]]). Codes land in the batch's OWN segment
-    * partition (`seg` = `batchId`; replays re-use it; already-indexed
-    * ids are skipped by an id-column anti-join, so re-sends cannot
-    * duplicate code rows), and the cells append runs LAST — its final
-    * step rewrites the freshness fingerprint, preserving the build's
-    * crash-order argument: a crash anywhere leaves the OLD fingerprint
-    * and verifyFresh fails loudly. */
+    * retrain) and assigns against the stored coarse centroids, then
+    * appends through [[StoredIndex.appendCoded]] (every guard before any
+    * write; codes into the batch's OWN segment `seg` = `batchId`, replays
+    * re-use it; the cells append and the meta come last). */
   def append(store: ParquetTableStore, name: String, batch: DataFrame,
              idCol: String, vecCol: String, dim: Int, batchId: Long,
-             m: Int = 8): Unit = {
-    require(batchId > 0, "batchId 0 is the build segment — use ids > 0")
-    val codebook = store.read(s"${name}_pq_codebook").getOrElse(
-      sys.error(s"IVF-PQ index '$name' has no codebook — not built?"))
-    val stored = store.read(s"${name}_pq_codes").getOrElse(
-      sys.error(s"IVF-PQ index '$name' has no codes table — not built?"))
-    val freshAll = encodeResiduals(store, name, batch, idCol, vecCol, dim,
-      codebook, m)
-    // Changed-CODE guard — see IvfSq.append: a same-cell vector edit
-    // slips past the moved-cell guard and the new-id filter would keep
-    // its stale PQ codes steering the ADC shortlist. Code-invisible
-    // changes are harmless (same codes = same ADC scores; refine reads
-    // the updated stored vectors). Cost shape mirrors IvfSq.append's:
-    // id-span-pruned stored side, one materialized batch-sized left
-    // join feeding both the guard and the new-id filter — O(batch), not
-    // O(corpus-codes).
-    val storedSpan = KeyPrune.toKeySpan(stored, "id", batch, idCol)
-      .select(col("id"), col("codes").as("_oc"))
-    val annotated = Checkpoints.materialize(
-      freshAll.join(storedSpan, Seq("id"), "left"))
-    val changed = annotated
-      .filter(col("_oc").isNotNull && col("_oc") =!= col("codes"))
-      .limit(5).collect()
-    if (changed.nonEmpty) {
-      Checkpoints.release(annotated)
-      sys.error(
-        s"IVF-PQ index '$name': batch re-delivers id(s) " +
-          changed.map(_.get(0)).mkString(", ") +
-          " with a CHANGED vector that encodes to different codes — an " +
-          "id-keyed append cannot update them (stale codes would keep " +
-          "steering the ADC shortlist). Use upsertVectors (delete + " +
-          "append), delete the ids first, or rebuild.")
-    }
-    val fresh = annotated.filter(col("_oc").isNull).drop("_oc")
-    if (!fresh.isEmpty)
-      store.upsertPartitioned(s"${name}_pq_codes",
-        fresh.withColumn("seg", lit(batchId)).sortWithinPartitions(col("id")),
-        Seq("id"), "seg", countAfter = false)
-    IvfIndex.append(store, name, batch, idCol, vecCol)
-    Checkpoints.release(annotated)
-  }
+             m: Int = 8): Unit =
+    StoredIndex.appendCoded(store, name, Tables,
+      encodeResiduals(store, name, batch, idCol, vecCol, dim, m),
+      batch, idCol, vecCol, batchId)
 
   /** In-place vector update recipe for the PQ variant — delete the ids
     * whose re-delivered vector encodes differently OR moves cells, then
-    * append; see [[IvfSq.upsertVectors]] for why the union. Replays
-    * no-op. */
+    * append ([[StoredIndex.upsertCoded]]). Replays no-op. */
   def upsertVectors(store: ParquetTableStore, name: String, batch: DataFrame,
                     idCol: String, vecCol: String, dim: Int, batchId: Long,
-                    m: Int = 8): Unit = {
-    val codebook = store.read(s"${name}_pq_codebook").getOrElse(
-      sys.error(s"IVF-PQ index '$name' has no codebook — not built?"))
-    val stored = store.read(s"${name}_pq_codes").getOrElse(
-      sys.error(s"IVF-PQ index '$name' has no codes table — not built?"))
-    val freshAll = encodeResiduals(store, name, batch, idCol, vecCol, dim,
-      codebook, m)
-    // id-span-pruned like [[append]]'s guard — see IvfSq.upsertVectors
-    val changedCodes = KeyPrune.toKeySpan(stored, "id", batch, idCol)
-      .select(col("id"), col("codes").as("_oc"))
-      .join(broadcast(freshAll), Seq("id"))
-      .filter(col("_oc") =!= col("codes"))
-      .select(col("id"))
-    // materialized — the doomed plan reads the codes table delete()
-    // rewrites; see IvfSq.upsertVectors
-    val doomed = Checkpoints.materialize(changedCodes
-      .unionByName(IvfIndex.movedIds(store, name, batch, idCol, vecCol))
-      .distinct())
-    if (!doomed.isEmpty) delete(store, name, doomed, "id")
-    append(store, name, batch, idCol, vecCol, dim, batchId, m)
-    Checkpoints.release(doomed)
-  }
+                    m: Int = 8): Unit =
+    StoredIndex.upsertCoded(store, name, Tables,
+      encodeResiduals(store, name, batch, idCol, vecCol, dim, m),
+      batch, idCol, vecCol, batchId)
 
-  /** Remove `ids` from the IVF-PQ index: codes first (partition-pruned
-    * to the holding segments), cells + fingerprint LAST ([[IvfIndex
-    * .delete]]) — the same fingerprint-last crash ordering as
-    * [[IvfSq.delete]]; the codebook is untouched (it quantizes REGIONS,
-    * not members, exactly like the coarse centroids). Returns vectors
-    * removed. */
+  /** Remove `ids` from the IVF-PQ index: codes, cells, then the meta
+    * ([[StoredIndex.delete]]); the codebook is untouched (it quantizes
+    * REGIONS, not members, exactly like the coarse centroids). Returns
+    * vectors removed. */
   def delete(store: ParquetTableStore, name: String, ids: DataFrame,
              idCol: String): Long =
-    IvfSq.deleteWithCodes(store, name, "_pq_codes", ids, idCol)
+    StoredIndex.delete(store, name, Tables, ids, idCol)
 
-  /** [[IvfIndex.verifyFresh]] plus the codes≡cells id-population parity
-    * attest — see [[IvfSq.verifyFresh]] for the failure modes this
-    * catches (orphaned codes after a crashed delete, missing codes after
-    * a crashed append). */
+  /** [[IvfIndex.verifyFresh]] plus the codes≡cells id-population attest —
+    * see [[StoredIndex.verifyFresh]]. */
   def verifyFresh(store: ParquetTableStore, name: String,
-                  corpus: DataFrame, idCol: String): Unit = {
-    IvfIndex.verifyFresh(store, name, corpus, idCol)
-    IvfSq.codesCellsParity(store, name, "_pq_codes", "IVF-PQ")
-  }
+                  corpus: DataFrame, idCol: String): Unit =
+    StoredIndex.verifyFresh(store, name, Tables, corpus, idCol)
 
   /** Rewrite all PQ code segments as ONE segment (seg 0) — the same
-    * staged-swap compaction as [[IvfSq.compactCodeSegments]]; probe
-    * results unchanged, appends continue after. Returns (segments
+    * compaction as [[IvfSq.compactCodeSegments]]. Returns (segments
     * before, code rows). */
   def compactCodeSegments(store: ParquetTableStore, name: String): (Long, Long) =
-    IvfSq.compactCodes(store, name, "_pq_codes", "IVF-PQ")
+    StoredIndex.compactSegments(store, name, Tables)
 
   /** Top-k via coarse probe → compressed residual-ADC scan → bounded
     * exact refine. Output: (query_id, rank, neighbor_id, score·4dp),
@@ -293,12 +224,9 @@ object IvfPq {
                               vecCol: String, allowed: Option[DataFrame],
                               dim: Int, topK: Int, m: Int, ksub: Int,
                               nProbe: Int, shortlist: Int): DataFrame = {
-    val codebook = store.read(s"${name}_pq_codebook").getOrElse(
-      sys.error(s"IVF-PQ index '$name' has no codebook — not built?"))
-    val codes = store.read(s"${name}_pq_codes").getOrElse(
-      sys.error(s"IVF-PQ index '$name' has no codes table — not built?"))
-    val anchors = store.read(s"${name}_pq_anchors").getOrElse(
-      sys.error(s"IVF-PQ index '$name' has no anchors table — not built?"))
+    val codebook = table(store, name, "_pq_codebook")
+    val codes = table(store, name, "_pq_codes")
+    val anchors = table(store, name, "_pq_anchors")
     // members of the probed cells only: (query_id, qv, id, v, cell) —
     // the cells read is partition-pruned exactly as IvfIndex.probe's;
     // probeMembers returns a materialized frame, consumed here by the
@@ -307,13 +235,8 @@ object IvfPq {
     // shortlist); a (query, cell) pair left with no allowed members
     // drops out of the LUT frame too — candCodes derives from the same
     // restricted pool, so the two stay consistent.
-    val membersAll =
-      IvfIndex.probeMembers(store, name, queries, idCol, vecCol, nProbe)
-    val members = allowed match {
-      case Some(a) => membersAll.join(
-        a.select(col(idCol).as("id")).distinct(), Seq("id"), "left_semi")
-      case None => membersAll
-    }
+    val members = IvfIndex.probeMembers(store, name, queries, idCol, vecCol,
+      nProbe, allowed = allowed)
     // ADC over the members' codes: candidates restricted BEFORE scoring.
     // The member's CELL rides along — residual codes only mean anything
     // relative to their cell's centroid, so the LUT key is (query, cell).
@@ -332,13 +255,6 @@ object IvfPq {
     val adcShort = ProductQuantizer.adcShortlist(
       qResiduals, candCodes, codebook, dim, m, ksub, shortlist,
       lutKeys = Seq("query_id", "cell"))
-    // exact refine against the probed cells' stored vectors — never the
-    // raw corpus
-    val rescored = adcShort
-      .join(members.select(col("query_id"), col("id").as("neighbor_id"),
-        col("v"), col("qv")), Seq("query_id", "neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Vectors.dotNative(col("qv"), col("v")).as("score"))
-    Similarity.takeTopK(rescored, topK)
+    IvfIndex.refine(adcShort, members, topK)
   }
 }

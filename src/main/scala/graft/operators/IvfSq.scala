@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import graft.functions.Vectors
 
 /** IVF + SQ8: the partition-pruned probe of [[IvfIndex]] over the
   * 4×-compressed integer codes of [[ScalarQuantizer]] — FAISS's
@@ -12,15 +11,16 @@ import graft.functions.Vectors
   * centroids, ONLY the probed cells' partition dirs, the int8 codes of
   * those cells' members (integer dots, one rescale), and full vectors
   * for just the shortlist (bounded exact refine). No training beyond
-  * the coarse quantizer — the SQ codes are deterministic, so staleness
-  * and crash-ordering concerns reduce to [[IvfIndex]]'s own.
-  *
-  * Build order matters for crash atomicity, same argument as
-  * [[IvfPq.build]]: codes first, the IVF trio (whose LAST step writes
-  * the freshness fingerprint) second — a crash anywhere leaves the OLD
-  * fingerprint, and [[IvfIndex.verifyFresh]] fails loudly rather than
-  * probing codes that do not match the cells. */
+  * the coarse quantizer — the SQ codes are deterministic. The codes
+  * table comes first in [[StoredIndex]] crash order, the IVF tables and
+  * meta after it, so a crash never blesses codes that do not match the
+  * cells. */
 object IvfSq {
+  import StoredIndex.{Family, Side, IdSorted}
+
+  private[operators] val Tables = Family("IVF-SQ", "n_vectors",
+    Seq(Side("_sq_codes", "seg", IdSorted, onePerId = true), IvfIndex.Cells),
+    carried = Seq("n_cells"))
 
   def build(store: ParquetTableStore, name: String, corpus: DataFrame,
             idCol: String, vecCol: String, nCells: Int = 16,
@@ -39,193 +39,48 @@ object IvfSq {
   }
 
   /** Extend the stored IVF-SQ index with an ingest batch: SQ-encode the
-    * batch (deterministic, no training), write the codes into the
-    * batch's OWN segment partition (`seg` = `batchId` — replays MUST
-    * re-use it, as in the fold protocol; ids already indexed are
-    * skipped via an id-column anti-join, so replays and cross-batch
-    * re-sends cannot duplicate code rows), then [[IvfIndex.append]] the
-    * cells — whose LAST step rewrites the freshness fingerprint, so a
-    * crash anywhere in this sequence leaves the OLD fingerprint and
-    * [[IvfIndex.verifyFresh]] fails loudly instead of probing cells
-    * that lack code rows (the build's crash-order argument, preserved
-    * under append). Moved-vector re-delivery fails loudly inside
-    * [[IvfIndex.append]] before any cells merge. */
+    * batch (deterministic, no training) and append through
+    * [[StoredIndex.appendCoded]] — a re-delivered id whose codes changed,
+    * an id carried twice with different vectors and a moved-cell
+    * re-delivery are all rejected before anything is written; new ids'
+    * codes then go into the batch's OWN segment partition (`seg` =
+    * `batchId`; replays MUST re-use it, as in the fold protocol),
+    * followed by the cells and the meta. */
   def append(store: ParquetTableStore, name: String, batch: DataFrame,
-             idCol: String, vecCol: String, batchId: Long): Unit = {
-    require(batchId > 0, "batchId 0 is the build segment — use ids > 0")
-    val stored = store.read(s"${name}_sq_codes").getOrElse(
-      sys.error(s"IVF-SQ index '$name' has no codes table — not built?"))
-    val freshAll = ScalarQuantizer.encode(batch, idCol, vecCol)
-    // Changed-CODE guard: a re-delivered id whose vector changed enough
-    // to encode differently would be skipped by the new-id filter below
-    // and keep its STALE codes steering probe shortlists (the moved-cell
-    // guard inside IvfIndex.append only fires when the change crosses a
-    // cell boundary — a same-cell edit slips past it). Code-invisible
-    // changes are harmless by definition: the stale codes ARE the new
-    // vector's exact encoding, and the refine stage reads the updated
-    // stored vectors.
-    //
-    // Cost shape (VERDICT r10's one scale-killer, fixed): the stored
-    // side is id-span-pruned BEFORE the join ([[KeyPrune]] — a batch of
-    // entirely new monotone ids prunes the whole codes table via parquet
-    // row-group stats; re-deliveries read only the overlapped row
-    // groups), and ONE materialized batch-sized left join feeds BOTH the
-    // guard check and the new-id filter — the append never pays more
-    // than O(batch) + the overlapped row groups, restoring the family's
-    // O(batch) append contract.
-    val storedSpan = KeyPrune.toKeySpan(stored, "id", batch, idCol)
-      .select(col("id"), col("scale").as("_os"), col("codes").as("_oc"))
-    val annotated = Checkpoints.materialize(
-      freshAll.join(storedSpan, Seq("id"), "left"))
-    val changed = annotated
-      .filter(col("_os").isNotNull &&
-        (col("_os") =!= col("scale") || col("_oc") =!= col("codes")))
-      .limit(5).collect()
-    if (changed.nonEmpty) {
-      Checkpoints.release(annotated)
-      sys.error(
-        s"IVF-SQ index '$name': batch re-delivers id(s) " +
-          changed.map(_.get(0)).mkString(", ") +
-          " with a CHANGED vector that encodes to different codes — an " +
-          "id-keyed append cannot update them (stale codes would keep " +
-          "steering probe shortlists). Use upsertVectors (delete + " +
-          "append), delete the ids first, or rebuild.")
-    }
-    val fresh = annotated.filter(col("_os").isNull).drop("_os", "_oc")
-    if (!fresh.isEmpty)
-      store.upsertPartitioned(s"${name}_sq_codes",
-        fresh.withColumn("seg", lit(batchId)).sortWithinPartitions(col("id")),
-        Seq("id"), "seg", countAfter = false)
-    IvfIndex.append(store, name, batch, idCol, vecCol)
-    Checkpoints.release(annotated)
-  }
+             idCol: String, vecCol: String, batchId: Long): Unit =
+    StoredIndex.appendCoded(store, name, Tables, ScalarQuantizer.encode(batch,
+      idCol, vecCol), batch, idCol, vecCol, batchId)
 
   /** In-place vector update recipe for the SQ variant
-    * ([[IvfIndex.upsertVectors]] + re-encoding): delete every
-    * already-indexed id whose re-delivered vector either encodes to
-    * DIFFERENT codes (the stale-shortlist case [[append]] rejects) or
-    * re-assigns to a different CELL (the cross-partition case — almost
-    * always code-visible too, but a boundary-sitting vector can move
-    * cells on a sub-quantization change, and deleting only the
-    * code-changed set would then trip the moved-cell guard), then
-    * append. Replays no-op: the second delivery changes nothing.
-    *
-    * Known (accepted) cost: the batch is SQ-encoded and cell-assigned
-    * here for change detection and AGAIN inside [[append]] — both are
-    * narrow per-batch codegen passes, small next to the stored-table
-    * joins and partition merges that dominate the path; fuse into a
-    * precomputed-frames append variant only if profiling ever says
-    * otherwise. */
+    * ([[IvfIndex.upsertVectors]] + re-encoding) — see
+    * [[StoredIndex.upsertCoded]]: delete the ids whose re-delivered
+    * vector encodes differently OR moves cells, then append. */
   def upsertVectors(store: ParquetTableStore, name: String, batch: DataFrame,
-                    idCol: String, vecCol: String, batchId: Long): Unit = {
-    val stored = store.read(s"${name}_sq_codes").getOrElse(
-      sys.error(s"IVF-SQ index '$name' has no codes table — not built?"))
-    val freshAll = ScalarQuantizer.encode(batch, idCol, vecCol)
-    // id-span-pruned like [[append]]'s guard: change detection reads
-    // only the row groups the batch's id span overlaps, never the corpus
-    val changedCodes = KeyPrune.toKeySpan(stored, "id", batch, idCol)
-      .select(col("id"), col("scale").as("_os"), col("codes").as("_oc"))
-      .join(broadcast(freshAll), Seq("id"))
-      .filter(col("_os") =!= col("scale") || col("_oc") =!= col("codes"))
-      .select(col("id"))
-    // materialized: the doomed plan READS the codes table, and delete()
-    // rewrites that table before its second consumer (the cells delete)
-    // would lazily re-evaluate it over the replaced files
-    val doomed = Checkpoints.materialize(changedCodes
-      .unionByName(IvfIndex.movedIds(store, name, batch, idCol, vecCol))
-      .distinct())
-    if (!doomed.isEmpty) delete(store, name, doomed, "id")
-    append(store, name, batch, idCol, vecCol, batchId)
-    Checkpoints.release(doomed)
-  }
+                    idCol: String, vecCol: String, batchId: Long): Unit =
+    StoredIndex.upsertCoded(store, name, Tables, ScalarQuantizer.encode(batch,
+      idCol, vecCol), batch, idCol, vecCol, batchId)
 
-  /** Remove `ids` from the IVF-SQ index: the codes delete first (its
-    * partition-pruned rewrite touches only the segments holding the
-    * ids), the cells + fingerprint delete LAST ([[IvfIndex.delete]] —
-    * whose final step rewrites the meta), preserving the family's
-    * fingerprint-last crash ordering: a crash anywhere leaves the OLD
-    * fingerprint ≠ the post-delete corpus, so [[verifyFresh]] fails
-    * loudly; re-running converges. Returns vectors removed. */
+  /** Remove `ids` from the IVF-SQ index: codes first (partition-pruned to
+    * the segments holding the ids), then cells, then the meta
+    * ([[StoredIndex.delete]]). Returns vectors removed. */
   def delete(store: ParquetTableStore, name: String, ids: DataFrame,
              idCol: String): Long =
-    deleteWithCodes(store, name, "_sq_codes", ids, idCol)
+    StoredIndex.delete(store, name, Tables, ids, idCol)
 
-  /** Shared codes-then-cells delete for the compressed variants (the
-    * fingerprint rewrite happens LAST, inside [[IvfIndex.delete]]). */
-  private[operators] def deleteWithCodes(store: ParquetTableStore,
-      name: String, codesSuffix: String, ids: DataFrame,
-      idCol: String): Long = {
-    // materialized ONCE before the first rewrite (ADVICE r10): an ids
-    // frame whose plan reads one of this index's own tables (e.g. ids
-    // selected from the codes table) would otherwise lazily re-list
-    // files the codes delete already replaced when the cells delete
-    // re-evaluates it — the store's cross-call contract, enforced here
-    // instead of left to callers
-    val key = Checkpoints.materialize(
-      ids.select(col(idCol).as("id")).distinct())
-    try {
-      store.deletePartitioned(s"$name$codesSuffix", key, Seq("id"), "seg")
-      IvfIndex.delete(store, name, key, "id")
-    } finally Checkpoints.release(key)
-  }
-
-  /** [[IvfIndex.verifyFresh]] plus the family-internal parity attest:
-    * the codes table must hold EXACTLY the cells table's id population
-    * (same commutative count+xor fingerprint, id-column-only scans). A
-    * mismatch means a crashed delete/append left orphaned codes (probes
-    * would still be correct — scoring is restricted to cell members —
-    * but a later re-append of an orphaned id would be skipped by the
-    * codes anti-join) or missing codes (probes would silently drop the
-    * id from the compressed scan): both fail loudly here, and both
-    * converge by re-running the interrupted delete/append. */
+  /** [[IvfIndex.verifyFresh]] plus the codes≡cells id-population attest
+    * ([[StoredIndex.verifyFresh]]): a crashed delete/append that left
+    * orphaned or missing codes fails loudly here, and converges by
+    * re-running the interrupted operation. */
   def verifyFresh(store: ParquetTableStore, name: String,
-                  corpus: DataFrame, idCol: String): Unit = {
-    IvfIndex.verifyFresh(store, name, corpus, idCol)
-    codesCellsParity(store, name, "_sq_codes", "IVF-SQ")
-  }
+                  corpus: DataFrame, idCol: String): Unit =
+    StoredIndex.verifyFresh(store, name, Tables, corpus, idCol)
 
-  /** Shared codes≡cells id-population attest — see [[verifyFresh]]. */
-  private[operators] def codesCellsParity(store: ParquetTableStore,
-      name: String, codesSuffix: String, label: String): Unit = {
-    val codes = store.read(s"$name$codesSuffix").getOrElse(
-      sys.error(s"$label index '$name' has no codes table — not built?"))
-    val cells = store.read(s"${name}_cells").getOrElse(
-      sys.error(s"$label index '$name' has no cells table — not built?"))
-    val (nCodes, hCodes) = IvfIndex.fingerprint(codes, "id")
-    val (nCells, hCells) = IvfIndex.fingerprint(cells, "id")
-    if (nCodes != nCells || hCodes != hCells) sys.error(
-      s"$label index '$name' is INCONSISTENT: codes table holds $nCodes ids " +
-        s"(fingerprint $hCodes) but cells table holds $nCells (fingerprint " +
-        s"$hCells) — an interrupted delete/append left the compressed codes " +
-        "out of sync with the inverted lists. Re-run the interrupted " +
-        "operation (deletes and appends both converge), or rebuild.")
-  }
-
-  /** Rewrite all code segments as ONE segment (seg 0) — [[Bm25Index
-    * .compactSegments]]'s staged-swap shape for the SQ code table:
-    * segment count tracks ingest history, scan task counts should track
-    * data size. Probe results are unchanged by construction (codes are
-    * segment-agnostic; only their directory layout moves), and appends
-    * continue afterwards (the next batch writes its own fresh segment).
-    * Returns (segments before, code rows). */
+  /** Rewrite all code segments as ONE segment (seg 0), id-sorted within
+    * write tasks ([[StoredIndex.compactSegments]]); probe results
+    * unchanged, appends continue after. Returns (segments before, code
+    * rows). */
   def compactCodeSegments(store: ParquetTableStore, name: String): (Long, Long) =
-    compactCodes(store, name, "_sq_codes", "IVF-SQ")
-
-  /** Shared code-segment compaction for the compressed variants. */
-  private[operators] def compactCodes(store: ParquetTableStore, name: String,
-      codesSuffix: String, label: String): (Long, Long) = {
-    val codes = store.read(s"$name$codesSuffix").getOrElse(
-      sys.error(s"$label index '$name' has no codes table — not built?"))
-    val segs = codes.select(col("seg")).distinct().count()
-    val rows = codes.count()
-    // id-sorted within write tasks, like build/append — compaction must
-    // not degrade the row-group stats the guard's span pruning relies on
-    store.replacePartitioned(s"$name$codesSuffix",
-      codes.drop("seg").withColumn("seg", lit(0L))
-        .sortWithinPartitions(col("id")),
-      Seq("seg"))
-    (segs, rows)
-  }
+    StoredIndex.compactSegments(store, name, Tables)
 
   /** Top-k via coarse probe → integer-dot SQ8 scan of the probed
     * cells' codes → bounded exact refine. Output (query_id, rank,
@@ -264,17 +119,11 @@ object IvfSq {
                               vecCol: String, allowed: Option[DataFrame],
                               topK: Int, nProbe: Int,
                               shortlist: Int): DataFrame = {
-    val codes = store.read(s"${name}_sq_codes").getOrElse(
-      sys.error(s"IVF-SQ index '$name' has no codes table — not built?"))
+    val codes = StoredIndex.table(store, name, "_sq_codes")
     // the allowed restriction applies to the MEMBER pool, upstream of
     // both the compressed scan and the refine — filter-then-shortlist
-    val membersAll =
-      IvfIndex.probeMembers(store, name, queries, idCol, vecCol, nProbe)
-    val members = allowed match {
-      case Some(a) => membersAll.join(
-        a.select(col(idCol).as("id")).distinct(), Seq("id"), "left_semi")
-      case None => membersAll
-    }
+    val members = IvfIndex.probeMembers(store, name, queries, idCol, vecCol,
+      nProbe, allowed = allowed)
     val q = ScalarQuantizer.encode(queries, idCol, vecCol)
       .select(col("id").as("query_id"), col("scale").as("_qs"),
         col("codes").as("_qc"))
@@ -292,13 +141,6 @@ object IvfSq {
           (col("_qs") * col("scale") / lit(16129.0))).as("score"))
     val short = Similarity.takeTopK(approx, math.max(shortlist, topK))
       .select(col("query_id"), col("neighbor_id"))
-    // exact refine against the probed cells' stored vectors — never the
-    // raw corpus (the IvfPq.probe pattern)
-    val rescored = short
-      .join(members.select(col("query_id"), col("id").as("neighbor_id"),
-        col("v"), col("qv")), Seq("query_id", "neighbor_id"))
-      .select(col("query_id"), col("neighbor_id"),
-        Vectors.dotNative(col("qv"), col("v")).as("score"))
-    Similarity.takeTopK(rescored, topK)
+    IvfIndex.refine(short, members, topK)
   }
 }

@@ -24,8 +24,7 @@ import org.apache.spark.sql.functions._
   *   - `<name>_buckets` (id, band, bh, seg): the banded LSH bucket
   *     keys — the join side of candidate generation.
   *   - `<name>_meta` (n_docs, id_fingerprint): corpus identity for
-  *     staleness detection, same commutative (count, bit_xor of
-  *     xxhash64(id)) fingerprint as [[IvfIndex]].
+  *     staleness detection ([[StoredIndex]]).
   *
   * Both side tables are SEGMENT-PARTITIONED (`seg` = the append's
   * batch id; the build is segment 0 — VERDICT r11 item 4): an append
@@ -40,9 +39,9 @@ import org.apache.spark.sql.functions._
   * (replays and cross-batch re-sends add no files); a CHANGED
   * signature — unlike [[Bm25Index]], never a correctness hazard here,
   * because signature and bucket rows replace 1:1 on their keys — takes
-  * the rare keyed merge into the id's ORIGINAL segment only. The meta
-  * fingerprint is recomputed from the stored sig table's id column,
-  * never folded incrementally, so replays converge it exactly.
+  * the rare keyed merge into the id's ORIGINAL segment only. Delete,
+  * compaction, staleness and crash ordering are the [[StoredIndex]]
+  * protocol, with the meta fingerprinting the sig table's ids.
   *
   * Probing returns CANDIDATE pairs with estimated Jaccard (signature
   * agreement fraction); callers needing exact scores rescore with
@@ -52,14 +51,10 @@ import org.apache.spark.sql.functions._
   * or append first and probe the next batch.
   */
 object MinHashIndex {
+  import StoredIndex.{table, Family, Side, IdRanged}
 
-  /** Commutative corpus fingerprint — see [[IvfIndex]] for why
-    * (count, bit_xor): order-independent, overflow-free, and the count
-    * catches xor's self-cancelling duplicate-pair blind spot. */
-  private def fingerprint(docs: DataFrame, idCol: String): (Long, Long) = {
-    val r = docs.agg(count(lit(1)), bit_xor(xxhash64(col(idCol)))).head()
-    (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
-  }
+  private[operators] val Tables = Family("MinHash", "n_docs",
+    Seq(Side("_buckets", "seg", IdRanged), Side("_sigs", "seg", IdRanged)))
 
   private def sigsOf(docs: DataFrame, idCol: String, textCol: String,
                      k: Int): DataFrame =
@@ -70,29 +65,21 @@ object MinHashIndex {
     sigs.select(col("id"), explode(Similarity.bandHashes(col("sig"))).as("bs"))
       .select(col("id"), col("bs.band").as("band"), col("bs.bh").as("bh"))
 
-  private def writeMeta(store: ParquetTableStore, name: String): Unit = {
-    val sigs = store.read(s"${name}_sigs").getOrElse(
-      sys.error(s"MinHash index '$name' has no sig table"))
-    val (n, h) = fingerprint(sigs, "id")
-    store.replace(s"${name}_meta",
-      sigs.sparkSession.range(1).select(
-        lit(n).as("n_docs"), lit(h).as("id_fingerprint")))
-  }
-
   /** Sketch the corpus once and materialize signatures + band buckets
     * (both segment 0 — id-sorted within write tasks so the append
     * guard's id-span predicate prunes at row-group granularity). */
   def build(store: ParquetTableStore, name: String, docs: DataFrame,
             idCol: String, textCol: String, k: Int = 3): Unit = {
-    val sigs = Checkpoints.materialize(sigsOf(docs, idCol, textCol, k))
-    store.replacePartitioned(s"${name}_sigs",
-      sigs.withColumn("seg", lit(0L)).sortWithinPartitions(col("id")),
-      Seq("seg"))
-    store.replacePartitioned(s"${name}_buckets",
-      bucketsOf(sigs).withColumn("seg", lit(0L)).sortWithinPartitions(col("id")),
-      Seq("seg"))
-    writeMeta(store, name)
-    Checkpoints.release(sigs)
+    StoredIndex.withCheckpoints { keep =>
+      val sigs = keep(sigsOf(docs, idCol, textCol, k))
+      store.replacePartitioned(s"${name}_sigs",
+        sigs.withColumn("seg", lit(0L)).sortWithinPartitions(col("id")),
+        Seq("seg"))
+      store.replacePartitioned(s"${name}_buckets",
+        bucketsOf(sigs).withColumn("seg", lit(0L)).sortWithinPartitions(col("id")),
+        Seq("seg"))
+      StoredIndex.writeMeta(store, name, Tables)
+    }
   }
 
   /** Extend the index with an ingested batch — O(batch) in compute AND
@@ -116,148 +103,89 @@ object MinHashIndex {
              idCol: String, textCol: String, k: Int = 3,
              batchId: Long = 1L): Unit = {
     require(batchId > 0, "batchId 0 is the build segment — use ids > 0")
-    val stored = store.read(s"${name}_sigs").getOrElse(
-      sys.error(s"MinHash index '$name' has no sig table — not built?"))
-    val storedBuckets = store.read(s"${name}_buckets").getOrElse(
-      sys.error(s"MinHash index '$name' has no bucket table — not built?"))
-    // batch-internal dedup before classification (the append-files path
-    // writes rows verbatim — the keyed merge that used to collapse
-    // duplicates is gone): identical duplicate rows collapse; one id
-    // sketching to two DIFFERENT signatures is ambiguous intent and
-    // fails loudly, like IvfIndex.append's conflicting-vector guard.
-    val rows = Checkpoints.materialize(
-      sigsOf(batch, idCol, textCol, k).distinct())
-    val conflicted = rows.groupBy(col("id")).count()
-      .filter(col("count") > 1).select(col("id")).limit(5).collect()
-    if (conflicted.nonEmpty) {
-      Checkpoints.release(rows)
-      sys.error(s"MinHash index '$name': batch carries id(s) " +
-        conflicted.map(_.get(0)).mkString(", ") +
-        " more than once with DIFFERENT text — one id, one document " +
-        "per batch; dedup upstream or split the batch.")
+    val stored = table(store, name, "_sigs")
+    val storedBuckets = table(store, name, "_buckets")
+    StoredIndex.withCheckpoints { keep =>
+      val rows = StoredIndex.distinctPerId(keep, sigsOf(batch, idCol, textCol, k),
+        Tables, name, "text")
+      val sigSpan = KeyPrune.toKeySpan(stored, "id", rows, "id")
+        .select(col("id"), col("sig").as("_os"), col("seg").as("_oseg"))
+      val annotated = keep(rows.join(sigSpan, Seq("id"), "left"))
+      // changed text re-sketches to a different signature: replace the
+      // id's rows IN PLACE, pruned to the segment(s) actually holding
+      // them — signature and bucket rows replace 1:1 on their keys, so
+      // unlike BM25 postings nothing can be stranded
+      val changed = annotated
+        .filter(col("_os").isNotNull && col("_os") =!= col("sig"))
+        .select(col("id"), col("sig"), col("_oseg").as("seg"))
+      val hasChanged = !changed.isEmpty
+      if (hasChanged) {
+        // buckets FIRST, sigs second (same crash ordering as the fresh
+        // path): a crash after the buckets merge leaves the OLD sig row in
+        // place, so the replay re-classifies the id as changed and the
+        // idempotent (id, band) keyed merge converges both tables. The
+        // reverse order would commit the new sig with stale bucket rows —
+        // the replay then reads _os == sig, skips all writes, and the
+        // edited doc silently vanishes from LSH candidate generation.
+        store.upsertPartitioned(s"${name}_buckets",
+          bucketsOf(changed.select(col("id"), col("sig")))
+            .join(changed.select(col("id"), col("seg")), Seq("id")),
+          Seq("id", "band"), "seg")
+        store.upsertPartitioned(s"${name}_sigs", changed, Seq("id"), "seg")
+      }
+      val fresh = annotated.filter(col("_os").isNull)
+        .select(col("id"), col("sig"))
+      if (!fresh.isEmpty) {
+        // bucket rows carry their own presence guard: if a previous run
+        // crashed between the buckets append and the sigs append, the id
+        // still classifies as fresh (no sig row), and this anti-join is
+        // what stops its bucket rows from appending twice. Re-read the
+        // table if the changed path just rewrote segments — the earlier
+        // lazy frame would list files the swap replaced (the store's
+        // cross-call contract).
+        val bktNow = if (!hasChanged) storedBuckets
+          else table(store, name, "_buckets")
+        val bktSeen = KeyPrune.toKeySpan(bktNow, "id", fresh, "id")
+          .select(col("id")).distinct()
+        store.appendPartitioned(s"${name}_buckets",
+          bucketsOf(fresh).join(broadcast(bktSeen), Seq("id"), "left_anti")
+            .withColumn("seg", lit(batchId)).sortWithinPartitions(col("id")),
+          "seg")
+        store.appendPartitioned(s"${name}_sigs",
+          fresh.withColumn("seg", lit(batchId)).sortWithinPartitions(col("id")),
+          "seg")
+      }
+      StoredIndex.writeMeta(store, name, Tables)
     }
-    val sigSpan = KeyPrune.toKeySpan(stored, "id", rows, "id")
-      .select(col("id"), col("sig").as("_os"), col("seg").as("_oseg"))
-    val annotated = Checkpoints.materialize(rows.join(sigSpan, Seq("id"), "left"))
-    Checkpoints.release(rows)
-    // changed text re-sketches to a different signature: replace the
-    // id's rows IN PLACE, pruned to the segment(s) actually holding
-    // them — signature and bucket rows replace 1:1 on their keys, so
-    // unlike BM25 postings nothing can be stranded
-    val changed = annotated
-      .filter(col("_os").isNotNull && col("_os") =!= col("sig"))
-      .select(col("id"), col("sig"), col("_oseg").as("seg"))
-    val hasChanged = !changed.isEmpty
-    if (hasChanged) {
-      // buckets FIRST, sigs second (same crash ordering as the fresh
-      // path): a crash after the buckets merge leaves the OLD sig row in
-      // place, so the replay re-classifies the id as changed and the
-      // idempotent (id, band) keyed merge converges both tables. The
-      // reverse order would commit the new sig with stale bucket rows —
-      // the replay then reads _os == sig, skips all writes, and the
-      // edited doc silently vanishes from LSH candidate generation.
-      store.upsertPartitioned(s"${name}_buckets",
-        bucketsOf(changed.select(col("id"), col("sig")))
-          .join(changed.select(col("id"), col("seg")), Seq("id")),
-        Seq("id", "band"), "seg", countAfter = false)
-      store.upsertPartitioned(s"${name}_sigs", changed, Seq("id"), "seg",
-        countAfter = false)
-    }
-    val fresh = annotated.filter(col("_os").isNull)
-      .select(col("id"), col("sig"))
-    if (!fresh.isEmpty) {
-      // bucket rows carry their own presence guard: if a previous run
-      // crashed between the buckets append and the sigs append, the id
-      // still classifies as fresh (no sig row), and this anti-join is
-      // what stops its bucket rows from appending twice. Re-read the
-      // table if the changed path just rewrote segments — the earlier
-      // lazy frame would list files the swap replaced (the store's
-      // cross-call contract).
-      val bktNow = if (!hasChanged) storedBuckets
-        else store.read(s"${name}_buckets").get
-      val bktSeen = KeyPrune.toKeySpan(bktNow, "id", fresh, "id")
-        .select(col("id")).distinct()
-      store.appendPartitioned(s"${name}_buckets",
-        bucketsOf(fresh).join(broadcast(bktSeen), Seq("id"), "left_anti")
-          .withColumn("seg", lit(batchId)).sortWithinPartitions(col("id")),
-        "seg")
-      store.appendPartitioned(s"${name}_sigs",
-        fresh.withColumn("seg", lit(batchId)).sortWithinPartitions(col("id")),
-        "seg")
-    }
-    writeMeta(store, name)
-    Checkpoints.release(annotated)
   }
 
-  /** Rewrite both side tables as ONE segment (seg 0) — the background
-    * merge for this index family: [[append]] adds files per ingest
+  /** Rewrite both side tables as ONE segment (seg 0), id-range-sorted so
+    * the guards' span pruning keeps working at row-group granularity
+    * ([[StoredIndex.compactSegments]]): [[append]] adds files per ingest
     * batch, so file and segment counts track ingest history while scan
     * task counts should track data size. Probe results unchanged by
-    * construction (candidate generation and estimate scoring never
-    * depend on segment boundaries); id-range-sorted so the guards'
-    * span pruning keeps working at row-group granularity. Returns
-    * (segments before, signature rows). */
-  def compactSegments(store: ParquetTableStore, name: String): (Long, Long) = {
-    val sigs = store.read(s"${name}_sigs").getOrElse(
-      sys.error(s"MinHash index '$name' has no sig table — not built?"))
-    val segs = sigs.select(col("seg")).distinct().count()
-    val rows = sigs.count()
-    store.replacePartitioned(s"${name}_sigs",
-      sigs.drop("seg").withColumn("seg", lit(0L))
-        .repartitionByRange(col("id")).sortWithinPartitions(col("id")),
-      Seq("seg"))
-    val buckets = store.read(s"${name}_buckets").getOrElse(
-      sys.error(s"MinHash index '$name' has no bucket table — not built?"))
-    store.replacePartitioned(s"${name}_buckets",
-      buckets.drop("seg").withColumn("seg", lit(0L))
-        .repartitionByRange(col("id")).sortWithinPartitions(col("id")),
-      Seq("seg"))
-    (segs, rows)
-  }
+    * construction. Returns (segments before, signature rows). */
+  def compactSegments(store: ParquetTableStore, name: String): (Long, Long) =
+    StoredIndex.compactSegments(store, name, Tables)
 
   /** Remove `ids` from the index: buckets first (the candidate-join side
     * — a stale bucket row would keep surfacing the removed doc as a dup
-    * candidate), signatures second, the meta fingerprint LAST — a crash
-    * anywhere leaves the OLD fingerprint ≠ the post-delete corpus, so
-    * [[verifyFresh]] fails loudly; re-running converges (absent ids
-    * no-op). Both deletes are partition-pruned
-    * ([[ParquetTableStore.deletePartitioned]] — only the segment
-    * directories actually holding the ids are rewritten). Unlike an
-    * in-place edit on [[Bm25Index]], a MinHash re-delivery with changed
-    * text never REQUIRED delete ([[append]] replaces its rows 1:1) —
-    * delete exists for genuine removals: takedowns, retention expiry,
-    * license revocation. Returns docs removed. */
+    * candidate), signatures second, the meta last
+    * ([[StoredIndex.delete]]). Unlike an in-place edit on [[Bm25Index]],
+    * a MinHash re-delivery with changed text never REQUIRED delete
+    * ([[append]] replaces its rows 1:1) — delete exists for genuine
+    * removals: takedowns, retention expiry, license revocation. Returns
+    * docs removed. */
   def delete(store: ParquetTableStore, name: String, ids: DataFrame,
-             idCol: String): Long = {
-    // materialized ONCE before the first rewrite (ADVICE r10): an ids
-    // frame whose plan reads this index's own tables would otherwise
-    // lazily re-list files the buckets delete already replaced when the
-    // sigs delete re-evaluates it
-    val key = Checkpoints.materialize(
-      ids.select(col(idCol).as("id")).distinct())
-    try {
-      store.deletePartitioned(s"${name}_buckets", key, Seq("id"), "seg")
-      val removed = store.deletePartitioned(s"${name}_sigs", key, Seq("id"), "seg")
-      writeMeta(store, name)
-      removed
-    } finally Checkpoints.release(key)
-  }
+             idCol: String): Long =
+    StoredIndex.delete(store, name, Tables, ids, idCol)
 
   /** Fail loudly if `corpus` no longer matches what the index was built
-    * from (id-column-only scan; see [[IvfIndex.verifyFresh]] for the
-    * policy-not-mechanism rationale of keeping this a separate call). */
+    * from — a stale index silently misses duplicates of the unindexed
+    * docs ([[StoredIndex.verifyFresh]]). */
   def verifyFresh(store: ParquetTableStore, name: String,
-                  corpus: DataFrame, idCol: String): Unit = {
-    val meta = store.read(s"${name}_meta").getOrElse(
-      sys.error(s"MinHash index '$name' has no meta table — not built?"))
-      .head()
-    val (n, h) = fingerprint(corpus, idCol)
-    if (meta.getLong(0) != n || meta.getLong(1) != h) sys.error(
-      s"MinHash index '$name' is STALE: built over ${meta.getLong(0)} docs " +
-        s"(fingerprint ${meta.getLong(1)}) but the corpus now has $n " +
-        s"(fingerprint $h). Rebuild or append before probing — a stale " +
-        "index silently misses duplicates of the unindexed docs.")
-  }
+                  corpus: DataFrame, idCol: String): Unit =
+    StoredIndex.verifyFresh(store, name, Tables, corpus, idCol)
 
   /** Index-health report for the bucket table: LSH candidate generation
     * degrades when buckets grow hot (boilerplate floods, near-constant
@@ -273,9 +201,7 @@ object MinHashIndex {
     * the mechanism. */
   def checkHealth(store: ParquetTableStore, name: String,
                   maxBucket: Int = 1000): DataFrame = {
-    val buckets = store.read(s"${name}_buckets").getOrElse(
-      sys.error(s"MinHash index '$name' has no bucket table — not built?"))
-    buckets.groupBy(col("band"), col("bh")).agg(count(lit(1)).as("occ"))
+    table(store, name, "_buckets").groupBy(col("band"), col("bh")).agg(count(lit(1)).as("occ"))
       .agg(
         count(lit(1)).as("n_buckets"),
         max(col("occ")).as("max_occupancy"),
@@ -299,10 +225,8 @@ object MinHashIndex {
   def probe(store: ParquetTableStore, name: String, batch: DataFrame,
             idCol: String, textCol: String, threshold: Double,
             k: Int = 3, maxBucket: Int = 1000): DataFrame = {
-    val sigs = store.read(s"${name}_sigs").getOrElse(
-      sys.error(s"MinHash index '$name' has no sig table — not built?"))
-    val buckets = store.read(s"${name}_buckets").getOrElse(
-      sys.error(s"MinHash index '$name' has no bucket table — not built?"))
+    val sigs = table(store, name, "_sigs")
+    val buckets = table(store, name, "_buckets")
     val bSigs = Checkpoints.materialize(sigsOf(batch, idCol, textCol, k))
     val bBuckets = bucketsOf(bSigs)
       .select(col("id").as("batch_id"), col("band"), col("bh"))

@@ -671,32 +671,6 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     removed
   }
 
-  /** Rewrite `name` as `targetFiles` files and swap — incremental upserts
-    * and streaming appends accumulate small files, and scan task counts
-    * should track data size, not ingest history. Returns parquet file
-    * counts (before, after). */
-  /** Upsert into a PARTITIONED parquet table, rewriting ONLY the
-    * partitions the batch touches (dynamic partition overwrite): a daily
-    * batch against a years-deep table reads and writes O(batch), never
-    * O(table) — the partition-pruning analogue of the row-level merge's
-    * file-group pruning, for tables organized by a date/bucket column.
-    *
-    * Contract: `partitionCol` must be STABLE per key (a key cannot move
-    * between partitions — standard for date-partitioned facts; a moving
-    * key would leave its old row in the untouched partition) and NON-NULL
-    * in the batch: `isin` membership can never select a stored NULL
-    * partition, so a null-partition batch would dynamic-overwrite the
-    * default partition with only its own rows, silently dropping stored
-    * keys — rejected up front instead. The distinct partition list of the
-    * batch is collected driver-side — bounded by partitions-per-batch (a
-    * handful of days), never table size. The per-partition swap is the
-    * file source's dynamic-overwrite commit; crash-safety caveats are
-    * those of SURVEY §7.4 (a transactional table format takes over at
-    * warehouse scale).
-    *
-    * Returns the post-merge row count of the TOUCHED partitions — an
-    * O(batch) read; counting the whole table per batch would be the
-    * O(table) scan this method exists to avoid. */
   /** Per-table directory holding mid-swap partition backups. A dedicated
     * directory (not a flat `_old_${name}_${pdir}` sibling) keeps recovery
     * unambiguous: with the flat scheme a backup of table `t_x` partition
@@ -798,16 +772,26 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     }
   }
 
+  /** Upsert into a PARTITIONED parquet table, rewriting ONLY the
+    * partitions the batch touches (dynamic partition overwrite): a daily
+    * batch against a years-deep table reads and writes O(batch), never
+    * O(table) — the partition-pruning analogue of the row-level merge's
+    * file-group pruning, for tables organized by a date/bucket column.
+    *
+    * Contract: `partitionCol` must be STABLE per key (a key cannot move
+    * between partitions — standard for date-partitioned facts; a moving
+    * key would leave its old row in the untouched partition) and NON-NULL
+    * in the batch: `isin` membership can never select a stored NULL
+    * partition, so a null-partition batch would dynamic-overwrite the
+    * default partition with only its own rows, silently dropping stored
+    * keys — rejected up front instead. The distinct partition list of the
+    * batch is collected driver-side — bounded by partitions-per-batch (a
+    * handful of days), never table size. The per-partition swap is the
+    * file source's dynamic-overwrite commit; crash-safety caveats are
+    * those of SURVEY §7.4 (a transactional table format takes over at
+    * warehouse scale). */
   def upsertPartitioned(name: String, updates: DataFrame, keys: Seq[String],
-                        partitionCol: String): Long =
-    upsertPartitioned(name, updates, keys, partitionCol, countAfter = true)
-
-  /** As [[upsertPartitioned]]; `countAfter = false` skips the post-merge
-    * touched-partition row count (an extra O(batch) read per call) and
-    * returns -1 — the index family's append paths call this per ingest
-    * batch and never read the count. */
-  def upsertPartitioned(name: String, updates: DataFrame, keys: Seq[String],
-                        partitionCol: String, countAfter: Boolean): Long = {
+                        partitionCol: String): Unit = {
     val dst = new Path(path(name))
     val parts = updates.select(updates(partitionCol)).distinct().collect().map(_.get(0))
     if (parts.contains(null)) throw new IllegalArgumentException(
@@ -857,12 +841,12 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
       f.delete(tmp, true)
       f.delete(backupRoot, true)
     }
-    if (countAfter) {
-      val post = spark.read.parquet(dst.toString)
-      post.filter(post(partitionCol).isin(parts: _*)).count()
-    } else -1L
   }
 
+  /** Rewrite `name` as `targetFiles` files and swap — incremental upserts
+    * and streaming appends accumulate small files, and scan task counts
+    * should track data size, not ingest history. Returns parquet file
+    * counts (before, after). */
   def compact(name: String, targetFiles: Int = 1): (Int, Int) = {
     val p = new Path(path(name))
     val f = fs(p)

@@ -61,11 +61,6 @@ object PagedNdjsonSource {
                       tsCol: String, startTs: java.sql.Timestamp): DataFrame =
     read(spark, dir, schema, Some(to_timestamp(col(tsCol)) >= lit(startTs)))
 
-  /** Test-mode cap (ref :431-433): stop after ~maxRecords. */
-  def readCapped(spark: SparkSession, dir: String, schema: StructType,
-                 maxRecords: Int): DataFrame =
-    read(spark, dir, schema).limit(maxRecords)
-
   /** Dead-letter routing: one PERMISSIVE parse DEFINITION, two outputs —
     * rows that parse against `schema` continue typed (same shape as
     * [[read]]); rows that do not (malformed JSON, a type mismatch in any

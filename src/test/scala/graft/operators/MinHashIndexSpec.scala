@@ -152,8 +152,7 @@ class MinHashIndexSpec extends SparkSpec {
     val newBuckets = newSigs
       .select($"id", explode(Similarity.bandHashes($"sig")).as("bs"))
       .select($"id", $"bs.band".as("band"), $"bs.bh".as("bh"), lit(0L).as("seg"))
-    store.upsertPartitioned("ix_buckets", newBuckets, Seq("id", "band"), "seg",
-      countAfter = false)
+    store.upsertPartitioned("ix_buckets", newBuckets, Seq("id", "band"), "seg")
     val staleSig = store.read("ix_sigs").get.filter($"id" === 0L)
       .select(to_json($"sig")).as[String].head()
     // replay the whole append (what a checkpoint restart does)
