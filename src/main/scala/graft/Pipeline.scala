@@ -15,6 +15,10 @@ import graft.sources.PagedNdjsonSource
   *  3. flatten into six tables                                   — P1-P4
   *  4. per-table key dedup (null bypass)                         — A2/A3
   *  5. MERGE upsert into final parquet tables                    — J1/A4
+  *     (the six tables overlapped through the store's shared fan-out,
+  *     [[ParquetTableStore.upsertAll]], the same one the streaming
+  *     lifecycle uses; the per-table row counts returned are read
+  *     afterwards in one aggregate, [[ParquetTableStore.rowCounts]])
   *  6. checkpoint write (success/error)                          — T2/T6
   *  7. verification: uniqueness + FK orphans                     — A5-A8/J2
   *
@@ -79,37 +83,38 @@ class Pipeline(spark: SparkSession, warehouse: String,
     * an orderable `_arrival_order` column. */
   private def runBatch(runId: String)(mkRaw: => DataFrame): Map[String, Long] = {
     try {
-      val raw = mkRaw
       // A1: first-wins dedup across pages in arrival order (ref :339-347)
-      val deduped = Dedup.firstWins(raw, Seq("id"), "_arrival_order")
+      val deduped = Dedup.firstWins(mkRaw, Seq("id"), "_arrival_order")
         .drop("_page_file", "_arrival_order")
         .cache()
-
-      val maxUpdated = deduped.agg(max(to_timestamp(col("updated_at")))).collect()(0)
-      val batchCount = deduped.count()
-      if (batchCount == 0) {
-        // ref early-exit :653-657 — still records a success run
-        control.recordRun("orders", new Timestamp(System.currentTimeMillis()),
-          0L, "success", runId, "no new records")
-        return Schemas.uniqueKeys.keys.map(n => n -> readFinal(n).map(_.count()).getOrElse(0L)).toMap
-      }
-
-      // P1-P4 flatten (money columns in the pipeline's MoneyMode — Dbl for
-      // reference float parity, Dec for exact fixed-point end-to-end),
-      // A2/A3 key dedup with null bypass, J1 merge
-      val counts = Flatten.all(deduped, moneyMode).map { case (name, df) =>
-        val keys = Schemas.uniqueKeys(name)
-        val withOrder = df.withColumn("_ord", monotonically_increasing_id())
-        val cleaned = Dedup.compositeKeyDedup(withOrder, keys, "_ord").drop("_ord")
-        name -> store.upsert(name, cleaned, keys)
-      }
-
-      // T2 checkpoint: high-water mark = max(updated_at) of the batch
-      val hwm = Option(maxUpdated.getTimestamp(0))
-        .getOrElse(new Timestamp(System.currentTimeMillis()))
-      control.recordRun("orders", hwm, batchCount, "success", runId)
-      deduped.unpersist()
-      counts
+      // released on every exit: success, the empty-batch exit and a throw
+      try {
+        // P1-P4 flatten (money columns in the pipeline's MoneyMode — Dbl
+        // for reference float parity, Dec for exact fixed-point
+        // end-to-end); lazy, so the empty-batch exit reads its schemas too
+        val flat = Flatten.all(deduped, moneyMode)
+        // high-water mark and batch size in one aggregate
+        val stats = deduped.agg(max(to_timestamp(col("updated_at"))), count(lit(1))).head()
+        val batchCount = stats.getLong(1)
+        if (batchCount == 0) {
+          // ref early-exit :653-657 — still records a success run
+          control.recordRun("orders", new Timestamp(System.currentTimeMillis()),
+            0L, "success", runId, "no new records")
+        } else {
+          // A2/A3 key dedup with null bypass, then J1: the six MERGEs
+          // overlapped through the store's shared fan-out
+          store.upsertAll(flat.toSeq.map { case (name, df) =>
+            val keys = Schemas.uniqueKeys(name)
+            val withOrder = df.withColumn("_ord", monotonically_increasing_id())
+            (name, Dedup.compositeKeyDedup(withOrder, keys, "_ord").drop("_ord"), keys)
+          })
+          // T2 checkpoint: high-water mark = max(updated_at) of the batch
+          val hwm = Option(stats.getTimestamp(0))
+            .getOrElse(new Timestamp(System.currentTimeMillis()))
+          control.recordRun("orders", hwm, batchCount, "success", runId)
+        }
+        store.rowCounts(flat.map { case (name, df) => name -> df.schema })
+      } finally deduped.unpersist()
     } catch {
       case e: Throwable =>
         // T6: error path still records a control row (ref :693-707)

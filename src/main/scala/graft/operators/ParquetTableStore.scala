@@ -333,25 +333,18 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
                          partitionCols: Seq[String]): Unit =
     publish(name, df, partitionCols)
 
-  /** Upsert `updates` into table `name` keyed by `keys`; returns post-merge
-    * row count.
+  /** Upsert `updates` into table `name` keyed by `keys`.
     *
     * Existing table + codec-supported schema → row-level MERGE with per-file
     * group pruning (untouched files are not rewritten). Otherwise → composed
     * [[Upsert.merge]] + full snapshot publish. Both paths reduce the batch
     * to one row per key first, so the table invariant "at most one row per
     * (null-safe) key" holds inductively — which is also what keeps the MERGE
-    * cardinality check (one source row per target row) satisfied. */
-  def upsert(name: String, updates: DataFrame, keys: Seq[String]): Long =
-    upsert(name, updates, keys, countAfter = true)
-
-  /** As [[upsert]]; `countAfter = false` skips the post-merge row count
-    * (an extra O(table) job per call) and returns -1 — for callers like
-    * the incremental lifecycle that upsert six tables per round and read
-    * counts from their own telemetry, the 12 count jobs per round are
-    * pure overhead. */
-  def upsert(name: String, updates: DataFrame, keys: Seq[String],
-             countAfter: Boolean): Long = {
+    * cardinality check (one source row per target row) satisfied. Nothing
+    * is counted afterwards: a caller that wants row counts reads them for
+    * all its tables at once ([[rowCounts]]). A lifecycle that upserts
+    * several tables per run goes through [[upsertAll]]. */
+  def upsert(name: String, updates: DataFrame, keys: Seq[String]): Unit = {
     read(name) match {
       case Some(current) =>
         checkNumericParity(name, current.schema, updates.schema)
@@ -362,7 +355,62 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
         publish(name, Upsert.keyDedup(updates, keys))
     }
     maybeCompact(name)
-    if (countAfter) spark.read.parquet(path(name)).count() else -1L
+  }
+
+  /** The per-table MERGEs of one sync round — `(name, updates, keys)`
+    * each, on DISTINCT tables — OVERLAPPED on a small driver thread pool.
+    * Each upsert is a chain of small jobs (stage batch, MERGE, compaction
+    * check) whose scheduling gaps and straggler tails the next table's
+    * jobs back-fill; three in flight is enough to fill the tail without
+    * the jobs fighting for cores. The batch pipeline, the streaming
+    * lifecycle and its batch twin all publish through here.
+    * Safety prerequisites, each load-bearing: [[withMicrosTimestamps]] is
+    * a depth-counted per-session pin (a restore racing another table's
+    * in-flight write would flip it to INT96); the MERGE source temp view
+    * is named per invocation; [[graft.sources.v2.GraftCatalog]] registers
+    * per-table idents in a concurrent map. StoreConcurrencySpec pins all
+    * three; the batch-twin gate (q69) and IncrementalSpec pin that the
+    * warehouse is identical to a sequential run's.
+    *
+    * The FIRST failure is rethrown as its original exception (the
+    * loud-error convention, never an `ExecutionException` wrapper); the
+    * pool shutdown waits for the remaining upserts, so no write is
+    * abandoned mid-flight. */
+  def upsertAll(batches: Seq[(String, DataFrame, Seq[String])]): Unit = {
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
+    try {
+      val futs = batches.map { case (name, updates, keys) =>
+        pool.submit(new java.util.concurrent.Callable[Unit] {
+          def call(): Unit = upsert(name, updates, keys)
+        })
+      }
+      futs.foreach { f =>
+        try f.get()
+        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
+      }
+    } finally {
+      pool.shutdown()
+      pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
+    }
+  }
+
+  /** Row counts of several tables in ONE grouped aggregate over their
+    * union. Each table is read with its known `schemas` entry, so no
+    * parquet footer-inference job runs per table; the count reads no
+    * column. A missing or empty table counts 0. */
+  def rowCounts(schemas: Map[String, StructType]): Map[String, Long] = {
+    val present = schemas.filter { case (name, _) =>
+      recoverTableBackup(name)
+      val p = new Path(path(name))
+      fs(p).exists(p)
+    }
+    val counted =
+      if (present.isEmpty) Map.empty[String, Long]
+      else present.map { case (name, schema) =>
+        spark.read.schema(schema).parquet(path(name)).select(lit(name).as("t"))
+      }.reduce(_ unionByName _).groupBy("t").count().collect()
+        .map(r => r.getString(0) -> r.getLong(1)).toMap
+    schemas.keys.map(n => n -> counted.getOrElse(n, 0L)).toMap
   }
 
   /** Money-representation guard (ADVICE r4): a Dec-mode batch merged into
@@ -480,12 +528,14 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     val stageFs = fs(stage)
     // updates.sparkSession, not the store's: see publish (foreachBatch
     // frames carry a cloned session with isolated conf)
+    val staged = Upsert.keyDedup(updates, keys)
     withMicrosTimestamps(updates.sparkSession) {
-      Upsert.keyDedup(updates, keys)
-        .write.mode(SaveMode.Overwrite).parquet(stage.toString)
+      staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
     }
     val view = s"__graft_upsert_src_${java.util.UUID.randomUUID().toString.take(8)}"
-    spark.read.parquet(stage.toString).createOrReplaceTempView(view)
+    // read back with the staged frame's own schema: inferring it from the
+    // stage's footers would cost one more job per upsert
+    spark.read.schema(staged.schema).parquet(stage.toString).createOrReplaceTempView(view)
     try {
       val on = keys.map(k => s"t.`$k` <=> u.`$k`").mkString(" AND ")
       spark.sql(

@@ -60,8 +60,8 @@ object Incremental {
           // without the cache every per-table upsert re-parses the batch
           // and re-runs the dedup window (6× per micro-batch)
           val deduped = Dedup.firstWins(ordered, Seq("id"), "_ord").drop("_ord").cache()
-          // T4 idempotent MERGE; counts come from control-table
-          // telemetry, not a per-table post-merge re-count
+          // T4 idempotent MERGE; nothing is counted afterwards (the
+          // stream writes no control rows, so it reports no counts)
           try upsertAll(store, deduped)
           finally deduped.unpersist()
         }
@@ -92,44 +92,12 @@ object Incremental {
     }
   }
 
-  /** The six per-entity MERGEs of one sync round, OVERLAPPED on a small
-    * driver thread pool (r17, guide §2.6): the upserts hit six DISTINCT
-    * tables and were only sequential because the loop called them
-    * sequentially — each is a chain of small jobs (stage batch, MERGE,
-    * compaction check) whose scheduling gaps and straggler tails the next
-    * table's jobs back-fill. Three in flight is enough to fill the tail
-    * without the jobs fighting for cores. Safety prerequisites, each
-    * load-bearing: `withMicrosTimestamps` is a depth-counted per-session
-    * pin (a restore racing another table's in-flight write would flip it
-    * to INT96); the MERGE source temp view is named per invocation;
-    * [[graft.sources.v2.GraftCatalog]] registers per-table idents in a
-    * concurrent map. StoreConcurrencySpec pins all three; the batch-twin
-    * gate (q69) and IncrementalSpec pin that the warehouse is identical
-    * to the sequential run's. */
-  private[graft] def upsertAll(store: ParquetTableStore, deduped: DataFrame): Unit = {
-    val entities = Flatten.all(deduped).toSeq
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(3)
-    try {
-      val futs = entities.map { case (name, df) =>
-        pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = {
-            store.upsert(name, df, Schemas.uniqueKeys(name), countAfter = false)
-            ()
-          }
-        })
-      }
-      // propagate the FIRST failure with its original exception (the
-      // loud-error convention); remaining futures are awaited by the
-      // pool shutdown below so no write is abandoned mid-flight
-      futs.foreach { f =>
-        try f.get()
-        catch { case e: java.util.concurrent.ExecutionException => throw e.getCause }
-      }
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(10, java.util.concurrent.TimeUnit.MINUTES)
-    }
-  }
+  /** The six per-entity MERGEs of one sync round, through the store's
+    * overlapped fan-out ([[ParquetTableStore.upsertAll]]) — the same one
+    * the batch pipeline uses. */
+  private def upsertAll(store: ParquetTableStore, deduped: DataFrame): Unit =
+    store.upsertAll(Flatten.all(deduped).toSeq.map { case (name, df) =>
+      (name, df, Schemas.uniqueKeys(name)) })
 
   /** Streaming daily tumbling-window rollup over the events stream (A9 as a
     * *stream*: per-day counts/sums with watermark-closed windows). Batch

@@ -80,6 +80,62 @@ class PipelineSpec extends SparkSpec {
     assert(statuses.contains("error"))
   }
 
+  /** A pages directory holding only `pages` of the fixture, with the
+    * first `lines` lines of each (all of them when None). */
+  private def pagesOf(tag: String, pages: Seq[String], lines: Option[Int] = None): String = {
+    val dir = Files.createTempDirectory(tag)
+    pages.foreach { f =>
+      val src = new java.io.File(pagesDir, f).toPath
+      val kept = lines.fold(Files.readAllLines(src))(n =>
+        Files.readAllLines(src).subList(0, n))
+      Files.write(dir.resolve(f), kept)
+    }
+    dir.toString
+  }
+
+  test("no-new-records and failed runs release the cached batch") {
+    import graft.functions.MoneyMode
+    val wh = Files.createTempDirectory("graft_wh_leak").toString
+    val p = new Pipeline(spark, wh)
+    p.execute(pagesDir, forceFullLoad = true, runId = "load")
+    // order 1001's first version only: older than the checkpoint buffer
+    val stale = pagesOf("graft_pages_stale", Seq("page_00.ndjson"), Some(1))
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    assert(p.execute(stale, runId = "empty")("orders") == 4)
+    assert(p.control.all().filter($"run_id" === "empty")
+      .select("notes").as[String].collect().toSeq == Seq("no new records"))
+    intercept[IllegalArgumentException] {
+      new Pipeline(spark, wh, moneyMode = MoneyMode.Dec)
+        .execute(pagesDir, forceFullLoad = true, runId = "bad")
+    }
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"runs left persisted RDDs $leaked")
+  }
+
+  test("a money-mode failure inside the MERGE fan-out surfaces unwrapped; a re-run converges") {
+    import graft.functions.MoneyMode
+    val wh = Files.createTempDirectory("graft_wh_fanout").toString
+    new Pipeline(spark, wh).execute(pagesOf("graft_pages_first", Seq("page_00.ndjson")),
+      forceFullLoad = true, runId = "load")
+    // the Dec batch clashes with the Dbl money columns of orders,
+    // line_items and discount_codes while the other three tables merge
+    val dec = new Pipeline(spark, wh, moneyMode = MoneyMode.Dec)
+    val e = intercept[Exception] { dec.execute(pagesDir, forceFullLoad = true, runId = "dec") }
+    assert(e.isInstanceOf[IllegalArgumentException], s"wrapped: $e")
+    assert(e.getMessage.contains("money-mode mismatch"), e.getMessage)
+    assert(dec.control.all().filter($"run_id" === "dec")
+      .select("status").as[String].collect().toSeq == Seq("error"))
+
+    val p = new Pipeline(spark, wh)
+    val counts = p.execute(pagesDir, forceFullLoad = true, runId = "retry")
+    val clean = new Pipeline(spark, Files.createTempDirectory("graft_wh_clean").toString)
+    assert(counts == clean.execute(pagesDir, forceFullLoad = true, runId = "clean"))
+    Schemas.uniqueKeys.keys.foreach { t =>
+      val (got, want) = (p.readFinal(t).get, clean.readFinal(t).get)
+      assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"$t differs")
+    }
+  }
+
   test("driver entry smoke: flagship query returns rows") {
     assert(SparkEntry.entry(spark).count() > 0)
   }

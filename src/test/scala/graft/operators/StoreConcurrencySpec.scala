@@ -73,7 +73,7 @@ class StoreConcurrencySpec extends SparkSpec {
     // sequential reference
     val seqStore = new ParquetTableStore(spark, freshDir("seq"))
     names.zipWithIndex.foreach { case (n, i) =>
-      seqStore.upsert(n, batch(i), Seq("id"), countAfter = false) }
+      seqStore.upsert(n, batch(i), Seq("id")) }
 
     // concurrent run: 6 upserts racing on 3 threads, twice (the second
     // round exercises the row-level MERGE path against existing tables)
@@ -84,7 +84,7 @@ class StoreConcurrencySpec extends SparkSpec {
       val futs = names.zipWithIndex.map { case (n, i) =>
         pool.submit(new Callable[Unit] {
           def call(): Unit = {
-            concStore.upsert(n, batch(i), Seq("id"), countAfter = false); ()
+            concStore.upsert(n, batch(i), Seq("id")); ()
           }
         })
       }

@@ -36,8 +36,8 @@ class StorePruningSpec extends SparkSpec {
     // incremental batch: one updated key, one new key
     val batch = Seq(("7", "UPDATED", 99.0), ("999", "NEW", 1.0))
       .toDF("order_id", "status", "total")
-    val n = store.upsert("orders", batch, Seq("order_id"))
-    assert(n == 101)
+    store.upsert("orders", batch, Seq("order_id"))
+    assert(store.read("orders").get.count() == 101)
 
     val after = snapshot(store.path("orders"))
     val untouched = before.keySet intersect after.keySet
@@ -63,12 +63,13 @@ class StorePruningSpec extends SparkSpec {
       .toDF("order_id", "status", "total")
     store.upsert("orders", seed, Seq("order_id"))
     // same batch again: null-safe ON means the NULL-key row matches itself
-    val n2 = store.upsert("orders", seed, Seq("order_id"))
-    assert(n2 == 2, "re-merging the same batch must not re-insert the NULL-key row")
-    val n3 = store.upsert("orders",
+    store.upsert("orders", seed, Seq("order_id"))
+    assert(store.read("orders").get.count() == 2,
+      "re-merging the same batch must not re-insert the NULL-key row")
+    store.upsert("orders",
       Seq((Option.empty[String], "n2", 5.0)).toDF("order_id", "status", "total"),
       Seq("order_id"))
-    assert(n3 == 2)
+    assert(store.read("orders").get.count() == 2)
     val st = spark.read.parquet(store.path("orders"))
       .where($"order_id".isNull).select("status").as[String].collect().toSeq
     assert(st == Seq("n2"))

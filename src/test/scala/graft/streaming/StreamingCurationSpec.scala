@@ -41,7 +41,7 @@ class StreamingCurationSpec extends SparkSpec {
         val (survivors, _) = CorpusPipeline.curateIncrement(store, "cx",
           batch, emptyEval, "doc_id", "text", report = false,
           batchId = batchId + 1)
-        store.upsert("curated", survivors, Seq("doc_id"), countAfter = false)
+        store.upsert("curated", survivors, Seq("doc_id"))
         ()
       }
       .start()
@@ -76,7 +76,7 @@ class StreamingCurationSpec extends SparkSpec {
       (21L, secondDoc, "c")).toDF("doc_id", "text", "source")
     val (again, _) = CorpusPipeline.curateIncrement(store, "cx", batch2,
       emptyEval, "doc_id", "text", report = false, batchId = 2L)
-    store.upsert("curated", again, Seq("doc_id"), countAfter = false)
+    store.upsert("curated", again, Seq("doc_id"))
     assert(store.read("cx_meta").get.as[(Long, Long)].head() == metaBefore,
       "replayed batch moved the index fingerprint")
     assert(curatedIds() == Seq(11L, 21L),
