@@ -1,7 +1,8 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import graft.functions.MoneyMode
 import graft.operators.{Dedup, Flatten, ParquetTableStore, SyncControl}
@@ -13,14 +14,18 @@ import graft.sources.PagedNdjsonSource
   *  1. checkpoint read (control table top-1, 1 h buffer)         — T2/T3/O1
   *  2. paged scan + incremental predicate + first-wins dedup     — S1/P5/A1
   *  3. flatten into six tables                                   — P1-P4
-  *  4. per-table key dedup (null bypass)                         — A2/A3
+  *  4. per-table reduction to one row per null-safe key          — A2/A3
+  *     (the store's own, [[graft.operators.Upsert.keyDedup]] inside
+  *     every upsert path, so it cannot depend on partitioning)
   *  5. MERGE upsert into final parquet tables                    — J1/A4
   *     (the six tables overlapped through the store's shared fan-out,
-  *     [[ParquetTableStore.upsertAll]], the same one the streaming
-  *     lifecycle uses; the per-table row counts returned are read
-  *     afterwards in one aggregate, [[ParquetTableStore.rowCounts]])
+  *     [[ParquetTableStore.upsertAll]]; the per-table row counts returned
+  *     are read afterwards in one aggregate, [[ParquetTableStore.rowCounts]])
   *  6. checkpoint write (success/error)                          — T2/T6
   *  7. verification: uniqueness + FK orphans                     — A5-A8/J2
+  *
+  * Steps 2-5 are one sync round, [[Pipeline.mergeRound]], the same one the
+  * streaming lifecycle and its batch twin run.
   *
   * Tables are plain parquet directories under `warehouse/`; upsert writes
   * via temp-dir + atomic rename (SURVEY §7.4 atomicity note). At cluster
@@ -28,11 +33,11 @@ import graft.sources.PagedNdjsonSource
   * composition is unchanged.
   */
 class Pipeline(spark: SparkSession, warehouse: String,
-               autoCompactFiles: Int = 64,
                moneyMode: MoneyMode = MoneyMode.Dbl) {
+  import Pipeline._
 
   val control = new SyncControl(spark, s"$warehouse/_sync_control")
-  val store = new ParquetTableStore(spark, warehouse, autoCompactFiles)
+  val store = new ParquetTableStore(spark, warehouse, AutoCompactFiles)
 
   def readFinal(name: String): Option[DataFrame] = store.read(name)
 
@@ -78,43 +83,23 @@ class Pipeline(spark: SparkSession, warehouse: String,
     }
   }
 
-  /** The shared batch lifecycle (steps 2-7 of the class doc) over whatever
-    * raw source `mkRaw` provides — rows shaped like Schemas.rawOrder plus
-    * an orderable `_arrival_order` column. */
+  /** The batch lifecycle (steps 2-7 of the class doc) over whatever raw
+    * source `mkRaw` provides — rows shaped like Schemas.rawOrder plus an
+    * orderable `_arrival_order` column: one [[mergeRound]] between the
+    * control rows, then the six post-merge counts. */
   private def runBatch(runId: String)(mkRaw: => DataFrame): Map[String, Long] = {
     try {
-      // A1: first-wins dedup across pages in arrival order (ref :339-347)
-      val deduped = Dedup.firstWins(mkRaw, Seq("id"), "_arrival_order")
-        .drop("_page_file", "_arrival_order")
-        .cache()
-      // released on every exit: success, the empty-batch exit and a throw
-      try {
-        // P1-P4 flatten (money columns in the pipeline's MoneyMode — Dbl
-        // for reference float parity, Dec for exact fixed-point
-        // end-to-end); lazy, so the empty-batch exit reads its schemas too
-        val flat = Flatten.all(deduped, moneyMode)
-        // high-water mark and batch size in one aggregate
-        val stats = deduped.agg(max(to_timestamp(col("updated_at"))), count(lit(1))).head()
-        val batchCount = stats.getLong(1)
-        if (batchCount == 0) {
-          // ref early-exit :653-657 — still records a success run
-          control.recordRun("orders", new Timestamp(System.currentTimeMillis()),
-            0L, "success", runId, "no new records")
-        } else {
-          // A2/A3 key dedup with null bypass, then J1: the six MERGEs
-          // overlapped through the store's shared fan-out
-          store.upsertAll(flat.toSeq.map { case (name, df) =>
-            val keys = Schemas.uniqueKeys(name)
-            val withOrder = df.withColumn("_ord", monotonically_increasing_id())
-            (name, Dedup.compositeKeyDedup(withOrder, keys, "_ord").drop("_ord"), keys)
-          })
-          // T2 checkpoint: high-water mark = max(updated_at) of the batch
-          val hwm = Option(stats.getTimestamp(0))
-            .getOrElse(new Timestamp(System.currentTimeMillis()))
-          control.recordRun("orders", hwm, batchCount, "success", runId)
-        }
-        store.rowCounts(flat.map { case (name, df) => name -> df.schema })
-      } finally deduped.unpersist()
+      val round = mergeRound(store, mkRaw, moneyMode)
+      if (round.rows == 0) {
+        // ref early-exit :653-657 — still records a success run
+        control.recordRun("orders", new Timestamp(System.currentTimeMillis()),
+          0L, "success", runId, "no new records")
+      } else {
+        // T2 checkpoint: high-water mark = max(updated_at) of the batch
+        val hwm = round.maxUpdatedAt.getOrElse(new Timestamp(System.currentTimeMillis()))
+        control.recordRun("orders", hwm, round.rows, "success", runId)
+      }
+      store.rowCounts(round.schemas)
     } catch {
       case e: Throwable =>
         // T6: error path still records a control row (ref :693-707)
@@ -139,5 +124,50 @@ class Pipeline(spark: SparkSession, warehouse: String,
     } yield "line_items_orphans" ->
       (li.join(o, Seq("order_id"), "left_anti").count(), 0L)
     uniq ++ orphans
+  }
+}
+
+object Pipeline {
+
+  /** Data files past which a warehouse table is compacted after an
+    * upsert (to a quarter of this); every sync lifecycle's store uses it,
+    * so a long-running stream does not gain files on every trigger. */
+  val AutoCompactFiles = 64
+
+  /** What one [[mergeRound]] saw: the batch's high-water mark
+    * (max `updated_at`, None when no row carries one), its row count
+    * after first-wins, and the six flattened tables' schemas. */
+  final case class Round(maxUpdatedAt: Option[Timestamp], rows: Long,
+                         schemas: Map[String, StructType])
+
+  /** One sync round, shared by [[Pipeline]] (`execute`/`executeHttp`),
+    * [[graft.streaming.Incremental.run]]'s micro-batches and
+    * [[graft.streaming.Incremental.runBatchTwin]]:
+    *  - A1 first-wins by `id` over `_arrival_order` (ref :339-347);
+    *  - P1-P4 flatten (money columns in `moneyMode` — Dbl for reference
+    *    float parity, Dec for exact fixed-point end-to-end);
+    *  - J1 the six keyed MERGEs overlapped through
+    *    [[ParquetTableStore.upsertAll]], skipped on an empty batch. Each
+    *    upsert reduces its table's batch to one row per null-safe key
+    *    ([[graft.operators.Upsert.keyDedup]]), the only per-table dedup.
+    * `raw` holds Schemas.rawOrder rows plus `_arrival_order`. The deduped
+    * batch is cached (six consumers) and released on every exit. */
+  def mergeRound(store: ParquetTableStore, raw: DataFrame,
+                 moneyMode: MoneyMode = MoneyMode.Dbl): Round = {
+    val deduped = Dedup.firstWins(raw, Seq("id"), "_arrival_order")
+      .drop("_page_file", "_arrival_order")
+      .cache()
+    try {
+      // lazy, so an empty batch still reads the six schemas
+      val flat = Flatten.all(deduped, moneyMode)
+      // high-water mark and batch size in one aggregate
+      val stats = deduped.agg(max(to_timestamp(col("updated_at"))), count(lit(1))).head()
+      val rows = stats.getLong(1)
+      if (rows > 0)
+        store.upsertAll(flat.toSeq.map { case (name, df) =>
+          (name, df, Schemas.uniqueKeys(name)) })
+      Round(Option(stats.getTimestamp(0)), rows,
+        flat.map { case (name, df) => name -> df.schema })
+    } finally deduped.unpersist()
   }
 }

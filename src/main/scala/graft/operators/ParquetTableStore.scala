@@ -199,9 +199,9 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     val out = Map.newBuilder[String, Long]
     // plain listStatus recursion, NOT FileSystem.listFiles(recursive):
     // listFiles returns LocatedFileStatus and pays a block-location
-    // lookup PER FILE (~5 ms each on LocalFS — 50 s at 10k files,
-    // measured by ZoneHealProfile), which listStatus skips; hidden
-    // segments prune whole subtrees instead of being filtered per leaf
+    // lookup PER FILE (~5 ms each on LocalFS — 50 s at 10k files),
+    // which listStatus skips; hidden segments prune whole subtrees
+    // instead of being filtered per leaf
     def walk(dir: Path): Unit =
       f.listStatus(dir).foreach { s =>
         val n = s.getPath.getName
@@ -349,7 +349,8 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
       case Some(current) =>
         checkNumericParity(name, current.schema, updates.schema)
         if (canRowLevelMerge(current.schema, updates.schema))
-          rowLevelMerge(name, current.schema, updates, keys)
+          mergeFromStage(name, current.schema, Upsert.keyDedup(updates, keys), keys,
+            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
         else publish(name, Upsert.merge(current, updates, keys))
       case None =>
         publish(name, Upsert.keyDedup(updates, keys))
@@ -510,38 +511,34 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     ensureV2Table(name, cur.schema)
   }
 
-  /** Run the upsert as `MERGE INTO` against a parquet-backed v2 table
-    * registered in a store-private catalog. Null-safe key equality in the
-    * ON clause mirrors [[Upsert.merge]] (a NULL key part must match itself
-    * or the row is re-inserted on every run, breaking idempotence T4). */
-  private def rowLevelMerge(name: String, tableSchema: StructType,
-                            updates: DataFrame, keys: Seq[String]): Unit = {
+  /** `MERGE INTO` the parquet-backed v2 table `name` (registered in the
+    * store-private catalog) from `source`, with `when` as its WHEN clauses.
+    * Null-safe key equality in the ON clause mirrors [[Upsert.merge]] (a
+    * NULL key part must match itself or the row is re-inserted on every
+    * run, breaking idempotence T4). The source is staged as parquet and
+    * merged FROM THE STAGE — the reference's own staging-table shape
+    * (stage → MERGE → truncate, ref :483-590). This (a) makes the MERGE
+    * source deterministic (the pipeline's arrival-order column is
+    * nondeterministic lineage, which ReplaceData rejects in its
+    * group-filter subquery) and (b) avoids recomputing the source for the
+    * runtime file-pruning subquery AND the merge join. */
+  private def mergeFromStage(name: String, tableSchema: StructType,
+                             source: DataFrame, keys: Seq[String], when: String): Unit = {
     val fq = ensureV2Table(name, tableSchema)
-    // Stage the deduped batch as parquet and merge FROM THE STAGE — the
-    // reference's own staging-table shape (stage → MERGE → truncate, ref
-    // :483-590). This (a) makes the MERGE source deterministic (the
-    // pipeline's arrival-order column is nondeterministic lineage, which
-    // ReplaceData rejects in its group-filter subquery) and (b) avoids
-    // recomputing the batch for the runtime file-pruning subquery AND the
-    // merge join.
     val stage = new Path(s"$warehouse/_merge_src_$name")
     val stageFs = fs(stage)
-    // updates.sparkSession, not the store's: see publish (foreachBatch
+    // source.sparkSession, not the store's: see publish (foreachBatch
     // frames carry a cloned session with isolated conf)
-    val staged = Upsert.keyDedup(updates, keys)
-    withMicrosTimestamps(updates.sparkSession) {
-      staged.write.mode(SaveMode.Overwrite).parquet(stage.toString)
+    withMicrosTimestamps(source.sparkSession) {
+      source.write.mode(SaveMode.Overwrite).parquet(stage.toString)
     }
-    val view = s"__graft_upsert_src_${java.util.UUID.randomUUID().toString.take(8)}"
-    // read back with the staged frame's own schema: inferring it from the
-    // stage's footers would cost one more job per upsert
-    spark.read.schema(staged.schema).parquet(stage.toString).createOrReplaceTempView(view)
+    val view = s"__graft_merge_src_${java.util.UUID.randomUUID().toString.take(8)}"
+    // read back with the source's own schema: inferring it from the
+    // stage's footers would cost one more job per merge
+    spark.read.schema(source.schema).parquet(stage.toString).createOrReplaceTempView(view)
     try {
       val on = keys.map(k => s"t.`$k` <=> u.`$k`").mkString(" AND ")
-      spark.sql(
-        s"""MERGE INTO $fq t USING $view u ON $on
-           |WHEN MATCHED THEN UPDATE SET *
-           |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+      spark.sql(s"MERGE INTO $fq t USING $view u ON $on $when")
     } finally {
       spark.catalog.dropTempView(view)
       stageFs.delete(stage, true)
@@ -603,27 +600,9 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
       s"delete('$name') matches every row — an emptied parquet table loses " +
         "its schema and becomes unreadable. Drop or rebuild the table " +
         "instead of deleting all rows.")
-    if (canRowLevelDelete(current.schema)) {
-      val fq = ensureV2Table(name, current.schema)
-      // stage the key frame (deterministic source — same rationale as
-      // rowLevelMerge's stage) and merge-delete from it
-      val stage = new Path(s"$warehouse/_merge_src_$name")
-      val stageFs = fs(stage)
-      withMicrosTimestamps(matches.sparkSession) {
-        keyFrame.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-      }
-      val view = s"__graft_delete_src_${java.util.UUID.randomUUID().toString.take(8)}"
-      spark.read.parquet(stage.toString).createOrReplaceTempView(view)
-      try {
-        val on = keys.map(k => s"t.`$k` <=> u.`$k`").mkString(" AND ")
-        spark.sql(
-          s"""MERGE INTO $fq t USING $view u ON $on
-             |WHEN MATCHED THEN DELETE""".stripMargin)
-      } finally {
-        spark.catalog.dropTempView(view)
-        stageFs.delete(stage, true)
-      }
-    } else publish(name, current.join(renamed, cond, "left_anti"))
+    if (canRowLevelDelete(current.schema))
+      mergeFromStage(name, current.schema, keyFrame, keys, "WHEN MATCHED THEN DELETE")
+    else publish(name, current.join(renamed, cond, "left_anti"))
     removed
   }
 

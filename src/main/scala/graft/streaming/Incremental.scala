@@ -3,8 +3,8 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
-import graft.Schemas
-import graft.operators.{Dedup, Flatten, ParquetTableStore}
+import graft.{Pipeline, Schemas}
+import graft.operators.ParquetTableStore
 
 /** Structured Streaming re-expression of the reference's incremental
   * micro-batch loop (SURVEY §2.8 T1-T6):
@@ -17,12 +17,14 @@ import graft.operators.{Dedup, Flatten, ParquetTableStore}
   *    watermarked state instead of a re-scan.
   *  - A1 stream dedup: `dropDuplicates("id")` with watermark-bounded state.
   *  - T4 effective exactly-once: at-least-once file arrival made idempotent
-  *    by the keyed MERGE in foreachBatch (same [[graft.operators.Upsert]]
-  *    as batch) + checkpointLocation offsets (T2).
+  *    by the keyed MERGE in foreachBatch — each micro-batch runs the batch
+  *    pipeline's own sync round, [[graft.Pipeline.mergeRound]] — plus
+  *    checkpointLocation offsets (T2).
   *
-  * Scale: state is bounded by the watermark; the upsert inside foreachBatch
-  * is the same anti-join+union plan as batch, so a 1000-executor cluster
-  * runs it as ordinary distributed micro-batches.
+  * Scale: state is bounded by the watermark; the round inside foreachBatch
+  * is the batch pipeline's row-level MERGE (only files holding matched
+  * keys are rewritten), so a 1000-executor cluster runs it as ordinary
+  * distributed micro-batches.
   */
 object Incremental {
 
@@ -37,7 +39,7 @@ object Incremental {
     * dedup, flatten, per-table keyed upsert in foreachBatch. */
   def run(spark: SparkSession, pagesDir: String, warehouse: String,
           checkpoint: String, availableNow: Boolean = true): StreamingQuery = {
-    val store = new ParquetTableStore(spark, warehouse)
+    val store = new ParquetTableStore(spark, warehouse, Pipeline.AutoCompactFiles)
     // A1 dedup: WithinWatermark variant — duplicates of an id arriving
     // within the 1 h late-data window are dropped (the reference's
     // within-run first-wins), while a genuinely newer version arriving
@@ -52,19 +54,12 @@ object Incremental {
     val writer = stream.writeStream
       .option("checkpointLocation", checkpoint)     // T2 offsets
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val raw = batch.drop("updated_ts")
-        if (!raw.isEmpty) {
-          // within-batch determinism for first-wins (files can batch together)
-          val ordered = raw.withColumn("_ord", monotonically_increasing_id())
-          // cached: all six flattened tables derive from this frame, and
-          // without the cache every per-table upsert re-parses the batch
-          // and re-runs the dedup window (6× per micro-batch)
-          val deduped = Dedup.firstWins(ordered, Seq("id"), "_ord").drop("_ord").cache()
-          // T4 idempotent MERGE; nothing is counted afterwards (the
-          // stream writes no control rows, so it reports no counts)
-          try upsertAll(store, deduped)
-          finally deduped.unpersist()
-        }
+        // within-batch arrival order for first-wins (files can batch
+        // together); an empty batch is skipped by the round's own
+        // aggregate. T4 idempotent MERGE; nothing is counted afterwards
+        // (the stream writes no control rows, so it reports no counts)
+        Pipeline.mergeRound(store, batch.drop("updated_ts")
+          .withColumn("_arrival_order", monotonically_increasing_id()))
         ()
       }
     (if (availableNow) writer.trigger(Trigger.AvailableNow()) else writer).start()
@@ -73,7 +68,8 @@ object Incremental {
   /** The BATCH TWIN of [[run]] — the same lifecycle with each sync round
     * as an explicit batch: read the round's pages in arrival order,
     * first-wins dedup within the round (A1), flatten (P1-P4), keyed
-    * upsert per table (T4's idempotent MERGE). This is exactly the
+    * upsert per table (T4's idempotent MERGE) — one
+    * [[graft.Pipeline.mergeRound]] per round. This is exactly the
     * reference's hourly execution shape (SURVEY §3.1: fetch → dedup →
     * stage → merge, one run per trigger), so it is the oracle-gateable
     * form of the stream: q69 hashes its final warehouse against a DuckDB
@@ -81,23 +77,12 @@ object Incremental {
     * identical warehouse on a fixture whose batches align with rounds
     * (the q55 batch-twin trick). */
   def runBatchTwin(spark: SparkSession, rounds: Seq[String], warehouse: String): Unit = {
-    val store = new ParquetTableStore(spark, warehouse)
+    val store = new ParquetTableStore(spark, warehouse, Pipeline.AutoCompactFiles)
     rounds.foreach { dir =>
-      val raw = graft.sources.PagedNdjsonSource.read(spark, dir, Schemas.rawOrder)
-      // cached for the same reason as run()'s batch body: six consumers
-      val deduped = Dedup.firstWins(raw, Seq("id"), "_arrival_order")
-        .drop("_page_file", "_arrival_order").cache()
-      try upsertAll(store, deduped)
-      finally deduped.unpersist()
+      Pipeline.mergeRound(store,
+        graft.sources.PagedNdjsonSource.read(spark, dir, Schemas.rawOrder))
     }
   }
-
-  /** The six per-entity MERGEs of one sync round, through the store's
-    * overlapped fan-out ([[ParquetTableStore.upsertAll]]) — the same one
-    * the batch pipeline uses. */
-  private def upsertAll(store: ParquetTableStore, deduped: DataFrame): Unit =
-    store.upsertAll(Flatten.all(deduped).toSeq.map { case (name, df) =>
-      (name, df, Schemas.uniqueKeys(name)) })
 
   /** Streaming daily tumbling-window rollup over the events stream (A9 as a
     * *stream*: per-day counts/sums with watermark-closed windows). Batch

@@ -14,8 +14,9 @@ class PipelineSpec extends SparkSpec {
 
     val counts = p.execute(pagesDir, forceFullLoad = true, runId = "run1")
     assert(counts("orders") == 4)        // 5 raw minus 1 cross-page dup
-    // 4 deduped orders explode to 5 items; composite-key dedup drops order
-    // 1003's duplicate (order 1002's NULL-key item bypasses dedup) -> 4
+    // 4 deduped orders explode to 5 items; the store's one-row-per-key
+    // reduction drops order 1003's duplicate (order 1002's NULL-key item
+    // is its own null-safe key) -> 4
     assert(counts("line_items") == 4)
     assert(counts("customers") == 3)
     assert(counts("shipping_addresses") == 2)
@@ -134,6 +135,45 @@ class PipelineSpec extends SparkSpec {
       val (got, want) = (p.readFinal(t).get, clean.readFinal(t).get)
       assert(got.exceptAll(want).isEmpty && want.exceptAll(got).isEmpty, s"$t differs")
     }
+  }
+
+  test("the row a table keeps for a duplicate key does not depend on shuffle partitions") {
+    // orders 1 and 2, in that order, both carry customer 900 with a
+    // different email and marketing consent
+    val pages = Files.createTempDirectory("graft_pages_invariance")
+    def order(id: Int, email: String, marketing: Boolean): String =
+      s"""{"id":$id,"created_at":"2024-04-01T10:00:00+00:00","updated_at":"2024-04-01T1$id:00:00+00:00",""" +
+        s""""processed_at":"2024-04-01T10:00:05+00:00","subtotal_price":"10.00","total_price":"11.00",""" +
+        s""""total_tax":"1.00","financial_status":"paid","currency":"USD",""" +
+        s""""customer":{"id":900,"email":"$email","created_at":"2023-01-01T00:00:00+00:00",""" +
+        s""""first_name":"C","last_name":"D","verified_email":true,"accepts_marketing":$marketing},""" +
+        s""""line_items":[{"product_id":$id,"variant_id":$id,"name":"A","price":"10.00","quantity":1,"vendor":"V"}],""" +
+        s""""shipping_address":{"first_name":"C","last_name":"D","address1":"1 Main St","city":"X","country":"US","zip":"1"},""" +
+        s""""discount_codes":[{"code":"C$id","amount":"1.00"}]}"""
+    Files.write(pages.resolve("page_00.ndjson"),
+      java.util.Arrays.asList(order(1, "first@x", true), order(2, "second@x", false)))
+
+    val tables = Seq("customers", "marketing_consent")
+    def rows(wh: String): Map[String, Set[Seq[Any]]] = tables.map(t =>
+      t -> spark.read.parquet(s"$wh/$t").collect().map(_.toSeq).toSet).toMap
+    val confs = Seq("spark.sql.shuffle.partitions",
+      "spark.sql.adaptive.coalescePartitions.enabled")
+    val saved = confs.map(k => k -> spark.conf.getOption(k))
+    val byPartitions = try {
+      spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
+      Seq(1, 2).map { n =>
+        spark.conf.set("spark.sql.shuffle.partitions", n.toLong)
+        val wh = Files.createTempDirectory(s"graft_wh_parts$n").toString
+        new Pipeline(spark, wh).execute(pages.toString, forceFullLoad = true, runId = s"p$n")
+        rows(wh)
+      }
+    } finally saved.foreach { case (k, v) => v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
+    val twin = Files.createTempDirectory("graft_wh_invariance_twin").toString
+    graft.streaming.Incremental.runBatchTwin(spark, Seq(pages.toString), twin)
+
+    assert(byPartitions(0) == byPartitions(1),
+      s"1 vs 2 shuffle partitions:\n${byPartitions(0)}\nvs\n${byPartitions(1)}")
+    assert(byPartitions(0) == rows(twin), s"pipeline vs batch twin:\n${byPartitions(0)}\nvs\n${rows(twin)}")
   }
 
   test("driver entry smoke: flagship query returns rows") {

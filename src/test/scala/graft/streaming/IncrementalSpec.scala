@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.file.Files
-import graft.{Schemas, SparkSpec}
+import graft.{Pipeline, Schemas, SparkSpec}
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -77,10 +77,16 @@ class IncrementalSpec extends SparkSpec {
     }
     Incremental.runBatchTwin(spark, rounds, whBatch)
 
+    // the batch pipeline, one full-load sync per round in the same order
+    val whPipeline = Files.createTempDirectory("graft_twin_whp").toString
+    val pipeline = new Pipeline(spark, whPipeline)
+    rounds.foreach(dir => pipeline.execute(dir, forceFullLoad = true))
+
     for (t <- Schemas.uniqueKeys.keys) {
-      val a = spark.read.parquet(s"$whStream/$t").collect().map(_.toSeq).toSet
-      val b = spark.read.parquet(s"$whBatch/$t").collect().map(_.toSeq).toSet
+      def rows(wh: String) = spark.read.parquet(s"$wh/$t").collect().map(_.toSeq).toSet
+      val (a, b, c) = (rows(whStream), rows(whBatch), rows(whPipeline))
       assert(a == b, s"table $t diverges between stream and batch twin:\n$a\nvs\n$b")
+      assert(c == b, s"table $t diverges between pipeline and batch twin:\n$c\nvs\n$b")
     }
   }
 
