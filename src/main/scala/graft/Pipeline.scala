@@ -2,7 +2,6 @@ package graft
 
 import java.sql.Timestamp
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.functions._
 import graft.functions.MoneyMode
 import graft.operators.{Dedup, Flatten, ParquetTableStore, SyncControl}
@@ -20,7 +19,8 @@ import graft.sources.PagedNdjsonSource
   *  5. MERGE upsert into final parquet tables                    — J1/A4
   *     (the six tables overlapped through the store's shared fan-out,
   *     [[ParquetTableStore.upsertAll]]; the per-table row counts returned
-  *     are read afterwards in one aggregate, [[ParquetTableStore.rowCounts]])
+  *     are read afterwards from the tables' parquet footers on the driver,
+  *     [[ParquetTableStore.rowCounts]], without a Spark job)
   *  6. checkpoint write (success/error)                          — T2/T6
   *  7. verification: uniqueness + FK orphans                     — A5-A8/J2
   *
@@ -99,7 +99,7 @@ class Pipeline(spark: SparkSession, warehouse: String,
         val hwm = round.maxUpdatedAt.getOrElse(new Timestamp(System.currentTimeMillis()))
         control.recordRun("orders", hwm, round.rows, "success", runId)
       }
-      store.rowCounts(round.schemas)
+      store.rowCounts(Schemas.uniqueKeys.keys)
     } catch {
       case e: Throwable =>
         // T6: error path still records a control row (ref :693-707)
@@ -135,10 +135,9 @@ object Pipeline {
   val AutoCompactFiles = 64
 
   /** What one [[mergeRound]] saw: the batch's high-water mark
-    * (max `updated_at`, None when no row carries one), its row count
-    * after first-wins, and the six flattened tables' schemas. */
-  final case class Round(maxUpdatedAt: Option[Timestamp], rows: Long,
-                         schemas: Map[String, StructType])
+    * (max `updated_at`, None when no row carries one) and its row count
+    * after first-wins. */
+  final case class Round(maxUpdatedAt: Option[Timestamp], rows: Long)
 
   /** One sync round, shared by [[Pipeline]] (`execute`/`executeHttp`),
     * [[graft.streaming.Incremental.run]]'s micro-batches and
@@ -158,16 +157,13 @@ object Pipeline {
       .drop("_page_file", "_arrival_order")
       .cache()
     try {
-      // lazy, so an empty batch still reads the six schemas
-      val flat = Flatten.all(deduped, moneyMode)
       // high-water mark and batch size in one aggregate
       val stats = deduped.agg(max(to_timestamp(col("updated_at"))), count(lit(1))).head()
       val rows = stats.getLong(1)
       if (rows > 0)
-        store.upsertAll(flat.toSeq.map { case (name, df) =>
+        store.upsertAll(Flatten.all(deduped, moneyMode).toSeq.map { case (name, df) =>
           (name, df, Schemas.uniqueKeys(name)) })
-      Round(Option(stats.getTimestamp(0)), rows,
-        flat.map { case (name, df) => name -> df.schema })
+      Round(Option(stats.getTimestamp(0)), rows)
     } finally deduped.unpersist()
   }
 }

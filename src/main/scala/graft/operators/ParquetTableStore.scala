@@ -1,7 +1,13 @@
 package graft.operators
 
+import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.metadata.ParquetMetadata
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
+  ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types._
 import graft.sources.v2.GraftCatalog
@@ -18,6 +24,12 @@ import graft.sources.v2.GraftCatalog
   * shopify-etl/shopify_etl.py:558-590). Tables whose schema the v2 codec
   * cannot carry (nested/decimal/binary columns) fall back to the full
   * write-to-temp + atomic-swap publish (SURVEY §7.4 atomicity note).
+  *
+  * What parquet footers already answer is read from them on the driver,
+  * never by a Spark job: a table's schema for the operations that open
+  * their own table ([[upsert]], [[delete]], [[sqlTable]] and the
+  * compactions — one footer, see [[footerSchema]]), row counts
+  * ([[rowCounts]]) and whether a MERGE stage holds any row.
   *
   * All path operations go through Hadoop's [[FileSystem]], resolved from
   * the warehouse URI itself, so `file:///`, `hdfs://` and `s3a://`
@@ -193,7 +205,13 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     // table stranded at _swap_<name> would otherwise fail every routed
     // read as "does not exist" without ever being restored
     recoverTableBackup(name)
-    val root = new Path(path(name))
+    listParquet(new Path(path(name)))
+  }
+
+  /** (path → byte length) of the parquet files under `root`, at any
+    * depth, skipping hidden segments — [[listDataFiles]] without the
+    * table's crash recovery. */
+  private def listParquet(root: Path): Map[String, Long] = {
     val f = fs(root)
     if (!f.exists(root)) return Map.empty
     val out = Map.newBuilder[String, Long]
@@ -213,6 +231,51 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     walk(root)
     out.result()
   }
+
+  /** One data file's parquet footer, read on the driver: no Spark job
+    * (the v2 codec opens its files the same way,
+    * [[graft.sources.v2.GraftParquetTable]]). */
+  private def footer(file: String): ParquetMetadata = {
+    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file),
+      spark.sparkContext.hadoopConfiguration))
+    try r.getFooter finally r.close()
+  }
+
+  /** Rows in `files`, summed from their footers' row-group counts. */
+  private def footerRows(files: Iterable[String]): Long =
+    files.iterator.map(f => footer(f).getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** `name`'s schema as `spark.read.parquet` infers it, but from one
+    * data file's footer on the driver instead of an inference job:
+    * Spark's row-metadata key when the file carries one (every file
+    * Spark wrote), else the parquet-to-Spark converter (files the v2
+    * codec rewrote); every column nullable, as a file-source read
+    * reports it. None when the table has no data file, or when any data
+    * file sits below a subdirectory: a partitioned layout takes its
+    * partition columns from directory names, which only [[read]]'s
+    * inference adds. */
+  private[operators] def footerSchema(name: String): Option[StructType] = {
+    val files = listDataFiles(name).keys.toSeq.sorted
+    val root = new Path(path(name))
+    val fileDepth = fs(root).makeQualified(root).depth() + 1
+    if (files.isEmpty || files.exists(f => new Path(f).depth() != fileDepth)) None
+    else {
+      val meta = footer(files.head).getFileMetaData
+      val fromKey = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+        .collect { case s: StructType => s }
+      Some(asNullable(fromKey.getOrElse(
+        new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))))
+    }
+  }
+
+  /** [[read]] with the [[footerSchema]] when there is one: the same
+    * frame without the footer-inference job. */
+  private def readKnown(name: String): Option[DataFrame] =
+    footerSchema(name) match {
+      case Some(s) => Some(spark.read.schema(s).parquet(path(name)))
+      case None    => read(name)
+    }
 
   /** Crash recovery for [[publish]]'s whole-table swap — the table-level
     * analog of [[recoverPartitionBackups]]: a crash between
@@ -340,12 +403,15 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * [[Upsert.merge]] + full snapshot publish. Both paths reduce the batch
     * to one row per key first, so the table invariant "at most one row per
     * (null-safe) key" holds inductively — which is also what keeps the MERGE
-    * cardinality check (one source row per target row) satisfied. Nothing
-    * is counted afterwards: a caller that wants row counts reads them for
-    * all its tables at once ([[rowCounts]]). A lifecycle that upserts
-    * several tables per run goes through [[upsertAll]]. */
+    * cardinality check (one source row per target row) satisfied. The
+    * current table is opened with its schema from one data file's footer
+    * ([[footerSchema]]), so no inference job runs; a partitioned layout or
+    * a table without a data file goes through [[read]]. Nothing is counted
+    * afterwards: a caller that wants row counts reads them for all its
+    * tables at once ([[rowCounts]]). A lifecycle that upserts several
+    * tables per run goes through [[upsertAll]]. */
   def upsert(name: String, updates: DataFrame, keys: Seq[String]): Unit = {
-    read(name) match {
+    readKnown(name) match {
       case Some(current) =>
         checkNumericParity(name, current.schema, updates.schema)
         if (canRowLevelMerge(current.schema, updates.schema))
@@ -395,24 +461,11 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     }
   }
 
-  /** Row counts of several tables in ONE grouped aggregate over their
-    * union. Each table is read with its known `schemas` entry, so no
-    * parquet footer-inference job runs per table; the count reads no
-    * column. A missing or empty table counts 0. */
-  def rowCounts(schemas: Map[String, StructType]): Map[String, Long] = {
-    val present = schemas.filter { case (name, _) =>
-      recoverTableBackup(name)
-      val p = new Path(path(name))
-      fs(p).exists(p)
-    }
-    val counted =
-      if (present.isEmpty) Map.empty[String, Long]
-      else present.map { case (name, schema) =>
-        spark.read.schema(schema).parquet(path(name)).select(lit(name).as("t"))
-      }.reduce(_ unionByName _).groupBy("t").count().collect()
-        .map(r => r.getString(0) -> r.getLong(1)).toMap
-    schemas.keys.map(n => n -> counted.getOrElse(n, 0L)).toMap
-  }
+  /** Row counts of `names`, summed from their data files' footer
+    * record counts on the driver: no Spark job, no column read. A
+    * missing or empty table counts 0. */
+  def rowCounts(names: Iterable[String]): Map[String, Long] =
+    names.map(n => n -> footerRows(listDataFiles(n).keys)).toMap
 
   /** Money-representation guard (ADVICE r4): a Dec-mode batch merged into
     * a Dbl-mode warehouse (or vice versa) would silently cast
@@ -506,7 +559,7 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * admission there is a pure optimization that must never fail a
     * query). See [[graft.sources.v2.GraftParquetTable]]. */
   def sqlTable(name: String): String = {
-    val cur = read(name).getOrElse(
+    val cur = readKnown(name).getOrElse(
       sys.error(s"table '$name' does not exist"))
     ensureV2Table(name, cur.schema)
   }
@@ -521,10 +574,14 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * source deterministic (the pipeline's arrival-order column is
     * nondeterministic lineage, which ReplaceData rejects in its
     * group-filter subquery) and (b) avoids recomputing the source for the
-    * runtime file-pruning subquery AND the merge join. */
+    * runtime file-pruning subquery AND the merge join.
+    *
+    * A stage whose footers count zero rows skips the MERGE: it could
+    * change nothing, and on a one-file table whose file holds no row
+    * the one-file rewrite group (see GraftParquetTable) would replace
+    * that file with none, leaving a table without a schema. */
   private def mergeFromStage(name: String, tableSchema: StructType,
                              source: DataFrame, keys: Seq[String], when: String): Unit = {
-    val fq = ensureV2Table(name, tableSchema)
     val stage = new Path(s"$warehouse/_merge_src_$name")
     val stageFs = fs(stage)
     // source.sparkSession, not the store's: see publish (foreachBatch
@@ -532,6 +589,11 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     withMicrosTimestamps(source.sparkSession) {
       source.write.mode(SaveMode.Overwrite).parquet(stage.toString)
     }
+    if (footerRows(listParquet(stage).keys) == 0L) {
+      stageFs.delete(stage, true)
+      return
+    }
+    val fq = ensureV2Table(name, tableSchema)
     val view = s"__graft_merge_src_${java.util.UUID.randomUUID().toString.take(8)}"
     // read back with the source's own schema: inferring it from the
     // stage's footers would cost one more job per merge
@@ -575,7 +637,7 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * replaced. */
   def delete(name: String, matches: DataFrame, keys: Seq[String]): Long = {
     require(keys.nonEmpty, "delete needs at least one key column")
-    val current = read(name).getOrElse(
+    val current = readKnown(name).getOrElse(
       sys.error(s"cannot delete from missing table $name"))
     val keyFrame = matches.select(keys.map(col): _*).distinct()
     val renamed = keyFrame.toDF(keys.map(k => s"__d_$k"): _*)
@@ -882,7 +944,7 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     require(f.exists(p), s"cannot compact missing table $name")
     def nFiles = f.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
     val before = nFiles
-    publish(name, spark.read.parquet(path(name)).repartition(targetFiles))
+    publish(name, readKnown(name).get.repartition(targetFiles))
     (before, nFiles)
   }
 
@@ -943,7 +1005,7 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     def nFiles = f.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
     val before = nFiles
     val cs = cols.map(col)
-    publish(name, spark.read.parquet(path(name))
+    publish(name, readKnown(name).get
       .repartitionByRange(targetFiles, cs: _*)
       .sortWithinPartitions(cs: _*))
     (before, nFiles)
@@ -970,7 +1032,7 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     requireUnpartitioned(name, "compactZOrder")
     def nFiles = f.listStatus(p).count(_.getPath.getName.endsWith(".parquet"))
     val before = nFiles
-    val df = spark.read.parquet(path(name))
+    val df = readKnown(name).get
     import org.apache.spark.sql.functions.{min => fmin, max => fmax, lit,
       coalesce, floor, least}
     val b = df.agg(
@@ -1000,6 +1062,18 @@ object ParquetTableStore {
   /** Column types GraftParquetTable's codec reads and writes. */
   private val MergeableTypes: Set[DataType] =
     Set(BooleanType, IntegerType, LongType, DoubleType, StringType, TimestampType)
+
+  /** `t` with every field and element nullable, at any depth — the
+    * shape a file-source read reports for its data schema. */
+  private def asNullable(t: StructType): StructType = {
+    def go(d: DataType): DataType = d match {
+      case s: StructType    => asNullable(s)
+      case ArrayType(e, _)  => ArrayType(go(e), containsNull = true)
+      case MapType(k, v, _) => MapType(go(k), go(v), valueContainsNull = true)
+      case other            => other
+    }
+    StructType(t.fields.map(f => f.copy(dataType = go(f.dataType), nullable = true)))
+  }
 
   private def pathHash(p: String): String =
     java.security.MessageDigest.getInstance("MD5")

@@ -51,6 +51,15 @@ import org.apache.spark.util.SerializableConfiguration
   * arrives (rule disabled), the commit falls back to the full snapshot
   * swap — correct, just unpruned.
   *
+  * A row-level scan over a table of at most one file skips that
+  * subquery: it could only keep that one file, so the scan records the
+  * file as its rewrite group up front and offers no filter attribute,
+  * and the commit is the same group-pruned one (see
+  * [[GraftScanBuilder.build]]). Tables of two or more files keep the
+  * subquery. The trade-off: a MERGE that matches no key of a one-file
+  * table rewrites that file with the inserted rows instead of adding a
+  * second file next to it, so the table stays at one file.
+  *
   * Scope/caveats (documented):
   *  - single concurrent writer assumed; the selective commit moves new
   *    files in before deleting replaced ones, so a crash window can leave
@@ -179,9 +188,10 @@ private[v2] class RewriteGroup {
   * listing. A SQL query can therefore never fail or change its answer
   * because of the manifest; it can only open fewer files. Row-level
   * operations (MERGE/UPDATE/DELETE — `group` defined) never consult the
-  * manifest: their file set is owned by the runtime `_file` filter that
-  * also scopes the rewrite commit, and an extra static prune would buy
-  * nothing while coupling the commit path to manifest freshness. */
+  * manifest: their file set is owned by the runtime `_file` filter (or,
+  * over at most one file, fixed in [[build]]) that also scopes the
+  * rewrite commit, and an extra static prune would buy nothing while
+  * coupling the commit path to manifest freshness. */
 private[v2] class GraftScanBuilder(tableSchema: StructType,
                                    listed: Array[(String, Long)],
                                    conf: SerializableConfiguration,
@@ -219,7 +229,15 @@ private[v2] class GraftScanBuilder(tableSchema: StructType,
 
   override def pushedFilters(): Array[Filter] = used
 
-  override def build(): Scan = new GraftParquetScan(required, admitted, conf, group)
+  /** A row-level scan over at most one file fixes its rewrite group
+    * here: Spark plans the runtime group-filter subquery only for a scan
+    * with filter attributes, and over one file that subquery could only
+    * keep that file, at the cost of three jobs per operation. */
+  override def build(): Scan = {
+    val groupFixed = group.isDefined && listed.length <= 1
+    if (groupFixed) group.foreach(_.scannedFiles = Some(admitted))
+    new GraftParquetScan(required, admitted, conf, group, runtimeFiltered = !groupFixed)
+  }
 }
 
 private[v2] object GraftScanBuilder extends org.apache.spark.internal.Logging {
@@ -366,7 +384,8 @@ private[v2] object MergeRowShape {
 
 private[v2] class GraftParquetScan(schema: StructType, files: Array[String],
                                    conf: SerializableConfiguration,
-                                   group: Option[RewriteGroup])
+                                   group: Option[RewriteGroup],
+                                   runtimeFiltered: Boolean)
   extends Scan with Batch with SupportsRuntimeV2Filtering {
 
   @volatile private var activeFiles: Array[String] = files
@@ -385,7 +404,8 @@ private[v2] class GraftParquetScan(schema: StructType, files: Array[String],
 
   override def filterAttributes(): Array[
     org.apache.spark.sql.connector.expressions.NamedReference] =
-    Array(org.apache.spark.sql.connector.expressions.Expressions.column(
+    if (!runtimeFiltered) Array.empty
+    else Array(org.apache.spark.sql.connector.expressions.Expressions.column(
       GraftParquetTable.FileCol))
 
   /** Runtime group filtering: Spark's row-level-operation DPP subquery

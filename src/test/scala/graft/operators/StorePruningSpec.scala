@@ -119,4 +119,39 @@ class StorePruningSpec extends SparkSpec {
       .select("financial_status").as[String].collect().toSeq
     assert(row == Seq("refunded"))
   }
+
+  test("a one-file table stays one file under an insert-only batch") {
+    val wh = Files.createTempDirectory("graft_prune_onefile").toString
+    val store = new ParquetTableStore(spark, wh)
+    val seed = (1L to 50L).map(k => (k.toString, s"v$k", k.toDouble))
+      .toDF("order_id", "status", "total")
+    store.upsert("orders", seed, Seq("order_id"))
+    store.compact("orders", targetFiles = 1)
+    assert(snapshot(store.path("orders")).size == 1)
+    // no key matches: the one file is the rewrite group, so the inserted
+    // rows land in its replacement instead of a second file
+    store.upsert("orders", Seq(("900", "NEW", 9.0), ("901", "NEW", 1.0))
+      .toDF("order_id", "status", "total"), Seq("order_id"))
+    assert(snapshot(store.path("orders")).size == 1)
+    val rows = store.read("orders").get
+      .select("order_id", "status").as[(String, String)].collect().toMap
+    assert(rows.size == 52 && rows("900") == "NEW" && rows("901") == "NEW" &&
+      rows("7") == "v7")
+  }
+
+  test("an empty batch into a one-file table of zero rows keeps the table readable") {
+    val wh = Files.createTempDirectory("graft_prune_empty").toString
+    val store = new ParquetTableStore(spark, wh)
+    val empty = Seq.empty[(String, String, Double)].toDF("order_id", "status", "total")
+    store.upsert("orders", empty, Seq("order_id"))
+    assert(snapshot(store.path("orders")).size == 1)
+    store.upsert("orders", empty, Seq("order_id"))
+    val back = spark.read.parquet(store.path("orders"))
+    assert(back.schema.fieldNames.toSeq == Seq("order_id", "status", "total"))
+    assert(back.count() == 0)
+    // and a real batch still merges in afterwards
+    store.upsert("orders", Seq(("1", "a", 1.0)).toDF("order_id", "status", "total"),
+      Seq("order_id"))
+    assert(store.read("orders").get.count() == 1)
+  }
 }

@@ -295,4 +295,73 @@ class UpsertSpec extends SparkSpec {
     val after = spark.read.parquet(store.path("t")).orderBy("k").collect().toSeq
     assert(after == before, "compaction must not change table content")
   }
+
+  test("footer schema equals spark.read.parquet's: Spark-published, v2-rewritten, decimal") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_footer").toString
+    val store = new ParquetTableStore(spark, wh)
+    def inferred(name: String) = spark.read.parquet(store.path(name)).schema
+    // published by Spark: string, long and timestamp columns
+    val typed = Seq((1L, "a", 1, 1.5, true), (2L, "b", 2, 2.5, false))
+      .toDF("k", "s", "i", "d", "b")
+      .withColumn("ts", to_timestamp(lit("2024-01-01 10:00:00")))
+    // whether every data file carries Spark's row-schema footer key
+    def sparkKeyed(name: String): Seq[Boolean] =
+      new java.io.File(store.path(name)).listFiles()
+        .filter(_.getName.endsWith(".parquet")).toSeq.map { f =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+              new org.apache.hadoop.fs.Path(f.getPath), spark.sparkContext.hadoopConfiguration))
+          try r.getFooter.getFileMetaData.getKeyValueMetaData
+            .containsKey("org.apache.spark.sql.parquet.row.metadata")
+          finally r.close()
+        }
+    store.upsert("pub", typed.select("k", "s", "ts"), Seq("k"))
+    assert(sparkKeyed("pub").nonEmpty && sparkKeyed("pub").forall(identity))
+    assert(store.footerSchema("pub").contains(inferred("pub")))
+    // rewritten by the v2 codec after a MERGE (no Spark row metadata in
+    // the footer): every codec type
+    store.upsert("codec", typed, Seq("k"))
+    store.upsert("codec", typed.withColumn("s", lit("c")), Seq("k"))
+    assert(sparkKeyed("codec").nonEmpty && !sparkKeyed("codec").exists(identity))
+    assert(store.footerSchema("codec").contains(inferred("codec")))
+    assert(store.read("codec").get.where($"s" === "c").count() == 2)
+    // decimal: the fallback Upsert.merge path publishes it
+    val dec = Seq((1L, "x"), (2L, "y")).toDF("k", "s")
+      .withColumn("price", lit("10.50").cast(org.apache.spark.sql.types.DecimalType(18, 2)))
+    store.upsert("dec", dec, Seq("k"))
+    store.upsert("dec", dec.withColumn("s", lit("z")), Seq("k"))
+    assert(store.footerSchema("dec").contains(inferred("dec")))
+    assert(store.read("dec").get.where($"s" === "z").count() == 2)
+  }
+
+  test("rowCounts sums footer record counts, a zero-row file included") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_rowcounts").toString
+    val store = new ParquetTableStore(spark, wh)
+    store.upsert("t", current, Seq("k"))
+    store.append("t", current.limit(0))
+    val files = new java.io.File(store.path("t")).listFiles()
+      .filter(_.getName.endsWith(".parquet"))
+    assert(files.exists(f => spark.read.parquet(f.getPath).count() == 0),
+      s"expected a zero-row file among ${files.map(_.getName).toSeq}")
+    assert(store.rowCounts(Seq("t", "missing")) ==
+      Map("t" -> store.read("t").get.count(), "missing" -> 0L))
+    assert(store.rowCounts(Seq("t"))("t") == 3L)
+  }
+
+  test("upsert into a partitioned layout reads through inference, keeping the partition column") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_part_upsert").toString
+    val store = new ParquetTableStore(spark, wh)
+    val dec = org.apache.spark.sql.types.DecimalType(18, 2)
+    val base = Seq((1L, "2024-01-01"), (2L, "2024-01-02")).toDF("k", "day")
+      .withColumn("price", lit("1.00").cast(dec))
+    store.replacePartitioned("t", base, Seq("day"))
+    // partition values live in directory names: no footer holds them
+    assert(store.footerSchema("t").isEmpty)
+    store.upsert("t", Seq((2L, "2024-01-02"), (3L, "2024-01-03")).toDF("k", "day")
+      .withColumn("price", lit("9.00").cast(dec)), Seq("k"))
+    val rows = store.read("t").get.select($"k", $"day", $"price".cast("string"))
+      .as[(Long, String, String)].collect().toSet
+    assert(rows == Set((1L, "2024-01-01", "1.00"), (2L, "2024-01-02", "9.00"),
+      (3L, "2024-01-03", "9.00")))
+  }
 }

@@ -2,6 +2,7 @@ package graft.sources.v2
 
 import java.nio.file.Files
 import graft.SparkSpec
+import org.apache.spark.sql.types.{LongType, StructType}
 
 class GraftParquetTableSpec extends SparkSpec {
   import spark.implicits._
@@ -117,5 +118,28 @@ class GraftParquetTableSpec extends SparkSpec {
       .as[(Long, String)].collect().toSeq
     assert(rows == Seq((1L, "upd")))
     assert(spark.read.parquet(loc).count() == 1)
+  }
+
+  test("a row-level scan over one file fixes its group; over two it keeps the _file filter") {
+    val schema = new StructType().add("k", LongType)
+    val conf = new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration)
+    def scanOf(files: String*): (GraftParquetScan, RewriteGroup) = {
+      val group = new RewriteGroup
+      val scan = new GraftScanBuilder(schema, files.map(_ -> 1L).toArray, conf,
+        Some(group), "/unused").build().asInstanceOf[GraftParquetScan]
+      (scan, group)
+    }
+    val (one, oneGroup) = scanOf("f1.parquet")
+    assert(one.filterAttributes().isEmpty)
+    assert(oneGroup.scannedFiles.map(_.toSeq).contains(Seq("f1.parquet")))
+    val (two, twoGroup) = scanOf("f1.parquet", "f2.parquet")
+    assert(two.filterAttributes().map(_.fieldNames().toSeq).toSeq ==
+      Seq(Seq(GraftParquetTable.FileCol)))
+    assert(twoGroup.scannedFiles.isEmpty)
+    // a plain (non-row-level) scan over one file still offers _file
+    val plain = new GraftScanBuilder(schema, Array("f1.parquet" -> 1L), conf,
+      None, "/unused").build().asInstanceOf[GraftParquetScan]
+    assert(plain.filterAttributes().nonEmpty)
   }
 }
