@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
 
   /** Cumulative (steal jiffies, total jiffies) from /proc/stat's
@@ -35,7 +34,6 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val passes =
       math.max(1, sys.env.getOrElse("SPARK_GRAFT_BENCH_PASSES", "3").toInt)
     // The full results JSON also lands in this file: the harness that
@@ -68,15 +66,15 @@ object Bench {
     // builds), so the adaptation only bites when the sweep is genuinely
     // too big.
     val budgetSec = sys.env.getOrElse("SPARK_GRAFT_BENCH_BUDGET_SEC", "1500").toDouble
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("WARN")
+    val cpus = GraftSession.cpus
     // Untimed warmup pass: JIT + codegen caches + parquet footers + the
     // per-JVM fixture builds (QueryFixtures). The timed passes then
     // measure steady-state execution, not JVM startup or index training.
     val steal0 = cpuSteal()
     val w0 = System.nanoTime()
-    SparkEntry.queries.foreach { case (_, fn) =>
-      try fn(spark, sfDir).count() catch { case _: Throwable => () }
+    SparkEntry.gates.foreach { g =>
+      try g.plan(spark, sfDir).count() catch { case _: Throwable => () }
     }
     val warmupSec = (System.nanoTime() - w0) / 1e9
     val stealWarm = cpuSteal()
@@ -109,17 +107,17 @@ object Bench {
     // message of the last failure) in the detail record.
     val errs = scala.collection.mutable.Map[String, String]()
     val sweeps = (1 to effPasses).map { _ =>
-      val r = SparkEntry.queries.map { case (name, fn) =>
+      val r = SparkEntry.gates.map { g =>
         val t0 = System.nanoTime()
         val ok =
-          try { fn(spark, sfDir).count(); true }
+          try { g.plan(spark, sfDir).count(); true }
           catch { case e: Throwable =>
-            errs(name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}"
+            errs(g.name) = s"${e.getClass.getName}: ${String.valueOf(e.getMessage).take(300)}"
             false
           }
         val sec = (System.nanoTime() - t0) / 1e9
-        name -> (if (ok) sec else -sec)
-      }
+        g.name -> (if (ok) sec else -sec)
+      }.toMap
       val s = cpuSteal()
       passSteals += stealPct(stealMark, s).getOrElse(-1.0)
       stealMark = s
@@ -132,7 +130,7 @@ object Bench {
       else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
     }
     def r6(x: Double): Double = math.rint(x * 1e6) / 1e6
-    val names = SparkEntry.queries.keys.toSeq.sorted
+    val names = SparkEntry.gates.map(_.name)
     // median over SUCCESSFUL readings only; a query that failed every
     // pass keeps its (absolute) throw-time median so the contract line
     // stays complete, and the err entry marks it unusable
@@ -160,11 +158,7 @@ object Bench {
       s"\"" + k + "\":" + sweeps.map(s => r6(s(k))).mkString("[", ",", "]")
     }.mkString("{", ",", "}")
     val errJson = errs.toSeq.sortBy(_._1).map { case (k, v) =>
-      "\"" + k + "\":" + "\"" + v.flatMap {
-        case '"' => "\\\""; case '\\' => "\\\\"; case '\n' => "\\n"
-        case '\r' => "\\r"; case '\t' => "\\t"
-        case c if c < ' ' => f"\\u${c.toInt}%04x"; case c => c.toString
-      } + "\""
+      Verify.jsonString(k) + ":" + Verify.jsonString(v)
     }.mkString("{", ",", "}")
     val full =
       s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"raw":$raw,"err":$errJson,"sf":"$sfDir","cpus":$cpus,"passes":$effPasses,"warmup_sec":${math.rint(warmupSec * 100) / 100},$stealJson}"""

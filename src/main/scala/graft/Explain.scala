@@ -1,25 +1,22 @@
 package graft
 
-/** Plan-inspection main: prints the formatted physical plan of each (or one
-  * named) registered query so scan pushdown, broadcast choices, and
+/** Plan-inspection main: prints the formatted physical plan of each
+  * registered gate (or of those whose name contains one of the
+  * comma-separated substrings) so scan pushdown, broadcast choices, and
   * WholeStageCodegen spans can be reviewed.
   *
-  * Usage: runMain graft.Explain [sfDir] [queryName]
+  * Usage: runMain graft.Explain [sfDir] [nameSubstr[,substr...]]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val only = args.drop(1).headOption
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => only.forall(_ == n) }
-      .foreach { case (name, fn) =>
-        println(s"\n========== $name ==========")
-        try fn(spark, sfDir).explain("formatted")
-        catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
-      }
+    val selected = SparkEntry.select(args.lift(1))
+    val spark = GraftSession.local("ERROR")
+    selected.foreach { g =>
+      println(s"\n========== ${g.name} ==========")
+      try g.plan(spark, sfDir).explain("formatted")
+      catch { case e: Throwable => println(s"explain failed: ${e.getMessage}") }
+    }
     spark.stop()
   }
 }

@@ -15,6 +15,18 @@ import org.apache.spark.sql.SparkSession
   *    (ref shopify_etl.py:197).
   */
 object GraftSession {
+  /** Local cores (and shuffle partitions) of a CLI main's session:
+    * `SPARK_GRAFT_CPUS`, default 4. */
+  def cpus: Int = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt
+
+  /** The session every CLI main runs on: `local[cpus]` through
+    * [[builder]], with Spark's own logging at `logLevel`. */
+  def local(logLevel: String): SparkSession = {
+    val spark = builder(s"local[$cpus]", cpus).getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)

@@ -11,9 +11,7 @@ import java.nio.file.Files
 object PipelineDemo {
   def main(args: Array[String]): Unit = {
     val pagesDir = args.headOption.getOrElse("src/test/resources/orders_pages")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.local("WARN")
 
     val whBatch = Files.createTempDirectory("graft_demo_batch").toString
     val p = new Pipeline(spark, whBatch)

@@ -3,23 +3,29 @@ package graft
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 
-/** Measurement harness for OPTIMIZING individual queries (guide §1):
-  * runs the named queries warm, N reps each, printing per-rep wall
-  * seconds and a per-query stage breakdown (task time, shuffle bytes,
-  * spill) attributed via job descriptions. Dev tool only — the bench
-  * contract lives in [[Bench]]; this main exists so a change can be
-  * attributed to the stage it actually moved before a full sweep.
+/** Measurement harness for OPTIMIZING individual gates (guide §1): runs
+  * each selected gate once cold, printing `<name> cold: <s> rows=<n>`,
+  * then N warm reps, printing per-rep wall seconds and a per-gate stage
+  * breakdown (task time, shuffle bytes, spill) attributed via job
+  * descriptions. Dev tool only — the bench contract lives in [[Bench]];
+  * this main exists so a change can be attributed to the stage it
+  * actually moved before a full sweep.
   *
-  * Usage: runMain graft.Profile <sfDir> <reps> <querySubstr>[,substr...]
+  * Gates are selected by SUBSTRING: a gate runs when its name contains
+  * any of the comma-separated substrings (`q2` selects q20 to q29,
+  * `q02_` only q02). With 0 reps this is an order-of-magnitude scale
+  * smoke — one cold timed count per gate against any table dir (e.g. a
+  * synthetic 10x corpus), not a benchmark (use [[Bench]] for medians).
+  *
+  * Usage: runMain graft.Profile <sfDir> <reps> <nameSubstr>[,substr...]
+  * (a large dir may need `SPARK_DRIVER_MEM=24g`)
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val sfDir = args(0)
     val reps = args(1).toInt
-    val subs = args(2).split(',').toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = GraftSession.builder(s"local[$cpus]", cpus.toInt).getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val selected = SparkEntry.select(Some(args(2)))
+    val spark = GraftSession.local("ERROR")
 
     // stage metrics keyed by the job description active when the stage's
     // job started (stage -> description via jobStart's stage ids)
@@ -50,12 +56,14 @@ object Profile {
       }
     })
 
-    val selected = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (n, _) => subs.exists(n.contains) }
-    selected.foreach { case (name, fn) =>
-      // warmup (pays fixture builds + codegen)
-      try fn(spark, sfDir).count() catch { case e: Throwable =>
-        println(s"$name WARMUP FAILED: $e") }
+    selected.foreach { g =>
+      val (name, fn) = (g.name, g.plan)
+      // cold pass, doubling as warmup (pays fixture builds + codegen)
+      val c0 = System.nanoTime()
+      try {
+        val n = fn(spark, sfDir).count()
+        println(f"$name%s cold: ${(System.nanoTime() - c0) / 1e9}%.3f rows=$n%d")
+      } catch { case e: Throwable => println(s"$name WARMUP FAILED: $e") }
       (1 to reps).foreach { i =>
         rows.clear()
         spark.sparkContext.setJobDescription(name)

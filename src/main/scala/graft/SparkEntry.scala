@@ -7,12 +7,14 @@ import graft.functions.{MoneyMode, Pii, Text, Vectors, Web}
 import org.apache.spark.sql.types.DecimalType
 import graft.Tables._
 
-/** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
+/** The gate contract — see SURVEY.md §7.
   *
-  * Every entry in [[queries]] is one operator from SURVEY.md §2 (or an
-  * LLM-pipeline extension), expressed as an idiomatic Spark plan over the
-  * driver's parquet test tables; [[oracleSql]] carries the equivalent ANSI
-  * SQL that DuckDB runs on the same parquet for the hash-compare gate.
+  * Every [[SparkEntry.Gate]] in [[SparkEntry.gates]] is one operator from
+  * SURVEY.md §2 (or an LLM-pipeline extension): an idiomatic Spark plan
+  * over the parquet test tables, declared together with the
+  * equivalent ANSI SQL that DuckDB runs on the same parquet for the
+  * hash-compare gate. `Verify`, `Bench`, `Explain` and `Profile` iterate
+  * that one list.
   *
   * Determinism rules applied throughout:
   *  - every result has an explicit ORDER BY (both sides) — no reliance on
@@ -4172,186 +4174,25 @@ object SparkEntry {
 
   // ------------------------------------------------------------- registry
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q01_pricing_summary"   -> (q01_pricing_summary _),
-    "q02_latest_event"      -> (q02_latest_event _),
-    "q03_orphan_lineitems"  -> (q03_orphan_lineitems _),
-    "q04_star_revenue"      -> (q04_star_revenue _),
-    "q05_dedup_first_wins"  -> (q05_dedup_first_wins _),
-    "q06_distinct"          -> (q06_distinct _),
-    "q07_uniqueness_check"  -> (q07_uniqueness_check _),
-    "q08_dup_report"        -> (q08_dup_report _),
-    "q09_daily_rollup"      -> (q09_daily_rollup _),
-    "q10_incremental_buffer"-> (q10_incremental_buffer _),
-    "q11_normalize_projection" -> (q11_normalize_projection _),
-    "q12_merge_upsert"      -> (q12_merge_upsert _),
-    "q13_regexp_json"       -> (q13_regexp_json _),
-    "q14_doc_summary"       -> (q14_doc_summary _),
-    "q15_explode_roundtrip" -> (q15_explode_roundtrip _),
-    "q16_text_quality"      -> (q16_text_quality _),
-    "q17_token_counts"      -> (q17_token_counts _),
-    "q18_fingerprint_dedup" -> (q18_fingerprint_dedup _),
-    "q19_langid"            -> (q19_langid _),
-    "q20_minhash_neardup"   -> (q20_minhash_neardup _),
-    "q21_simhash_neardup"   -> (q21_simhash_neardup _),
-    "q22_jaccard_pairs"     -> (q22_jaccard_pairs _),
-    "q23_ann_bruteforce"    -> (q23_ann_bruteforce _),
-    "q24_ann_lsh"           -> (q24_ann_lsh _),
-    "q25_embedding_stats"   -> (q25_embedding_stats _),
-    "q26_multimodal_bytes"  -> (q26_multimodal_bytes _),
-    "q27_langid_trigram"    -> (q27_langid_trigram _),
-    "q28_sql_topk"          -> (q28_sql_topk _),
-    "q29_daily_metrics"     -> (q29_daily_metrics _),
-    "q30_cosine_neardup"    -> (q30_cosine_neardup _),
-    "q31_asof_join"         -> (q31_asof_join _),
-    "q32_ann_ivf"           -> (q32_ann_ivf _),
-    "q33_running_total"     -> (q33_running_total _),
-    "q34_rollup"            -> (q34_rollup _),
-    "q35_top_terms"         -> (q35_top_terms _),
-    "q36_histogram"         -> (q36_histogram _),
-    "q37_percentiles"       -> (q37_percentiles _),
-    "q38_cube"              -> (q38_cube _),
-    "q39_edit_distance"     -> (q39_edit_distance _),
-    "q40_stratified_sample" -> (q40_stratified_sample _),
-    "q41_winnow_neardup"    -> (q41_winnow_neardup _),
-    "q42_pricing_summary_dec" -> (q42_pricing_summary_dec _),
-    "q43_approx_distinct"   -> (q43_approx_distinct _),
-    "q44_pivot"             -> (q44_pivot _),
-    "q45_int8_quantize"     -> (q45_int8_quantize _),
-    "q46_sequence_packing"  -> ((s, d) => q46_sequence_packing(s, d)),
-    "q47_weighted_mix"      -> (q47_weighted_mix _),
-    "q48_pii"               -> (q48_pii _),
-    "q49_decontaminate"     -> (q49_decontaminate _),
-    "q50_range_join"        -> (q50_range_join _),
-    "q51_chunk_tokens"      -> (q51_chunk_tokens _),
-    "q52_media_header"      -> (q52_media_header _),
-    "q53_monitoring_alerts" -> (q53_monitoring_alerts _),
-    "q54_repetition_filter" -> (q54_repetition_filter _),
-    "q55_sessionize"        -> (q55_sessionize _),
-    "q56_bpe_pairs"         -> (q56_bpe_pairs _),
-    "q57_lm_quality"        -> (q57_lm_quality _),
-    "q58_salted_agg"        -> (q58_salted_agg _),
-    "q59_salted_join"       -> (q59_salted_join _),
-    "q60_frame_sampling"    -> (q60_frame_sampling _),
-    "q61_approx_quantile"   -> (q61_approx_quantile _),
-    "q62_dedup_clusters"    -> (q62_dedup_clusters _),
-    "q63_column_stats"      -> (q63_column_stats _),
-    "q64_bucketed_join"     -> (q64_bucketed_join _),
-    "q65_corpus_curation"   -> (q65_corpus_curation _),
-    "q66_capped_curation"   -> (q66_capped_curation _),
-    "q67_flatten_matrix"    -> (q67_flatten_matrix _),
-    "q68_ndjson_roundtrip"  -> (q68_ndjson_roundtrip _),
-    "q69_incremental_lifecycle" -> (q69_incremental_lifecycle _),
-    "q70_dedup_clusters_ls" -> (q70_dedup_clusters_ls _),
-    "q71_snapshot_diff"     -> (q71_snapshot_diff _),
-    "q72_scd2_history"      -> (q72_scd2_history _),
-    "q73_domain_stats"      -> (q73_domain_stats _),
-    "q74_corpus_shuffle"    -> (q74_corpus_shuffle _),
-    "q75_dup_ngram_spans"   -> (q75_dup_ngram_spans _),
-    "q76_incremental_rollup"-> (q76_incremental_rollup _),
-    "q77_sketch_distinct"   -> (q77_sketch_distinct _),
-    "q78_training_shards"   -> (q78_training_shards _),
-    "q79_quota_sample"      -> (q79_quota_sample _),
-    "q80_zorder_stats"      -> (q80_zorder_stats _),
-    "q81_binned_quantiles"  -> (q81_binned_quantiles _),
-    "q82_zscore_outliers"   -> (q82_zscore_outliers _),
-    "q83_dup_span_removal"  -> (q83_dup_span_removal _),
-    "q84_bpe_merges"        -> (q84_bpe_merges _),
-    "q85_bpe_tokenize"      -> (q85_bpe_tokenize _),
-    "q86_psl_domains"       -> (q86_psl_domains _),
-    "q87_quantiles_maintained" -> (q87_quantiles_maintained _),
-    "q88_ann_ivf_indexed"   -> (q88_ann_ivf_indexed _),
-    "q89_incremental_neardup" -> (q89_incremental_neardup _),
-    "q90_heavy_hitters"     -> (q90_heavy_hitters _),
-    "q91_semdedup"          -> (q91_semdedup _),
-    "q92_ann_pq"            -> (q92_ann_pq _),
-    "q93_time_travel"       -> (q93_time_travel _),
-    "q94_bm25"              -> (q94_bm25 _),
-    "q95_group_split"       -> (q95_group_split _),
-    "q96_ann_ivfpq"         -> (q96_ann_ivfpq _),
-    "q97_hybrid_rrf"        -> (q97_hybrid_rrf _),
-    "q98_data_build"        -> (q98_data_build _),
-    "q99_hard_negatives"    -> (q99_hard_negatives _),
-    "q100_countmin_freq"    -> (q100_countmin_freq _),
-    "q101_allpairs_jaccard" -> (q101_allpairs_jaccard _),
-    "q102_containment"      -> (q102_containment _),
-    "q103_quality_report"   -> (q103_quality_report _),
-    "q104_weighted_sample"  -> (q104_weighted_sample _),
-    "q105_join_size"        -> (q105_join_size _),
-    "q106_bigram_lm"        -> (q106_bigram_lm _),
-    "q107_pagerank"         -> (q107_pagerank _),
-    "q108_funnel"           -> (q108_funnel _),
-    "q109_retention"        -> (q109_retention _),
-    "q110_drift_psi"        -> (q110_drift_psi _),
-    "q111_k_anonymity"      -> (q111_k_anonymity _),
-    "q112_bloom_semijoin"   -> (q112_bloom_semijoin _),
-    "q113_entity_resolution"-> (q113_entity_resolution _),
-    "q114_triangles"        -> (q114_triangles _),
-    "q115_basket_rules"     -> (q115_basket_rules _),
-    "q116_phash_groups"     -> (q116_phash_groups _),
-    "q117_phrase_search"    -> (q117_phrase_search _),
-    "q118_decay_scores"     -> (q118_decay_scores _),
-    "q119_transitions"      -> (q119_transitions _),
-    "q120_kfold"            -> (q120_kfold _),
-    "q121_jw_match"         -> (q121_jw_match _),
-    "q122_deletion_neighborhood" -> (q122_deletion_neighborhood _),
-    "q123_ab_readout"       -> (q123_ab_readout _),
-    "q124_attribution"      -> (q124_attribution _),
-    "q125_moving_average"   -> (q125_moving_average _),
-    "q126_day_gaps"         -> (q126_day_gaps _),
-    "q127_trend"            -> (q127_trend _),
-    "q128_tfidf_keywords"   -> (q128_tfidf_keywords _),
-    "q129_mutual_information" -> (q129_mutual_information _),
-    "q130_decay_maintained" -> (q130_decay_maintained _),
-    "q131_heavy_hitters_maintained" -> (q131_heavy_hitters_maintained _),
-    "q132_phash_pixels"     -> (q132_phash_pixels _),
-    "q133_heavy_hitters_grouped" -> (q133_heavy_hitters_grouped _),
-    "q134_ann_sq8"          -> (q134_ann_sq8 _),
-    "q135_heavy_hitters_grouped_maintained" -> (q135_heavy_hitters_grouped_maintained _),
-    "q136_ann_ivfsq"        -> (q136_ann_ivfsq _),
-    "q137_weighted_sample_maintained" -> (q137_weighted_sample_maintained _),
-    "q138_ann_ivf_append"   -> (q138_ann_ivf_append _),
-    "q139_weighted_sample_grouped_maintained" -> (q139_weighted_sample_grouped_maintained _),
-    "q140_bm25_indexed"     -> (q140_bm25_indexed _),
-    "q141_linear_fit"       -> (q141_linear_fit _),
-    "q142_kmv_set_sketch"   -> (q142_kmv_set_sketch _),
-    "q143_linear_fit_maintained" -> (q143_linear_fit_maintained _),
-    "q144_linear_fit_grouped" -> (q144_linear_fit_grouped _),
-    "q145_ann_ivfsq_append"  -> (q145_ann_ivfsq_append _),
-    "q146_ann_ivfpq_append"  -> (q146_ann_ivfpq_append _),
-    "q147_naive_bayes"       -> (q147_naive_bayes _),
-    "q148_naive_bayes_maintained" -> (q148_naive_bayes_maintained _),
-    "q149_bm25_delete_upsert" -> (q149_bm25_delete_upsert _),
-    "q150_ann_ivfsq_delete"  -> (q150_ann_ivfsq_delete _),
-    "q151_kmv_grouped"       -> (q151_kmv_grouped _),
-    "q152_ann_recall"        -> (q152_ann_recall _),
-    "q153_ann_vector_upsert" -> (q153_ann_vector_upsert _),
-    "q154_hybrid_indexed"    -> (q154_hybrid_indexed _),
-    "q155_auc_readout"       -> (q155_auc_readout _),
-    "q156_zonemap_scan"      -> (q156_zonemap_scan _),
-    "q157_ap_readout"        -> (q157_ap_readout _),
-    "q158_text_normalize"    -> (q158_text_normalize _),
-    "q159_fuzzy_decontaminate" -> (q159_fuzzy_decontaminate _),
-    "q160_cluster_survivors" -> (q160_cluster_survivors _),
-    "q161_readout_maintained" -> (q161_readout_maintained _),
-    "q162_privacy_audit"     -> (q162_privacy_audit _),
-    "q163_ann_pq_quality"    -> (q163_ann_pq_quality _),
-    "q164_zonemap_routed_read" -> (q164_zonemap_routed_read _),
-    "q165_zonemap_compound"  -> (q165_zonemap_compound _),
-    "q166_ann_filtered"      -> (q166_ann_filtered _),
-    "q167_ann_filtered_sq"   -> (q167_ann_filtered_sq _),
-    "q168_ann_filtered_pq"   -> (q168_ann_filtered_pq _),
-    "q169_zonemap_disjunctive" -> (q169_zonemap_disjunctive _),
-    "q170_zonemap_sql"       -> (q170_zonemap_sql _),
-    "q171_bm25_filtered"     -> (q171_bm25_filtered _),
-    "q172_hybrid_filtered"   -> (q172_hybrid_filtered _),
-    "q173_zonemap_mixed"     -> (q173_zonemap_mixed _),
-    "q174_zonemap_cluster_compact" -> (q174_zonemap_cluster_compact _),
-    "q175_zonemap_zorder"    -> (q175_zonemap_zorder _),
-  )
+  /** One gate: `plan` builds the result from an sf directory, and
+    * `oracleSql` is the ANSI SQL that DuckDB runs on the same parquet. */
+  final case class Gate(name: String, plan: (SparkSession, String) => DataFrame,
+                        oracleSql: String)
 
-  def oracleSql: Map[String, String] = Map(
-    "q01_pricing_summary" ->
+  /** The gates whose name contains any of the comma-separated substrings
+    * of `filter` (every gate when None), in name order. Fails when a
+    * filter matches no gate, so a typo never runs an empty sweep. */
+  def select(filter: Option[String]): Seq[Gate] = filter.fold(gates) { f =>
+    val subs = f.split(',').toSeq
+    val hit = gates.filter(g => subs.exists(g.name.contains))
+    require(hit.nonEmpty, s"no gate name contains any of '$f'")
+    hit
+  }
+
+  /** Every gate, sorted by name. Lazy: the oracle helpers below read
+    * vals declared after this one. */
+  lazy val gates: Seq[Gate] = Seq(
+    Gate("q01_pricing_summary", q01_pricing_summary,
       """SELECT l_returnflag, l_linestatus,
          round(sum(l_quantity), 2) AS sum_qty,
          round(sum(l_extendedprice), 2) AS sum_base_price,
@@ -4359,15 +4200,15 @@ object SparkEntry {
          round(avg(l_quantity), 4) AS avg_qty,
          count(*) AS count_order
          FROM lineitem GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-    "q02_latest_event" ->
+         ORDER BY l_returnflag, l_linestatus"""),
+    Gate("q02_latest_event", q02_latest_event,
       """SELECT event_id, ts, user_id, event_type FROM events
-         ORDER BY ts DESC, event_id DESC LIMIT 1""",
-    "q03_orphan_lineitems" ->
+         ORDER BY ts DESC, event_id DESC LIMIT 1"""),
+    Gate("q03_orphan_lineitems", q03_orphan_lineitems,
       """SELECT count(*) AS invalid_refs FROM lineitem l
          LEFT JOIN orders o ON l.l_orderkey = o.o_orderkey
-         WHERE o.o_orderkey IS NULL""",
-    "q04_star_revenue" ->
+         WHERE o.o_orderkey IS NULL"""),
+    Gate("q04_star_revenue", q04_star_revenue,
       """SELECT r_name,
          round(sum(l_extendedprice * (1.0 - l_discount)), 2) AS revenue,
          count(*) AS n_items
@@ -4376,40 +4217,40 @@ object SparkEntry {
          JOIN customer ON o_custkey = c_custkey
          JOIN nation ON c_nationkey = n_nationkey
          JOIN region ON n_regionkey = r_regionkey
-         GROUP BY r_name ORDER BY r_name""",
-    "q05_dedup_first_wins" ->
+         GROUP BY r_name ORDER BY r_name"""),
+    Gate("q05_dedup_first_wins", q05_dedup_first_wins,
       """SELECT event_id, user_id, event_type, round(value, 2) AS value FROM (
            SELECT event_id, user_id, event_type, value,
                   row_number() OVER (PARTITION BY user_id, event_type ORDER BY event_id) AS rn
-           FROM events) t WHERE rn = 1 ORDER BY event_id""",
-    "q06_distinct" ->
+           FROM events) t WHERE rn = 1 ORDER BY event_id"""),
+    Gate("q06_distinct", q06_distinct,
       """SELECT DISTINCT o_orderstatus, o_orderpriority FROM orders
-         ORDER BY o_orderstatus, o_orderpriority""",
-    "q07_uniqueness_check" ->
+         ORDER BY o_orderstatus, o_orderpriority"""),
+    Gate("q07_uniqueness_check", q07_uniqueness_check,
       """SELECT count(*) AS total_rows,
          count(DISTINCT o_orderkey) AS unique_keys,
          count(DISTINCT (o_custkey, o_orderstatus)) AS unique_cust_status
-         FROM orders""",
-    "q08_dup_report" ->
+         FROM orders"""),
+    Gate("q08_dup_report", q08_dup_report,
       """SELECT user_id, count(*) AS cnt FROM events
-         GROUP BY user_id HAVING count(*) > 1 ORDER BY user_id""",
-    "q09_daily_rollup" ->
+         GROUP BY user_id HAVING count(*) > 1 ORDER BY user_id"""),
+    Gate("q09_daily_rollup", q09_daily_rollup,
       """SELECT CAST(ts AS DATE) AS day, count(*) AS n_events,
          round(sum(value), 2) AS total_value,
          round(avg(value), 4) AS avg_value
-         FROM events GROUP BY CAST(ts AS DATE) ORDER BY day""",
-    "q10_incremental_buffer" ->
+         FROM events GROUP BY CAST(ts AS DATE) ORDER BY day"""),
+    Gate("q10_incremental_buffer", q10_incremental_buffer,
       """SELECT count(*) AS recent_events FROM events
-         WHERE ts >= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)""",
-    "q11_normalize_projection" ->
+         WHERE ts >= (SELECT max(ts) - INTERVAL 1 HOUR FROM events)"""),
+    Gate("q11_normalize_projection", q11_normalize_projection,
       """SELECT CAST(o_orderkey AS VARCHAR) AS order_id,
          CAST(o_custkey AS VARCHAR) AS customer_id,
          coalesce(o_orderstatus, '') AS financial_status,
          round(o_totalprice, 2) AS total_price,
          CASE WHEN o_totalprice > 150000.0 THEN 'high' ELSE 'normal' END AS value_band,
          strftime(o_orderdate, '%Y-%m') AS order_month
-         FROM orders ORDER BY order_id""",
-    "q12_merge_upsert" ->
+         FROM orders ORDER BY order_id"""),
+    Gate("q12_merge_upsert", q12_merge_upsert,
       """WITH base AS (
            SELECT o_orderkey, 'old' AS status, o_totalprice AS total_price
            FROM orders WHERE o_orderkey % 2 = 0),
@@ -4418,22 +4259,22 @@ object SparkEntry {
            FROM orders WHERE o_orderkey % 3 = 0)
          SELECT * FROM base b WHERE NOT EXISTS (SELECT 1 FROM upd u WHERE u.o_orderkey = b.o_orderkey)
          UNION ALL SELECT * FROM upd
-         ORDER BY o_orderkey""",
-    "q13_regexp_json" ->
+         ORDER BY o_orderkey"""),
+    Gate("q13_regexp_json", q13_regexp_json,
       """SELECT json_extract_string(props, '$.k') AS k_json,
          regexp_extract(props, '([0-9]+)', 1) AS k_re,
          count(*) AS cnt
-         FROM events GROUP BY k_json, k_re ORDER BY k_json, k_re""",
-    "q14_doc_summary" ->
+         FROM events GROUP BY k_json, k_re ORDER BY k_json, k_re"""),
+    Gate("q14_doc_summary", q14_doc_summary,
       """SELECT upper(lang) AS lang, count(*) AS n_docs,
          CAST(sum(n_chars) AS BIGINT) AS total_chars,
          round(avg(n_chars), 4) AS avg_chars,
          min(doc_id) AS first_doc
-         FROM documents GROUP BY upper(lang) ORDER BY lang""",
-    "q15_explode_roundtrip" ->
+         FROM documents GROUP BY upper(lang) ORDER BY lang"""),
+    Gate("q15_explode_roundtrip", q15_explode_roundtrip,
       """SELECT count(*) AS n_items, round(sum(l_quantity), 2) AS sum_qty
-         FROM lineitem""",
-    "q16_text_quality" ->
+         FROM lineitem"""),
+    Gate("q16_text_quality", q16_text_quality,
       """WITH t AS (
            SELECT source,
              CAST(len(string_split(text, ' ')) AS DOUBLE) AS n_tok,
@@ -4447,19 +4288,19 @@ object SparkEntry {
              + (CASE WHEN n_chars / n_tok BETWEEN 2.0 AND 12.0 THEN 1.0 ELSE 0.0 END) * 0.3
              + (CASE WHEN n_tok >= 20 THEN 1.0 ELSE n_tok / 20.0 END) * 0.3, 4)), 4) AS avg_quality,
            round(avg(n_tok), 4) AS avg_tokens
-         FROM t GROUP BY source ORDER BY source""",
-    "q17_token_counts" ->
+         FROM t GROUP BY source ORDER BY source"""),
+    Gate("q17_token_counts", q17_token_counts,
       """SELECT doc_id,
          CAST(len(string_split(text, ' ')) AS BIGINT) AS ws_tokens,
          CAST(len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9 ]')) AS BIGINT) AS lex_tokens,
          md5(trim(regexp_replace(lower(text), '\s+', ' ', 'g'))) AS fp
-         FROM documents ORDER BY doc_id""",
-    "q18_fingerprint_dedup" ->
+         FROM documents ORDER BY doc_id"""),
+    Gate("q18_fingerprint_dedup", q18_fingerprint_dedup,
       """SELECT count(*) AS total_docs,
          count(DISTINCT md5(text)) AS distinct_fp,
          count(*) - count(DISTINCT md5(text)) AS exact_dups
-         FROM documents""",
-    "q19_langid" ->
+         FROM documents"""),
+    Gate("q19_langid", q19_langid,
       """WITH t AS (
            SELECT lang,
              len(list_filter(string_split(text,' '), w -> w IN ('the','a','and','of','to','in','is','it'))) AS en,
@@ -4474,8 +4315,8 @@ object SparkEntry {
                 WHEN fr > 0 THEN 'fr'
                 ELSE 'und' END AS pred_lang,
            count(*) AS n
-         FROM t GROUP BY 1, 2 ORDER BY lang, pred_lang""",
-    "q20_minhash_neardup" ->
+         FROM t GROUP BY 1, 2 ORDER BY lang, pred_lang"""),
+    Gate("q20_minhash_neardup", q20_minhash_neardup,
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          sh AS (SELECT doc_id,
              CASE WHEN len(w) >= 3
@@ -4493,15 +4334,15 @@ object SparkEntry {
                FROM pr JOIN sz sa ON sa.doc_id = pr.id_a
                        JOIN sz sb ON sb.doc_id = pr.id_b)
          SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.6
-         ORDER BY id_a, id_b""",
-    "q21_simhash_neardup" ->
+         ORDER BY id_a, id_b"""),
+    Gate("q21_simhash_neardup", q21_simhash_neardup,
       """WITH k AS (SELECT doc_id,
              md5(to_json(list_sort(list_distinct(string_split(text, ' '))))) AS key
            FROM documents)
          SELECT a.doc_id AS id_a, b.doc_id AS id_b, CAST(0 AS BIGINT) AS hamming
          FROM k a JOIN k b ON a.key = b.key AND a.doc_id < b.doc_id
-         ORDER BY id_a, id_b""",
-    "q22_jaccard_pairs" ->
+         ORDER BY id_a, id_b"""),
+    Gate("q22_jaccard_pairs", q22_jaccard_pairs,
       """WITH g AS (
            SELECT doc_id, source,
              list_distinct(list_transform(
@@ -4514,8 +4355,8 @@ object SparkEntry {
                    CAST(len(list_distinct(list_concat(a.grams, b.grams))) AS DOUBLE), 4) AS jaccard
            FROM g a JOIN g b ON a.source = b.source AND a.doc_id < b.doc_id) t
          WHERE jaccard >= 0.05
-         ORDER BY source, id_a, id_b""",
-    "q23_ann_bruteforce" ->
+         ORDER BY source, id_a, id_b"""),
+    Gate("q23_ann_bruteforce", q23_ann_bruteforce,
       """WITH q AS (SELECT vec_id AS query_id, embedding AS qv FROM embeddings WHERE vec_id < 8),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
          s AS (
@@ -4528,8 +4369,8 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank <= 5 ORDER BY query_id, rank""",
-    "q24_ann_lsh" ->
+         FROM r WHERE rank <= 5 ORDER BY query_id, rank"""),
+    Gate("q24_ann_lsh", q24_ann_lsh,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id < 8),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -4543,17 +4384,17 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
-    "q25_embedding_stats" ->
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
+    Gate("q25_embedding_stats", q25_embedding_stats,
       """SELECT label, count(*) AS n_vecs,
          round(avg(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * x))), 6) AS avg_norm_sq,
          round(avg(CAST(embedding[1] AS DOUBLE)), 6) AS avg_first_dim
-         FROM embeddings GROUP BY label ORDER BY label""",
-    "q26_multimodal_bytes" ->
+         FROM embeddings GROUP BY label ORDER BY label"""),
+    Gate("q26_multimodal_bytes", q26_multimodal_bytes,
       """SELECT source, count(*) AS n_media,
          CAST(sum(octet_length(CAST(text AS BLOB))) AS BIGINT) AS total_bytes
-         FROM documents GROUP BY source ORDER BY source""",
-    "q27_langid_trigram" ->
+         FROM documents GROUP BY source ORDER BY source"""),
+    Gate("q27_langid_trigram", q27_langid_trigram,
       s"""WITH profile AS (
            SELECT p.lang, p.tg, CAST(p.w AS DOUBLE) AS w
            FROM (VALUES $langProfileValues) p(lang, tg, w)),
@@ -4581,17 +4422,17 @@ object SparkEntry {
                   FROM hd LEFT JOIN (SELECT doc_id, lang, score FROM best WHERE rn = 1) b
                     USING (doc_id))
          SELECT pred_lang, count(*) AS n, round(avg(score), 4) AS avg_score
-         FROM pred GROUP BY pred_lang ORDER BY pred_lang""",
-    "q28_sql_topk" -> q28Sql,
-    "q29_daily_metrics" ->
+         FROM pred GROUP BY pred_lang ORDER BY pred_lang"""),
+    Gate("q28_sql_topk", q28_sql_topk, q28Sql),
+    Gate("q29_daily_metrics", q29_daily_metrics,
       """SELECT CAST(ts AS DATE) AS day,
          count(CASE WHEN event_type = 'view' THEN 1 END) AS views,
          count(CASE WHEN event_type = 'click' THEN 1 END) AS clicks,
          count(CASE WHEN event_type = 'signup' THEN 1 END) AS signups,
          count(CASE WHEN event_type = 'purchase' THEN 1 END) AS purchases,
          round(sum(CASE WHEN event_type = 'purchase' THEN value ELSE 0.0 END), 2) AS revenue
-         FROM events GROUP BY CAST(ts AS DATE) ORDER BY day""",
-    "q30_cosine_neardup" ->
+         FROM events GROUP BY CAST(ts AS DATE) ORDER BY day"""),
+    Gate("q30_cosine_neardup", q30_cosine_neardup,
       """WITH v AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id % 4 = 0)
          SELECT id_a, id_b, cosine FROM (
            SELECT a.vec_id AS id_a, b.vec_id AS id_b,
@@ -4599,8 +4440,8 @@ object SparkEntry {
                i -> CAST(a.embedding[i] AS DOUBLE) * CAST(b.embedding[i] AS DOUBLE))), 4) AS cosine
            FROM v a JOIN v b ON a.vec_id < b.vec_id) t
          WHERE cosine >= 0.4
-         ORDER BY id_a, id_b""",
-    "q31_asof_join" ->
+         ORDER BY id_a, id_b"""),
+    Gate("q31_asof_join", q31_asof_join,
       """SELECT event_id, user_id, last_orderkey, last_orderdate FROM (
            SELECT e.event_id, e.user_id,
              o.o_orderkey AS last_orderkey, o.o_orderdate AS last_orderdate,
@@ -4608,8 +4449,8 @@ object SparkEntry {
                ORDER BY o.o_orderdate DESC NULLS LAST, o.o_orderkey DESC NULLS LAST) AS rn
            FROM events e
            LEFT JOIN orders o ON o.o_custkey = e.user_id AND o.o_orderdate <= e.ts) t
-         WHERE rn = 1 ORDER BY event_id""",
-    "q32_ann_ivf" ->
+         WHERE rn = 1 ORDER BY event_id"""),
+    Gate("q32_ann_ivf", q32_ann_ivf,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id >= 8 AND vec_id < 16),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -4623,45 +4464,45 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
-    "q33_running_total" ->
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
+    Gate("q33_running_total", q33_running_total,
       """SELECT o_custkey, o_orderkey,
          round(sum(o_totalprice) OVER (PARTITION BY o_custkey
            ORDER BY o_orderdate, o_orderkey), 2) AS running_total,
          round(lag(o_totalprice, 1) OVER (PARTITION BY o_custkey
            ORDER BY o_orderdate, o_orderkey), 2) AS prev_price
          FROM orders WHERE o_custkey < 100
-         ORDER BY o_custkey, o_orderkey""",
-    "q34_rollup" ->
+         ORDER BY o_custkey, o_orderkey"""),
+    Gate("q34_rollup", q34_rollup,
       """SELECT o_orderstatus, o_orderpriority,
          count(*) AS n, round(sum(o_totalprice), 2) AS total
          FROM orders GROUP BY ROLLUP (o_orderstatus, o_orderpriority)
-         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "q35_top_terms" ->
+         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""),
+    Gate("q35_top_terms", q35_top_terms,
       """SELECT source, word, cnt FROM (
            SELECT source, word, count(*) AS cnt,
              row_number() OVER (PARTITION BY source ORDER BY count(*) DESC, word) AS rn
            FROM (SELECT source, unnest(string_split(text, ' ')) AS word FROM documents) t
            GROUP BY source, word) r
-         WHERE rn <= 3 ORDER BY source, word""",
-    "q36_histogram" ->
+         WHERE rn <= 3 ORDER BY source, word"""),
+    Gate("q36_histogram", q36_histogram,
       """SELECT CAST(floor(o_totalprice / 25000.0) AS BIGINT) AS bin,
          count(*) AS n,
          round(min(o_totalprice), 2) AS lo,
          round(max(o_totalprice), 2) AS hi
-         FROM orders GROUP BY 1 ORDER BY bin""",
-    "q37_percentiles" ->
+         FROM orders GROUP BY 1 ORDER BY bin"""),
+    Gate("q37_percentiles", q37_percentiles,
       """SELECT o_orderstatus,
          round(quantile_cont(o_totalprice, 0.5), 2) AS p50,
          round(quantile_cont(o_totalprice, 0.95), 2) AS p95,
          count(*) AS n
-         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus""",
-    "q38_cube" ->
+         FROM orders GROUP BY o_orderstatus ORDER BY o_orderstatus"""),
+    Gate("q38_cube", q38_cube,
       """SELECT o_orderstatus, o_orderpriority,
          count(*) AS n, round(avg(o_totalprice), 4) AS avg_total
          FROM orders GROUP BY CUBE (o_orderstatus, o_orderpriority)
-         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST""",
-    "q39_edit_distance" ->
+         ORDER BY o_orderstatus NULLS FIRST, o_orderpriority NULLS FIRST"""),
+    Gate("q39_edit_distance", q39_edit_distance,
       """WITH s AS (SELECT doc_id, text FROM documents WHERE doc_id % 2 = 0),
          p AS (SELECT a.doc_id AS id_a, b.doc_id AS id_b,
                  CAST(levenshtein(a.text, b.text) AS BIGINT) AS edit_dist,
@@ -4669,16 +4510,16 @@ object SparkEntry {
                    CAST(greatest(length(a.text), length(b.text)) AS DOUBLE), 4) AS edit_sim
                FROM s a JOIN s b ON a.doc_id < b.doc_id)
          SELECT id_a, id_b, edit_dist, edit_sim FROM p
-         WHERE edit_sim >= 0.75 ORDER BY id_a, id_b""",
-    "q40_stratified_sample" ->
+         WHERE edit_sim >= 0.75 ORDER BY id_a, id_b"""),
+    Gate("q40_stratified_sample", q40_stratified_sample,
       """SELECT lang, count(*) AS sampled_docs,
          CAST(sum(n_chars) AS BIGINT) AS sampled_chars
          FROM documents
          WHERE doc_id % 10 < (CASE WHEN lang IN ('en','zh') THEN 8
                                    WHEN lang IN ('es','de') THEN 5
                                    ELSE 2 END)
-         GROUP BY lang ORDER BY lang""",
-    "q41_winnow_neardup" ->
+         GROUP BY lang ORDER BY lang"""),
+    Gate("q41_winnow_neardup", q41_winnow_neardup,
       """WITH d AS (SELECT doc_id,
              trim(regexp_replace(lower(text), '\s+', ' ', 'g')) AS t
            FROM documents),
@@ -4698,8 +4539,8 @@ object SparkEntry {
                FROM pr JOIN sz sa ON sa.doc_id = pr.id_a
                        JOIN sz sb ON sb.doc_id = pr.id_b)
          SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.3
-         ORDER BY id_a, id_b""",
-    "q42_pricing_summary_dec" ->
+         ORDER BY id_a, id_b"""),
+    Gate("q42_pricing_summary_dec", q42_pricing_summary_dec,
       """SELECT l_returnflag, l_linestatus,
          CAST(CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS VARCHAR) AS sum_qty,
          CAST(CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DECIMAL(38,2)) AS VARCHAR) AS sum_base_price,
@@ -4708,18 +4549,18 @@ object SparkEntry {
               AS DECIMAL(38,4)) AS VARCHAR) AS sum_disc_price,
          count(*) AS count_order
          FROM lineitem GROUP BY l_returnflag, l_linestatus
-         ORDER BY l_returnflag, l_linestatus""",
-    "q43_approx_distinct" ->
+         ORDER BY l_returnflag, l_linestatus"""),
+    Gate("q43_approx_distinct", q43_approx_distinct,
       """SELECT CAST(count(DISTINCT o_custkey) AS BIGINT) AS exact_custs,
          TRUE AS within_2pct
-         FROM orders""",
-    "q44_pivot" ->
+         FROM orders"""),
+    Gate("q44_pivot", q44_pivot,
       """SELECT o_orderpriority,
          round(sum(CASE WHEN o_orderstatus = 'F' THEN o_totalprice END), 2) AS F,
          round(sum(CASE WHEN o_orderstatus = 'O' THEN o_totalprice END), 2) AS O,
          round(sum(CASE WHEN o_orderstatus = 'P' THEN o_totalprice END), 2) AS P
-         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority""",
-    "q45_int8_quantize" ->
+         FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority"""),
+    Gate("q45_int8_quantize", q45_int8_quantize,
       """WITH s AS (
            SELECT vec_id, embedding,
              greatest(list_max(list_transform(embedding,
@@ -4735,8 +4576,8 @@ object SparkEntry {
            round(avg(max_err), 6) AS avg_max_err,
            round(max(max_err), 6) AS max_max_err,
            round(avg(scale), 6) AS avg_scale
-         FROM e""",
-    "q46_sequence_packing" ->
+         FROM e"""),
+    Gate("q46_sequence_packing", (s, d) => q46_sequence_packing(s, d),
       """WITH t AS (
            SELECT doc_id, doc_id % 8 AS g,
              len(string_split(text, ' ')) AS toks
@@ -4752,16 +4593,16 @@ object SparkEntry {
          SELECT g, pack, count(*) AS n_docs,
            CAST(sum(toks) AS BIGINT) AS pack_tokens,
            CAST(max(toks) AS BIGINT) AS max_doc_tokens
-         FROM p GROUP BY g, pack ORDER BY g, pack""",
-    "q47_weighted_mix" ->
+         FROM p GROUP BY g, pack ORDER BY g, pack"""),
+    Gate("q47_weighted_mix", q47_weighted_mix,
       """SELECT source, count(*) AS mixed_docs,
          CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS mixed_tokens
          FROM documents
          WHERE ((doc_id % 100000007) * 2654435761) % 100 <
            CASE WHEN source = 'web' THEN 75 WHEN source = 'books' THEN 50
                 WHEN source = 'wiki' THEN 90 ELSE 25 END
-         GROUP BY source ORDER BY source""",
-    "q48_pii" ->
+         GROUP BY source ORDER BY source"""),
+    Gate("q48_pii", q48_pii,
       s"""WITH planted AS (
            SELECT source,
              text ||
@@ -4788,8 +4629,8 @@ object SparkEntry {
            CAST(sum(pc) AS BIGINT) AS phones,
            CAST(sum(length(red)) AS BIGINT) AS redacted_chars,
            min(md5(red)) AS redaction_fp
-         FROM m GROUP BY source ORDER BY source""",
-    "q49_decontaminate" ->
+         FROM m GROUP BY source ORDER BY source"""),
+    Gate("q49_decontaminate", q49_decontaminate,
       """WITH dt AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
          ev AS (SELECT array_to_string((string_split(text, ' '))[5:16], ' ') AS etext
                 FROM documents WHERE doc_id % 25 = 0),
@@ -4807,8 +4648,8 @@ object SparkEntry {
            CAST(count(h.doc_id) AS BIGINT) AS contaminated,
            CAST(count(*) - count(h.doc_id) AS BIGINT) AS clean
          FROM dt d LEFT JOIN hit h USING (doc_id)
-         GROUP BY d.source ORDER BY d.source""",
-    "q50_range_join" ->
+         GROUP BY d.source ORDER BY d.source"""),
+    Gate("q50_range_join", q50_range_join,
       """WITH iv AS (
            SELECT o_orderkey AS iv_id, o_orderdate AS iv_start,
              o_orderdate + to_days(CAST(CAST(o_orderkey / 100 AS BIGINT) % 7 + 1 AS INT)) AS iv_end
@@ -4817,8 +4658,8 @@ object SparkEntry {
            round(sum(o.o_totalprice), 2) AS revenue
          FROM orders o JOIN iv
            ON o.o_orderdate >= iv.iv_start AND o.o_orderdate < iv.iv_end
-         GROUP BY iv.iv_id ORDER BY iv.iv_id""",
-    "q51_chunk_tokens" ->
+         GROUP BY iv.iv_id ORDER BY iv.iv_id"""),
+    Gate("q51_chunk_tokens", q51_chunk_tokens,
       """WITH t AS (SELECT source, string_split(text, ' ') AS w FROM documents),
          c AS (SELECT source,
              list_transform(
@@ -4829,15 +4670,15 @@ object SparkEntry {
            CAST(sum(len(cl)) AS BIGINT) AS total_chunks,
            CAST(max(len(cl)) AS BIGINT) AS max_chunks,
            CAST(sum(list_sum(cl)) AS BIGINT) AS chunk_tokens
-         FROM c GROUP BY source ORDER BY source""",
-    "q52_media_header" ->
+         FROM c GROUP BY source ORDER BY source"""),
+    Gate("q52_media_header", q52_media_header,
       """SELECT * FROM (VALUES
            (CAST(1 AS BIGINT), 'image/jpeg', 8, 6, CAST(1 AS BIGINT), 0, 0),
            (CAST(2 AS BIGINT), 'audio/wav', 0, 0, CAST(4 AS BIGINT), 8000, 2),
            (CAST(3 AS BIGINT), 'application/octet-stream', 0, 0, CAST(0 AS BIGINT), 0, 0))
            t(media_id, mime, width, height, n_frames, sample_rate, channels)
-         ORDER BY media_id""",
-    "q53_monitoring_alerts" ->
+         ORDER BY media_id"""),
+    Gate("q53_monitoring_alerts", q53_monitoring_alerts,
       """WITH r AS (
            SELECT CAST(ts AS DATE) AS day, count(*) AS records,
              count(CASE WHEN event_type = 'error' THEN 1 END) AS violations,
@@ -4851,8 +4692,8 @@ object SparkEntry {
            coalesce(exec_sec > 1.05 * eb, false) AS exec_time_alert,
            coalesce(records < 0.97 * rb, false) AS record_count_alert,
            coalesce(violations > 0.20 * records, false) AS integrity_alert
-         FROM w ORDER BY day""",
-    "q54_repetition_filter" ->
+         FROM w ORDER BY day"""),
+    Gate("q54_repetition_filter", q54_repetition_filter,
       """WITH t AS (SELECT source, string_split(text, ' ') AS w FROM documents),
          b AS (SELECT source, w,
              CASE WHEN len(w) >= 2
@@ -4870,8 +4711,8 @@ object SparkEntry {
            round(max(br), 4) AS max_bigram_rep,
            CAST(sum(CASE WHEN br <= 0.05 AND ur <= 0.55 THEN 1 ELSE 0 END) AS BIGINT)
              AS kept_docs
-         FROM r GROUP BY source ORDER BY source""",
-    "q55_sessionize" ->
+         FROM r GROUP BY source ORDER BY source"""),
+    Gate("q55_sessionize", q55_sessionize,
       """WITH e AS (SELECT user_id, ts, value FROM events WHERE user_id < 100),
          l AS (SELECT user_id, ts, value,
              CASE WHEN lag(epoch_us(ts)) OVER (PARTITION BY user_id ORDER BY ts) IS NULL
@@ -4885,15 +4726,15 @@ object SparkEntry {
          SELECT user_id, min(ts) AS session_start, max(ts) AS session_end,
            count(*) AS n_events, round(sum(value), 2) AS total_value
          FROM s GROUP BY user_id, sess
-         ORDER BY user_id, session_start""",
-    "q56_bpe_pairs" ->
+         ORDER BY user_id, session_start"""),
+    Gate("q56_bpe_pairs", q56_bpe_pairs,
       """WITH w AS (SELECT unnest(string_split(text, ' ')) AS x FROM documents),
          p AS (SELECT unnest(list_transform(generate_series(1, length(x) - 1),
                  i -> substr(x, i, 2))) AS pair
                FROM w WHERE length(x) >= 2)
          SELECT pair, count(*) AS cnt FROM p GROUP BY pair
-         ORDER BY cnt DESC, pair LIMIT 10""",
-    "q57_lm_quality" ->
+         ORDER BY cnt DESC, pair LIMIT 10"""),
+    Gate("q57_lm_quality", q57_lm_quality,
       """WITH t AS (SELECT doc_id, source, unnest(string_split(text, ' ')) AS tok
                     FROM documents),
          f AS (SELECT tok, count(*) AS c FROM t GROUP BY tok),
@@ -4905,17 +4746,17 @@ object SparkEntry {
            round(avg(doc_lp), 4) AS avg_doc_lp,
            round(min(doc_lp), 4) AS min_doc_lp,
            CAST(sum(CASE WHEN doc_lp >= -1.477 THEN 1 ELSE 0 END) AS BIGINT) AS kept_docs
-         FROM sc GROUP BY source ORDER BY source""",
-    "q58_salted_agg" ->
+         FROM sc GROUP BY source ORDER BY source"""),
+    Gate("q58_salted_agg", q58_salted_agg,
       """SELECT l_returnflag, round(sum(l_quantity), 2) AS sum_qty,
          count(*) AS n_rows
-         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""",
-    "q59_salted_join" ->
+         FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag"""),
+    Gate("q59_salted_join", q59_salted_join,
       """SELECT s.s_nationkey, count(*) AS n_items,
          round(sum(l.l_quantity), 2) AS sum_qty
          FROM lineitem l JOIN supplier s ON s.s_suppkey = l.l_suppkey
-         GROUP BY s.s_nationkey ORDER BY s.s_nationkey""",
-    "q60_frame_sampling" ->
+         GROUP BY s.s_nationkey ORDER BY s.s_nationkey"""),
+    Gate("q60_frame_sampling", q60_frame_sampling,
       """WITH m AS (SELECT o_orderkey AS id, CAST(o_orderkey % 1000 AS BIGINT) AS nf
                     FROM orders WHERE o_orderkey % 50 = 0),
          f AS (SELECT id, nf,
@@ -4924,13 +4765,13 @@ object SparkEntry {
                FROM m WHERE nf > 0)
          SELECT id, nf AS n_frames, count(*) AS n_sampled,
            max(frame_idx) AS max_idx
-         FROM f GROUP BY id, nf ORDER BY id""",
-    "q61_approx_quantile" ->
+         FROM f GROUP BY id, nf ORDER BY id"""),
+    Gate("q61_approx_quantile", q61_approx_quantile,
       """SELECT round(quantile_cont(o_totalprice, 0.5), 2) AS exact_p50,
          round(quantile_cont(o_totalprice, 0.95), 2) AS exact_p95,
          TRUE AS p50_within_1pct, TRUE AS p95_within_1pct
-         FROM orders""",
-    "q62_dedup_clusters" ->
+         FROM orders"""),
+    Gate("q62_dedup_clusters", q62_dedup_clusters,
       """WITH RECURSIVE
          toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          sh AS (SELECT doc_id,
@@ -4957,8 +4798,8 @@ object SparkEntry {
          labels AS (SELECT id, least(id, min(r)) AS label FROM reach GROUP BY id)
          SELECT label AS cluster_rep, count(*) AS cluster_size
          FROM labels GROUP BY label HAVING count(*) >= 2
-         ORDER BY cluster_rep""",
-    "q63_column_stats" ->
+         ORDER BY cluster_rep"""),
+    Gate("q63_column_stats", q63_column_stats,
       """SELECT 'o_custkey' AS column_name, count(*) AS n_rows,
            CAST(sum(CASE WHEN o_custkey IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_nulls,
            count(DISTINCT o_custkey) AS n_distinct, TRUE AS approx_within_2pct,
@@ -4980,13 +4821,13 @@ object SparkEntry {
            round(min(o_totalprice), 2), round(max(o_totalprice), 2),
            CAST(NULL AS VARCHAR), CAST(NULL AS VARCHAR)
          FROM orders
-         ORDER BY column_name""",
-    "q64_bucketed_join" ->
+         ORDER BY column_name"""),
+    Gate("q64_bucketed_join", q64_bucketed_join,
       """SELECT o.o_orderpriority, count(*) AS n_items,
          round(sum(l.l_extendedprice), 2) AS revenue
          FROM lineitem l JOIN orders o ON l.l_orderkey = o.o_orderkey
-         GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority""",
-    "q65_corpus_curation" ->
+         GROUP BY o.o_orderpriority ORDER BY o.o_orderpriority"""),
+    Gate("q65_corpus_curation", q65_corpus_curation,
       s"""WITH RECURSIVE
          pl AS (SELECT doc_id, source,
              text || CASE WHEN doc_id % 10 = 0
@@ -5086,7 +4927,7 @@ object SparkEntry {
            CAST(sum(length(dc.text)) AS BIGINT) AS curated_chars,
            min(md5(dc.text)) AS content_fp
          FROM dc JOIN keep USING (doc_id)
-         GROUP BY dc.source ORDER BY dc.source""",
+         GROUP BY dc.source ORDER BY dc.source"""),
 
     // q66: q65's exact stage replay over (half-corpus + 1200 planted
     // boilerplate copies), with ONE divergence — pair formation excludes
@@ -5099,7 +4940,7 @@ object SparkEntry {
     // corpus side remains the plain all-pairs replay. The exclusion also
     // keeps the oracle's gram self-join from exploding through 1200
     // identical gram sets.
-    "q66_capped_curation" ->
+    Gate("q66_capped_curation", q66_capped_curation,
       s"""WITH RECURSIVE
          pl AS (SELECT doc_id, source, text FROM documents WHERE doc_id % 2 = 0
                 UNION ALL
@@ -5199,7 +5040,7 @@ object SparkEntry {
            CAST(sum(length(dc.text)) AS BIGINT) AS curated_chars,
            min(md5(dc.text)) AS content_fp
          FROM dc JOIN keep USING (doc_id)
-         GROUP BY dc.source ORDER BY dc.source""",
+         GROUP BY dc.source ORDER BY dc.source"""),
 
     // q67: DuckDB reads the SAME fixture NDJSON bytes (written by the
     // Spark query before the oracle runs) and replays the normalization
@@ -5207,7 +5048,7 @@ object SparkEntry {
     // ids unique within a page); composite dedup = min array position per
     // (order_id, product_id, variant_id) among all-keys-present rows,
     // null-key rows kept unconditionally (A3's bypass).
-    "q67_flatten_matrix" ->
+    Gate("q67_flatten_matrix", q67_flatten_matrix,
       """WITH raw AS (
            SELECT * FROM read_json('/tmp/graft_fixture_q67/*.ndjson',
              format='newline_delimited', filename=true,
@@ -5274,7 +5115,7 @@ object SparkEntry {
            UNION ALL SELECT 'shipping_addresses', k, fp FROM ship
            UNION ALL SELECT 'discount_codes', k, fp FROM disc
            UNION ALL SELECT 'line_items', k, fp FROM lifp)
-         ORDER BY entity, k, fp""",
+         ORDER BY entity, k, fp"""),
 
     // q68: DuckDB re-reads the staged NDJSON the Spark query wrote
     // (part-* chunk files + the planted junk file; the glob list skips
@@ -5282,7 +5123,7 @@ object SparkEntry {
     // ignore_errors turns each syntactically-broken line into an all-null
     // row — exactly Spark's PERMISSIVE record-nulling — so the '__corrupt'
     // group and the dead-letter split both fall out of the same read.
-    "q68_ndjson_roundtrip" ->
+    Gate("q68_ndjson_roundtrip", q68_ndjson_roundtrip,
       """WITH loaded AS (
            SELECT * FROM read_json(
              ['/tmp/graft_fixture_q68/pages/part-*.json',
@@ -5302,14 +5143,14 @@ object SparkEntry {
          UNION ALL SELECT '__dead_letter_rows', n, NULL, 0 FROM corrupt_n
          UNION ALL SELECT '__good_rows',
            (SELECT CAST(count(*) AS BIGINT) FROM loaded) - n, NULL, 0 FROM corrupt_n
-         ORDER BY o_orderstatus""",
+         ORDER BY o_orderstatus"""),
 
     // q69: replay the two-round incremental lifecycle from the same
     // fixture NDJSON the gate wrote. Per round: first-wins per id (min
     // filename — ids unique within a page), flatten. Merge: a round-B row
     // wins on its table's key, round-A rows without a B match survive
     // (MERGE updates matched, inserts unmatched, never deletes).
-    "q69_incremental_lifecycle" ->
+    Gate("q69_incremental_lifecycle", q69_incremental_lifecycle,
       """WITH rawA AS (
            SELECT * FROM read_json('/tmp/graft_fixture_q69/roundA/*.ndjson',
              format='newline_delimited', filename=true,
@@ -5431,12 +5272,12 @@ object SparkEntry {
            UNION ALL SELECT 'discount_codes', k, fp FROM dA WHERE NOT EXISTS (SELECT 1 FROM dB WHERE dB.k = dA.k)
            UNION ALL SELECT 'marketing_consent', k, fp FROM mcB
            UNION ALL SELECT 'marketing_consent', k, fp FROM mcA WHERE NOT EXISTS (SELECT 1 FROM mcB WHERE mcB.k = mcA.k))
-         ORDER BY entity, k, fp""",
+         ORDER BY entity, k, fp"""),
 
     // q70: byte-identical oracle to q62 — star contraction and label
     // propagation must produce the same clusters, and the oracle's
     // recursive closure is formulation-independent.
-    "q70_dedup_clusters_ls" ->
+    Gate("q70_dedup_clusters_ls", q70_dedup_clusters_ls,
       """WITH RECURSIVE
          toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          sh AS (SELECT doc_id,
@@ -5463,12 +5304,12 @@ object SparkEntry {
          labels AS (SELECT id, least(id, min(r)) AS label FROM reach GROUP BY id)
          SELECT label AS cluster_rep, count(*) AS cluster_size
          FROM labels GROUP BY label HAVING count(*) >= 2
-         ORDER BY cluster_rep""",
+         ORDER BY cluster_rep"""),
 
     // q71: CDC diff of two derived snapshots — FULL JOIN + IS DISTINCT
     // FROM mirrors SnapshotDiff's null-safe compare; cents arithmetic is
     // integer end-to-end so repricing is bit-exact across engines.
-    "q71_snapshot_diff" ->
+    Gate("q71_snapshot_diff", q71_snapshot_diff,
       """WITH olds AS (
            SELECT o_orderkey AS k, o_orderstatus AS status,
                   CAST(round(o_totalprice * 100, 0) AS BIGINT) AS cents
@@ -5489,12 +5330,12 @@ object SparkEntry {
          WHERE o.k IS NULL OR n.k IS NULL
             OR o.status IS DISTINCT FROM n.status
             OR o.cents IS DISTINCT FROM n.cents
-         ORDER BY o_orderkey""",
+         ORDER BY o_orderkey"""),
 
     // q72: SCD2 — lag-collapse consecutive identical statuses, lead() for
     // the validity interval; (ts, orderkey) ordering matches the Spark
     // window's tie-break exactly.
-    "q72_scd2_history" ->
+    Gate("q72_scd2_history", q72_scd2_history,
       """WITH log AS (SELECT o_custkey AS k, o_orderdate AS ts,
                              o_orderkey AS tie, o_orderstatus AS v FROM orders),
          d AS (SELECT k, ts, tie, v,
@@ -5505,11 +5346,11 @@ object SparkEntry {
                FROM c)
          SELECT k AS cust_key, v AS status, valid_from, valid_to,
                 CAST(CASE WHEN valid_to IS NULL THEN 1 ELSE 0 END AS INT) AS is_current
-         FROM h ORDER BY cust_key, valid_from, status, is_current, valid_to""",
+         FROM h ORDER BY cust_key, valid_from, status, is_current, valid_to"""),
 
     // q73: domain extraction + blocklist + per-domain rollup; URLs built
     // identically on both engines from (source, doc_id).
-    "q73_domain_stats" ->
+    Gate("q73_domain_stats", q73_domain_stats,
       """WITH docs AS (SELECT doc_id, lang, n_chars,
                   'https://' || source || '.example.com/p/' || CAST(doc_id AS VARCHAR) AS url
            FROM documents),
@@ -5522,21 +5363,21 @@ object SparkEntry {
                 count(*) AS n_docs,
                 CAST(sum(n_chars) AS BIGINT) AS total_chars,
                 count(DISTINCT lang) AS n_langs
-         FROM nb GROUP BY 1, 2 ORDER BY domain""",
+         FROM nb GROUP BY 1, 2 ORDER BY domain"""),
 
     // q74: md5 permutation audit — per-shard occupancy and key
     // boundaries; md5 is engine-independent by construction.
-    "q74_corpus_shuffle" ->
+    Gate("q74_corpus_shuffle", q74_corpus_shuffle,
       """WITH h AS (SELECT doc_id, md5('42/' || CAST(doc_id AS VARCHAR)) AS hk
                     FROM documents)
          SELECT substr(hk, 1, 2) AS shard, count(*) AS n_docs,
                 min(hk) AS min_key, max(hk) AS max_key
-         FROM h GROUP BY 1 ORDER BY shard""",
+         FROM h GROUP BY 1 ORDER BY shard"""),
 
     // q75: duplicate 8-gram spans with string grams (hashed-gram
     // equivalence w.h.p., q20/q22 precedent); integer threshold — no
     // float boundary in the filter.
-    "q75_dup_ngram_spans" ->
+    Gate("q75_dup_ngram_spans", q75_dup_ngram_spans,
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          g AS (SELECT doc_id,
                  CASE WHEN len(w) >= 8
@@ -5553,28 +5394,28 @@ object SparkEntry {
          SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams,
                 CAST(n_dup AS BIGINT) AS n_dup,
                 round(CAST(n_dup AS DOUBLE) / n_grams, 4) AS dup_fraction
-         FROM per WHERE n_dup * 5 >= n_grams ORDER BY doc_id""",
+         FROM per WHERE n_dup * 5 >= n_grams ORDER BY doc_id"""),
 
     // q76: direct full recompute — the merged-partials path must equal it.
-    "q76_incremental_rollup" ->
+    Gate("q76_incremental_rollup", q76_incremental_rollup,
       """SELECT event_type, count(value) AS n, round(sum(value), 2) AS total,
                 round(sum(value) / count(value), 4) AS avg,
                 min(value) AS lo, max(value) AS hi
-         FROM events GROUP BY event_type ORDER BY event_type""",
+         FROM events GROUP BY event_type ORDER BY event_type"""),
 
     // q77: estimates are engine-specific, so the gate hashes the exact
     // count + the invariants (merged ≡ one-shot; within 5% of exact).
-    "q77_sketch_distinct" ->
+    Gate("q77_sketch_distinct", q77_sketch_distinct,
       """SELECT count(DISTINCT user_id) AS exact_distinct,
                 count(*) AS n_rows,
                 TRUE AS merge_consistent,
                 TRUE AS within_tolerance
-         FROM events""",
+         FROM events"""),
 
     // q78: the full mix→shuffle→pack→manifest composition replayed in one
     // SQL program (q47 predicate + q74 md5 placement + q46 running-sum
     // packing, ordered by the shuffle key).
-    "q78_training_shards" ->
+    Gate("q78_training_shards", q78_training_shards,
       """WITH mixed AS (
            SELECT doc_id, len(string_split(text, ' ')) AS toks,
                   md5('77/' || CAST(doc_id AS VARCHAR)) AS hk
@@ -5592,19 +5433,19 @@ object SparkEntry {
          SELECT shard, pack, count(*) AS n_docs,
                 CAST(sum(toks) AS BIGINT) AS pack_tokens,
                 min(hk) AS pack_start
-         FROM p GROUP BY shard, pack ORDER BY shard, pack""",
+         FROM p GROUP BY shard, pack ORDER BY shard, pack"""),
 
     // q79: the row_number formulation the bounded aggregator replaces —
     // identical sort key string, so the sample must match exactly.
-    "q79_quota_sample" ->
+    Gate("q79_quota_sample", q79_quota_sample,
       """SELECT lang, CAST(doc_id AS VARCHAR) AS doc_id_str FROM (
            SELECT lang, doc_id, row_number() OVER (PARTITION BY lang
              ORDER BY md5('s9/' || CAST(doc_id AS VARCHAR)) || '/' || CAST(doc_id AS VARCHAR)) AS rn
            FROM documents) t
-         WHERE rn <= 10 ORDER BY lang, doc_id_str""",
+         WHERE rn <= 10 ORDER BY lang, doc_id_str"""),
 
     // q80: Morton bit-spread replayed as plain integer arithmetic.
-    "q80_zorder_stats" ->
+    Gate("q80_zorder_stats", q80_zorder_stats,
       """WITH base AS (SELECT o_custkey % 65536 AS xa,
              datediff('day', DATE '1990-01-01', CAST(o_orderdate AS DATE)) % 65536 AS xb
            FROM orders),
@@ -5620,11 +5461,11 @@ object SparkEntry {
          SELECT CAST(zv // 1048576 AS BIGINT) AS z_bucket, count(*) AS n,
                 CAST(min(xa) AS BIGINT) AS min_cust, CAST(max(xa) AS BIGINT) AS max_cust,
                 CAST(min(xb) AS BIGINT) AS min_day, CAST(max(xb) AS BIGINT) AS max_day
-         FROM z GROUP BY 1 ORDER BY z_bucket""",
+         FROM z GROUP BY 1 ORDER BY z_bucket"""),
 
     // q81: direct binning + the same interpolation closed form — the
     // merged-halves state must reproduce it exactly.
-    "q81_binned_quantiles" ->
+    Gate("q81_binned_quantiles", q81_binned_quantiles,
       """WITH binned AS (
            SELECT o_orderstatus AS status,
                   least(greatest(CAST(floor(o_totalprice / 6000.0) AS BIGINT), 0), 99) AS bin,
@@ -5643,25 +5484,25 @@ object SparkEntry {
            round(min(CASE WHEN cb + cnt >= 0.95 * total AND cb < 0.95 * total
                 THEN (bin + (0.95 * total - cb) / cnt) * 6000.0 END), 4) AS p95_est,
            CAST(min(total) AS BIGINT) AS n
-         FROM j GROUP BY status ORDER BY status""",
+         FROM j GROUP BY status ORDER BY status"""),
 
     // q82: per-source moments + z filter on the unrounded value; both
     // engines use SAMPLE stddev.
-    "q82_zscore_outliers" ->
+    Gate("q82_zscore_outliers", q82_zscore_outliers,
       """WITH s AS (SELECT source, avg(n_chars) AS m, stddev(n_chars) AS sd
                     FROM documents GROUP BY source)
          SELECT d.source, d.doc_id, d.n_chars,
                 round((d.n_chars - s.m) / s.sd, 4) AS z
          FROM documents d JOIN s ON d.source = s.source
          WHERE s.sd > 0 AND abs((d.n_chars - s.m) / s.sd) > 1.5
-         ORDER BY d.source, d.doc_id""",
+         ORDER BY d.source, d.doc_id"""),
 
     // q83: exact-substring span removal replayed 1-based with string
     // grams: positional grams → occurrence>1 → covered positions
     // (pos..pos+7, clamped) → anti-join rebuild. Docs with no duplicated
     // position keep their ORIGINAL text on both engines (no
     // tokenize/rejoin roundtrip on the untouched majority).
-    "q83_dup_span_removal" ->
+    Gate("q83_dup_span_removal", q83_dup_span_removal,
       """WITH toks AS (SELECT doc_id, text, string_split(text, ' ') AS w FROM documents),
          pg AS (SELECT doc_id, p.pos,
                   CASE WHEN len(w) >= 8
@@ -5692,18 +5533,18 @@ object SparkEntry {
          FROM toks t
          LEFT JOIN nd ON t.doc_id = nd.doc_id
          LEFT JOIN cl ON t.doc_id = cl.doc_id
-         ORDER BY t.doc_id""",
+         ORDER BY t.doc_id"""),
 
     // q84/q85: BPE training replayed by UNROLLING the 8 rounds as
     // generated SQL (see bpeOracleRounds) — scalar-subquery argmax per
     // round plus the identical double-separator replace rewrite.
-    "q84_bpe_merges" -> bpeOracleMerges,
-    "q85_bpe_tokenize" -> bpeOracleTokenize,
+    Gate("q84_bpe_merges", q84_bpe_merges, bpeOracleMerges),
+    Gate("q85_bpe_tokenize", q85_bpe_tokenize, bpeOracleTokenize),
 
     // q86: PSL longest-match registrable domain against the same
     // snapshot (VALUES rows); candidates per rule length, scalar-max
     // lookup, default rule = last label.
-    "q86_psl_domains" ->
+    Gate("q86_psl_domains", q86_psl_domains,
       s"""WITH psl(sfx, nl) AS (SELECT * FROM (VALUES ${Web.pslValues})),
          docs AS (SELECT doc_id, source, n_chars,
                    'https://' || source || '.' ||
@@ -5725,12 +5566,12 @@ object SparkEntry {
          SELECT registrable, count(*) AS n_docs,
                 count(DISTINCT host) AS n_hosts,
                 CAST(sum(n_chars) AS BIGINT) AS total_chars
-         FROM r GROUP BY registrable ORDER BY registrable""",
+         FROM r GROUP BY registrable ORDER BY registrable"""),
 
     // q87: the store-folded histogram state must equal a full
     // recompute — the oracle bins the whole events table directly
     // (q81's estimator shape at lo=0, width=5, 100 bins).
-    "q87_quantiles_maintained" ->
+    Gate("q87_quantiles_maintained", q87_quantiles_maintained,
       """WITH binned AS (
            SELECT event_type,
                   least(greatest(CAST(floor(value / 5.0) AS BIGINT), 0), 99) AS bin,
@@ -5749,12 +5590,12 @@ object SparkEntry {
            round(min(CASE WHEN cb + cnt >= 0.95 * total AND cb < 0.95 * total
                 THEN (bin + (0.95 * total - cb) / cnt) * 5.0 END), 4) AS p95_est,
            CAST(min(total) AS BIGINT) AS n
-         FROM j GROUP BY event_type ORDER BY event_type""",
+         FROM j GROUP BY event_type ORDER BY event_type"""),
 
     // q88: identical semantics to q32 (planted-duplicate rank-1 ⊆ brute
     // force) — the Spark side answers from the STORED index instead of
     // re-assigning the corpus; the oracle is the same exact scan.
-    "q88_ann_ivf_indexed" ->
+    Gate("q88_ann_ivf_indexed", q88_ann_ivf_indexed,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id >= 8 AND vec_id < 16),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -5768,14 +5609,14 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q89: q20's exact-Jaccard replay restricted to corpus×batch pairs —
     // the Spark side answers candidate generation from the STORED bucket
     // table (only the batch is sketched), so containment of the exact
     // >= 0.6 cross-pair set proves the stored-index join loses nothing
     // vs re-sketching the corpus.
-    "q89_incremental_neardup" ->
+    Gate("q89_incremental_neardup", q89_incremental_neardup,
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          sh AS (SELECT doc_id,
              CASE WHEN len(w) >= 3
@@ -5794,22 +5635,22 @@ object SparkEntry {
                FROM pr JOIN sz sa ON sa.doc_id = pr.id_a
                        JOIN sz sb ON sb.doc_id = pr.id_b)
          SELECT id_a, id_b, jaccard FROM j WHERE jaccard >= 0.6
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // q90: the MG + candidate-exact-count composition is EXACT (every
     // term with share > 1/(capacity+1) is provably a candidate), so the
     // oracle is the direct GROUP BY + HAVING it replaces at scale.
-    "q90_heavy_hitters" ->
+    Gate("q90_heavy_hitters", q90_heavy_hitters,
       """WITH t AS (SELECT CAST(length(CAST(l_partkey AS VARCHAR)) AS VARCHAR) AS term
                     FROM lineitem),
          c AS (SELECT term, count(*) AS cnt FROM t GROUP BY term),
          n AS (SELECT count(*) AS total FROM t)
-         SELECT term, cnt FROM c, n WHERE cnt * 3 > total ORDER BY term""",
+         SELECT term, cnt FROM c, n WHERE cnt * 3 > total ORDER BY term"""),
 
     // q91: full replay of SemDeDup with deterministic seed centroids —
     // assignment argmax (dot desc, cell asc), within-cell dominance
     // (centroid-sim asc, id asc; cos >= tau), every verdict checked.
-    "q91_semdedup" ->
+    Gate("q91_semdedup", q91_semdedup,
       """WITH corpus AS (
            SELECT vec_id AS id, embedding AS v FROM embeddings
            UNION ALL
@@ -5842,13 +5683,13 @@ object SparkEntry {
          SELECT p.id, p.cell, round(p.cd, 4) AS centroid_sim,
                 (d.id IS NOT NULL) AS dropped
          FROM pv p LEFT JOIN dom d ON p.id = d.id
-         ORDER BY p.id""",
+         ORDER BY p.id"""),
 
     // q92: q24/q88's planted-twin protocol for the PQ-compressed path —
     // the oracle is the exact brute-force scan; the Spark side must
     // reach the same rank-1 exact scores through codes-only ADC
     // shortlisting + bounded exact refine.
-    "q92_ann_pq" ->
+    Gate("q92_ann_pq", q92_ann_pq,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id >= 16 AND vec_id < 24),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -5862,12 +5703,12 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q93: both versions rebuilt from the raw table, diff replayed with
     // FULL JOIN + IS DISTINCT FROM (q71's shape) — version resolution
     // and snapshot isolation sit under the same hash as the CDC rollup.
-    "q93_time_travel" ->
+    Gate("q93_time_travel", q93_time_travel,
       """WITH o0 AS (
            SELECT o_orderkey, o_orderstatus, o_totalprice
            FROM orders WHERE o_orderkey % 7 <> 0),
@@ -5888,12 +5729,12 @@ object SparkEntry {
              OR o0.o_orderstatus IS DISTINCT FROM o1.o_orderstatus)
          SELECT change_type, count(*) AS n,
            round(sum(coalesce(newp, 0) - coalesce(oldp, 0)), 2) AS delta_value
-         FROM d GROUP BY change_type ORDER BY change_type""",
+         FROM d GROUP BY change_type ORDER BY change_type"""),
 
     // q94: full replay of BM25 — tf/dl/df/N/avgdl, Lucene idf, the
     // saturation term — with the same literal arithmetic ((1.2 + 1),
     // (1 - 0.75 + ...)) so both engines run identical IEEE ops.
-    "q94_bm25" ->
+    Gate("q94_bm25", q94_bm25,
       """WITH tf AS (
            SELECT doc_id, term, count(*) AS tf
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents) t
@@ -5919,13 +5760,13 @@ object SparkEntry {
                FROM sc)
          SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS BIGINT) AS rank,
                 doc_id, round(score, 4) AS score
-         FROM r WHERE rank <= 10 ORDER BY query_id, rank""",
+         FROM r WHERE rank <= 10 ORDER BY query_id, rank"""),
 
     // q95: the md5 hex-threshold assignment replayed exactly —
     // thresholds are floor(cum·2^32) as 8 lowercase hex digits
     // (0.75 → c0000000, 0.875 → e0000000), and lowercase hex compares
     // lexicographically as numbers.
-    "q95_group_split" ->
+    Gate("q95_group_split", q95_group_split,
       """WITH a AS (
            SELECT *, CASE
              WHEN substr(md5('sp8/' || coalesce(source, ' NULL')), 1, 8) < 'c0000000' THEN 'train'
@@ -5934,12 +5775,12 @@ object SparkEntry {
            FROM documents)
          SELECT split, source, count(*) AS n_docs,
                 CAST(sum(n_chars) AS BIGINT) AS total_chars
-         FROM a GROUP BY split, source ORDER BY split, source""",
+         FROM a GROUP BY split, source ORDER BY split, source"""),
 
     // q96: the planted-twin protocol through the FULL compressed
     // pipeline (coarse probe → ADC codes scan → exact refine); the
     // oracle stays the exact brute-force scan.
-    "q96_ann_ivfpq" ->
+    Gate("q96_ann_ivfpq", q96_ann_ivfpq,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id >= 24 AND vec_id < 32),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -5953,12 +5794,12 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q97: BOTH rankings (BM25 top-20, cosine top-20) and the RRF
     // arithmetic replayed — 1.0/(60+rank) per list, summed per doc,
     // ties broken (fused desc, doc asc) in both engines.
-    "q97_hybrid_rrf" ->
+    Gate("q97_hybrid_rrf", q97_hybrid_rrf,
       """WITH tf AS (
            SELECT doc_id, term, count(*) AS tf
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents) t
@@ -6005,12 +5846,12 @@ object SparkEntry {
                 FROM f)
          SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS BIGINT) AS rank,
                 doc_id, round(fused, 4) AS fused
-         FROM fr WHERE rank <= 10 ORDER BY query_id, rank""",
+         FROM fr WHERE rank <= 10 ORDER BY query_id, rank"""),
 
     // q98: all four stages — quality floor, min-id-per-md5 dedup, the
     // q95 split arithmetic, the q78 shard/pack replay — in ONE SQL
     // program, so the composition itself is under the hash.
-    "q98_data_build" ->
+    Gate("q98_data_build", q98_data_build,
       """WITH f AS (
            SELECT doc_id, source, text FROM documents
            WHERE n_chars >= 250 AND len(string_split(text, ' ')) >= 45),
@@ -6034,13 +5875,13 @@ object SparkEntry {
          SELECT shard, pack, count(*) AS n_docs,
                 CAST(sum(toks) AS BIGINT) AS pack_tokens,
                 min(hk) AS pack_start
-         FROM p GROUP BY shard, pack ORDER BY shard, pack""",
+         FROM p GROUP BY shard, pack ORDER BY shard, pack"""),
 
     // q99: both truncations replayed — top-searchDepth by UNROUNDED
     // retrieval score first (annBruteForce's contract), then the
     // false-negative filter, then top-kNegatives by the ROUNDED score
     // (the frame the miner re-ranks) with id tie-break.
-    "q99_hard_negatives" ->
+    Gate("q99_hard_negatives", q99_hard_negatives,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, vec_id AS pos_id,
                            embedding AS qv
                     FROM embeddings WHERE vec_id < 8),
@@ -6084,12 +5925,12 @@ object SparkEntry {
            FROM n1 WHERE nrank <= 3)
          SELECT query_id, role, rank, neighbor_id, score
          FROM (SELECT * FROM pos UNION ALL SELECT * FROM neg) u
-         ORDER BY query_id, rank""",
+         ORDER BY query_id, rank"""),
 
     // q100: the whole sketch replayed — d×16^3 hex-string cells built
     // from md5('<j>/<term>'), probed with min-over-rows — plus the
     // exact counts in the same frame (est >= exact is the guarantee).
-    "q100_countmin_freq" ->
+    Gate("q100_countmin_freq", q100_countmin_freq,
       """WITH t AS (SELECT CAST(l_partkey AS VARCHAR) AS term FROM lineitem),
          js AS (SELECT unnest(generate_series(0, 3)) AS j),
          cells AS (
@@ -6108,13 +5949,13 @@ object SparkEntry {
          ex AS (SELECT term, count(*) AS exact FROM t GROUP BY 1)
          SELECT e.term, e.est, coalesce(x.exact, 0) AS exact
          FROM est e LEFT JOIN ex x ON e.term = x.term
-         ORDER BY e.term""",
+         ORDER BY e.term"""),
 
     // q101: brute-force all-pairs truth — the prefix filter is exact, so
     // the engine must reproduce this with NO recall caveat. Threshold is
     // applied to the UNROUNDED Jaccard (the completeness theorem covers
     // true J >= t), rounding only the output.
-    "q101_allpairs_jaccard" ->
+    Gate("q101_allpairs_jaccard", q101_allpairs_jaccard,
       """WITH toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          sh AS (SELECT doc_id,
              CASE WHEN len(w) >= 3
@@ -6132,12 +5973,12 @@ object SparkEntry {
                FROM pr JOIN sz sa ON sa.doc_id = pr.id_a
                        JOIN sz sb ON sb.doc_id = pr.id_b)
          SELECT id_a, id_b, round(jr, 4) AS jaccard FROM j WHERE jr >= 0.6
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // q102: the probe truncation arithmetic (40% token prefix) AND the
     // directed containment |A∩B|/|A| are both replayed; threshold on the
     // unrounded ratio, like q101.
-    "q102_containment" ->
+    Gate("q102_containment", q102_containment,
       """WITH d AS (SELECT doc_id, text FROM documents),
          probe0 AS (SELECT doc_id + 2000000 AS doc_id,
              array_to_string((string_split(text, ' '))[1:CAST(ceil(len(string_split(text, ' ')) * 0.4) AS INT)], ' ') AS text
@@ -6164,12 +6005,12 @@ object SparkEntry {
          c AS (SELECT id_a, id_b, CAST(shared AS DOUBLE) / CAST(sp.n AS DOUBLE) AS cr
                FROM pr JOIN szp sp ON sp.doc_id = pr.id_a)
          SELECT id_a, id_b, round(cr, 4) AS containment FROM c WHERE cr >= 0.8
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // q103: every metric AND verdict replayed — ratios as double division
     // of exact counts (identical IEEE result in both engines), counts as
     // doubles, thresholds compared unrounded like the engine.
-    "q103_quality_report" ->
+    Gate("q103_quality_report", q103_quality_report,
       """SELECT chk, target, metric, passed FROM (
            SELECT 'completeness' AS chk, 'l_returnflag' AS target,
              round(CAST(count(l_returnflag) AS DOUBLE) / CAST(count(*) AS DOUBLE), 6) AS metric,
@@ -6209,13 +6050,13 @@ object SparkEntry {
              (SELECT count(*) FROM lineitem l LEFT JOIN orders o
               ON l.l_orderkey = o.o_orderkey
               WHERE o.o_orderkey IS NULL AND l.l_orderkey IS NOT NULL) = 0
-         ) ORDER BY chk, target""",
+         ) ORDER BY chk, target"""),
 
     // q104: the full A-Res draw replayed — md5 hex fraction over 2^52
     // (every intermediate exact in a double), ln(u)/w priority, ranking
     // with id tie-break. Selection compares unrounded priorities; the
     // output key is rounded.
-    "q104_weighted_sample" ->
+    Gate("q104_weighted_sample", q104_weighted_sample,
       """WITH p AS (
            SELECT doc_id,
              ln((CAST(('0x' || substr(md5('ws8/' || CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) + 1)
@@ -6226,11 +6067,11 @@ object SparkEntry {
                  CAST(row_number() OVER (ORDER BY k DESC, doc_id ASC) AS INT) AS rank
                FROM p)
          SELECT rank, doc_id, round(k, 6) AS key FROM r WHERE rank <= 50
-         ORDER BY rank""",
+         ORDER BY rank"""),
 
     // q105: both sketches (q100's geometry), both inner products with the
     // absent-hash-row zero guard, and both exact sizes replayed.
-    "q105_join_size" ->
+    Gate("q105_join_size", q105_join_size,
       """WITH t AS (SELECT CAST(l_partkey AS VARCHAR) AS term FROM lineitem),
          p AS (SELECT CAST(p_partkey AS VARCHAR) AS term FROM part WHERE p_size > 25),
          js AS (SELECT unnest(generate_series(0, 3)) AS j),
@@ -6252,12 +6093,12 @@ object SparkEntry {
          x2 AS (SELECT CAST(sum(c * c) AS BIGINT) AS exact_self_size
                 FROM (SELECT count(*) AS c FROM t GROUP BY term))
          SELECT e1.est_join_size, x1.exact_join_size, e2.est_self_size, x2.exact_self_size
-         FROM e1, x1, e2, x2""",
+         FROM e1, x1, e2, x2"""),
 
     // q106: training AND scoring replayed — bigram counts, left counts
     // derived from them, exact vocab size, add-one smoothing, mean log10
     // per doc (4dp), per-source rollup.
-    "q106_bigram_lm" ->
+    Gate("q106_bigram_lm", q106_bigram_lm,
       """WITH toks AS (SELECT doc_id, source, string_split(text, ' ') AS w FROM documents),
          bgl AS (SELECT doc_id, source,
                    list_transform(generate_series(1, len(w) - 1),
@@ -6279,18 +6120,18 @@ object SparkEntry {
            round(avg(doc_lp), 4) AS avg_doc_lp,
            round(min(doc_lp), 4) AS min_doc_lp,
            CAST(sum(nb) AS BIGINT) AS n_bigrams
-         FROM sc GROUP BY source ORDER BY source""",
+         FROM sc GROUP BY source ORDER BY source"""),
 
     // q107: three damped iterations unrolled over the replayed edge
     // construction — contributions, dangling redistribution, uniform
     // start all under the hash.
-    "q107_pagerank" -> pagerankOracle,
+    Gate("q107_pagerank", q107_pagerank, pagerankOracle),
 
     // q108: the k-sequential-joins formulation of the same recurrence —
     // min ts of step 1, then earliest step-2 ts ≥ t1 within the 72 h
     // entry-anchored window, then earliest step-3 ts ≥ t2 within the
     // same window; counts + both conversion ratios replayed
-    "q108_funnel" ->
+    Gate("q108_funnel", q108_funnel,
       """WITH s1 AS (SELECT user_id, min(ts) AS t1 FROM events
               WHERE event_type = 'view' AND user_id IS NOT NULL AND ts IS NOT NULL
               GROUP BY 1),
@@ -6321,11 +6162,11 @@ object SparkEntry {
                   CASE WHEN u1 > 0 THEN round(CAST(u3 AS DOUBLE) / u1, 4) END,
                   CASE WHEN u2 > 0 THEN round(CAST(u3 AS DOUBLE) / u2, 4) END
            FROM c)
-         ORDER BY step_idx""",
+         ORDER BY step_idx"""),
 
     // q109: first-touch day per user, distinct activity days, personal
     // week offsets, cohort sizes and the retention ratio — all replayed
-    "q109_retention" ->
+    Gate("q109_retention", q109_retention,
       """WITH e AS (SELECT user_id, ts FROM events
               WHERE user_id IS NOT NULL AND ts IS NOT NULL),
          f AS (SELECT user_id, CAST(min(ts) AS DATE) AS cohort_day
@@ -6340,12 +6181,12 @@ object SparkEntry {
                 round(CAST(count(*) AS DOUBLE) / sz.cohort_size, 4) AS retention
          FROM w JOIN sz ON w.cohort_day = sz.cohort_day
          GROUP BY w.cohort_day, w.week_offset, sz.cohort_size
-         ORDER BY w.cohort_day, w.week_offset""",
+         ORDER BY w.cohort_day, w.week_offset"""),
 
     // q110: reference stats, equi-width binning with end-bin clamping,
     // the FULL bin grid (empty bins carry smoothed terms), Laplace
     // shares and the PSI sum — all replayed
-    "q110_drift_psi" ->
+    Gate("q110_drift_psi", q110_drift_psi,
       """WITH refs AS (SELECT * FROM orders),
          curs AS (SELECT * FROM orders WHERE o_totalprice >= 250000),
          stats AS (
@@ -6393,11 +6234,11 @@ object SparkEntry {
          SELECT col AS column_name,
                 round(sum((pc - pr) * ln(pc / pr)), 4) AS psi,
                 nr AS n_ref, nc AS n_cur
-         FROM terms GROUP BY col, nr, nc ORDER BY column_name""",
+         FROM terms GROUP BY col, nr, nc ORDER BY column_name"""),
 
     // q111: quasi-identifier bucketing, equivalence-class sizes and
     // every verdict column replayed
-    "q111_k_anonymity" ->
+    Gate("q111_k_anonymity", q111_k_anonymity,
       """WITH q AS (SELECT c_nationkey, c_mktsegment,
                 CAST(floor(c_acctbal / 2000.0) AS BIGINT) AS bal_bucket
               FROM customer),
@@ -6411,21 +6252,21 @@ object SparkEntry {
                 round(CAST(sum(CASE WHEN n < 5 THEN n ELSE 0 END) AS DOUBLE) /
                   CAST(sum(n) AS DOUBLE), 4) AS at_risk_pct,
                 min(n) >= 5 AS k_anonymous
-         FROM g""",
+         FROM g"""),
 
     // q112: the unpruned semi join the bloom-pruned plan must be
     // bit-identical to
-    "q112_bloom_semijoin" ->
+    Gate("q112_bloom_semijoin", q112_bloom_semijoin,
       """SELECT l_returnflag, count(*) AS n_items,
                 round(sum(l_quantity), 2) AS sum_qty
          FROM lineitem l
          WHERE EXISTS (SELECT 1 FROM part p
                        WHERE p.p_partkey = l.l_partkey AND p.p_size = 50)
-         GROUP BY 1 ORDER BY 1""",
+         GROUP BY 1 ORDER BY 1"""),
 
     // q113: blocking, every Levenshtein verdict, the transitive closure
     // (q62's recursive-reach pattern) and the survivor roll-up replayed
-    "q113_entity_resolution" ->
+    Gate("q113_entity_resolution", q113_entity_resolution,
       """WITH RECURSIVE
          c AS (SELECT c_custkey AS id, c_name AS name, c_nationkey AS blk
                FROM customer
@@ -6445,11 +6286,11 @@ object SparkEntry {
                 min(name) AS first_name, max(name) AS last_name
          FROM labels JOIN c ON labels.id = c.id
          GROUP BY label HAVING count(*) >= 2
-         ORDER BY entity_rep""",
+         ORDER BY entity_rep"""),
 
     // q114: the orientation-free formulation — id-ordered (a<b<c)
     // three-way join — of the count the degree-oriented plan produces
-    "q114_triangles" ->
+    Gate("q114_triangles", q114_triangles,
       """WITH li AS (SELECT DISTINCT l_orderkey AS o, l_partkey AS p
                      FROM lineitem),
          pe AS (SELECT DISTINCT a.p AS a, b.p AS b
@@ -6471,11 +6312,11 @@ object SparkEntry {
                        (SELECT CAST(sum(deg * (deg - 1) / 2) AS BIGINT)
                         FROM deg), 6)
                      ELSE 0.0 END AS global_clustering
-         FROM tri""",
+         FROM tri"""),
 
     // q115: distinct baskets, item counts, pair counts and all three
     // rule measures replayed; both directions from each pair
-    "q115_basket_rules" ->
+    Gate("q115_basket_rules", q115_basket_rules,
       """WITH bi AS (SELECT DISTINCT l_orderkey AS basket, l_partkey AS item
                      FROM lineitem
                      WHERE l_orderkey IS NOT NULL AND l_partkey IS NOT NULL),
@@ -6500,11 +6341,11 @@ object SparkEntry {
                 round(n * cab / (c_a * c_b), 6) AS lift
          FROM rules
          WHERE CAST(cab AS DOUBLE) / c_a >= 0.0
-         ORDER BY item_a, item_b""",
+         ORDER BY item_a, item_b"""),
 
     // q116: every bit of every hash recomputed — hex lane, zero-pad,
     // integer mean comparison (byte·64 > Σ), grouping
-    "q116_phash_groups" ->
+    Gate("q116_phash_groups", q116_phash_groups,
       """WITH p AS (SELECT doc_id,
                 rpad(hex(CAST(text AS BLOB)), 128, '0') AS hx
               FROM documents),
@@ -6522,11 +6363,11 @@ object SparkEntry {
                FROM b)
          SELECT phash, count(*) AS n_docs, min(doc_id) AS min_doc,
                 max(doc_id) AS max_doc
-         FROM h GROUP BY 1 HAVING count(*) >= 2 ORDER BY phash""",
+         FROM h GROUP BY 1 HAVING count(*) >= 2 ORDER BY phash"""),
 
     // q117: postings with 0-based positions, query offsets, the p−q
     // alignment grouping and the hits = length gate, all replayed
-    "q117_phrase_search" ->
+    Gate("q117_phrase_search", q117_phrase_search,
       """WITH docs AS (SELECT doc_id, string_split(text, ' ') AS w
                        FROM documents),
          post AS (SELECT doc_id,
@@ -6556,11 +6397,11 @@ object SparkEntry {
                  WHERE start >= 0 AND hits = len)
          SELECT query_id, count(DISTINCT doc_id) AS n_docs,
                 count(*) AS n_occurrences, min(doc_id) AS first_doc
-         FROM res GROUP BY 1 ORDER BY query_id""",
+         FROM res GROUP BY 1 ORDER BY query_id"""),
 
     // q118: microsecond ages, pow(0.5, age/halfLife) weights and both
     // decayed sums replayed with identical literal arithmetic
-    "q118_decay_scores" ->
+    Gate("q118_decay_scores", q118_decay_scores,
       """WITH e AS (SELECT event_type AS key, ts, value FROM events
               WHERE event_type IS NOT NULL AND ts IS NOT NULL
                 AND epoch_us(ts) <= 1706745600000000),
@@ -6571,11 +6412,11 @@ object SparkEntry {
          SELECT key, round(sum(w), 4) AS decayed_count,
                 round(sum(w * value), 4) AS decayed_sum,
                 count(*) AS n_events
-         FROM w GROUP BY key ORDER BY key""",
+         FROM w GROUP BY key ORDER BY key"""),
 
     // q119: the (ts, event_id)-ordered lag, transition counts and
     // row-normalized probabilities replayed
-    "q119_transitions" ->
+    Gate("q119_transitions", q119_transitions,
       """WITH e AS (SELECT user_id, event_type, ts, event_id FROM events
               WHERE user_id IS NOT NULL AND ts IS NOT NULL
                 AND event_id IS NOT NULL),
@@ -6590,11 +6431,11 @@ object SparkEntry {
          SELECT c.from_type, c.to_type, c.n,
                 round(CAST(c.n AS DOUBLE) / t.tot, 6) AS prob
          FROM c JOIN t ON c.from_type = t.from_type
-         ORDER BY c.from_type, c.to_type""",
+         ORDER BY c.from_type, c.to_type"""),
 
     // q120: the md5 → 8-hex-digit integer → mod-k fold arithmetic
     // replayed digit by digit (16^i place values are double-exact)
-    "q120_kfold" ->
+    Gate("q120_kfold", q120_kfold,
       """WITH u AS (SELECT user_id FROM events WHERE user_id IS NOT NULL),
          f AS (SELECT user_id,
                  CAST(CAST(list_sum(list_transform(range(0, 8), i ->
@@ -6605,11 +6446,11 @@ object SparkEntry {
                    AS fold
                FROM u)
          SELECT fold, count(DISTINCT user_id) AS n_users, count(*) AS n_rows
-         FROM f GROUP BY 1 ORDER BY fold""",
+         FROM f GROUP BY 1 ORDER BY fold"""),
 
     // q121: DuckDB's own Jaro-Winkler over the same blocking — an
     // INDEPENDENT implementation pinning the native expression
-    "q121_jw_match" ->
+    Gate("q121_jw_match", q121_jw_match,
       """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
                 round(jaro_winkler_similarity(a.c_name, b.c_name), 6) AS jw_sim
          FROM customer a JOIN customer b
@@ -6617,21 +6458,21 @@ object SparkEntry {
          WHERE a.c_custkey IS NOT NULL AND a.c_name IS NOT NULL
            AND a.c_nationkey IS NOT NULL AND b.c_name IS NOT NULL
            AND jaro_winkler_similarity(a.c_name, b.c_name) >= 0.98
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // q122: the UNBLOCKED brute-force all-pairs truth — the deletion-
     // neighborhood candidate set must lose nothing against it
-    "q122_deletion_neighborhood" ->
+    Gate("q122_deletion_neighborhood", q122_deletion_neighborhood,
       """SELECT a.c_custkey AS id_a, b.c_custkey AS id_b,
                 levenshtein(a.c_name, b.c_name) AS edit_dist
          FROM customer a JOIN customer b ON a.c_custkey < b.c_custkey
          WHERE a.c_name IS NOT NULL AND b.c_name IS NOT NULL
            AND levenshtein(a.c_name, b.c_name) <= 1
-         ORDER BY id_a, id_b""",
+         ORDER BY id_a, id_b"""),
 
     // q123: assignment, conversion flags, per-variant rates and the
     // pooled two-proportion z replayed
-    "q123_ab_readout" ->
+    Gate("q123_ab_readout", q123_ab_readout,
       """WITH a AS (SELECT DISTINCT user_id,
                 CASE WHEN user_id % 2 = 0 THEN 'A' ELSE 'B' END AS variant
               FROM events WHERE user_id IS NOT NULL),
@@ -6664,14 +6505,14 @@ object SparkEntry {
                 END, false) AS significant
          FROM (SELECT *,
                  CAST(conv_a + conv_b AS DOUBLE) / (n_a + n_b) AS pp
-               FROM one)""",
+               FROM one)"""),
 
     // q124: the correlated latest-touch selection, window verdict and
     // microsecond lag arithmetic replayed, rolled up by verdict.
     // Null-keyed conversions stay in (attributed=false, null lag) — the
     // correlated max() finds no touch for them, matching lastTouch's
     // every-conversion-comes-back contract
-    "q124_attribution" ->
+    Gate("q124_attribution", q124_attribution,
       """WITH conv AS (SELECT event_id, user_id, ts FROM events
               WHERE event_type = 'purchase'),
          t AS (SELECT DISTINCT user_id, ts FROM events
@@ -6694,11 +6535,11 @@ object SparkEntry {
          SELECT attributed, count(*) AS n_conversions,
                 round(avg(lag_minutes), 4) AS avg_lag_min,
                 round(max(lag_minutes), 4) AS max_lag_min
-         FROM v GROUP BY 1 ORDER BY attributed""",
+         FROM v GROUP BY 1 ORDER BY attributed"""),
 
     // q125: day rollup, the calendar-true RANGE-over-day-number frame
     // and the exact dn-7 week-ago self-join replayed
-    "q125_moving_average" ->
+    Gate("q125_moving_average", q125_moving_average,
       """WITH daily AS (SELECT CAST(ts AS DATE) AS day,
                 round(sum(value), 2) AS revenue
               FROM events WHERE event_type = 'purchase' GROUP BY 1),
@@ -6714,10 +6555,10 @@ object SparkEntry {
                      THEN round(ma.revenue / p.revenue - 1.0, 4)
                 END AS wow_growth
          FROM ma LEFT JOIN dn p ON p.dnum = ma.dnum - 7
-         ORDER BY ma.day""",
+         ORDER BY ma.day"""),
 
     // q126: the planted weekday gaps against the generated calendar
-    "q126_day_gaps" ->
+    Gate("q126_day_gaps", q126_day_gaps,
       """WITH obs AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events
                       WHERE day(ts) % 7 <> 3),
          b AS (SELECT min(day) AS lo, max(day) AS hi FROM obs),
@@ -6725,10 +6566,10 @@ object SparkEntry {
                    INTERVAL 1 DAY)) AS DATE) AS day FROM b)
          SELECT cal.day AS missing_day FROM cal
          LEFT JOIN obs ON cal.day = obs.day
-         WHERE obs.day IS NULL ORDER BY missing_day""",
+         WHERE obs.day IS NULL ORDER BY missing_day"""),
 
     // q127: centering and all five sufficient sums replayed
-    "q127_trend" ->
+    Gate("q127_trend", q127_trend,
       """WITH daily AS (SELECT CAST(ts AS DATE) AS day,
                 round(sum(value), 2) AS y
               FROM events WHERE event_type = 'purchase' GROUP BY 1),
@@ -6752,11 +6593,11 @@ object SparkEntry {
                      THEN round((n * sxy - sx * sy) * (n * sxy - sx * sy) /
                        ((n * sxx - sx * sx) * (n * syy - sy * sy)), 6)
                 END AS r2
-         FROM s""",
+         FROM s"""),
 
     // q128: tf, df, N, the smooth-idf arithmetic and the
     // (score desc, term) rank replayed
-    "q128_tfidf_keywords" ->
+    Gate("q128_tfidf_keywords", q128_tfidf_keywords,
       """WITH toks AS (SELECT doc_id, unnest(string_split(text, ' ')) AS term
                        FROM documents),
          tk AS (SELECT doc_id, term FROM toks WHERE term <> ''),
@@ -6773,11 +6614,11 @@ object SparkEntry {
                FROM sc)
          SELECT doc_id, CAST(rk AS INT) AS rank, term,
                 round(score, 6) AS score
-         FROM r WHERE rk <= 3 ORDER BY doc_id, rank""",
+         FROM r WHERE rk <= 3 ORDER BY doc_id, rank"""),
 
     // q129: every probability and log term of MI, both entropies and
     // the normalization replayed
-    "q129_mutual_information" ->
+    Gate("q129_mutual_information", q129_mutual_information,
       """WITH o AS (SELECT o_orderstatus AS x, o_orderpriority AS y
               FROM orders
               WHERE o_orderstatus IS NOT NULL AND o_orderpriority IS NOT NULL),
@@ -6797,11 +6638,11 @@ object SparkEntry {
                 CASE WHEN hx.hx > 0 AND hy.hy > 0
                      THEN round(mi.mi / sqrt(hx.hx * hy.hy), 6)
                 END AS nmi
-         FROM mi, hx, hy""",
+         FROM mi, hx, hy"""),
 
     // q130: q118's full-recompute oracle VERBATIM — maintained-state
     // reads must be indistinguishable from the batch path under the hash
-    "q130_decay_maintained" ->
+    Gate("q130_decay_maintained", q130_decay_maintained,
       """WITH e AS (SELECT event_type AS key, ts, value FROM events
               WHERE event_type IS NOT NULL AND ts IS NOT NULL
                 AND epoch_us(ts) <= 1706745600000000),
@@ -6812,18 +6653,18 @@ object SparkEntry {
          SELECT key, round(sum(w), 4) AS decayed_count,
                 round(sum(w * value), 4) AS decayed_sum,
                 count(*) AS n_events
-         FROM w GROUP BY key ORDER BY key""",
+         FROM w GROUP BY key ORDER BY key"""),
 
     // q131: q90's oracle VERBATIM — the fold-maintained MG summary plus
     // one candidate-restricted exact count must be indistinguishable
     // from the direct GROUP BY + HAVING (the PODS'12 merge rule keeps
     // every >1/(capacity+1)-share term a candidate across the fold tree)
-    "q131_heavy_hitters_maintained" ->
+    Gate("q131_heavy_hitters_maintained", q131_heavy_hitters_maintained,
       """WITH t AS (SELECT CAST(length(CAST(l_partkey AS VARCHAR)) AS VARCHAR) AS term
                     FROM lineitem),
          c AS (SELECT term, count(*) AS cnt FROM t GROUP BY term),
          n AS (SELECT count(*) AS total FROM t)
-         SELECT term, cnt FROM c, n WHERE cnt * 3 > total ORDER BY term""",
+         SELECT term, cnt FROM c, n WHERE cnt * 3 > total ORDER BY term"""),
 
     // q132: the oracle regenerates the authored pixels from the same
     // integer formula and replays the ENTIRE pixel path analytically —
@@ -6831,7 +6672,7 @@ object SparkEntry {
     // PNG's losslessness is what makes decoded ≡ authored exact. The
     // four undecodable payloads (ids 64-67) are absent here because
     // they must hash to null and be filtered on the Spark side.
-    "q132_phash_pixels" ->
+    Gate("q132_phash_pixels", q132_phash_pixels,
       """WITH ids AS (SELECT unnest(generate_series(0, 63)) AS id),
          blocks AS (SELECT id, list_transform(range(0, 64), b ->
              list_sum(list_transform(range(0, 16), p ->
@@ -6844,23 +6685,23 @@ object SparkEntry {
              FROM blocks)
          SELECT phash, count(*) AS n_imgs, min(id) AS min_id,
                 max(id) AS max_id
-         FROM h GROUP BY 1 ORDER BY phash""",
+         FROM h GROUP BY 1 ORDER BY phash"""),
 
     // q133: q90's oracle grouped — per-group direct GROUP BY + HAVING
     // against the per-group within-group share bar
-    "q133_heavy_hitters_grouped" ->
+    Gate("q133_heavy_hitters_grouped", q133_heavy_hitters_grouped,
       """WITH t AS (SELECT l_returnflag AS grp,
                 CAST(length(CAST(l_partkey AS VARCHAR)) AS VARCHAR) AS term
               FROM lineitem),
          c AS (SELECT grp, term, count(*) AS cnt FROM t GROUP BY 1, 2),
          n AS (SELECT grp, count(*) AS total FROM t GROUP BY 1)
          SELECT c.grp, c.term, c.cnt FROM c JOIN n ON c.grp = n.grp
-         WHERE c.cnt * 3 > n.total ORDER BY c.grp, c.term""",
+         WHERE c.cnt * 3 > n.total ORDER BY c.grp, c.term"""),
 
     // q134: the whole SQ8 pipeline replayed — per-vector max-abs scale,
     // round-half-away int8 codes, integer dots, the single double
     // rescale — identical literal arithmetic in both engines
-    "q134_ann_sq8" ->
+    Gate("q134_ann_sq8", q134_ann_sq8,
       """WITH q0 AS (SELECT vec_id + 1000000 AS query_id, embedding AS v
                      FROM embeddings WHERE vec_id >= 32 AND vec_id < 40),
          c0 AS (SELECT vec_id AS neighbor_id, embedding AS v FROM embeddings),
@@ -6891,23 +6732,23 @@ object SparkEntry {
                FROM sc)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id,
                 round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q135: q133's per-group oracle VERBATIM — the per-group fold tree
     // preserves each group's MG bound, so maintained ≡ one-shot
-    "q135_heavy_hitters_grouped_maintained" ->
+    Gate("q135_heavy_hitters_grouped_maintained", q135_heavy_hitters_grouped_maintained,
       """WITH t AS (SELECT l_returnflag AS grp,
                 CAST(length(CAST(l_partkey AS VARCHAR)) AS VARCHAR) AS term
               FROM lineitem),
          c AS (SELECT grp, term, count(*) AS cnt FROM t GROUP BY 1, 2),
          n AS (SELECT grp, count(*) AS total FROM t GROUP BY 1)
          SELECT c.grp, c.term, c.cnt FROM c JOIN n ON c.grp = n.grp
-         WHERE c.cnt * 3 > n.total ORDER BY c.grp, c.term""",
+         WHERE c.cnt * 3 > n.total ORDER BY c.grp, c.term"""),
 
     // q136: q88's planted-twin rank-1 oracle over a fresh planted range
     // — the IVF-SQ probe's refined scores are exact dots, so the
     // exact-scan oracle applies verbatim
-    "q136_ann_ivfsq" ->
+    Gate("q136_ann_ivfsq", q136_ann_ivfsq,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id >= 40 AND vec_id < 48),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -6921,13 +6762,13 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q137: q104's full A-Res replay VERBATIM -- the fold-maintained
     // reservoir must be indistinguishable from the batch draw (seeded-
     // hash priorities are a pure function of id, reservoirs merge
     // exactly, the marker no-ops the replayed batch)
-    "q137_weighted_sample_maintained" ->
+    Gate("q137_weighted_sample_maintained", q137_weighted_sample_maintained,
       """WITH p AS (
            SELECT doc_id,
              ln((CAST(('0x' || substr(md5('ws8/' || CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) + 1)
@@ -6938,12 +6779,12 @@ object SparkEntry {
                  CAST(row_number() OVER (ORDER BY k DESC, doc_id ASC) AS INT) AS rank
                FROM p)
          SELECT rank, doc_id, round(k, 6) AS key FROM r WHERE rank <= 50
-         ORDER BY rank""",
+         ORDER BY rank"""),
 
     // q138: q88's planted-twin rank-1 exact-scan oracle over a fresh
     // range — the build+append+append index must answer exactly like an
     // index built over the whole corpus at once
-    "q138_ann_ivf_append" ->
+    Gate("q138_ann_ivf_append", q138_ann_ivf_append,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id >= 16 AND vec_id < 24),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -6957,11 +6798,11 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q139: q104's A-Res replay PARTITIONED by lang — the fold-maintained
     // per-group reservoir must equal the one-shot per-group draw
-    "q139_weighted_sample_grouped_maintained" ->
+    Gate("q139_weighted_sample_grouped_maintained", q139_weighted_sample_grouped_maintained,
       """WITH p AS (
            SELECT lang, doc_id,
              ln((CAST(('0x' || substr(md5('wg9/' || CAST(doc_id AS VARCHAR)), 1, 13)) AS BIGINT) + 1)
@@ -6972,12 +6813,12 @@ object SparkEntry {
                  CAST(row_number() OVER (PARTITION BY lang ORDER BY k DESC, doc_id ASC) AS INT) AS rank
                FROM p)
          SELECT lang, rank, doc_id, round(k, 6) AS key FROM r WHERE rank <= 10
-         ORDER BY lang, rank""",
+         ORDER BY lang, rank"""),
 
     // q140: q94's full-corpus BM25 replay VERBATIM over fresh 2-term
     // queries — the build+append+append index must score bit-equal to a
     // one-shot search over everything (N/avgdl/df maintained exactly)
-    "q140_bm25_indexed" ->
+    Gate("q140_bm25_indexed", q140_bm25_indexed,
       """WITH tf AS (
            SELECT doc_id, term, count(*) AS tf
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents) t
@@ -7003,12 +6844,12 @@ object SparkEntry {
                FROM sc)
          SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS BIGINT) AS rank,
                 doc_id, round(score, 4) AS score
-         FROM r WHERE rank <= 10 ORDER BY query_id, rank""",
+         FROM r WHERE rank <= 10 ORDER BY query_id, rank"""),
 
     // q141: the whole closed-form train replayed — moment sums, 3x3
     // Cramer solve of the normal equations, and the same-pass fit
     // metrics (SSE = Syy - w.(X'y), SST = Syy - Sy^2/n)
-    "q141_linear_fit" ->
+    Gate("q141_linear_fit", q141_linear_fit,
       """WITH f AS (
            SELECT CAST(l_quantity AS DOUBLE) AS x1,
                   CAST(l_discount * 100 AS DOUBLE) AS x2,
@@ -7039,13 +6880,13 @@ object SparkEntry {
            round(w2, 4) AS w_disc_pct,
            round(CASE WHEN sst = 0 THEN 0 ELSE greatest(0, 1 - sse/sst) END, 4) AS r2,
            round(sqrt(sse/n), 2) AS rmse
-         FROM m""",
+         FROM m"""),
 
     // q142: the whole sketch replayed — seeded 52-bit md5 minima per
     // population, theta = k-th minimum (or 2^52 when unsaturated), the
     // (k-1)*2^52/theta estimator, and the theta-combined set algebra at
     // the common cut, next to the exact distinct counts
-    "q142_kmv_set_sketch" ->
+    Gate("q142_kmv_set_sketch", q142_kmv_set_sketch,
       """WITH ha AS (SELECT DISTINCT
              CAST(('0x' || substr(md5('km9/' || CAST(l_partkey AS VARCHAR)), 1, 13)) AS BIGINT) AS h
            FROM lineitem WHERE l_partkey IS NOT NULL),
@@ -7083,10 +6924,10 @@ object SparkEntry {
                       ELSE CAST(ci AS DOUBLE) / (ca + cb - ci) END, 4) AS jaccard,
            CAST(exact_a AS BIGINT) AS exact_a, CAST(exact_b AS BIGINT) AS exact_b,
            CAST(exact_inter AS BIGINT) AS exact_inter
-         FROM cnt, cm, ex""",
+         FROM cnt, cm, ex"""),
     // q143: q141's full-scan train replay VERBATIM -- the fold-maintained
     // moments must solve to the same model as training on everything
-    "q143_linear_fit_maintained" ->
+    Gate("q143_linear_fit_maintained", q143_linear_fit_maintained,
       """WITH f AS (
            SELECT CAST(l_quantity AS DOUBLE) AS x1,
                   CAST(l_discount * 100 AS DOUBLE) AS x2,
@@ -7117,11 +6958,11 @@ object SparkEntry {
            round(w2, 4) AS w_disc_pct,
            round(CASE WHEN sst = 0 THEN 0 ELSE greatest(0, 1 - sse/sst) END, 4) AS r2,
            round(sqrt(sse/n), 2) AS rmse
-         FROM m""",
+         FROM m"""),
 
     // q144: q141's Cramer solve GROUPED -- per-returnflag moment sums
     // and all three models replayed in one GROUP BY
-    "q144_linear_fit_grouped" ->
+    Gate("q144_linear_fit_grouped", q144_linear_fit_grouped,
       """WITH f AS (
            SELECT l_returnflag AS rf,
                   CAST(l_quantity AS DOUBLE) AS x1,
@@ -7153,12 +6994,12 @@ object SparkEntry {
            round(w2, 4) AS w_disc_pct,
            round(CASE WHEN sst = 0 THEN 0 ELSE greatest(0, 1 - sse/sst) END, 4) AS r2,
            round(sqrt(sse/n), 2) AS rmse
-         FROM m ORDER BY l_returnflag""",
+         FROM m ORDER BY l_returnflag"""),
 
     // q145: q88's planted-twin rank-1 exact-scan oracle over a fresh
     // range -- the build+append+append IVF-SQ index must answer exactly
     // like one built over the whole corpus
-    "q145_ann_ivfsq_append" ->
+    Gate("q145_ann_ivfsq_append", q145_ann_ivfsq_append,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id >= 48 AND vec_id < 56),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -7172,11 +7013,11 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q146: same contract for the IVF-PQ append (frozen codebook +
     // frozen coarse centroids)
-    "q146_ann_ivfpq_append" ->
+    Gate("q146_ann_ivfpq_append", q146_ann_ivfpq_append,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id >= 56 AND vec_id < 64),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings),
@@ -7190,11 +7031,11 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
     // q147: the whole NB train + eval replayed -- token counts, priors,
     // Laplace floors, per-doc log-likelihood sums, argmax with class-asc
     // ties, and the integer-exact confusion matrix
-    "q147_naive_bayes" ->
+    Gate("q147_naive_bayes", q147_naive_bayes,
       """WITH tr AS (SELECT lang AS class, text FROM documents
                      WHERE doc_id % 2 = 0 AND lang IS NOT NULL AND text IS NOT NULL),
          tok AS (SELECT class, unnest(string_split(text, ' ')) AS term FROM tr),
@@ -7226,11 +7067,11 @@ object SparkEntry {
                   GROUP BY 1)
          SELECT te.lang AS class, p.predicted, CAST(count(*) AS BIGINT) AS n
          FROM pred p JOIN te ON p.doc_id = te.doc_id
-         GROUP BY 1, 2 ORDER BY class, predicted""",
+         GROUP BY 1, 2 ORDER BY class, predicted"""),
 
     // q148: q147's replay VERBATIM -- the fold-maintained count state
     // must classify identically to training on everything
-    "q148_naive_bayes_maintained" ->
+    Gate("q148_naive_bayes_maintained", q148_naive_bayes_maintained,
       """WITH tr AS (SELECT lang AS class, text FROM documents
                      WHERE doc_id % 2 = 0 AND lang IS NOT NULL AND text IS NOT NULL),
          tok AS (SELECT class, unnest(string_split(text, ' ')) AS term FROM tr),
@@ -7262,13 +7103,13 @@ object SparkEntry {
                   GROUP BY 1)
          SELECT te.lang AS class, p.predicted, CAST(count(*) AS BIGINT) AS n
          FROM pred p JOIN te ON p.doc_id = te.doc_id
-         GROUP BY 1, 2 ORDER BY class, predicted""",
+         GROUP BY 1, 2 ORDER BY class, predicted"""),
 
     // q149: q140's full-corpus BM25 replay VERBATIM over the EDITED
     // corpus (docs % 10 = 4 carry an appended token) — the
     // delete + re-append path must index bit-equal to one-shot over the
     // final text, including df('graftedit') = the edited population
-    "q149_bm25_delete_upsert" ->
+    Gate("q149_bm25_delete_upsert", q149_bm25_delete_upsert,
       """WITH ed AS (SELECT doc_id,
              CASE WHEN doc_id % 10 = 4 THEN text || ' graftedit' ELSE text END AS text
            FROM documents),
@@ -7297,13 +7138,13 @@ object SparkEntry {
                FROM sc)
          SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS BIGINT) AS rank,
                 doc_id, round(score, 4) AS score
-         FROM r WHERE rank <= 10 ORDER BY query_id, rank""",
+         FROM r WHERE rank <= 10 ORDER BY query_id, rank"""),
 
     // q150: q88's exact-scan rank-1 shape over the corpus MINUS the
     // deleted ids — the deleted vector must never come back; the planted
     // twin (survivors) or nearest survivor (deleted twins, probed
     // exhaustively) must
-    "q150_ann_ivfsq_delete" ->
+    Gate("q150_ann_ivfsq_delete", q150_ann_ivfsq_delete,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                     FROM embeddings WHERE vec_id >= 30 AND vec_id < 40),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv FROM embeddings
@@ -7318,13 +7159,13 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q151: q142's sketch replay PARTITION BY the group — per-group
     // seeded 52-bit md5 minima, per-group theta (2^52 when unsaturated),
     // the (retained)*2^52/theta estimator, next to the exact per-group
     // distinct counts
-    "q151_kmv_grouped" ->
+    Gate("q151_kmv_grouped", q151_kmv_grouped,
       """WITH h AS (SELECT DISTINCT l_returnflag AS g,
              CAST(('0x' || substr(md5('kg1/' || CAST(l_partkey AS VARCHAR)), 1, 13)) AS BIGINT) AS h
            FROM lineitem WHERE l_partkey IS NOT NULL),
@@ -7340,25 +7181,25 @@ object SparkEntry {
          SELECT t.g AS l_returnflag,
            round(c.ret * 4503599627370496.0 / t.th, 4) AS n_est, e.exact_n
          FROM t JOIN c ON t.g = c.g JOIN e ON t.g = e.g
-         ORDER BY l_returnflag""",
+         ORDER BY l_returnflag"""),
 
     // q152: the contract stated independently — recall floors met and
     // the compression ordering holds for every variant (the measured
     // values live in RecallSpec + NOTES; the gate hashes the booleans)
-    "q152_ann_recall" ->
+    Gate("q152_ann_recall", q152_ann_recall,
       """SELECT variant, floor, meets_floor, compression_ordered
          FROM (VALUES
            ('ivf',    0.60, TRUE, TRUE),
            ('ivf_pq', 0.45, TRUE, TRUE),
            ('ivf_sq', 0.60, TRUE, TRUE))
            v(variant, floor, meets_floor, compression_ordered)
-         ORDER BY variant""",
+         ORDER BY variant"""),
 
     // q153: q88's exact-scan rank-1 shape over the CASE-edited corpus —
     // the upserted index must answer for the NEW vectors (reversed
     // embeddings for vec_id % 9 = 2), with queries planted from the
     // edited corpus itself
-    "q153_ann_vector_upsert" ->
+    Gate("q153_ann_vector_upsert", q153_ann_vector_upsert,
       """WITH ec AS (SELECT vec_id,
              CASE WHEN vec_id % 9 = 2 THEN list_reverse(embedding)
                   ELSE embedding END AS embedding
@@ -7376,14 +7217,14 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q154: q97's full replay VERBATIM — the stored Bm25Index search is
     // bit-equal to the one-shot scorer (q140's contract) and the
     // nProbe=nCells IvfIndex probe is exhaustive, i.e. exactly the
     // brute-force ranking — so build/append/attest composes into fusion
     // without moving a single fused rank
-    "q154_hybrid_indexed" ->
+    Gate("q154_hybrid_indexed", q154_hybrid_indexed,
       """WITH tf AS (
            SELECT doc_id, term, count(*) AS tf
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents) t
@@ -7430,12 +7271,12 @@ object SparkEntry {
                 FROM f)
          SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS BIGINT) AS rank,
                 doc_id, round(fused, 4) AS fused
-         FROM fr WHERE rank <= 10 ORDER BY query_id, rank""",
+         FROM fr WHERE rank <= 10 ORDER BY query_id, rank"""),
 
     // q155: the Mann–Whitney midrank readout replayed — per-score class
     // counts, the strictly-below negatives mass, the midrank sum (exact
     // in double: integers and halves), one final division
-    "q155_auc_readout" ->
+    Gate("q155_auc_readout", q155_auc_readout,
       """WITH c AS (SELECT source, n_chars AS s,
              sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS pos,
              sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS neg
@@ -7454,23 +7295,23 @@ object SparkEntry {
            CASE WHEN n_pos > 0 AND n_neg > 0
                 THEN round(u / (CAST(n_pos AS DOUBLE) * CAST(n_neg AS DOUBLE)), 6)
                 ELSE NULL END AS auc
-         FROM a ORDER BY source""",
+         FROM a ORDER BY source"""),
 
     // q156: pruned ≡ unpruned — the manifest-admitted read must equal the
     // plain range filter (the skipping itself is plan-asserted in
     // ZoneMapsSpec; fixture layouts are not the oracle's business)
-    "q156_zonemap_scan" ->
+    Gate("q156_zonemap_scan", q156_zonemap_scan,
       """SELECT l_returnflag, count(*) AS n,
            round(sum(l_quantity), 2) AS sum_qty
          FROM lineitem
          WHERE l_orderkey >= 1000 AND l_orderkey <= 3000
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
+         GROUP BY l_returnflag ORDER BY l_returnflag"""),
 
     // q157: the step-interpolated AP replayed — per-score counts, the
     // descending cumulative tp/fp, each term's two divisions, and the
     // ORDERED running term sum (identical addition order in both
     // engines ⇒ IEEE-identical), one final normalization
-    "q157_ap_readout" ->
+    Gate("q157_ap_readout", q157_ap_readout,
       """WITH c AS (SELECT source, n_chars AS s,
              sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS pos,
              sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS neg
@@ -7495,13 +7336,13 @@ object SparkEntry {
            CASE WHEN n_pos > 0
                 THEN round(apu / CAST(n_pos AS DOUBLE), 6)
                 ELSE NULL END AS ap
-         FROM a ORDER BY source""",
+         FROM a ORDER BY source"""),
 
     // q158: the plant rebuilt with chr() arithmetic, the cleanup with
     // utf8proc's nfc_normalize + the same RE2-safe character classes —
     // both engines' Unicode tables under the hash (769 = U+0301
     // combining acute, 7 = BEL, 8203 = U+200B ZWSP, 160 = NBSP, 9 = TAB)
-    "q158_text_normalize" ->
+    Gate("q158_text_normalize", q158_text_normalize,
       """WITH p AS (SELECT doc_id,
            CASE WHEN doc_id % 7 = 1 THEN 'cafe' || chr(769) || ' ' || text
                 WHEN doc_id % 7 = 2 THEN text || chr(7) || 'x' || chr(8203)
@@ -7514,12 +7355,12 @@ object SparkEntry {
              '[\p{Cc}\p{Cf}]', ' ', 'g'), '[\s\x{00A0}]+', ' ', 'g')) AS norm
            FROM p)
          SELECT doc_id, norm, CAST(length(norm) AS BIGINT) AS n_len
-         FROM n ORDER BY doc_id""",
+         FROM n ORDER BY doc_id"""),
 
     // q159: the perturbed eval set rebuilt, then the EXACT all-pairs
     // corpus×eval 3-shingle Jaccard (no banding) — the engine's banded
     // candidates + exact verify must emit the identical pair set
-    "q159_fuzzy_decontaminate" ->
+    Gate("q159_fuzzy_decontaminate", q159_fuzzy_decontaminate,
       """WITH ev AS (SELECT doc_id + 900000 AS eval_id,
              text || ' benchmark answer tail' AS text
            FROM documents WHERE doc_id % 37 = 5 AND n_chars >= 150),
@@ -7550,11 +7391,11 @@ object SparkEntry {
                        JOIN ne ON ne.eval_id = pr.eval_id)
          SELECT CAST(doc_id AS BIGINT) AS doc_id,
                 CAST(eval_id AS BIGINT) AS eval_id, jaccard
-         FROM j WHERE jaccard >= 0.8 ORDER BY doc_id, eval_id""",
+         FROM j WHERE jaccard >= 0.8 ORDER BY doc_id, eval_id"""),
 
     // q160: q62's recursive closure with the best-copy argmax replayed —
     // survivor = longest member, ties to the smallest id
-    "q160_cluster_survivors" ->
+    Gate("q160_cluster_survivors", q160_cluster_survivors,
       """WITH RECURSIVE
          toks AS (SELECT doc_id, string_split(text, ' ') AS w FROM documents),
          sh AS (SELECT doc_id,
@@ -7585,11 +7426,11 @@ object SparkEntry {
                  count(*) OVER (PARTITION BY l.label) AS csize
                FROM labels l JOIN documents d ON d.doc_id = l.id)
          SELECT label, doc_id AS survivor_id, CAST(csize AS BIGINT) AS cluster_size
-         FROM s WHERE rk = 1 AND csize >= 2 ORDER BY label""",
+         FROM s WHERE rk = 1 AND csize >= 2 ORDER BY label"""),
 
     // q161: the q155 AUC replay and the q157 AP replay joined — the
     // fold-maintained state must read out to the one-shot metrics
-    "q161_readout_maintained" ->
+    Gate("q161_readout_maintained", q161_readout_maintained,
       """WITH c AS (SELECT source, n_chars AS s,
              sum(CASE WHEN lang = 'en' THEN 1 ELSE 0 END) AS pos,
              sum(CASE WHEN lang = 'en' THEN 0 ELSE 1 END) AS neg
@@ -7624,13 +7465,13 @@ object SparkEntry {
            CASE WHEN a2.np2 > 0
                 THEN round(a2.apu / CAST(a2.np2 AS DOUBLE), 6)
                 ELSE NULL END AS ap
-         FROM a JOIN a2 ON a.source = a2.source ORDER BY a.source""",
+         FROM a JOIN a2 ON a.source = a2.source ORDER BY a.source"""),
 
     // q162: cells → per-class distinct/entropy (ln n − Σc·ln c / n) →
     // diversity verdicts; global dist + full class × value grid (absent
     // values carry their global mass) → TVD → closeness verdicts. The
     // verdicts compare the ROUNDED minima/maxima, same as the engine.
-    "q162_privacy_audit" ->
+    Gate("q162_privacy_audit", q162_privacy_audit,
       """WITH cells AS (SELECT source,
              CAST(floor(n_chars / 200) AS BIGINT) AS len_bucket,
              lang AS s, count(*) AS cnt
@@ -7663,25 +7504,25 @@ object SparkEntry {
                      AS groups_beyond_t,
                    round(max(tvd), 6) <= 0.3 AS t_close
                  FROM tv)
-         SELECT div.*, clo.* FROM div CROSS JOIN clo""",
+         SELECT div.*, clo.* FROM div CROSS JOIN clo"""),
 
     // q163: the 64-bit PQ quality point's contract stated independently —
     // floors met and the refine ordering holds at both shortlist budgets
     // (the measured values live in RecallSpec + NOTES; the gate hashes
     // the booleans, the q152 convention)
-    "q163_ann_pq_quality" ->
+    Gate("q163_ann_pq_quality", q163_ann_pq_quality,
       """SELECT operating_point, floor, meets_floor, refine_ordered
          FROM (VALUES
            ('shortlist_32', 0.67, TRUE, TRUE),
            ('shortlist_64', 0.76, TRUE, TRUE))
            v(operating_point, floor, meets_floor, refine_ordered)
-         ORDER BY operating_point""",
+         ORDER BY operating_point"""),
 
     // q164: the routed reads are row-identical to the plain filters —
     // range on the clustered key, point on the bloom key, and the same
     // range again after compaction + scheduled manifest heal (data
     // unchanged throughout, so the healed row equals the range row)
-    "q164_zonemap_routed_read" ->
+    Gate("q164_zonemap_routed_read", q164_zonemap_routed_read,
       """WITH r AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       round(sum(l_quantity), 2) AS sum_qty
                     FROM lineitem WHERE l_orderkey BETWEEN 500 AND 1500),
@@ -7693,24 +7534,24 @@ object SparkEntry {
          SELECT 'range_after_heal', n, sum_qty FROM r
          UNION ALL
          SELECT 'range_orderkey', n, sum_qty FROM r
-         ORDER BY probe""",
+         ORDER BY probe"""),
 
     // q165: the conjunction as one plain WHERE — covered predicates
     // (orderkey stats, partkey bloom) and the uncovered quantity
     // residual must compose to exactly the unpruned answer
-    "q165_zonemap_compound" ->
+    Gate("q165_zonemap_compound", q165_zonemap_compound,
       """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
            round(sum(l_extendedprice), 2) AS rev
          FROM lineitem
          WHERE l_orderkey BETWEEN 500 AND 3000
            AND l_partkey = 817
            AND l_quantity BETWEEN 10 AND 40
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
+         GROUP BY l_returnflag ORDER BY l_returnflag"""),
 
     // q166: the exact filtered ranking — candidates restricted to the
     // allowed subset INSIDE the CTE, so a query twinning a disallowed
     // vector must retrieve its best ALLOWED neighbor, rank-1 exact
-    "q166_ann_filtered" ->
+    Gate("q166_ann_filtered", q166_ann_filtered,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                FROM embeddings WHERE vec_id < 30),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv
@@ -7725,7 +7566,7 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q167/q168: the compressed families must produce the SAME exact
     // filtered ranking as q166's uncompressed one at their exhaustive
@@ -7733,7 +7574,7 @@ object SparkEntry {
     // filter-then-shortlist means no allowed candidate can be dropped,
     // and the exact refine restores brute-force scores), so the oracle
     // is q166's filtered brute-force verbatim
-    "q167_ann_filtered_sq" ->
+    Gate("q167_ann_filtered_sq", q167_ann_filtered_sq,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                FROM embeddings WHERE vec_id < 30),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv
@@ -7748,9 +7589,9 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
-    "q168_ann_filtered_pq" ->
+    Gate("q168_ann_filtered_pq", q168_ann_filtered_pq,
       """WITH q AS (SELECT vec_id + 1000000 AS query_id, embedding AS qv
                FROM embeddings WHERE vec_id < 30),
          c AS (SELECT vec_id AS neighbor_id, embedding AS cv
@@ -7765,26 +7606,26 @@ object SparkEntry {
              row_number() OVER (PARTITION BY query_id ORDER BY score DESC, neighbor_id ASC) AS rank
            FROM s)
          SELECT query_id, CAST(rank AS BIGINT) AS rank, neighbor_id, round(score, 4) AS score
-         FROM r WHERE rank = 1 ORDER BY query_id""",
+         FROM r WHERE rank = 1 ORDER BY query_id"""),
 
     // q169: the disjunction as one plain WHERE — the union admission
     // (two covered ranges OR a covered bloom point) must compose to
     // exactly the unpruned answer, q165's contract with OR semantics
-    "q169_zonemap_disjunctive" ->
+    Gate("q169_zonemap_disjunctive", q169_zonemap_disjunctive,
       """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
            round(sum(l_extendedprice), 2) AS rev
          FROM lineitem
          WHERE (l_orderkey BETWEEN 500 AND 1200)
             OR (l_orderkey BETWEEN 4000 AND 4600)
             OR l_partkey = 817
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
+         GROUP BY l_returnflag ORDER BY l_returnflag"""),
 
     // q170: the same WHERE three ways on the v2/SQL path — pruned
     // (fresh manifest), stale fallback (rewritten table, manifest not
     // yet healed: full listing, identical answer), and healed (pruning
     // returns). The booleans state the documented pruning contract; the
     // n/sum pairs are all the one plain filter
-    "q170_zonemap_sql" ->
+    Gate("q170_zonemap_sql", q170_zonemap_sql,
       """WITH r AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       round(sum(l_quantity), 2) AS sum_qty
                     FROM lineitem
@@ -7794,13 +7635,13 @@ object SparkEntry {
          SELECT 'sql_pruned', n, sum_qty, TRUE FROM r
          UNION ALL
          SELECT 'sql_stale_fallback', n, sum_qty, FALSE FROM r
-         ORDER BY probe""",
+         ORDER BY probe"""),
 
     // q171: q140's BM25 replay with the Lucene filter-query split
     // stated independently — df/N/avgdl computed over ALL documents,
     // the allowed predicate applied ONLY to which docs may score (the
     // contributions CTE): a doc's score is identical under any filter
-    "q171_bm25_filtered" ->
+    Gate("q171_bm25_filtered", q171_bm25_filtered,
       """WITH tf AS (
            SELECT doc_id, term, count(*) AS tf
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents) t
@@ -7827,7 +7668,7 @@ object SparkEntry {
                FROM sc)
          SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS BIGINT) AS rank,
                 doc_id, round(score, 4) AS score
-         FROM r WHERE rank <= 10 ORDER BY query_id, rank""",
+         FROM r WHERE rank <= 10 ORDER BY query_id, rank"""),
 
     // q172: q154's two-arm hybrid replay with the allowed predicate
     // applied INSIDE each arm's candidate CTE (before each arm's rank),
@@ -7835,7 +7676,7 @@ object SparkEntry {
     // post-fusion filter would keep disallowed docs' rank slots and
     // deflate every allowed doc's fused score; BM25 statistics stay
     // corpus-global per the q171 contract
-    "q172_hybrid_filtered" ->
+    Gate("q172_hybrid_filtered", q172_hybrid_filtered,
       """WITH tf AS (
            SELECT doc_id, term, count(*) AS tf
            FROM (SELECT doc_id, unnest(string_split(text, ' ')) AS term FROM documents) t
@@ -7884,23 +7725,23 @@ object SparkEntry {
                 FROM f)
          SELECT CAST(query_id AS BIGINT) AS query_id, CAST(rank AS BIGINT) AS rank,
                 doc_id, round(fused, 4) AS fused
-         FROM fr WHERE rank <= 10 ORDER BY query_id, rank""",
+         FROM fr WHERE rank <= 10 ORDER BY query_id, rank"""),
 
     // q173: the mixed a AND (b OR c) tree as ONE plain WHERE — pruned ≡
     // plain is the whole contract (q169's, over a nested tree)
-    "q173_zonemap_mixed" ->
+    Gate("q173_zonemap_mixed", q173_zonemap_mixed,
       """SELECT l_returnflag, CAST(count(*) AS BIGINT) AS n,
            round(sum(l_extendedprice), 2) AS rev
          FROM lineitem
          WHERE l_orderkey BETWEEN 500 AND 4600
            AND (l_partkey = 817 OR l_orderkey BETWEEN 4000 AND 4600)
-         GROUP BY l_returnflag ORDER BY l_returnflag""",
+         GROUP BY l_returnflag ORDER BY l_returnflag"""),
 
     // q174: both legs return the plain WHERE's aggregate (pruning is
     // I/O, never semantics); the admits-fewer booleans state the layout
     // claim — the interleaved table admits ALL files, the sorted-
     // compacted one strictly fewer (q170's boolean pattern)
-    "q174_zonemap_cluster_compact" ->
+    Gate("q174_zonemap_cluster_compact", q174_zonemap_cluster_compact,
       """WITH r AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       round(sum(l_quantity), 2) AS sum_qty
                     FROM lineitem
@@ -7908,7 +7749,7 @@ object SparkEntry {
          SELECT 'a_interleaved' AS probe, n, sum_qty, FALSE AS admits_fewer FROM r
          UNION ALL
          SELECT 'b_clustered', n, sum_qty, TRUE FROM r
-         ORDER BY probe""",
+         ORDER BY probe"""),
 
     // q175: both dimensions' aggregates are the plain WHEREs' at both
     // layouts; the booleans state the z-order claim — the interleaved
@@ -7923,7 +7764,7 @@ object SparkEntry {
     // same probe is 17%/1.7% of the space). 500-700 sits inside one
     // okey slab at every SF, so the admits-fewer claim is layout-true
     // scale-independently.
-    "q175_zonemap_zorder" ->
+    Gate("q175_zonemap_zorder", q175_zonemap_zorder,
       """WITH a AS (SELECT CAST(count(*) AS BIGINT) AS n,
                       round(sum(l_quantity), 2) AS sum_qty
                     FROM lineitem
@@ -7939,8 +7780,8 @@ object SparkEntry {
          SELECT 'b_zorder_okey', n, sum_qty, TRUE FROM a
          UNION ALL
          SELECT 'b_zorder_pkey', n, sum_qty, TRUE FROM b
-         ORDER BY probe""",
-  )
+         ORDER BY probe"""),
+  ).sortBy(_.name)
 
   /** The q84/q85 oracle's training replay: DuckDB cannot iterate a
     * data-dependent merge loop in one recursive CTE (no aggregation in

@@ -296,6 +296,16 @@ class UpsertSpec extends SparkSpec {
     assert(after == before, "compaction must not change table content")
   }
 
+  test("compact refuses a partitioned layout instead of flattening it") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_compact_part").toString
+    val store = new ParquetTableStore(spark, wh)
+    store.replacePartitioned("t", Seq((1, 1, "a"), (2, 2, "b")).toDF("k", "cell", "s"),
+      Seq("cell"))
+    val e = intercept[IllegalArgumentException](store.compact("t"))
+    assert(e.getMessage.contains("would flatten a partitioned layout"), e.getMessage)
+    assert(new java.io.File(store.path("t")).listFiles().exists(_.getName.startsWith("cell=")))
+  }
+
   test("footer schema equals spark.read.parquet's: Spark-published, v2-rewritten, decimal") {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh_footer").toString
     val store = new ParquetTableStore(spark, wh)
@@ -363,5 +373,24 @@ class UpsertSpec extends SparkSpec {
       .as[(Long, String, String)].collect().toSet
     assert(rows == Set((1L, "2024-01-01", "1.00"), (2L, "2024-01-02", "9.00"),
       (3L, "2024-01-03", "9.00")))
+  }
+
+  test("upsert and delete on a partitioned codec-type layout change its rows") {
+    // every column, the partition column included, is a codec type, but
+    // the v2 table lists top-level files only: the row-level path would
+    // MERGE against an empty table
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_part_codec").toString
+    val store = new ParquetTableStore(spark, wh)
+    def rows(name: String) = store.read(name).get.select("k", "cell", "s")
+      .as[(Int, Int, String)].collect().toSet
+    store.replacePartitioned("t", Seq((1, 1, "a"), (2, 2, "b")).toDF("k", "cell", "s"),
+      Seq("cell"))
+    store.upsert("t", Seq((2, 2, "B"), (3, 3, "c")).toDF("k", "cell", "s"), Seq("k"))
+    assert(rows("t") == Set((1, 1, "a"), (2, 2, "B"), (3, 3, "c")))
+
+    store.replacePartitioned("d", Seq((1, 1, "a"), (2, 2, "b"), (3, 3, "c"))
+      .toDF("k", "cell", "s"), Seq("cell"))
+    assert(store.delete("d", Seq(2).toDF("k"), Seq("k")) == 1L)
+    assert(rows("d") == Set((1, 1, "a"), (3, 3, "c")))
   }
 }
