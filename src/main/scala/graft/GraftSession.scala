@@ -13,6 +13,23 @@ import org.apache.spark.sql.SparkSession
   *    Spark cannot read natively; see [[Tables.events]] for the conversion.
   *  - UTC session TZ: reference timestamps are ISO-8601 UTC
   *    (ref shopify_etl.py:197).
+  *  - Codegen cache of 1,000 classes, about 4x the largest working set.
+  *    Spark's default LRU holds 100, but a `sync_hourly` round generates
+  *    about 150 classes and a `stream_backlog` trigger about 175 (about
+  *    250 for a whole stream drain, warm-up query included), in the same
+  *    order every round, so the default evicted each class before the
+  *    next round needed it: a steady sync round recompiled 152-156
+  *    classes and took 3.70-4.40 s on 4 local cores. With the larger
+  *    cache it compiles none, as the checkpoint bound stays out of
+  *    generated code ([[graft.sources.PagedNdjsonSource.atOrAfter]]).
+  *    The conf is static, so it only takes effect in a builder.
+  *  - Status store capped at [[RetainedStatus]] SQL executions, jobs,
+  *    stages and tasks per stage. Spark keeps 1,000 executions, jobs and
+  *    stages and 100,000 tasks even with the UI off (a sync round runs
+  *    about 30 executions), and nothing here reads them: metrics come
+  *    from listener events. Live heap after a history load and 3 sync
+  *    rounds read 88.1 MB with Spark's defaults, 89.7 MB with the larger
+  *    codegen cache alone and 87.8 MB with both.
   */
 object GraftSession {
   /** Local cores (and shuffle partitions) of a CLI main's session:
@@ -27,6 +44,10 @@ object GraftSession {
     spark
   }
 
+  /** SQL executions, jobs, stages and tasks per stage the status store
+    * keeps. */
+  val RetainedStatus = 50
+
   def builder(master: String, shufflePartitions: Int): SparkSession.Builder =
     SparkSession.builder()
       .master(master)
@@ -40,6 +61,11 @@ object GraftSession {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.sql.parquet.filterPushdown", "true")
       .config("spark.sql.autoBroadcastJoinThreshold", (64L * 1024 * 1024).toString)
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
+      .config("spark.sql.ui.retainedExecutions", RetainedStatus.toString)
+      .config("spark.ui.retainedJobs", RetainedStatus.toString)
+      .config("spark.ui.retainedStages", RetainedStatus.toString)
+      .config("spark.ui.retainedTasks", RetainedStatus.toString)
       // InferFiltersFromGenerate is EXCLUDED (r17, guide §4.4's
       // duplicated-expensive-expression trap in optimizer-rule form):
       // above every explode() the rule synthesizes `size(e) > 0 AND

@@ -79,7 +79,7 @@ class Pipeline(spark: SparkSession, warehouse: String,
           struct(col("_page").as("f"), monotonically_increasing_id().as("r"))
             .as("_arrival_order"))
         .select(col("_r.*") +: Seq(col("_arrival_order")): _*)
-      startTs.fold(rows)(ts => rows.filter(to_timestamp(col("updated_at")) >= lit(ts)))
+      startTs.fold(rows)(ts => rows.filter(PagedNdjsonSource.atOrAfter(col("updated_at"), ts)))
     }
   }
 

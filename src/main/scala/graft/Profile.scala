@@ -1,15 +1,20 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 
 /** Measurement harness for OPTIMIZING individual gates (guide §1): runs
-  * each selected gate once cold, printing `<name> cold: <s> rows=<n>`,
-  * then N warm reps, printing per-rep wall seconds and a per-gate stage
+  * each selected gate once cold, printing `<name> cold: <s> rows=<n>
+  * compiles=<n>`, then N warm reps, printing per-rep wall seconds
+  * (`== <name> rep <i>: <s> s compiles=<n>`) and a per-gate stage
   * breakdown (task time, shuffle bytes, spill) attributed via job
-  * descriptions. Dev tool only — the bench contract lives in [[Bench]];
-  * this main exists so a change can be attributed to the stage it
-  * actually moved before a full sweep.
+  * descriptions. `compiles` counts the classes Spark's code generator
+  * compiled during that pass: a warm rep that compiles anything
+  * generates different code each run, usually a per-run literal inlined
+  * into generated Java. Dev tool only — the bench contract lives in
+  * [[Bench]]; this main exists so a change can be attributed to the
+  * stage it actually moved before a full sweep.
   *
   * Gates are selected by SUBSTRING: a gate runs when its name contains
   * any of the comma-separated substrings (`q2` selects q20 to q29,
@@ -60,19 +65,22 @@ object Profile {
       val (name, fn) = (g.name, g.plan)
       // cold pass, doubling as warmup (pays fixture builds + codegen)
       val c0 = System.nanoTime()
+      val k0 = compiles()
       try {
         val n = fn(spark, sfDir).count()
-        println(f"$name%s cold: ${(System.nanoTime() - c0) / 1e9}%.3f rows=$n%d")
+        println(f"$name%s cold: ${(System.nanoTime() - c0) / 1e9}%.3f rows=$n%d " +
+          s"compiles=${compiles() - k0}")
       } catch { case e: Throwable => println(s"$name WARMUP FAILED: $e") }
       (1 to reps).foreach { i =>
         rows.clear()
         spark.sparkContext.setJobDescription(name)
         val t0 = System.nanoTime()
+        val k0 = compiles()
         try fn(spark, sfDir).count() catch { case e: Throwable =>
           println(s"$name rep $i FAILED: $e") }
         val sec = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.setJobDescription(null)
-        println(f"== $name%s rep $i%d: $sec%.3f s")
+        println(f"== $name%s rep $i%d: $sec%.3f s compiles=${compiles() - k0}%d")
         if (i == reps) {
           // top stages of the LAST rep by executor run time
           import scala.jdk.CollectionConverters._
@@ -93,4 +101,7 @@ object Profile {
     }
     spark.stop()
   }
+
+  /** Classes compiled by Spark's code generator so far in this JVM. */
+  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
 }

@@ -558,10 +558,15 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * listing (unlike the routed [[readWhere]] path, which is loud-on-
     * stale by contract: SQL users never opted into the manifest, so
     * admission there is a pure optimization that must never fail a
-    * query). See [[graft.sources.v2.GraftParquetTable]]. */
+    * query). See [[graft.sources.v2.GraftParquetTable]]. A partitioned
+    * layout is refused: the v2 table lists top-level files only, so SQL
+    * over it would silently see no rows. */
   def sqlTable(name: String): String = {
-    val (cur, _) = readKnown(name).getOrElse(
+    val (cur, flat) = readKnown(name).getOrElse(
       sys.error(s"table '$name' does not exist"))
+    require(flat, s"sqlTable('$name') cannot serve a partitioned layout " +
+      s"(${partitionDirs(name)}): its SQL table lists top-level files " +
+      s"only and would see no rows; read it with read('$name') instead")
     ensureV2Table(name, cur.schema)
   }
 
@@ -1035,15 +1040,22 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * rows with no error. The scaladoc's own boundary is "runs per
     * PARTITION of a partitioned table"; enforce it loudly here. */
   private def requireUnpartitioned(name: String, op: String): Unit = {
+    val parts = partitionDirs(name)
+    require(parts.isEmpty,
+      s"$op('$name') would flatten a partitioned layout ($parts): run the " +
+        "rewrite per partition directory instead — a whole-table rewrite " +
+        "publishes an UNPARTITIONED tree and breaks the partition-swap paths")
+  }
+
+  /** `found partition directories a, b, c, ...` for `name`'s `col=value`
+    * directories, empty when it has none. */
+  private def partitionDirs(name: String): String = {
     val p = new Path(path(name))
     val parts = fs(p).listStatus(p)
       .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-    require(parts.isEmpty,
-      s"$op('$name') would flatten a partitioned layout (found partition " +
-        s"directories ${parts.take(3).map(_.getPath.getName).mkString(", ")}" +
-        s"${if (parts.length > 3) ", ..." else ""}): run the rewrite per " +
-        "partition directory instead — a whole-table rewrite publishes an " +
-        "UNPARTITIONED tree and breaks the partition-swap paths")
+    if (parts.isEmpty) ""
+    else s"found partition directories ${parts.take(3).map(_.getPath.getName).mkString(", ")}" +
+      s"${if (parts.length > 3) ", ..." else ""}"
   }
 
   /** Parquet files directly under `name`'s root. */

@@ -1,6 +1,7 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.util.DateTimeUtils
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
@@ -59,7 +60,20 @@ object PagedNdjsonSource {
     * projection so Catalyst can push it into the scan. */
   def readIncremental(spark: SparkSession, dir: String, schema: StructType,
                       tsCol: String, startTs: java.sql.Timestamp): DataFrame =
-    read(spark, dir, schema, Some(to_timestamp(col(tsCol)) >= lit(startTs)))
+    read(spark, dir, schema, Some(atOrAfter(col(tsCol), startTs)))
+
+  /** `to_timestamp(c) >= startTs`, with the bound held by a typed UDF
+    * closure instead of a literal: generated code reaches it through
+    * `references[]`, so a round with a moved checkpoint reuses the
+    * previous round's compiled classes instead of recompiling the ones
+    * that inlined the old bound. A null `c` gives null (the UDF skips
+    * null input), which a filter drops, as it drops the literal
+    * comparison's null; an unparsable one fails in `to_timestamp` in
+    * both forms. */
+  def atOrAfter(c: Column, startTs: java.sql.Timestamp): Column = {
+    val bound = DateTimeUtils.fromJavaTimestamp(startTs)
+    udf((micros: Long) => micros >= bound).apply(unix_micros(to_timestamp(c)))
+  }
 
   /** Dead-letter routing: one PERMISSIVE parse DEFINITION, two outputs —
     * rows that parse against `schema` continue typed (same shape as

@@ -306,6 +306,19 @@ class UpsertSpec extends SparkSpec {
     assert(new java.io.File(store.path("t")).listFiles().exists(_.getName.startsWith("cell=")))
   }
 
+  test("sqlTable refuses a partitioned layout instead of serving it empty") {
+    val wh = java.nio.file.Files.createTempDirectory("graft_wh_sql_part").toString
+    val store = new ParquetTableStore(spark, wh)
+    store.replacePartitioned("p", Seq((1, 1, "a"), (2, 2, "b"), (3, 3, "c"))
+      .toDF("k", "cell", "s"), Seq("cell"))
+    val e = intercept[IllegalArgumentException] {
+      spark.sql(s"SELECT count(*) FROM ${store.sqlTable("p")}").head().getLong(0)
+    }
+    assert(e.getMessage.contains("cannot serve a partitioned layout"), e.getMessage)
+    assert(e.getMessage.contains("cell=1"), e.getMessage)
+    assert(store.read("p").get.count() == 3)
+  }
+
   test("footer schema equals spark.read.parquet's: Spark-published, v2-rewritten, decimal") {
     val wh = java.nio.file.Files.createTempDirectory("graft_wh_footer").toString
     val store = new ParquetTableStore(spark, wh)
