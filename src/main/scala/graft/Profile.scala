@@ -1,18 +1,22 @@
 package graft
 
+import java.lang.management.ManagementFactory
 import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageCompleted}
 
 /** Measurement harness for OPTIMIZING individual gates (guide §1): runs
   * each selected gate once cold, printing `<name> cold: <s> rows=<n>
-  * compiles=<n>`, then N warm reps, printing per-rep wall seconds
-  * (`== <name> rep <i>: <s> s compiles=<n>`) and a per-gate stage
-  * breakdown (task time, shuffle bytes, spill) attributed via job
-  * descriptions. `compiles` counts the classes Spark's code generator
-  * compiled during that pass: a warm rep that compiles anything
-  * generates different code each run, usually a per-run literal inlined
-  * into generated Java. Dev tool only — the bench contract lives in
+  * compiles=<n> cpu_s=<s> jit_ms=<ms>`, then N warm reps, printing
+  * per-rep wall seconds (`== <name> rep <i>: <s> s compiles=<n> cpu_s=<s>
+  * jit_ms=<ms>`) and a per-gate stage breakdown (task time, shuffle
+  * bytes, spill) attributed via job descriptions. `compiles` counts the
+  * classes Spark's code generator compiled during that pass: a warm rep
+  * that compiles anything generates different code each run, usually a
+  * per-run literal inlined into generated Java. `cpu_s` is the process
+  * CPU time of the pass and `jit_ms` the JVM's JIT compile time in it: a
+  * reading of driver-side work (Hadoop, parquet, planning) that no Spark
+  * job's task metrics carry. Dev tool only — the bench contract lives in
   * [[Bench]]; this main exists so a change can be attributed to the
   * stage it actually moved before a full sweep.
   *
@@ -65,22 +69,22 @@ object Profile {
       val (name, fn) = (g.name, g.plan)
       // cold pass, doubling as warmup (pays fixture builds + codegen)
       val c0 = System.nanoTime()
-      val k0 = compiles()
+      val k0 = counters()
       try {
         val n = fn(spark, sfDir).count()
         println(f"$name%s cold: ${(System.nanoTime() - c0) / 1e9}%.3f rows=$n%d " +
-          s"compiles=${compiles() - k0}")
+          since(k0))
       } catch { case e: Throwable => println(s"$name WARMUP FAILED: $e") }
       (1 to reps).foreach { i =>
         rows.clear()
         spark.sparkContext.setJobDescription(name)
         val t0 = System.nanoTime()
-        val k0 = compiles()
+        val k0 = counters()
         try fn(spark, sfDir).count() catch { case e: Throwable =>
           println(s"$name rep $i FAILED: $e") }
         val sec = (System.nanoTime() - t0) / 1e9
         spark.sparkContext.setJobDescription(null)
-        println(f"== $name%s rep $i%d: $sec%.3f s compiles=${compiles() - k0}%d")
+        println(f"== $name%s rep $i%d: $sec%.3f s " + since(k0))
         if (i == reps) {
           // top stages of the LAST rep by executor run time
           import scala.jdk.CollectionConverters._
@@ -102,6 +106,17 @@ object Profile {
     spark.stop()
   }
 
-  /** Classes compiled by Spark's code generator so far in this JVM. */
-  private def compiles(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+  /** (classes compiled by Spark's code generator, process CPU ns, JIT
+    * compile ms) so far in this JVM. */
+  private def counters(): (Long, Long, Long) = (
+    CodegenMetrics.METRIC_COMPILATION_TIME.getCount,
+    ManagementFactory.getOperatingSystemMXBean
+      .asInstanceOf[com.sun.management.OperatingSystemMXBean].getProcessCpuTime,
+    ManagementFactory.getCompilationMXBean.getTotalCompilationTime)
+
+  /** `compiles=<n> cpu_s=<s> jit_ms=<ms>` since the reading `k0`. */
+  private def since(k0: (Long, Long, Long)): String = {
+    val (c, cpu, jit) = counters()
+    f"compiles=${c - k0._1}%d cpu_s=${(cpu - k0._2) / 1e9}%.3f jit_ms=${jit - k0._3}%d"
+  }
 }

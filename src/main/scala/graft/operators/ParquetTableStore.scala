@@ -2,15 +2,13 @@ package graft.operators
 
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, count, lit}
 import org.apache.spark.sql.types._
-import graft.sources.v2.GraftCatalog
+import graft.sources.v2.{GraftCatalog, GraftParquetTable}
 
 /** Parquet-directory table store with MERGE-upsert publish.
   *
@@ -232,12 +230,11 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     out.result()
   }
 
-  /** One data file's parquet footer, read on the driver: no Spark job
-    * (the v2 codec opens its files the same way,
-    * [[graft.sources.v2.GraftParquetTable]]). */
+  /** One data file's parquet footer, read on the driver with the
+    * session's Hadoop conf: no Spark job, no new `Configuration` (the v2
+    * codec opens its files the same way, [[GraftParquetTable.openFile]]). */
   private def footer(file: String): ParquetMetadata = {
-    val r = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file),
-      spark.sparkContext.hadoopConfiguration))
+    val r = GraftParquetTable.openFile(file, spark.sparkContext.hadoopConfiguration)
     try r.getFooter finally r.close()
   }
 
@@ -452,7 +449,14 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     try {
       val futs = batches.map { case (name, updates, keys) =>
         pool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = upsert(name, updates, keys)
+          // a pool thread's call site holds no graft frame, so the job
+          // description is what names the table in a stage breakdown
+          def call(): Unit = {
+            val sc = spark.sparkContext
+            val prev = sc.getLocalProperty("spark.job.description")
+            sc.setJobDescription(s"store.upsert $name")
+            try upsert(name, updates, keys) finally sc.setJobDescription(prev)
+          }
         })
       }
       futs.foreach { f =>

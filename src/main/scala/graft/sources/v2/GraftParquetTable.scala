@@ -3,15 +3,17 @@ package graft.sources.v2
 import java.util
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.example.data.Group
 import org.apache.parquet.example.data.simple.SimpleGroupFactory
 import org.apache.parquet.example.data.simple.convert.GroupRecordConverter
 import org.apache.parquet.hadoop.{ParquetFileReader, ParquetWriter}
-import org.apache.parquet.hadoop.example.{ExampleParquetWriter, GroupWriteSupport}
+import org.apache.parquet.hadoop.example.ExampleParquetWriter
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.parquet.io.ColumnIOFactory
 import org.apache.parquet.schema.{LogicalTypeAnnotation, MessageType, Types}
 import org.apache.parquet.schema.PrimitiveType.PrimitiveTypeName
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
@@ -35,10 +37,13 @@ import org.apache.spark.util.SerializableConfiguration
   * staging dir (with any orphan files) is deleted afterwards. Task abort
   * deletes its own file.
   *
-  * The session's Hadoop configuration is captured at write/scan planning
-  * time and shipped to executors (SerializableConfiguration), so fs.*
-  * settings (s3a credentials, defaultFS) resolve identically to Spark's
-  * own parquet source.
+  * The session's Hadoop configuration is built once per scan, write or
+  * row-level operation at planning time and shipped to its tasks as one
+  * broadcast (the idiom of Spark's own parquet source), so fs.* settings
+  * (s3a credentials, defaultFS) resolve identically to that source, and
+  * no task deserializes a configuration of its own. The write that ends
+  * an operation destroys the broadcast at commit or abort; a plain scan's
+  * is left to Spark's context cleaner, as the scan may run again.
   *
   * Row-level operations rewrite PER-FILE GROUPS, not the whole table: the
   * table exposes a `_file` metadata column, the row-level scan implements
@@ -84,8 +89,12 @@ class GraftParquetTable(tableName: String, dir: String, tableSchema: StructType)
       override def comment(): String = "source file of the row (group-pruning key)"
     })
 
-  private def hadoopConf(): Configuration =
-    SparkSession.active.sessionState.newHadoopConf()
+  /** The session's Hadoop conf for one scan, write or row-level
+    * operation, broadcast to its tasks. */
+  private def shippedConf(): Broadcast[SerializableConfiguration] = {
+    val spark = SparkSession.active
+    spark.sparkContext.broadcast(new SerializableConfiguration(spark.sessionState.newHadoopConf()))
+  }
 
   /** (path → byte length), sorted by path — the lengths feed the
     * zone-map freshness attest in [[GraftScanBuilder.pushFilters]]. */
@@ -98,25 +107,20 @@ class GraftParquetTable(tableName: String, dir: String, tableSchema: StructType)
       .map(s => s.getPath.toString -> s.getLen).sortBy(_._1)
   }
 
-  private def scanBuilder(group: Option[RewriteGroup]): ScanBuilder = {
-    val conf = hadoopConf()
-    new GraftScanBuilder(tableSchema, listFiles(conf),
-      new SerializableConfiguration(conf), group, dir)
-  }
-
-  private def batchWrite(replace: Boolean, group: Option[RewriteGroup]): BatchWrite =
-    new GraftParquetBatchWrite(dir, tableSchema, replace,
-      new SerializableConfiguration(hadoopConf()), group)
+  private def scanBuilder(conf: Broadcast[SerializableConfiguration],
+                          group: Option[RewriteGroup]): ScanBuilder =
+    new GraftScanBuilder(tableSchema, listFiles(conf.value.value), conf, group, dir)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    scanBuilder(None)
+    scanBuilder(shippedConf(), None)
 
   override def newWriteBuilder(info: LogicalWriteInfo): WriteBuilder =
     new WriteBuilder with SupportsTruncate {
       private var doReplace = false
       override def truncate(): WriteBuilder = { doReplace = true; this }
       override def build(): Write = new Write {
-        override def toBatch: BatchWrite = batchWrite(doReplace, None)
+        override def toBatch: BatchWrite =
+          new GraftParquetBatchWrite(dir, tableSchema, doReplace, shippedConf())
       }
     }
 
@@ -125,17 +129,20 @@ class GraftParquetTable(tableName: String, dir: String, tableSchema: StructType)
       // one rewrite-group holder per operation: the scan narrows it via the
       // runtime filter, the write commit replaces exactly that set
       private val group = new RewriteGroup
+      // one conf for the operation's scan and write; the write releases it
+      private val conf = shippedConf()
       override def command(): RowLevelOperation.Command = info.command()
       override def requiredMetadataAttributes(): Array[
         org.apache.spark.sql.connector.expressions.NamedReference] =
         Array(org.apache.spark.sql.connector.expressions.Expressions.column(
           GraftParquetTable.FileCol))
       override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-        scanBuilder(Some(group))
+        scanBuilder(conf, Some(group))
       override def newWriteBuilder(writeInfo: LogicalWriteInfo): WriteBuilder =
         new WriteBuilder {
           override def build(): Write = new Write {
-            override def toBatch: BatchWrite = batchWrite(replace = true, Some(group))
+            override def toBatch: BatchWrite =
+              new GraftParquetBatchWrite(dir, tableSchema, replace = true, conf, Some(group))
           }
         }
     }
@@ -159,6 +166,15 @@ object GraftParquetTable {
         }
     }
     if (counts.isEmpty) None else Some(counts.sum)
+  }
+
+  /** Opens parquet file `file` with `conf`, for its footer or its rows.
+    * The read options (decryption included) come from `conf` too:
+    * `ParquetFileReader.open(InputFile)` alone builds a new Hadoop
+    * `Configuration` per file, which re-parses Hadoop's XML defaults. */
+  def openFile(file: String, conf: Configuration): ParquetFileReader = {
+    val p = new Path(file)
+    ParquetFileReader.open(HadoopInputFile.fromPath(p, conf), HadoopReadOptions.builder(conf, p).build())
   }
 }
 
@@ -194,7 +210,7 @@ private[v2] class RewriteGroup {
   * coupling the commit path to manifest freshness. */
 private[v2] class GraftScanBuilder(tableSchema: StructType,
                                    listed: Array[(String, Long)],
-                                   conf: SerializableConfiguration,
+                                   conf: Broadcast[SerializableConfiguration],
                                    group: Option[RewriteGroup],
                                    dir: String)
   extends ScanBuilder with SupportsPushDownRequiredColumns
@@ -279,7 +295,7 @@ private[v2] object ParquetCodec {
     * time (never the whole file), reader closed via the iterator's own
     * lifecycle including the error path. */
   def readFile(file: String, schema: StructType, conf: Configuration): Iterator[InternalRow] = {
-    val reader = ParquetFileReader.open(HadoopInputFile.fromPath(new Path(file), conf))
+    val reader = GraftParquetTable.openFile(file, conf)
     try {
       val fileSchema = reader.getFooter.getFileMetaData.getSchema
       // -2 marks the _file metadata column (emitted as the path, not read)
@@ -340,9 +356,7 @@ private[v2] object ParquetCodec {
 
   def newWriter(file: String, schema: StructType, conf: Configuration): (ParquetWriter[Group], SimpleGroupFactory) = {
     val msgType = toMessageType(schema)
-    val writeConf = new Configuration(conf)
-    GroupWriteSupport.setSchema(msgType, writeConf)
-    val writer = ExampleParquetWriter.builder(new Path(file)).withConf(writeConf).build()
+    val writer = ExampleParquetWriter.builder(new Path(file)).withConf(conf).withType(msgType).build()
     (writer, new SimpleGroupFactory(msgType))
   }
 
@@ -383,7 +397,7 @@ private[v2] object MergeRowShape {
 }
 
 private[v2] class GraftParquetScan(schema: StructType, files: Array[String],
-                                   conf: SerializableConfiguration,
+                                   conf: Broadcast[SerializableConfiguration],
                                    group: Option[RewriteGroup],
                                    runtimeFiltered: Boolean)
   extends Scan with Batch with SupportsRuntimeV2Filtering {
@@ -443,12 +457,12 @@ private[v2] class GraftParquetScan(schema: StructType, files: Array[String],
 private[v2] case class GraftFilePartition(file: String) extends InputPartition
 
 private[v2] class GraftParquetReaderFactory(schema: StructType,
-                                            conf: SerializableConfiguration)
+                                            conf: Broadcast[SerializableConfiguration])
   extends PartitionReaderFactory {
   override def createReader(p: InputPartition): PartitionReader[InternalRow] =
     new PartitionReader[InternalRow] {
       private val it = ParquetCodec.readFile(
-        p.asInstanceOf[GraftFilePartition].file, schema, conf.value)
+        p.asInstanceOf[GraftFilePartition].file, schema, conf.value.value)
       private var cur: InternalRow = _
       override def next(): Boolean = { if (it.hasNext) { cur = it.next(); true } else false }
       override def get(): InternalRow = cur
@@ -458,12 +472,20 @@ private[v2] class GraftParquetReaderFactory(schema: StructType,
 
 /** Executors write staged parquet files; the driver commit publishes ONLY
   * the files named in successful task commit messages (snapshot swap for
-  * replace, move-in for append), then deletes staging with any orphans. */
+  * replace, move-in for append), then deletes staging with any orphans.
+  * This write ends its operation, so commit and abort destroy the conf
+  * broadcast (the row-level operation's scan ran before it); the driver
+  * keeps its own reference to the conf for the commit. */
 private[v2] class GraftParquetBatchWrite(dir: String, schema: StructType,
                                          replace: Boolean,
-                                         conf: SerializableConfiguration,
+                                         conf: Broadcast[SerializableConfiguration],
                                          group: Option[RewriteGroup] = None) extends BatchWrite {
   private val stagingDir = s"${dir}_staging_${java.util.UUID.randomUUID().toString.take(8)}"
+  private val driverConf = conf.value.value
+  private val released = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** Spark calls abort after a commit that threw: destroy only once. */
+  private def release(): Unit = if (released.compareAndSet(false, true)) conf.destroy()
 
   override def createBatchWriterFactory(info: PhysicalWriteInfo): DataWriterFactory =
     GraftParquetWriterFactory(stagingDir, schema, conf)
@@ -472,7 +494,7 @@ private[v2] class GraftParquetBatchWrite(dir: String, schema: StructType,
     val committed = messages.collect { case GraftFileCommit(f) if f.nonEmpty => f }
     val staging = new Path(stagingDir)
     val target = new Path(dir)
-    val fs = staging.getFileSystem(conf.value)
+    val fs = staging.getFileSystem(driverConf)
     try {
       val pruned = group.flatMap(_.scannedFiles)
       if (replace && pruned.isDefined) {
@@ -517,15 +539,18 @@ private[v2] class GraftParquetBatchWrite(dir: String, schema: StructType,
         }
       }
     } finally {
-      if (fs.exists(staging)) fs.delete(staging, true) // orphans from failed attempts
+      try {
+        if (fs.exists(staging)) fs.delete(staging, true) // orphans from failed attempts
+      } finally release()
     }
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    val staging = new Path(stagingDir)
-    val fs = staging.getFileSystem(conf.value)
-    if (fs.exists(staging)) fs.delete(staging, true)
-  }
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    try {
+      val staging = new Path(stagingDir)
+      val fs = staging.getFileSystem(driverConf)
+      if (fs.exists(staging)) fs.delete(staging, true)
+    } finally release()
 }
 
 private[v2] case class GraftFileCommit(file: String) extends WriterCommitMessage
@@ -534,7 +559,7 @@ private[v2] case class GraftFileCommit(file: String) extends WriterCommitMessage
   * handling; the written file is only published if this task's commit
   * message reaches the driver (task abort deletes the file). */
 private[v2] case class GraftParquetWriterFactory(stagingDir: String, schema: StructType,
-                                                 conf: SerializableConfiguration)
+                                                 conf: Broadcast[SerializableConfiguration])
   extends DataWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DataWriter[InternalRow] =
@@ -551,7 +576,7 @@ private[v2] case class GraftParquetWriterFactory(stagingDir: String, schema: Str
         val shift = MergeRowShape.shiftOf(record, schema.length)
         if (!MergeRowShape.isDelete(record, shift)) {
           if (writer == null) {
-            val (w, f) = ParquetCodec.newWriter(file, schema, conf.value)
+            val (w, f) = ParquetCodec.newWriter(file, schema, conf.value.value)
             writer = w; factory = f
           }
           val g = factory.newGroup()
@@ -568,7 +593,7 @@ private[v2] case class GraftParquetWriterFactory(stagingDir: String, schema: Str
         if (writer != null) {
           try writer.close() catch { case _: Throwable => () }
           val p = new Path(file)
-          val fs = p.getFileSystem(conf.value)
+          val fs = p.getFileSystem(conf.value.value)
           if (fs.exists(p)) fs.delete(p, false)
         }
       }

@@ -122,8 +122,8 @@ class GraftParquetTableSpec extends SparkSpec {
 
   test("a row-level scan over one file fixes its group; over two it keeps the _file filter") {
     val schema = new StructType().add("k", LongType)
-    val conf = new org.apache.spark.util.SerializableConfiguration(
-      spark.sparkContext.hadoopConfiguration)
+    val conf = spark.sparkContext.broadcast(new org.apache.spark.util.SerializableConfiguration(
+      spark.sparkContext.hadoopConfiguration))
     def scanOf(files: String*): (GraftParquetScan, RewriteGroup) = {
       val group = new RewriteGroup
       val scan = new GraftScanBuilder(schema, files.map(_ -> 1L).toArray, conf,
@@ -141,5 +141,23 @@ class GraftParquetTableSpec extends SparkSpec {
     val plain = new GraftScanBuilder(schema, Array("f1.parquet" -> 1L), conf,
       None, "/unused").build().asInstanceOf[GraftParquetScan]
     assert(plain.filterAttributes().nonEmpty)
+  }
+
+  test("openFile takes its read options from the conf it is given") {
+    val loc = Files.createTempDirectory("graft_pq_open").toString + "/t"
+    spark.range(3).coalesce(1).write.parquet(loc)
+    val file = new java.io.File(loc).listFiles().filter(_.getName.endsWith(".parquet")).head.toString
+    val session = spark.sparkContext.hadoopConfiguration
+    val r = GraftParquetTable.openFile(file, session)
+    try assert(r.getRecordCount == 3) finally r.close()
+    val bogus = new org.apache.hadoop.conf.Configuration(session)
+    bogus.set("parquet.crypto.factory.class", "graft.NoSuchCryptoFactory")
+    // a default open builds a Configuration of its own and does not see it
+    val plain = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(new org.apache.hadoop.fs.Path(file), bogus))
+    try assert(plain.getRecordCount == 3) finally plain.close()
+    val e = intercept[Exception](GraftParquetTable.openFile(file, bogus).close())
+    assert(e.toString.contains("NoSuchCryptoFactory") ||
+      Option(e.getCause).exists(_.toString.contains("NoSuchCryptoFactory")), e.toString)
   }
 }
