@@ -3520,8 +3520,8 @@ object SparkEntry {
         Seq("l_orderkey", "l_extendedprice"))
     }
     val store = new graft.operators.ParquetTableStore(s, wh)
-    graft.operators.ZoneMaps.prunedReadRange(store, "li_zoned",
-        "l_orderkey", 1000L, 3000L)
+    store.readWhere("li_zoned",
+        graft.operators.ZonePred.between("l_orderkey", 1000L, 3000L))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("l_quantity")), 2).as("sum_qty"))
@@ -3735,8 +3735,8 @@ object SparkEntry {
   }
 
   /** Zone-map ROUTED reads — the store's DEFAULT read path consulting the
-    * manifest ([[graft.operators.ParquetTableStore.readRange]] /
-    * `readPoint`, VERDICT r12 item 3: "the manifest only pays if the
+    * manifest ([[graft.operators.ParquetTableStore.readWhere]] with a
+    * range and a point, VERDICT r12 item 3: "the manifest only pays if the
     * common path uses it"): a range-clustered lineitem with a stats
     * manifest on the cluster key and a per-file bloom on the unclustered
     * l_partkey, read three ways — routed range (stats admission), routed
@@ -3768,37 +3768,26 @@ object SparkEntry {
         round(sum(col("l_quantity")), 2).as("sum_qty")).head()
       (tag, r.getLong(0), if (r.isNullAt(1)) None else Some(r.getDouble(1)))
     }
-    val viaRange = readout(
-      store.readRange("li_zoned", "l_orderkey", 500L, 1500L), "range_orderkey")
+    import graft.operators.ZonePred
+    val range = ZonePred.between("l_orderkey", 500L, 1500L)
+    val viaRange = readout(store.readWhere("li_zoned", range), "range_orderkey")
     val viaPoint = readout(
-      store.readPoint("li_zoned", "l_partkey", 1L), "point_partkey")
+      store.readWhere("li_zoned", ZonePred.Point("l_partkey", 1L)), "point_partkey")
     // rewrite -> manifest stale -> the scheduled pass heals -> routed
-    // read works again (without the maintain, readRange fails LOUD here)
+    // read works again (without the maintain, readWhere fails LOUD here)
     store.compact("li_zoned", targetFiles = 4)
     graft.operators.IndexMaintenance.maintain(store, "li_zoned", "table")
-    val healed = readout(
-      store.readRange("li_zoned", "l_orderkey", 500L, 1500L),
-      "range_after_heal")
+    val healed = readout(store.readWhere("li_zoned", range), "range_after_heal")
     Seq(viaRange, viaPoint, healed).toDF("probe", "n", "sum_qty")
       .orderBy(col("probe"))
   }
 
-  /** Conjunctive zone-map-routed read
-    * ([[graft.operators.ParquetTableStore.readWhere]] /
-    * [[graft.operators.ZoneMaps.prunedReadWhere]] — the compound-filter
-    * shape real reads have): ONE manifest consult admits only the files
-    * surviving BOTH covered predicates (l_orderkey range via min/max
-    * stats ∧ l_partkey equality via the per-file bloom — the admitted
-    * set is the intersection), while the l_quantity range — a column
-    * the manifest carries nothing for — rides along as a plain residual
-    * over the admitted files. Oracle: the whole conjunction as one
-    * WHERE clause; pruned ≡ unpruned is the contract, as in q156/q164. */
   /** Shared READ-ONLY zone fixture for q165/q169/q173 (identical
     * construction: range-clustered lineitem + a stats manifest on the
     * cluster key + a per-file bloom on the unclustered l_partkey) —
-    * built once per JVM; the three gates exercise three different
-    * routed entry points over it and never mutate it (q164/q170, which
-    * rewrite, keep their own warehouses). */
+    * built once per JVM; the three gates read it through the one routed
+    * read with three tree shapes (AND, OR, AND of an OR) and never
+    * mutate it (q164/q170, which rewrite, keep their own warehouses). */
   private def zonedLineitem(s: SparkSession, d: String): String =
     graft.QueryFixtures.cachedDir(s"zoned_lineitem:$d") { dir =>
       val store = new graft.operators.ParquetTableStore(s, dir)
@@ -3809,11 +3798,23 @@ object SparkEntry {
         bloomCols = Seq("l_partkey"))
     }
 
+  /** Conjunctive zone-map-routed read
+    * ([[graft.operators.ParquetTableStore.readWhere]] over a
+    * [[graft.operators.ZonePred.And]] — the compound-filter shape real
+    * reads have): ONE manifest consult admits only the files
+    * surviving BOTH covered predicates (l_orderkey range via min/max
+    * stats ∧ l_partkey equality via the per-file bloom — the admitted
+    * set is the intersection), while the l_quantity range — a column
+    * the manifest carries nothing for — rides along as a plain residual
+    * over the admitted files. Oracle: the whole conjunction as one
+    * WHERE clause; pruned ≡ unpruned is the contract, as in q156/q164. */
   def q165_zonemap_compound(s: SparkSession, d: String): DataFrame = {
     val store = new graft.operators.ParquetTableStore(s, zonedLineitem(s, d))
-    store.readWhere("li_zoned",
-        ranges = Seq(("l_orderkey", 500L, 3000L), ("l_quantity", 10.0, 40.0)),
-        points = Seq(("l_partkey", 817L)))
+    import graft.operators.ZonePred
+    store.readWhere("li_zoned", ZonePred.And(Seq(
+        ZonePred.between("l_orderkey", 500L, 3000L),
+        ZonePred.between("l_quantity", 10.0, 40.0),
+        ZonePred.Point("l_partkey", 817L))))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("l_extendedprice")), 2).as("rev"))
@@ -3905,9 +3906,8 @@ object SparkEntry {
   }
 
   /** Disjunctive zone-map-routed read
-    * ([[graft.operators.ParquetTableStore.readWhereAny]] /
-    * [[graft.operators.ZoneMaps.prunedReadWhereAny]], VERDICT r13
-    * item 4): an OR of two covered ranges and a covered bloom point —
+    * ([[graft.operators.ParquetTableStore.readWhere]] over a
+    * [[graft.operators.ZonePred.Or]], VERDICT r13 item 4): an OR of two covered ranges and a covered bloom point —
     * ONE manifest consult admits the UNION of the per-predicate
     * admissions (a file survives when ANY disjunct can match there),
     * the whole disjunction re-applies as the residual. Oracle: the OR
@@ -3915,9 +3915,11 @@ object SparkEntry {
     * from intersection to union. */
   def q169_zonemap_disjunctive(s: SparkSession, d: String): DataFrame = {
     val store = new graft.operators.ParquetTableStore(s, zonedLineitem(s, d))
-    store.readWhereAny("li_zoned",
-        ranges = Seq(("l_orderkey", 500L, 1200L), ("l_orderkey", 4000L, 4600L)),
-        points = Seq(("l_partkey", 817L)))
+    import graft.operators.ZonePred
+    store.readWhere("li_zoned", ZonePred.Or(Seq(
+        ZonePred.between("l_orderkey", 500L, 1200L),
+        ZonePred.between("l_orderkey", 4000L, 4600L),
+        ZonePred.Point("l_partkey", 817L))))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("l_extendedprice")), 2).as("rev"))
@@ -4048,10 +4050,9 @@ object SparkEntry {
   }
 
   /** MIXED boolean-tree routed read
-    * ([[graft.operators.ParquetTableStore.readWhereExpr]] /
-    * [[graft.operators.ZoneMaps.prunedReadExpr]], VERDICT r14 item 6):
-    * the `a AND (b OR c)` shape neither flat routed entry point could
-    * express — a covered orderkey range ANDed with (a bloom point OR a
+    * ([[graft.operators.ParquetTableStore.readWhere]], VERDICT r14
+    * item 6): the `a AND (b OR c)` shape the flat AND and flat OR reads
+    * of q165 and q169 cannot express — a covered orderkey range ANDed with (a bloom point OR a
     * second orderkey range). ONE manifest consult evaluates the composed
     * admission (the range admission intersected with the union of the
     * two disjunct admissions — the SQL path's recursive `admitOf`
@@ -4061,10 +4062,10 @@ object SparkEntry {
   def q173_zonemap_mixed(s: SparkSession, d: String): DataFrame = {
     val store = new graft.operators.ParquetTableStore(s, zonedLineitem(s, d))
     import graft.operators.ZonePred
-    store.readWhereExpr("li_zoned", ZonePred.And(Seq(
-        ZonePred.Range("l_orderkey", 500L, 4600L),
+    store.readWhere("li_zoned", ZonePred.And(Seq(
+        ZonePred.between("l_orderkey", 500L, 4600L),
         ZonePred.Or(Seq(ZonePred.Point("l_partkey", 817L),
-          ZonePred.Range("l_orderkey", 4000L, 4600L))))))
+          ZonePred.between("l_orderkey", 4000L, 4600L))))))
       .groupBy(col("l_returnflag"))
       .agg(count(lit(1)).as("n"),
         round(sum(col("l_extendedprice")), 2).as("rev"))
@@ -4099,10 +4100,11 @@ object SparkEntry {
       graft.operators.ZoneMaps.build(st0, "li_il", Seq("l_orderkey"))
     }
     val store = new graft.operators.ParquetTableStore(s, wh)
+    val range = graft.operators.ZonePred.between("l_orderkey", 500L, 1500L)
     def leg(tag: String): (String, Long, Option[Double], Boolean) = {
       val (admitted, total) = graft.operators.ZoneMaps.planFiles(
-        store, "li_il", "l_orderkey", 500L, 1500L)
-      val r = store.readRange("li_il", "l_orderkey", 500L, 1500L)
+        store, "li_il", range)
+      val r = store.readWhere("li_il", range)
         .agg(count(lit(1)).as("n"),
           round(sum(col("l_quantity")), 2).as("sum_qty")).head()
       (tag, r.getLong(0),
@@ -4152,9 +4154,10 @@ object SparkEntry {
       ("pkey", "l_partkey", 1L, 40L))
     def leg(layout: String): Seq[(String, Long, Option[Double], Boolean)] =
       dims.map { case (dim, c, lo, hi) =>
+        val range = graft.operators.ZonePred.between(c, lo, hi)
         val (admitted, total) = graft.operators.ZoneMaps.planFiles(
-          store, "li_z", c, lo, hi)
-        val r = store.readRange("li_z", c, lo, hi)
+          store, "li_z", range)
+        val r = store.readWhere("li_z", range)
           .agg(count(lit(1)).as("n"),
             round(sum(col("l_quantity")), 2).as("sum_qty")).head()
         (s"${layout}_$dim", r.getLong(0),

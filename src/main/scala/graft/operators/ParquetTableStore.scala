@@ -80,99 +80,33 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     if (fs(p).exists(p)) Some(spark.read.parquet(path(name))) else None
   }
 
-  /** Range read with zone-map routing BY DEFAULT (VERDICT r12 item 3):
-    * when `<name>_zones` exists and carries stats for `colName`, only
-    * the files whose [min, max] intersects [lo, hi] are opened, with the
-    * range re-applied as the residual predicate, so the result is
-    * row-identical to the plain filtered scan (q156's gate). Without a manifest (or without
-    * stats for this column) it IS the plain filtered scan. A manifest
-    * that exists but no longer matches the live file set stays LOUD
-    * (ZoneMaps' staleness contract — silently scanning a wrong subset is
-    * the failure mode manifests exist to prevent); [[IndexMaintenance]]'s
-    * "table" family heals it on schedule. Opt-out: call
-    * `read(name).get.filter(...)` — the routed path is a convenience over
-    * that, never a different answer. */
-  def readRange(name: String, colName: String, lo: Any, hi: Any): DataFrame =
-    readWhere(name, Seq((colName, lo, hi)))
-
-  /** Point (equality) read with zone-map routing by default: a per-file
-    * BLOOM for `colName` routes through the bloom admission (no false
-    * negatives — the admitted set is a superset, the residual equality
-    * exact); min/max stats alone still prune as the degenerate range
-    * [v, v]; no manifest coverage falls back to the plain filtered
-    * scan. Same loud-on-stale and opt-out contract as [[readRange]]. */
-  def readPoint(name: String, colName: String, value: Any): DataFrame =
-    readWhere(name, Seq.empty, Seq((colName, value)))
-
-  /** Conjunctive (AND) filtered read with zone-map routing on the
-    * COVERED predicates: the manifest admits only files surviving every
-    * range/point predicate it has stats or a bloom for (ONE consult —
-    * the admitted set is the intersection,
-    * [[ZoneMaps.prunedReadWhere]]); predicates on columns the manifest
-    * does not cover apply as plain residual filters over whatever was
-    * admitted. No covered predicate at all = the plain filtered scan.
-    * Same loud-on-stale and opt-out contract as [[readRange]]. */
-  def readWhere(name: String, ranges: Seq[(String, Any, Any)],
-                points: Seq[(String, Any)] = Seq.empty): DataFrame = {
-    require(ranges.nonEmpty || points.nonEmpty,
-      "readWhere needs at least one predicate")
-    val fields = zoneFields(name)
-    val (coveredR, plainR) = ranges.partition { case (c, _, _) =>
-      fields.contains(s"${c}_min") }
-    val (coveredP, plainP) = points.partition { case (c, _) =>
-      fields.contains(s"${c}_bloom") || fields.contains(s"${c}_min") }
+  /** Filtered read with zone-map routing BY DEFAULT — the store's one
+    * routed read (VERDICT r12 item 3: the manifest only pays if the
+    * common path uses it). When `<name>_zones` can prove something about
+    * `pred` ([[ZoneMaps.covered]]: under an AND the covered children
+    * prune while the uncovered ones ride along, an OR prunes only when
+    * every disjunct is covered), ONE manifest consult
+    * ([[ZoneMaps.planFiles]]) picks the files to open; otherwise this IS
+    * the plain filtered scan. Either way the whole tree re-applies as the
+    * residual, so the result is row-identical to
+    * `read(name).get.filter(ZoneMaps.predExpr(pred))` (gates q156, q164,
+    * q165, q169, q173). A manifest that exists but no longer matches the
+    * live file set stays LOUD (ZoneMaps' staleness contract — silently
+    * scanning a wrong subset is the failure mode manifests exist to
+    * prevent); [[IndexMaintenance]]'s "table" family heals it on
+    * schedule. */
+  def readWhere(name: String, pred: ZonePred): DataFrame = {
     val base =
-      if (coveredR.nonEmpty || coveredP.nonEmpty)
-        ZoneMaps.prunedReadWhere(this, name, coveredR, coveredP)
-      else read(name).getOrElse(sys.error(s"table '$name' does not exist"))
-    // ZoneMaps.predExprs on both the routed and plain sides: pruned ≡
-    // plain requires ONE predicate builder
-    ZoneMaps.predExprs(plainR, plainP).foldLeft(base)(_ filter _)
-  }
-
-  /** Disjunctive (OR) filtered read with zone-map routing: the manifest
-    * admits the UNION of the per-disjunct admissions — still ONE
-    * file-count-sized consult ([[ZoneMaps.prunedReadWhereAny]]). Routing
-    * requires EVERY disjunct covered: an OR admits a file when ANY
-    * disjunct can match there, so one uncovered disjunct (no stats, no
-    * bloom) forces the full scan — which is exactly what the fallback
-    * does (the plain scan with the OR as a filter). Same loud-on-stale
-    * and opt-out contract as [[readRange]]. */
-  def readWhereAny(name: String, ranges: Seq[(String, Any, Any)],
-                   points: Seq[(String, Any)] = Seq.empty): DataFrame = {
-    require(ranges.nonEmpty || points.nonEmpty,
-      "readWhereAny needs at least one predicate")
-    val fields = zoneFields(name)
-    val allCovered =
-      ranges.forall { case (c, _, _) => fields.contains(s"${c}_min") } &&
-        points.forall { case (c, _) =>
-          fields.contains(s"${c}_bloom") || fields.contains(s"${c}_min") }
-    if (allCovered && fields.nonEmpty)
-      ZoneMaps.prunedReadWhereAny(this, name, ranges, points)
-    else {
-      val base = read(name).getOrElse(
-        sys.error(s"table '$name' does not exist"))
-      base.filter(ZoneMaps.predExprs(ranges, points).reduce(_ || _))
-    }
-  }
-
-  /** Mixed boolean-TREE filtered read with zone-map routing — the
-    * `a AND (b OR c)` shapes [[readWhere]] (flat AND) and
-    * [[readWhereAny]] (flat OR) cannot express, with the SQL path's
-    * recursive And/Or admission composition on the routed store API
-    * (VERDICT r14 item 6). Routing rules per node: under an AND,
-    * uncovered children ride along as part of the residual while the
-    * covered children prune; under an OR, one uncovered child forces the
-    * whole disjunction unpruned (it could match anywhere). No provable
-    * admission at all = the plain filtered scan. Same loud-on-stale and
-    * opt-out contract as [[readRange]]; the whole tree always re-applies
-    * as the residual, so pruned ≡ plain row-for-row. */
-  def readWhereExpr(name: String, pred: ZonePred): DataFrame = {
-    val fields = zoneFields(name)
-    if (fields.nonEmpty && ZoneMaps.coversPred(fields, pred))
-      ZoneMaps.prunedReadExpr(this, name, pred)
-    else read(name).getOrElse(sys.error(s"table '$name' does not exist"))
-      .filter(ZoneMaps.predExpr(pred))
+      if (ZoneMaps.covered(zoneFields(name), pred).isEmpty)
+        read(name).getOrElse(sys.error(s"table '$name' does not exist"))
+      else {
+        val (files, _) = ZoneMaps.planFiles(this, name, pred)
+        // the schema from one footer: an admitted file's, or — nothing
+        // admitted, the frame is empty but keeps its columns — the table's
+        val schema = fileSchema(files.headOption.getOrElse(listDataFiles(name).keys.min))
+        spark.read.schema(schema).parquet(files: _*)
+      }
+    base.filter(ZoneMaps.predExpr(pred))
   }
 
   /** The `<name>_zones` manifest's column names, empty when absent —
@@ -256,14 +190,18 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     val root = new Path(path(name))
     val fileDepth = fs(root).makeQualified(root).depth() + 1
     if (files.isEmpty || files.exists(f => new Path(f).depth() != fileDepth)) None
-    else {
-      val meta = footer(files.head).getFileMetaData
-      val fromKey = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
-        .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
-        .collect { case s: StructType => s }
-      Some(asNullable(fromKey.getOrElse(
-        new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema))))
-    }
+    else Some(fileSchema(files.head))
+  }
+
+  /** One data file's schema as `spark.read.parquet` infers it, from its
+    * footer on the driver (see [[footerSchema]]). */
+  private[operators] def fileSchema(file: String): StructType = {
+    val meta = footer(file).getFileMetaData
+    val fromKey = Option(meta.getKeyValueMetaData.get(ParquetReadSupport.SPARK_METADATA_KEY))
+      .flatMap(json => scala.util.Try(DataType.fromJson(json)).toOption)
+      .collect { case s: StructType => s }
+    asNullable(fromKey.getOrElse(
+      new ParquetToSparkSchemaConverter(spark.sessionState.conf).convert(meta.getSchema)))
   }
 
   /** [[read]] with the [[footerSchema]] when there is one: the same
@@ -1093,8 +1031,6 @@ object ParquetTableStore {
     java.security.MessageDigest.getInstance("MD5")
       .digest(p.getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
 
-  /** Run `body` with parquet timestamps pinned to INT64 micros, restoring
-    * the previous session setting afterwards. */
   /** Per-session pin state for [[withMicrosTimestamps]]: entry depth and
     * the conf value to restore when the LAST frame exits. Weak keys — a
     * foreachBatch clone's pin must not outlive its session. */

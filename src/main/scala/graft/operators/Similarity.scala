@@ -55,7 +55,7 @@ object Similarity {
     * minima inside the scan projection. Permutation j is xxhash64(h0, j)
     * where h0 is the shingle's hash (hash-combined from its k tokens, no
     * shingle string ever materialized) — value-identical to exploding
-    * [[shingleHashesOf]] into 64 min aggregates (see the SimilaritySpec
+    * [[shingleHashesOf]] into 64 min aggregates (see the PropertiesSpec
     * equivalence property), without moving ~len(doc) rows per document
     * through an aggregation. */
   def minhashSignatures(docs: DataFrame, idCol: String, textCol: String,
@@ -63,20 +63,6 @@ object Similarity {
     docs.select(col(idCol),
       call_function("minhash_sig",
         Text.tokens(col(textCol)), lit(k), lit(MinhashPerms)).as("sig"))
-
-  /** The explode → 64-min-aggs formulation of [[minhashSignatures]], kept
-    * as the cross-check reference for the equivalence property test. */
-  private[graft] def minhashSignaturesExploded(docs: DataFrame, idCol: String,
-                                               textCol: String, k: Int): DataFrame = {
-    val exploded = docs
-      .select(col(idCol), Text.tokens(col(textCol)).as("_w"))
-      .select(col(idCol), explode(shingleHashesOf(col("_w"), k)).as("h0"))
-    val minCols = (0 until MinhashPerms)
-      .map(j => min(xxhash64(col("h0"), lit(j))).as(s"h$j"))
-    exploded.groupBy(col(idCol))
-      .agg(minCols.head, minCols.tail: _*)
-      .select(col(idCol), array((0 until MinhashPerms).map(j => col(s"h$j")): _*).as("sig"))
-  }
 
   /** Drop groups of `keys` whose occupancy exceeds `cap` (no-op for cap <= 0).
     * Sketch-bucket joins are quadratic *per bucket*: one pathological bucket
@@ -191,28 +177,10 @@ object Similarity {
     * sign of the vote sum is the sketch bit. ZERO shuffles — the one-pass
     * native [[graft.plans.Simhash64]] expression votes inside the scan
     * projection; value-identical to the explode → 64 bit-vote sums
-    * formulation (SimilaritySpec equivalence property). */
+    * formulation (PropertiesSpec equivalence property). */
   def simhash(docs: DataFrame, idCol: String, textCol: String): DataFrame =
     docs.select(col(idCol),
       call_function("simhash64", Text.tokens(col(textCol))).as("simhash"))
-
-  /** The explode → bit-vote-aggregation formulation of [[simhash]], kept as
-    * the cross-check reference for the equivalence property test. */
-  private[graft] def simhashExploded(docs: DataFrame, idCol: String,
-                                     textCol: String): DataFrame = {
-    val words = docs.select(col(idCol),
-      explode(array_distinct(Text.tokens(col(textCol)))).as("w"))
-      .withColumn("h", xxhash64(col("w")))
-    val bitVotes = (0 until 64).map { k =>
-      sum(when(shiftright(col("h"), k).bitwiseAND(1) === 1, 1).otherwise(-1)).as(s"b$k")
-    }
-    words.groupBy(col(idCol))
-      .agg(bitVotes.head, bitVotes.tail: _*)
-      .select(col(idCol),
-        (0 until 64).map(k =>
-          when(col(s"b$k") > 0, shiftleft(lit(1L), k)).otherwise(lit(0L)))
-          .reduce(_ + _).as("simhash"))
-  }
 
   /** Near-dup pairs with Hamming(simhash) <= maxDist, candidates via 16-bit
     * chunk equality (4 chunks; dist<=3 guarantees >=1 equal chunk).

@@ -4,6 +4,36 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
+/** Boolean predicate TREE over a store table's columns — the ONE form
+  * both zone-map surfaces admit files through: the routed store read
+  * ([[ParquetTableStore.readWhere]]) takes it directly, and the v2/SQL
+  * scan ([[ZoneMaps.admitForV2Scan]]) translates Spark's pushed filters
+  * into it. Leaves are an inclusive range (either bound optional), an
+  * equality point and an IN list, every one null-false; `And`/`Or` nest
+  * arbitrarily. What the manifest can prove about a tree is decided in
+  * one place, [[ZoneMaps.covered]]. */
+sealed trait ZonePred
+object ZonePred {
+  /** lo <= col <= hi, either bound optional (SQL's one-sided `>`, `>=`,
+    * `<`, `<=` — a strict bound is widened to inclusive, a superset
+    * admission the residual makes exact). */
+  case class Range(colName: String, lo: Option[Any], hi: Option[Any]) extends ZonePred {
+    require(lo.isDefined || hi.isDefined, "Range needs at least one bound") }
+  /** lo <= col <= hi, both bounds given. */
+  def between(colName: String, lo: Any, hi: Any): Range =
+    Range(colName, Some(lo), Some(hi))
+  /** col = value. */
+  case class Point(colName: String, value: Any) extends ZonePred
+  /** col IN (values…) — admission-wise an OR of [[Point]]s, capped at
+    * [[ZoneMaps.InAdmissionCap]] values (see [[ZoneMaps.covered]]). */
+  case class In(colName: String, values: Seq[Any]) extends ZonePred {
+    require(values.nonEmpty, "In needs at least one value") }
+  case class And(ps: Seq[ZonePred]) extends ZonePred {
+    require(ps.nonEmpty, "And needs at least one child") }
+  case class Or(ps: Seq[ZonePred]) extends ZonePred {
+    require(ps.nonEmpty, "Or needs at least one child") }
+}
+
 /** File-level zone maps (data-skipping manifests) for store tables — the
   * Delta/Iceberg/ORC stats pattern re-expressed over the warehouse's own
   * plain-parquet tables: a side table `<table>_zones` holds one row per
@@ -51,16 +81,25 @@ import org.apache.spark.sql.types.StructType
   * restored backup — does NOT invalidate manifests, because the
   * comparison never encoded where the table lived (Delta stores relative
   * paths in its log for the same reason); the admitted-file read remaps
-  * stored paths onto the live root the attest just proved equivalent. Rebuild zones after any table rewrite (`build` is one
-  * scan); [[maintain]] is the decision rule: heal iff stale, preserving
+  * stored paths onto the live root the attest just proved equivalent.
+  * Rebuild zones after any table rewrite (`build` is one scan);
+  * [[maintain]] is the decision rule: heal iff stale, preserving
   * the manifest's own column choices AND its bloom sizing (persisted in
   * the manifest as `_bloom_items`) — and when the staleness is
   * append-only growth, the heal scans ONLY the new files AND appends
   * only their manifest rows (see [[maintain]]).
   *
-  * Cost shape per pruned read: ONE table listing (threaded from the
-  * staleness attest into the admitted-file read) and two file-count-sized
-  * driver collects of the manifest — never data, never bloom bytes.
+  * One predicate path: a [[ZonePred]] tree, [[covered]] (the coverage
+  * rules, once), one admission builder over the covered tree, and one
+  * consult, [[planFiles]]. The store's routed read
+  * ([[ParquetTableStore.readWhere]]) and the SQL scan's pushdown
+  * ([[admitForV2Scan]], which only translates Spark's filters into a
+  * tree) both admit files through it, so the two surfaces cannot drift.
+  *
+  * Cost shape per consult: ONE table listing (the staleness attest's),
+  * one footer read on the driver for the data schema, and two
+  * file-count-sized driver collects of the manifest — never data, never
+  * bloom bytes.
   *
   * Scope: unpartitioned store tables (the store's `replace`/`compact`
   * output). Partition-pruned tables already skip at the directory level;
@@ -68,35 +107,6 @@ import org.apache.spark.sql.types.StructType
   * partition column — too high-cardinality to partition by, exactly the
   * case partitioning cannot serve.
   */
-/** Boolean predicate TREE for the routed store reads
-  * ([[ParquetTableStore.readWhereExpr]]) — the mixed-shape filters
-  * (`a AND (b OR c)`) that previously routed only through the SQL path,
-  * where `admitOf` already composes And/Or recursively (VERDICT r14
-  * item 6: the store API asymmetry was visible to callers). Leaves are
-  * the two primitives every routed read understands — an inclusive range
-  * over a stats column and an equality point (bloom preferred, degenerate
-  * stats range otherwise); `And`/`Or` nest arbitrarily. */
-sealed trait ZonePred
-object ZonePred {
-  /** lo <= col <= hi (inclusive both ends, null-false). */
-  case class Range(colName: String, lo: Any, hi: Any) extends ZonePred
-  /** col = value (null-false). */
-  case class Point(colName: String, value: Any) extends ZonePred
-  /** col IN (values…) (null-false) — admission-wise an OR of [[Point]]s,
-    * CAPPED at [[ZoneMaps.InAdmissionCap]] values like the SQL path's
-    * `In` translation (VERDICT r15 item 6 — the two boolean surfaces
-    * stay symmetric): past the cap the leaf is uncovered and the read
-    * falls back to the plain `isin` scan, because an unbounded IN from a
-    * query generator would build a thousands-deep OR of bloom probes
-    * evaluated against every manifest row at planning time. */
-  case class In(colName: String, values: Seq[Any]) extends ZonePred {
-    require(values.nonEmpty, "In needs at least one value") }
-  case class And(ps: Seq[ZonePred]) extends ZonePred {
-    require(ps.nonEmpty, "And needs at least one child") }
-  case class Or(ps: Seq[ZonePred]) extends ZonePred {
-    require(ps.nonEmpty, "Or needs at least one child") }
-}
-
 object ZoneMaps {
 
   /** Build (or rebuild) the `<table>_zones` manifest: ONE scan of the
@@ -315,7 +325,7 @@ object ZoneMaps {
     * (ADVICE r15): if an out-of-band writer nested a subdirectory named
     * exactly like the table inside the table directory, two live files
     * collapse to one key — freshness could then pass symmetrically while
-    * [[toLive]] silently maps both stored paths onto one live file,
+    * [[planFiles]] silently maps both stored paths onto one live file,
     * dropping rows with no failure. The (name, length) attest cannot
     * protect that layout, so it must never reach a comparison: fail by
     * name here instead (the store's own layout convention — partition
@@ -372,15 +382,16 @@ object ZoneMaps {
       manifest.forall { case (f, s) => sizeIntact(s, liveSizes.get(f)) }
 
   /** Shared manifest read + the loud staleness gate: returns (zones,
-    * data schema) after proving the manifest's (file set, byte lengths)
-    * matches the table's live listing. The length check catches the
+    * data schema, root-relative key → live path) after proving the
+    * manifest's (file set, byte lengths) matches the table's live
+    * listing. The length check catches the
     * in-place overwrite a name-set comparison cannot (ADVICE r13;
     * pre-`_size` manifests fall back to the name-set-only attest until
     * their one-time migration rebuild).
     *
-    * Cost discipline: ONE table listing per routed read — the attest's
-    * own ([[ParquetTableStore.listDataFiles]]) — and the data schema
-    * from ONE file footer. The earlier shape also built the full
+    * Cost discipline: ONE table listing per consult — the attest's own
+    * ([[ParquetTableStore.listDataFiles]]) — and the data schema from
+    * ONE file footer, read on the driver. The earlier shape also built the full
     * `spark.read.parquet(table)` frame, whose InMemoryFileIndex re-ran
     * the listing the attest had just done: at the 100k-file design
     * point the per-read listing is exactly the cost the manifest
@@ -402,11 +413,10 @@ object ZoneMaps {
         s"${manifest.size} files but the table now has ${liveSizes.size}" +
         " (or a carried file's byte length changed — in-place rewrite?)" +
         " — rebuild with ZoneMaps.build")
-    // one footer, not a table-wide inference pass: the store's tables
+    // one footer on the driver, not an inference job: the store's tables
     // are single-writer, and the multi-file inference (mergeSchema off)
-    // reads one footer anyway — this just skips its listing
-    val schema = zones.sparkSession.read
-      .parquet(liveSizes0.keys.min).schema
+    // reads one footer anyway
+    val schema = store.fileSchema(liveSizes0.keys.min)
     // key → LIVE absolute path: the admitted-file read must open the
     // files where the table lives NOW — a manifest written before a
     // warehouse relocation stores the OLD absolute paths, and freshness
@@ -414,290 +424,120 @@ object ZoneMaps {
     (zones, schema, keyed.map { case (k, (p, _)) => k -> p })
   }
 
-  /** The residual predicate columns for (ranges, points) — ONE builder
-    * shared by the routed reads and the store's plain/fallback filters,
-    * so the pruned and unpruned sides can never drift apart in bound or
-    * null semantics (pruned ≡ plain is the whole contract; two
-    * hand-maintained copies of "inclusive range, plain equality" would
-    * be a silent place for them to diverge). */
-  private[graft] def predExprs(ranges: Seq[(String, Any, Any)],
-                               points: Seq[(String, Any)]): Seq[Column] =
-    ranges.map { case (c, lo, hi) => col(c) >= lit(lo) && col(c) <= lit(hi) } ++
-      points.map { case (c, v) => col(c) === lit(v) }
-
-  /** Admission column for a (possibly half-open) stats range: the file
-    * survives unless its [min, max] provably misses the bound(s). Null
-    * stats (all-null file, or a zero-row file's backfill row) coalesce
-    * to not-admitted — a range predicate is null-false. */
-  private[graft] def rangeAdmitExpr(c: String, lo: Option[Any],
-                                    hi: Option[Any]): Column = {
-    val conds = lo.map(l => !(col(s"${c}_max") < lit(l))).toSeq ++
-      hi.map(h => !(col(s"${c}_min") > lit(h))).toSeq
-    coalesce(conds.reduce(_ && _), lit(false))
-  }
-
-  /** Admission column for an equality point: the per-file bloom when the
-    * manifest carries one (probed DISTRIBUTED via `graft_bloom_probe`,
-    * literal cast to the column's declared type before xxhash64 — see
-    * the object doc's false-negative note), else the degenerate stats
-    * range [v, v]. Null bloom admits nothing (equality is null-false). */
-  private[graft] def pointAdmitExpr(zoneFields: Set[String],
-                                    liveSchema: StructType,
-                                    c: String, v: Any): Column =
-    if (zoneFields.contains(s"${c}_bloom"))
-      coalesce(call_function("graft_bloom_probe", col(s"${c}_bloom"),
-        xxhash64(lit(v).cast(liveSchema(c).dataType))), lit(false))
-    else rangeAdmitExpr(c, Some(v), Some(v))
-
-  private def admitRange(zones: DataFrame, colName: String, lo: Any,
-                         hi: Any): (Seq[String], Int) =
-    collectAdmitted(zones, rangeAdmitExpr(colName, Some(lo), Some(hi)))
-
-  private def admitPoint(zones: DataFrame, dataSchema: StructType,
-                         colName: String, value: Any): (Seq[String], Int) = {
-    require(zones.schema.fieldNames.contains(s"${colName}_bloom"),
-      s"zone maps carry no bloom for '$colName' — build with bloomCols")
-    collectAdmitted(zones, pointAdmitExpr(zones.schema.fieldNames.toSet,
-      dataSchema, colName, value))
-  }
-
-  /** ONE bounded collect of (file name, admitted) — file count, never
-    * rows, never bloom bytes. */
-  private def collectAdmitted(zones: DataFrame,
-                              admit: Column): (Seq[String], Int) = {
-    val entries = zones.select(col("_file"), admit.as("_admit")).collect()
-      .map(r => (r.getString(0), !r.isNullAt(1) && r.getBoolean(1)))
-    (entries.filter(_._2).map(_._1).toSeq, entries.length)
-  }
-
-  /** The (file name, admitted) frame a point consultation collects — the
-    * probe runs DISTRIBUTED, as a projection expression over the zones
-    * frame ([[graft.plans.BloomBytesContain]] — per-row blooms, so
-    * Spark's constant-side BloomFilterMightContain cannot express it),
-    * and the driver receives only file-count × (name + boolean) bytes.
-    * The previous shape collected every file's serialized bloom to the
-    * driver and probed there: ~100 KB per file, i.e. ~10 GB per point
-    * lookup at the 100k-file design point the manifest pattern exists
-    * for (VERDICT r11's one weak component). A null bloom (all-null
-    * file: the bloom aggregate saw no non-null input) admits nothing —
-    * an equality probe is null-false. Exposed for the spec's
-    * collect-shape assertion. */
-  private[graft] def pointAdmitFrame(zones: DataFrame, colName: String,
-                                     hash: Column): DataFrame =
-    zones.select(col("_file"),
-      coalesce(call_function("graft_bloom_probe",
-        col(s"${colName}_bloom"), hash), lit(false)).as("_admit"))
-
-  /** The range-manifest consultation, exposed for tests and callers that
-    * want the plan without the read: (admitted files, total files).
-    * Bounded driver work — the manifest is file-count-sized, never
-    * data-sized. Fails loudly if the manifest is stale. */
-  /** Resolve admitted STORED `_file` paths to the table's LIVE paths via
-    * the attest's key map — a manifest written before a warehouse
-    * relocation carries the old root; the read must open the new one. */
-  private def toLive(table: String, live: Map[String, String],
-                     stored: Seq[String]): Seq[String] =
-    stored.map(p => live(fileKey(table, p)))
-
-  private[graft] def planFiles(store: ParquetTableStore, table: String,
-                               colName: String, lo: Any,
-                               hi: Any): (Seq[String], Int) = {
-    val (zones, _, live) = freshZones(store, table)
-    val (files, total) = admitRange(zones, colName, lo, hi)
-    (toLive(table, live, files), total)
-  }
-
-  /** The point-manifest consultation: files whose bloom admits the key.
-    * The probe hash is computed BY SPARK (cast to the column's type) so
-    * insert and probe hash identically; the per-file blooms are
-    * deserialized and probed ON EXECUTORS, inside the manifest scan —
-    * the driver receives only (file name, admitted) rows, so driver
-    * bytes are flat in bloom size and file count tracks only names. */
-  private[graft] def planFilesPoint(store: ParquetTableStore, table: String,
-                                    colName: String,
-                                    value: Any): (Seq[String], Int) = {
-    val (zones, schema, live) = freshZones(store, table)
-    val (files, total) = admitPoint(zones, schema, colName, value)
-    (toLive(table, live, files), total)
-  }
-
-  /** Admitted-file read (or the empty frame with the table's schema —
-    * an admitted set can legitimately be empty): the explicit file list
-    * means NO listing happens here — the attest's listing was the one
-    * and only. */
-  private def readAdmitted(spark: SparkSession, schema: StructType,
-                           files: Seq[String]): DataFrame =
-    if (files.isEmpty)
-      spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else spark.read.schema(schema).parquet(files: _*)
-
-  /** Range read through the manifest: open only the files whose zone
-    * admits [lo, hi], then re-apply the range as the residual predicate.
-    * Result ≡ `store.read(table).filter(lo <= col <= hi)` by the zone
-    * argument above; only the I/O differs (one listing per read). */
-  def prunedReadRange(store: ParquetTableStore, table: String,
-                      colName: String, lo: Any, hi: Any): DataFrame = {
-    val (zones, schema, live) = freshZones(store, table)
-    val (files, _) = admitRange(zones, colName, lo, hi)
-    val residual = col(colName) >= lit(lo) && col(colName) <= lit(hi)
-    readAdmitted(zones.sparkSession, schema, toLive(table, live, files))
-      .filter(residual)
-  }
-
-  /** Point read through the per-file blooms: open only the files whose
-    * bloom admits the key (a superset — no false negatives), then
-    * re-apply the equality. Result ≡ the plain equality filter. */
-  def prunedReadPoint(store: ParquetTableStore, table: String,
-                      colName: String, value: Any): DataFrame = {
-    val (zones, schema, live) = freshZones(store, table)
-    val (files, _) = admitPoint(zones, schema, colName, value)
-    readAdmitted(zones.sparkSession, schema, toLive(table, live, files))
-      .filter(col(colName) === lit(value))
-  }
-
-  /** Conjunctive (AND) pruned read — the compound-filter shape real
-    * reads have (`date BETWEEN x AND y AND source = s`): ONE manifest
-    * consult admits only the files that survive EVERY predicate, so the
-    * admitted set is the intersection of the per-predicate admissions at
-    * no extra driver cost (one file-count-sized collect either way).
-    * Ranges prune on min/max stats; equality points prefer the per-file
-    * bloom and fall back to the degenerate stats range. Exactness is the
-    * same two-layer argument as the single-predicate reads: per-file
-    * admission is conservative per predicate (null stats/bloom admit
-    * nothing — an AND of predicates is null-false), and the FULL
-    * conjunction re-applies as the residual. */
-  def prunedReadWhere(store: ParquetTableStore, table: String,
-                      ranges: Seq[(String, Any, Any)],
-                      points: Seq[(String, Any)] = Seq.empty): DataFrame =
-    routedRead(store, table, ranges, points, disjunctive = false)
-
-  /** Disjunctive (OR) pruned read: ONE manifest consult admits the UNION
-    * of the per-predicate admissions — a file survives when ANY disjunct
-    * can match there — and the whole disjunction re-applies as the
-    * residual. Exactness: each per-predicate admission is a superset of
-    * the files holding that predicate's matches (the conjunctive
-    * argument, per disjunct), and a union of supersets is a superset of
-    * the union — no file holding ANY match is skipped. Every disjunct
-    * must be covered by the manifest (the caller's contract —
-    * [[ParquetTableStore.readWhereAny]] falls back to the plain scan
-    * otherwise): an uncovered disjunct could match anywhere, which
-    * forces admitting everything. */
-  def prunedReadWhereAny(store: ParquetTableStore, table: String,
-                         ranges: Seq[(String, Any, Any)],
-                         points: Seq[(String, Any)] = Seq.empty): DataFrame =
-    routedRead(store, table, ranges, points, disjunctive = true)
-
-  private def routedRead(store: ParquetTableStore, table: String,
-                         ranges: Seq[(String, Any, Any)],
-                         points: Seq[(String, Any)],
-                         disjunctive: Boolean): DataFrame = {
-    require(ranges.nonEmpty || points.nonEmpty,
-      "routed read needs at least one predicate")
-    val (zones, schema, live) = freshZones(store, table)
-    val names = zones.schema.fieldNames.toSet
-    ranges.foreach { case (c, _, _) => require(names.contains(s"${c}_min"),
-      s"zone maps carry no stats for '$c' — build with cols") }
-    points.foreach { case (c, _) =>
-      require(names.contains(s"${c}_bloom") || names.contains(s"${c}_min"),
-        s"zone maps carry no bloom or stats for '$c'") }
-    val admits = ranges.map { case (c, lo, hi) =>
-      rangeAdmitExpr(c, Some(lo), Some(hi))
-    } ++ points.map { case (c, v) =>
-      pointAdmitExpr(names, schema, c, v)
-    }
-    val combine: (Column, Column) => Column =
-      if (disjunctive) _ || _ else _ && _
-    val (files, _) = collectAdmitted(zones, admits.reduce(combine))
-    val residual = predExprs(ranges, points).reduce(combine)
-    readAdmitted(zones.sparkSession, schema, toLive(table, live, files))
-      .filter(residual)
-  }
-
-  /** The residual predicate for a [[ZonePred]] tree — ONE builder shared
-    * by the routed and plain sides (the same can-never-drift argument as
-    * [[predExprs]], which it reuses for the leaves). */
-  private[graft] def predExpr(p: ZonePred): Column = p match {
-    case ZonePred.Range(c, lo, hi) => predExprs(Seq((c, lo, hi)), Seq.empty).head
-    case ZonePred.Point(c, v)      => predExprs(Seq.empty, Seq((c, v))).head
-    case ZonePred.In(c, vs)        => col(c).isin(vs: _*)
-    case ZonePred.And(ps)          => ps.map(predExpr).reduce(_ && _)
-    case ZonePred.Or(ps)           => ps.map(predExpr).reduce(_ || _)
-  }
-
-  /** IN-list size past which admission gives up and the filter prunes
-    * nothing — shared by the SQL path's `sources.In` translation and the
-    * routed [[ZonePred.In]] leaf (Spark's own inSetConversionThreshold
-    * plays the same role). */
+  /** IN-list size past which a [[ZonePred.In]] leaf is uncovered and
+    * prunes nothing, on both surfaces (Spark's own
+    * inSetConversionThreshold plays the same role). */
   private[graft] val InAdmissionCap = 50
 
-  /** Admission column for a [[ZonePred]] tree, or None when nothing is
-    * provable — the SAME composition rules as the SQL path's `admitOf`
-    * (structurally required, not symmetry for its own sake): under an
-    * AND an uncovered child contributes nothing and the other children
-    * still prune; under an OR ONE uncovered child poisons the whole
-    * disjunction, because that disjunct could match anywhere. */
-  private def admitOfPred(zoneFields: Set[String], dataSchema: StructType,
-                          p: ZonePred): Option[Column] = p match {
-    case ZonePred.Range(c, lo, hi) =>
-      if (zoneFields.contains(s"${c}_min"))
-        Some(rangeAdmitExpr(c, Some(lo), Some(hi)))
-      else None
-    case ZonePred.Point(c, v) =>
-      if (zoneFields.contains(s"${c}_bloom") || zoneFields.contains(s"${c}_min"))
-        Some(pointAdmitExpr(zoneFields, dataSchema, c, v))
-      else None
-    case ZonePred.In(c, vs) =>
-      // an OR of point admissions, capped (see the leaf's doc) — a file
-      // survives when ANY listed value could live there; the residual
-      // `isin` restores exact membership
-      if (vs.length <= InAdmissionCap &&
-          (zoneFields.contains(s"${c}_bloom") || zoneFields.contains(s"${c}_min")))
-        Some(vs.map(pointAdmitExpr(zoneFields, dataSchema, c, _)).reduce(_ || _))
-      else None
-    case ZonePred.And(ps) =>
-      val covered = ps.flatMap(admitOfPred(zoneFields, dataSchema, _))
-      if (covered.isEmpty) None else Some(covered.reduce(_ && _))
-    case ZonePred.Or(ps) =>
-      val each = ps.map(admitOfPred(zoneFields, dataSchema, _))
-      if (each.forall(_.isDefined)) Some(each.flatten.reduce(_ || _))
-      else None
+  /** THE coverage rules — what a manifest with columns `fields` can
+    * prove about `pred`: the covered sub-tree to admit files through, or
+    * None when nothing is provable. A range needs `<c>_min` stats; a
+    * point (and an IN) a `<c>_bloom` or `<c>_min`; an IN of more than
+    * [[InAdmissionCap]] values is uncovered, because an unbounded list
+    * from a query generator would build a thousands-deep OR of bloom
+    * probes evaluated against every manifest row at planning time. Under
+    * an AND, uncovered children drop out — they ride along in the
+    * residual while the covered ones prune; under an OR, one uncovered
+    * child makes the whole disjunction uncovered, because that disjunct
+    * could match anywhere. The routing test is `covered(...).isDefined`. */
+  private[graft] def covered(fields: Set[String], pred: ZonePred): Option[ZonePred] = {
+    def stats(c: String) = fields.contains(s"${c}_min")
+    def pointable(c: String) = fields.contains(s"${c}_bloom") || stats(c)
+    def leaf(ok: Boolean) = if (ok) Some(pred) else None
+    pred match {
+      case ZonePred.Range(c, _, _) => leaf(stats(c))
+      case ZonePred.Point(c, _)    => leaf(pointable(c))
+      case ZonePred.In(c, vs)      => leaf(vs.length <= InAdmissionCap && pointable(c))
+      case ZonePred.And(ps) =>
+        val kept = ps.flatMap(covered(fields, _))
+        if (kept.isEmpty) None else Some(ZonePred.And(kept))
+      case ZonePred.Or(ps) =>
+        val each = ps.map(covered(fields, _))
+        if (each.forall(_.isDefined)) Some(ZonePred.Or(each.flatten)) else None
+    }
   }
 
-  /** Schema-level (names-only) coverage test mirroring [[admitOfPred]]'s
-    * None cases — lets [[ParquetTableStore.readWhereExpr]] decide
-    * routed-vs-plain from the cached manifest SCHEMA without the loud
-    * freshness attest a consult performs. */
-  private[graft] def coversPred(zoneFields: Set[String], p: ZonePred): Boolean =
-    p match {
-      case ZonePred.Range(c, _, _) => zoneFields.contains(s"${c}_min")
-      case ZonePred.Point(c, _) =>
-        zoneFields.contains(s"${c}_bloom") || zoneFields.contains(s"${c}_min")
-      case ZonePred.In(c, vs) => vs.length <= InAdmissionCap &&
-        (zoneFields.contains(s"${c}_bloom") || zoneFields.contains(s"${c}_min"))
-      case ZonePred.And(ps) => ps.exists(coversPred(zoneFields, _))
-      case ZonePred.Or(ps)  => ps.forall(coversPred(zoneFields, _))
+  /** THE admission builder: for a COVERED tree (see [[covered]]), the
+    * column that is true where a file may hold a match. A range survives
+    * unless the file's [min, max] provably misses a bound. A point probes
+    * the per-file bloom when the manifest carries one — literal cast to
+    * the column's declared type before xxhash64 (the object doc's
+    * false-negative note) — else the degenerate range [v, v]; an IN is
+    * the OR of its points. Null stats or a null bloom (an all-null file,
+    * a zero-row file's backfill row) coalesce to not-admitted: every
+    * leaf is null-false. Exactness composes: each leaf admits a superset
+    * of the files holding its matches, and an AND (OR) of supersets is a
+    * superset of the intersection (union). */
+  private def admitExpr(fields: Set[String], dataSchema: StructType,
+                        pred: ZonePred): Column = {
+    def range(c: String, lo: Option[Any], hi: Option[Any]): Column = {
+      val conds = lo.map(l => !(col(s"${c}_max") < lit(l))).toSeq ++
+        hi.map(h => !(col(s"${c}_min") > lit(h))).toSeq
+      coalesce(conds.reduce(_ && _), lit(false))
     }
+    def point(c: String, v: Any): Column =
+      if (fields.contains(s"${c}_bloom"))
+        coalesce(call_function("graft_bloom_probe", col(s"${c}_bloom"),
+          xxhash64(lit(v).cast(dataSchema(c).dataType))), lit(false))
+      else range(c, Some(v), Some(v))
+    pred match {
+      case ZonePred.Range(c, lo, hi) => range(c, lo, hi)
+      case ZonePred.Point(c, v)      => point(c, v)
+      case ZonePred.In(c, vs)        => vs.map(point(c, _)).reduce(_ || _)
+      case ZonePred.And(ps) => ps.map(admitExpr(fields, dataSchema, _)).reduce(_ && _)
+      case ZonePred.Or(ps)  => ps.map(admitExpr(fields, dataSchema, _)).reduce(_ || _)
+    }
+  }
 
-  /** Mixed-tree pruned read: ONE manifest consult evaluates the composed
-    * admission ([[admitOfPred]]), the WHOLE tree re-applies as the
-    * residual. Exactness composes structurally: each leaf's admission is
-    * a superset of the files holding that leaf's matches, an AND of
-    * supersets is a superset of the intersection, an OR of supersets a
-    * superset of the union — so no file holding any matching row is
-    * skipped, and the residual removes the admitted non-matches. */
-  def prunedReadExpr(store: ParquetTableStore, table: String,
-                     pred: ZonePred): DataFrame = {
+  /** The (file name, admitted) frame a consult collects for a covered
+    * tree. The admission runs DISTRIBUTED, as a projection over the
+    * manifest — bloom probes included ([[graft.plans.BloomBytesContain]]:
+    * per-row blooms, which Spark's constant-side BloomFilterMightContain
+    * cannot express) — so the driver receives file-count × (name +
+    * boolean) bytes, never bloom bytes (a driver-side probe pulls ~100 KB
+    * per file: ~10 GB per lookup at the 100k-file design point). Exposed
+    * for the spec's collect-shape assertion. */
+  private[graft] def admitFrame(zones: DataFrame, dataSchema: StructType,
+                                pred: ZonePred): DataFrame =
+    zones.select(col("_file"),
+      admitExpr(zones.schema.fieldNames.toSet, dataSchema, pred).as("_admit"))
+
+  /** The stored `_file` paths a covered tree admits — one bounded
+    * collect of [[admitFrame]]. */
+  private def admittedFiles(zones: DataFrame, dataSchema: StructType,
+                            pred: ZonePred): Seq[String] =
+    admitFrame(zones, dataSchema, pred).collect().toSeq
+      .filter(r => !r.isNullAt(1) && r.getBoolean(1)).map(_.getString(0))
+
+  /** THE manifest consult: (admitted files, total files) for `pred` over
+    * `table`, the admitted files resolved to the table's LIVE paths (a
+    * manifest written before a warehouse relocation stores the old root).
+    * Every file is admitted when the manifest can prove nothing about
+    * `pred`. Fails loudly when the manifest is absent or stale
+    * ([[freshZones]]). Driver work is file-count-sized, never
+    * data-sized. */
+  def planFiles(store: ParquetTableStore, table: String,
+                pred: ZonePred): (Seq[String], Int) = {
     val (zones, schema, live) = freshZones(store, table)
-    admitOfPred(zones.schema.fieldNames.toSet, schema, pred) match {
-      case Some(admit) =>
-        val (files, _) = collectAdmitted(zones, admit)
-        readAdmitted(zones.sparkSession, schema, toLive(table, live, files))
-          .filter(predExpr(pred))
-      case None =>
-        store.read(table).getOrElse(
-            sys.error(s"table '$table' does not exist"))
-          .filter(predExpr(pred))
+    val files = covered(zones.schema.fieldNames.toSet, pred) match {
+      case Some(c) => admittedFiles(zones, schema, c).map(p => live(fileKey(table, p)))
+      case None    => live.values.toSeq.sorted
     }
+    (files, live.size)
+  }
+
+  /** The residual predicate of a tree: what the plain filtered scan
+    * applies and what re-applies over a routed read's admitted files —
+    * one builder, so the pruned and plain sides cannot drift in bound or
+    * null semantics (pruned ≡ plain is the whole contract). */
+  private[graft] def predExpr(pred: ZonePred): Column = pred match {
+    case ZonePred.Range(c, lo, hi) =>
+      (lo.map(l => col(c) >= lit(l)).toSeq ++ hi.map(h => col(c) <= lit(h)))
+        .reduce(_ && _)
+    case ZonePred.Point(c, v) => col(c) === lit(v)
+    case ZonePred.In(c, vs)   => col(c).isin(vs: _*)
+    case ZonePred.And(ps)     => ps.map(predExpr).reduce(_ && _)
+    case ZonePred.Or(ps)      => ps.map(predExpr).reduce(_ || _)
   }
 
   /** CLUSTERING DEPTH of `colName`'s layout, computed from the manifest
@@ -748,28 +588,6 @@ object ZoneMaps {
     if (globalWidth <= 0) 1.0 else r.getDouble(0) / globalWidth
   }
 
-  /** Manifest admission for the v2/SQL scan path
-    * ([[graft.sources.v2.GraftParquetTable]]'s filter pushdown — the
-    * route ad-hoc SQL actually takes): translate Spark's pushed
-    * `sources.Filter`s into admission columns over the sibling
-    * `<dir>_zones` manifest and return the admitted subset of `files`,
-    * plus the filters that contributed. Returns None — meaning NO
-    * pruning, scan everything — whenever admission cannot be proven
-    * safe: manifest absent, manifest stale vs the live (path, length)
-    * listing, or no pushed filter translating to a covered admission.
-    * Unlike the routed store reads this path is TRANSPARENT on
-    * staleness: SQL users never opted into the manifest, so admission is
-    * a pure optimization that must never fail or change a query — the
-    * full conjunction always re-applies post-scan (the scan builder
-    * keeps every filter as a residual).
-    *
-    * Translation is conservative: unknown filter shapes contribute
-    * nothing (inside an AND, the other side still prunes; inside an OR,
-    * the whole disjunction is dropped — an OR admits wherever ANY
-    * disjunct might match). Strict bounds widen to inclusive (a superset
-    * admission; the residual restores strictness). Driver cost: one
-    * manifest read + one file-count-sized (name, boolean) collect per
-    * planned scan. */
   /** Bounded per-JVM cache of SUCCESSFUL v2 admissions, keyed by (zones
     * dir, DATA-listing fingerprint, canonical filter rendering) — repeated
     * ad-hoc SQL against a hot table pays the manifest read + admission
@@ -785,8 +603,9 @@ object ZoneMaps {
     * one residual is the length-preserving in-place rewrite the `_size`
     * attest itself already accepts as invisible. Failed admissions
     * (stale/absent manifest, untranslatable filters) are NOT cached: a
-    * heal can make them succeed without the data changing. */
-  /** Cached value: admitted positions INTO the caller's path-sorted file
+    * heal can make them succeed without the data changing.
+    *
+    * Cached value: admitted positions INTO the caller's path-sorted file
     * array (a BitSet — file-count/8 bytes per entry) plus the
     * contributing filters. Positions, not paths: a cached path array
     * would hold file-count × path-length bytes PER ENTRY (~10 MB at the
@@ -871,6 +690,29 @@ object ZoneMaps {
     }
   }
 
+  /** Manifest admission for the v2/SQL scan path
+    * ([[graft.sources.v2.GraftParquetTable]]'s filter pushdown — the
+    * route ad-hoc SQL actually takes): translate Spark's pushed
+    * `sources.Filter`s into [[ZonePred]] trees, admit files through the
+    * same [[covered]] rules and admission builder as [[planFiles]] over
+    * the sibling `<dir>_zones` manifest, and return the admitted subset
+    * of `files` plus the filters that contributed. Returns None — meaning
+    * NO pruning, scan everything — whenever admission cannot be proven
+    * safe: manifest absent, manifest stale vs the live (path, length)
+    * listing, or no pushed filter with a covered translation. Unlike the
+    * routed store read this path is TRANSPARENT on staleness: SQL users
+    * never opted into the manifest, so admission is a pure optimization
+    * that must never fail or change a query — the full conjunction always
+    * re-applies post-scan (the scan builder keeps every filter as a
+    * residual).
+    *
+    * Translation is conservative: strict bounds widen to inclusive (a
+    * superset admission; the residual restores strictness), and null
+    * literals, nested attributes (`a.b`) and unknown shapes have no tree
+    * — such a conjunct drops out of its AND (a weaker predicate, so a
+    * superset admission) and leaves its OR without a tree. Driver cost:
+    * one manifest read + one file-count-sized (name, boolean) collect per
+    * planned scan, none on a cache hit. */
   private[graft] def admitForV2Scan(
       spark: SparkSession, zonesDir: String, dataSchema: StructType,
       files: Array[String], fileSizes: Map[String, Long],
@@ -880,12 +722,13 @@ object ZoneMaps {
     val cacheKey = (zonesDir, listingDigest(fileSizes),
       filters.map(filterKey).sorted.mkString(";"))
     val (hits, misses) = v2StatsFor(zonesDir)
+    def pick(bits: java.util.BitSet): Array[String] =
+      files.indices.filter(bits.get).map(files).toArray
     val cached = v2AdmissionCache.get(cacheKey)
     if (cached != null) {
       hits.incrementAndGet()
       val (bits, usedFilters) = cached
-      return Some((files.zipWithIndex.collect {
-        case (f, i) if bits.get(i) => f }, usedFilters))
+      return Some((pick(bits), usedFilters))
     }
     misses.incrementAndGet()
     val zonesPath = new org.apache.hadoop.fs.Path(zonesDir)
@@ -896,7 +739,6 @@ object ZoneMaps {
     // through GraftSession (ADVICE r14's multi-session note)
     graft.plans.GraftExtensions.ensureBloomFunctions(spark)
     val zones = spark.read.parquet(zonesDir)
-    val zf = zones.schema.fieldNames.toSet
     // the DATA table's name = the zones dir's basename minus "_zones":
     // the root-relative fileKey needs it (relocation-proof comparisons)
     val table = {
@@ -911,57 +753,33 @@ object ZoneMaps {
       .map { case (k, (_, s)) => k -> s }
     if (!manifestFresh(manifest, liveSizes)) return None
 
-    def pointOf(a: String, v: Any): Option[Column] =
-      if (v == null || a.contains('.')) None
-      else if (zf.contains(s"${a}_bloom") && dataSchema.fieldNames.contains(a))
-        Some(pointAdmitExpr(zf, dataSchema, a, v))
-      else if (zf.contains(s"${a}_min"))
-        Some(rangeAdmitExpr(a, Some(v), Some(v)))
-      else None
-    def rangeOf(a: String, lo: Option[Any], hi: Option[Any]): Option[Column] =
-      if (a.contains('.') || !zf.contains(s"${a}_min")) None
-      else Some(rangeAdmitExpr(a, lo, hi))
-    def admitOf(f: Filter): Option[Column] = f match {
-      case EqualTo(a, v)            => pointOf(a, v)
-      case EqualNullSafe(a, v)      => pointOf(a, v)
-      case GreaterThan(a, v)        => rangeOf(a, Some(v), None)
-      case GreaterThanOrEqual(a, v) => rangeOf(a, Some(v), None)
-      case LessThan(a, v)           => rangeOf(a, None, Some(v))
-      case LessThanOrEqual(a, v)    => rangeOf(a, None, Some(v))
-      // IN translates to an OR of per-value admissions, CAPPED: an
-      // unbounded list from a query generator would build a
-      // thousands-deep OR of bloom probes evaluated against every
-      // manifest row at PLANNING time (and choke codegen) — beyond the
-      // cap the filter simply contributes no pruning, like any other
-      // untranslatable shape (Spark's own inSetConversionThreshold
-      // plays the same role; the routed ZonePred.In leaf shares the cap)
-      case In(a, vs) if vs.nonEmpty && vs.length <= InAdmissionCap =>
-        val each = vs.toSeq.map(pointOf(a, _))
-        if (each.forall(_.isDefined)) Some(each.flatten.reduce(_ || _))
-        else None
-      case And(l, r) => (admitOf(l), admitOf(r)) match {
-        case (Some(x), Some(y)) => Some(x && y)
-        case (Some(x), None)    => Some(x)
-        case (None, Some(y))    => Some(y)
-        case _                  => None
-      }
-      case Or(l, r) =>
-        for { x <- admitOf(l); y <- admitOf(r) } yield x || y
+    def plain(a: String, v: Any) = v != null && !a.contains('.')
+    def toPred(f: Filter): Option[ZonePred] = f match {
+      case EqualTo(a, v) if plain(a, v)            => Some(ZonePred.Point(a, v))
+      case EqualNullSafe(a, v) if plain(a, v)      => Some(ZonePred.Point(a, v))
+      case GreaterThan(a, v) if plain(a, v)        => Some(ZonePred.Range(a, Some(v), None))
+      case GreaterThanOrEqual(a, v) if plain(a, v) => Some(ZonePred.Range(a, Some(v), None))
+      case LessThan(a, v) if plain(a, v)           => Some(ZonePred.Range(a, None, Some(v)))
+      case LessThanOrEqual(a, v) if plain(a, v)    => Some(ZonePred.Range(a, None, Some(v)))
+      case In(a, vs) if vs.nonEmpty && vs.forall(plain(a, _)) =>
+        Some(ZonePred.In(a, vs.toSeq))
+      case And(l, r) =>
+        val kept = Seq(l, r).flatMap(toPred)
+        if (kept.isEmpty) None else Some(ZonePred.And(kept))
+      case Or(l, r) => for (x <- toPred(l); y <- toPred(r)) yield ZonePred.Or(Seq(x, y))
       case _ => None
     }
-
-    val translated = filters.flatMap(f => admitOf(f).map(f -> _))
-    if (translated.isEmpty) None
+    val fields = zones.schema.fieldNames.toSet
+    val used = filters.flatMap(f => toPred(f).flatMap(covered(fields, _)).map(f -> _))
+    if (used.isEmpty) None
     else {
-      val (kept, _) =
-        collectAdmitted(zones, translated.map(_._2).reduce(_ && _))
-      val keptNorm = kept.map(fileKey(table, _)).toSet
-      val admitted = files.filter(f => keptNorm.contains(fileKey(table, f)))
+      val kept = admittedFiles(zones, dataSchema, ZonePred.And(used.map(_._2)))
+        .map(fileKey(table, _)).toSet
       val bits = new java.util.BitSet(files.length)
-      files.zipWithIndex.foreach { case (f, i) =>
-        if (keptNorm.contains(fileKey(table, f))) bits.set(i) }
-      v2AdmissionCache.put(cacheKey, (bits, translated.map(_._1)))
-      Some((admitted, translated.map(_._1)))
+      files.indices.foreach(i => if (kept.contains(fileKey(table, files(i)))) bits.set(i))
+      val usedFilters = used.map(_._1)
+      v2AdmissionCache.put(cacheKey, (bits, usedFilters))
+      Some((pick(bits), usedFilters))
     }
   }
 }

@@ -8,14 +8,14 @@ import org.apache.spark.sql.connector.expressions.Transform
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
-/** Minimal TableCatalog exposing [[GraftTable]]s so SQL DDL/DML — including
-  * literal `MERGE INTO` (via SupportsRowLevelOperations) — runs against the
-  * engine: `spark.sql.catalog.graft = graft.sources.v2.GraftCatalog`.
-  *
-  * Storage is driver-memory (a demo/test backing, like Spark's own
-  * in-memory catalog tests); the production path for large tables remains
-  * [[graft.operators.Upsert]] over parquet — this catalog exists to prove
-  * the SQL surface (SURVEY §7.3 MERGE INTO parity). */
+/** Minimal TableCatalog exposing [[GraftParquetTable]]s so SQL DDL/DML —
+  * including literal `MERGE INTO` (via SupportsRowLevelOperations) — runs
+  * against the engine: `spark.sql.catalog.graft =
+  * graft.sources.v2.GraftCatalog`. Every table is a parquet directory
+  * named by `CREATE TABLE … LOCATION '<dir>'`; the catalog itself holds
+  * only the name → table map, in driver memory (SURVEY §7.3 MERGE INTO
+  * parity; [[graft.operators.ParquetTableStore.sqlTable]] registers the
+  * store's tables this way). */
 class GraftCatalog extends TableCatalog with SupportsNamespaces {
 
   private var catalogName: String = _
@@ -46,11 +46,11 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces {
     // fail fast rather than silently creating an unpartitioned table
     if (partitions.nonEmpty) throw new UnsupportedOperationException(
       "GraftCatalog tables do not support PARTITIONED BY")
-    // LOCATION '...' → parquet-file-backed table; otherwise in-memory
-    val t: Table = Option(properties.get(TableCatalog.PROP_LOCATION)) match {
-      case Some(loc) => new GraftParquetTable(ident.toString, loc, schema)
-      case None      => new GraftTable(ident.toString, schema)
-    }
+    val loc = Option(properties.get(TableCatalog.PROP_LOCATION)).getOrElse(
+      throw new UnsupportedOperationException(s"GraftCatalog table $ident " +
+        "needs a LOCATION: its rows live in a parquet directory " +
+        "(CREATE TABLE … LOCATION '<dir>')"))
+    val t = new GraftParquetTable(ident.toString, loc, schema)
     // atomic: a contains-then-put race would let two CREATEs both succeed
     if (tables.putIfAbsent(ident, t).isDefined)
       throw new TableAlreadyExistsException(ident)

@@ -377,10 +377,11 @@ private[v2] object ParquetCodec {
   }
 }
 
-/** Shared handling of Spark's MergeRows write-row shape (see the long note
-  * on GraftWriterFactory): detect the optional leading __row_operation by
-  * arity and classify DELETE rows — single source of truth for both the
-  * in-memory and parquet writers. */
+/** Spark's MergeRows write-row shape: group-based row-level writes
+  * (ReplaceDataExec) report the clean table schema in LogicalWriteInfo,
+  * but the physical rows may still arrive as `[__row_operation,
+  * ...tableCols]`. Detect that optional leading column by arity and
+  * classify DELETE rows, for [[GraftParquetWriterFactory]]'s writers. */
 private[v2] object MergeRowShape {
   private val DeleteOp = org.apache.spark.sql.catalyst.util.RowDeltaUtils.DELETE_OPERATION
 

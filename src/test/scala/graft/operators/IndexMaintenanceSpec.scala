@@ -128,12 +128,12 @@ class IndexMaintenanceSpec extends SparkSpec {
     // scheduled tick heals it and pruned reads work again
     store.replace("zt", store.read("zt").get.repartition(2))
     intercept[RuntimeException] {
-      ZoneMaps.prunedReadRange(store, "zt", "k", 1L, 10L)
+      store.readWhere("zt", ZonePred.between("k", 1L, 10L))
     }
     val healed = IndexMaintenance.maintain(store, "zt", "table",
       zoneColsIfMissing = Seq("k"))
     assert(healed.zonesRebuilt, healed.toString)
-    assert(ZoneMaps.prunedReadRange(store, "zt", "k", 1L, 10L).count() == 10L)
+    assert(store.readWhere("zt", ZonePred.between("k", 1L, 10L)).count() == 10L)
   }
 
   test("depth trigger below a z-order layout's floor warns ONCE instead of silently rewriting every tick") {

@@ -103,7 +103,7 @@ class PropertiesSpec extends SparkSpec {
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val native = Similarity.minhashSignatures(df, "doc_id", "text", 3)
         .as[(Long, Seq[Long])].collect().toMap
-      val exploded = Similarity.minhashSignaturesExploded(df, "doc_id", "text", 3)
+      val exploded = SimilarityReference.minhashSignaturesExploded(df, "doc_id", "text", 3)
         .as[(Long, Seq[Long])].collect().toMap
       native == exploded
     })
@@ -114,7 +114,7 @@ class PropertiesSpec extends SparkSpec {
       val df = texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }.toDF("doc_id", "text")
       val native = Similarity.simhash(df, "doc_id", "text")
         .as[(Long, Long)].collect().toMap
-      val exploded = Similarity.simhashExploded(df, "doc_id", "text")
+      val exploded = SimilarityReference.simhashExploded(df, "doc_id", "text")
         .as[(Long, Long)].collect().toMap
       native == exploded
     })

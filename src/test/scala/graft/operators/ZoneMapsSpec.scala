@@ -21,12 +21,12 @@ class ZoneMapsSpec extends SparkSpec {
   test("pruned range read ≡ the plain filter, and the plan skips files") {
     val store = freshStore()
     clustered(store, "t")
-    val (files, total) = ZoneMaps.planFiles(store, "t", "k", 100L, 300L)
+    val (files, total) = ZoneMaps.planFiles(store, "t", ZonePred.between("k", 100L, 300L))
     assert(total >= 8, s"expected >=8 data files, got $total")
     assert(files.nonEmpty && files.size < total,
       s"a narrow range over a range-clustered layout must skip files " +
         s"(admitted ${files.size} of $total)")
-    val pruned = ZoneMaps.prunedReadRange(store, "t", "k", 100L, 300L)
+    val pruned = store.readWhere("t", ZonePred.between("k", 100L, 300L))
       .select("k", "tag", "v").as[(Long, String, Double)].collect().toSet
     val full = store.read("t").get
       .filter(col("k") >= 100L && col("k") <= 300L)
@@ -40,7 +40,7 @@ class ZoneMapsSpec extends SparkSpec {
     val ranges = Seq((1L, 500L), (-10L, 0L), (499L, 499L), (250L, 260L),
       (9999L, 99999L), (1L, 1L))
     ranges.foreach { case (lo, hi) =>
-      val pruned = ZoneMaps.prunedReadRange(store, "t", "k", lo, hi)
+      val pruned = store.readWhere("t", ZonePred.between("k", lo, hi))
         .select("k").as[Long].collect().sorted.toSeq
       val full = store.read("t").get
         .filter(col("k") >= lo && col("k") <= hi)
@@ -49,9 +49,9 @@ class ZoneMapsSpec extends SparkSpec {
     }
     // the empty range admits zero files and returns an empty frame with
     // the table's schema
-    val (none, _) = ZoneMaps.planFiles(store, "t", "k", 9999L, 99999L)
+    val (none, _) = ZoneMaps.planFiles(store, "t", ZonePred.between("k", 9999L, 99999L))
     assert(none.isEmpty)
-    val empty = ZoneMaps.prunedReadRange(store, "t", "k", 9999L, 99999L)
+    val empty = store.readWhere("t", ZonePred.between("k", 9999L, 99999L))
     assert(empty.count() == 0 &&
       empty.columns.toSeq == store.read("t").get.columns.toSeq)
   }
@@ -64,9 +64,9 @@ class ZoneMapsSpec extends SparkSpec {
     store.replace("st", df.repartitionByRange(6, col("bucket"))
       .sortWithinPartitions(col("bucket")))
     ZoneMaps.build(store, "st", Seq("bucket"))
-    val (files, total) = ZoneMaps.planFiles(store, "st", "bucket", "d", "f")
+    val (files, total) = ZoneMaps.planFiles(store, "st", ZonePred.between("bucket", "d", "f"))
     assert(files.size < total)
-    val pruned = ZoneMaps.prunedReadRange(store, "st", "bucket", "d", "f")
+    val pruned = store.readWhere("st", ZonePred.between("bucket", "d", "f"))
       .select("k").as[Long].collect().toSet
     val full = store.read("st").get
       .filter(col("bucket") >= "d" && col("bucket") <= "f")
@@ -87,10 +87,10 @@ class ZoneMapsSpec extends SparkSpec {
     val nullFiles = zones.filter(col("k_nulls") === col("n_rows"))
       .select("_file").as[String].collect()
     assert(nullFiles.nonEmpty, "fixture must produce an all-null file")
-    val (admitted, _) = ZoneMaps.planFiles(store, "nt", "k", 1L, 1000L)
+    val (admitted, _) = ZoneMaps.planFiles(store, "nt", ZonePred.between("k", 1L, 1000L))
     assert(!admitted.exists(nullFiles.contains),
       "an all-null file can contain no range match and must be skipped")
-    val got = ZoneMaps.prunedReadRange(store, "nt", "k", 1L, 1000L)
+    val got = store.readWhere("nt", ZonePred.between("k", 1L, 1000L))
       .select("id").as[Long].collect().toSet
     assert(got == (1L to 100L).toSet)
   }
@@ -101,12 +101,12 @@ class ZoneMapsSpec extends SparkSpec {
     // table rewritten (compaction-shaped): file set changes, zones do not
     store.replace("t", store.read("t").get.repartition(1))
     val e = intercept[RuntimeException] {
-      ZoneMaps.prunedReadRange(store, "t", "k", 1L, 10L)
+      store.readWhere("t", ZonePred.between("k", 1L, 10L))
     }
     assert(e.getMessage.contains("STALE"), e.getMessage)
     // rebuild heals it
     ZoneMaps.build(store, "t", Seq("k"))
-    assert(ZoneMaps.prunedReadRange(store, "t", "k", 1L, 10L).count() == 10L)
+    assert(store.readWhere("t", ZonePred.between("k", 1L, 10L)).count() == 10L)
   }
 
   test("bloom point lookup: skips files on an UNclustered key, stays exact") {
@@ -118,19 +118,19 @@ class ZoneMapsSpec extends SparkSpec {
     store.replace("pt", df.repartitionByRange(6, col("g")))
     ZoneMaps.build(store, "pt", Seq("g"), bloomCols = Seq("k"),
       expectedPerFile = 1000L)
-    val (files, total) = ZoneMaps.planFilesPoint(store, "pt", "k", 1234L)
+    val (files, total) = ZoneMaps.planFiles(store, "pt", ZonePred.Point("k", 1234L))
     assert(total >= 4, s"fixture needs several files, got $total")
     assert(files.nonEmpty && files.size < total,
       s"a point key living in one file must not admit all $total files " +
         s"(admitted ${files.size})")
-    val got = ZoneMaps.prunedReadPoint(store, "pt", "k", 1234L)
+    val got = store.readWhere("pt", ZonePred.Point("k", 1234L))
       .select("k", "g").as[(Long, Int)].collect().toSeq
     assert(got == Seq((1234L, 1234 % 6)))
     // absent key: no false negatives means correctness is unconditional;
     // the bloom may admit a false-positive file or two, never all
-    val (absent, _) = ZoneMaps.planFilesPoint(store, "pt", "k", 999999L)
+    val (absent, _) = ZoneMaps.planFiles(store, "pt", ZonePred.Point("k", 999999L))
     assert(absent.size < total)
-    assert(ZoneMaps.prunedReadPoint(store, "pt", "k", 999999L).count() == 0)
+    assert(store.readWhere("pt", ZonePred.Point("k", 999999L)).count() == 0)
   }
 
   test("bloom admission is a superset of the files that hold the key (no false negatives)") {
@@ -144,7 +144,7 @@ class ZoneMapsSpec extends SparkSpec {
       val holder = full
         .filter(col("k") === key)
         .select(col("_metadata.file_path")).as[String].collect().toSet
-      val (admitted, _) = ZoneMaps.planFilesPoint(store, "sup", "k", key)
+      val (admitted, _) = ZoneMaps.planFiles(store, "sup", ZonePred.Point("k", key))
       def n(p: String) = new java.net.URI(p).getPath
       assert(holder.map(n).subsetOf(admitted.map(n).toSet),
         s"key $key: bloom must admit every file that holds it")
@@ -160,7 +160,7 @@ class ZoneMapsSpec extends SparkSpec {
     // value passed as Int, column is LongType — xxhash64(Int) differs
     // from xxhash64(Long), so without the cast this was a silent bloom
     // false negative (zero admitted files, empty result)
-    val got = ZoneMaps.prunedReadPoint(store, "tp", "k", 123)
+    val got = store.readWhere("tp", ZonePred.Point("k", 123))
       .select("k").as[Long].collect().toSeq
     assert(got == Seq(123L))
   }
@@ -181,7 +181,7 @@ class ZoneMapsSpec extends SparkSpec {
       "stale manifest must trigger a rebuild")
     val names = store.read("mt_zones").get.schema.fieldNames.toSet
     assert(names.contains("k_min") && names.contains("g_bloom"))
-    assert(ZoneMaps.prunedReadPoint(store, "mt", "g", 3).count() ==
+    assert(store.readWhere("mt", ZonePred.Point("g", 3)).count() ==
       df.filter(col("g") === 3).count())
   }
 
@@ -207,8 +207,8 @@ class ZoneMapsSpec extends SparkSpec {
     ZoneMaps.build(store, "dp", Seq("g"), bloomCols = Seq("k"),
       expectedPerFile = 200L)
     val zones = store.read("dp_zones").get
-    val frame = ZoneMaps.pointAdmitFrame(zones, "k",
-      xxhash64(lit(42L).cast("long")))
+    val frame = ZoneMaps.admitFrame(zones, store.read("dp").get.schema,
+      ZonePred.Point("k", 42L))
     // the DRIVER-side shape (VERDICT r11's weak item): only the file name
     // and the admit flag reach the collect — no binary bloom column, so
     // driver bytes per lookup are file-count × name, flat in bloom size
@@ -220,7 +220,7 @@ class ZoneMapsSpec extends SparkSpec {
     val plan = frame.queryExecution.optimizedPlan.toString
     assert(plan.contains("graft_bloom_probe"), plan)
     // end-to-end through the public path, for the same fixture
-    val (admitted, total) = ZoneMaps.planFilesPoint(store, "dp", "k", 42L)
+    val (admitted, total) = ZoneMaps.planFiles(store, "dp", ZonePred.Point("k", 42L))
     assert(admitted.nonEmpty && total >= 4)
   }
 
@@ -237,10 +237,10 @@ class ZoneMapsSpec extends SparkSpec {
     val nullFiles = zones.filter(col("k_nulls") === col("n_rows"))
       .select("_file").as[String].collect()
     assert(nullFiles.nonEmpty, "fixture must produce an all-null file")
-    val (admitted, _) = ZoneMaps.planFilesPoint(store, "nb", "k", 50L)
+    val (admitted, _) = ZoneMaps.planFiles(store, "nb", ZonePred.Point("k", 50L))
     assert(!admitted.exists(nullFiles.contains),
       "an equality probe is null-false: the all-null file cannot match")
-    assert(ZoneMaps.prunedReadPoint(store, "nb", "k", 50L)
+    assert(store.readWhere("nb", ZonePred.Point("k", 50L))
       .select("id").as[Long].collect().toSeq == Seq(50L))
   }
 
@@ -287,10 +287,10 @@ class ZoneMapsSpec extends SparkSpec {
       assert(after(f)._3 >= 2001L, s"new row stats wrong for $f: ${after(f)}")
     }
     // the healed manifest answers exactly like a from-scratch build
-    val pruned = ZoneMaps.prunedReadRange(store, "t", "k", 2050L, 2100L)
+    val pruned = store.readWhere("t", ZonePred.between("k", 2050L, 2100L))
       .select("k").as[Long].collect().sorted.toSeq
     assert(pruned == (2050L to 2100L).toSeq)
-    val viaBloom = ZoneMaps.prunedReadPoint(store, "t", "tag", "s3")
+    val viaBloom = store.readWhere("t", ZonePred.Point("tag", "s3"))
       .select("k").as[Long].collect().toSet
     val plain = store.read("t").get.filter(col("tag") === "s3")
       .select("k").as[Long].collect().toSet
@@ -299,7 +299,7 @@ class ZoneMapsSpec extends SparkSpec {
     store.replace("t", store.read("t").get.repartition(3))
     assert(ZoneMaps.maintain(store, "t", Seq.empty))
     assert(store.read("t_zones").get.count() == 3)
-    assert(ZoneMaps.prunedReadPoint(store, "t", "tag", "s3")
+    assert(store.readWhere("t", ZonePred.Point("tag", "s3"))
       .select("k").as[Long].collect().toSet == plain)
   }
 
@@ -332,7 +332,7 @@ class ZoneMapsSpec extends SparkSpec {
           s"seed $seed step $step: healed manifest must be fresh")
         val lo = rnd.nextInt(nextK.toInt).toLong
         val hi = lo + rnd.nextInt(500)
-        val pruned = store.readRange("t", "k", lo, hi)
+        val pruned = store.readWhere("t", ZonePred.between("k", lo, hi))
           .select("k").as[Long].collect().sorted.toSeq
         val plain = store.read("t").get
           .filter(col("k") >= lo && col("k") <= hi)
@@ -345,7 +345,7 @@ class ZoneMapsSpec extends SparkSpec {
   test("routed read pushes the residual predicate into the parquet scan") {
     val store = freshStore()
     clustered(store, "t")
-    val plan = store.readRange("t", "k", 100L, 300L)
+    val plan = store.readWhere("t", ZonePred.between("k", 100L, 300L))
       .queryExecution.executedPlan.toString
     // file skipping happens at plan time (inputFiles assertion in the
     // routing test); WITHIN the admitted files the residual must reach
@@ -358,12 +358,12 @@ class ZoneMapsSpec extends SparkSpec {
 
   test("store.readRange routes through a fresh manifest by default and skips files") {
     // VERDICT r12 item 3: the manifest only pays if the COMMON read path
-    // uses it — readRange/readPoint are that path, with the plain scan as
+    // uses it — readWhere is that path, with the plain scan as
     // the no-manifest fallback and the staleness contract kept loud.
     val store = freshStore()
     clustered(store, "t")
     val total = store.read("t").get.inputFiles.length
-    val routed = store.readRange("t", "k", 100L, 300L)
+    val routed = store.readWhere("t", ZonePred.between("k", 100L, 300L))
     assert(routed.inputFiles.length < total,
       s"routed read must open only admitted files " +
         s"(${routed.inputFiles.length} of $total)")
@@ -374,13 +374,13 @@ class ZoneMapsSpec extends SparkSpec {
       .as[(Long, String, Double)].collect().toSet == plain)
     // no manifest -> the identical plain scan, all files
     store.replace("nm", store.read("t").get)
-    val fallback = store.readRange("nm", "k", 100L, 300L)
+    val fallback = store.readWhere("nm", ZonePred.between("k", 100L, 300L))
     assert(fallback.inputFiles.length == store.read("nm").get.inputFiles.length)
     assert(fallback.select("k", "tag", "v")
       .as[(Long, String, Double)].collect().toSet == plain)
     // stale manifest stays LOUD on the routed path
     store.replace("t", store.read("t").get.repartition(3))
-    val e = intercept[RuntimeException] { store.readRange("t", "k", 100L, 300L) }
+    val e = intercept[RuntimeException] { store.readWhere("t", ZonePred.between("k", 100L, 300L)) }
     assert(e.getMessage.contains("STALE"), e.getMessage)
   }
 
@@ -398,27 +398,30 @@ class ZoneMapsSpec extends SparkSpec {
       .as[(Long, String, Double)].collect().toSet
     // range AND point: admitted files = intersection of the two
     // single-predicate admissions (at most the smaller)
-    val both = store.readWhere("t", Seq(("k", 100L, 300L)), Seq(("tag", "s3")))
-    val rangeOnly = store.readRange("t", "k", 100L, 300L)
+    val both = store.readWhere("t", ZonePred.And(Seq(
+      ZonePred.between("k", 100L, 300L), ZonePred.Point("tag", "s3"))))
+    val rangeOnly = store.readWhere("t", ZonePred.between("k", 100L, 300L))
     assert(both.inputFiles.length <= rangeOnly.inputFiles.length,
       "conjunction must admit no more files than either predicate alone")
     assert(both.select("k", "tag", "v").as[(Long, String, Double)]
       .collect().toSet ==
       plain(col("k") >= 100L && col("k") <= 300L && col("tag") === "s3"))
     // an UNCOVERED column rides along as a plain residual
-    val mixed = store.readWhere("t",
-      Seq(("k", 100L, 300L), ("v", 300.0, 500.0)), Seq(("tag", "s3")))
+    val mixed = store.readWhere("t", ZonePred.And(Seq(
+      ZonePred.between("k", 100L, 300L), ZonePred.between("v", 300.0, 500.0),
+      ZonePred.Point("tag", "s3"))))
     assert(mixed.select("k", "tag", "v").as[(Long, String, Double)]
       .collect().toSet ==
       plain(col("k") >= 100L && col("k") <= 300L && col("tag") === "s3" &&
         col("v") >= 300.0 && col("v") <= 500.0))
     // contradiction on covered predicates admits nothing, schema kept
-    val none = store.readWhere("t", Seq(("k", 100L, 110L)), Seq(("tag", "zz")))
+    val none = store.readWhere("t", ZonePred.And(Seq(
+      ZonePred.between("k", 100L, 110L), ZonePred.Point("tag", "zz"))))
     assert(none.count() == 0 &&
       none.columns.toSeq == store.read("t").get.columns.toSeq)
     // nothing covered at all: identical plain scan
     store.replace("nm", store.read("t").get)
-    assert(store.readWhere("nm", Seq(("v", 300.0, 500.0)))
+    assert(store.readWhere("nm", ZonePred.between("v", 300.0, 500.0))
       .select("k").as[Long].collect().toSet ==
       store.read("nm").get.filter(col("v") >= 300.0 && col("v") <= 500.0)
         .select("k").as[Long].collect().toSet)
@@ -449,7 +452,7 @@ class ZoneMapsSpec extends SparkSpec {
     assert(afterFiles.size > beforeFiles.size,
       "heal must append the new files' rows as new manifest files")
     // and the healed manifest still answers exactly
-    assert(ZoneMaps.prunedReadRange(store, "t", "k", 850L, 860L)
+    assert(store.readWhere("t", ZonePred.between("k", 850L, 860L))
       .select("k").as[Long].collect().sorted.toSeq == (850L to 860L).toSeq)
   }
 
@@ -473,21 +476,21 @@ class ZoneMapsSpec extends SparkSpec {
       "a relocated warehouse must read as FRESH (root-relative fingerprint)")
     // routed range read: prunes (the remap resolves stored paths onto the
     // NEW root) and is exact
-    val routed = store.readRange("t", "k", 100L, 300L)
+    val routed = store.readWhere("t", ZonePred.between("k", 100L, 300L))
     assert(routed.inputFiles.forall(_.contains(newRoot.toString)),
       "admitted files must resolve to the LIVE root, not the manifest's")
     assert(routed.inputFiles.length < 8, "relocated manifest must still prune")
     assert(routed.select("k").as[Long].collect().sorted.toSeq ==
       (100L to 300L).toSeq)
     // bloom point read across the relocation
-    val viaBloom = store.readPoint("t", "p", 123L)
+    val viaBloom = store.readWhere("t", ZonePred.Point("p", 123L))
       .select("k").as[Long].collect().toSet
     assert(viaBloom == store.read("t").get.filter(col("p") === 123L)
       .select("k").as[Long].collect().toSet)
     // ...and the mixed-tree path
-    val tree = ZonePred.And(Seq(ZonePred.Range("k", 100L, 400L),
+    val tree = ZonePred.And(Seq(ZonePred.between("k", 100L, 400L),
       ZonePred.Point("p", 123L)))
-    assert(store.readWhereExpr("t", tree).select("k").as[Long].collect().toSet ==
+    assert(store.readWhere("t", tree).select("k").as[Long].collect().toSet ==
       store.read("t").get.filter(ZoneMaps.predExpr(tree))
         .select("k").as[Long].collect().toSet)
   }
@@ -502,9 +505,9 @@ class ZoneMapsSpec extends SparkSpec {
     // fully covered mixed tree: a AND (b OR c) — the shape neither flat
     // routed entry point expresses; v ∈ [300,500] ⇔ k ∈ [150,250], so
     // the composed admission (k-range ∩ (v-range ∪ point)) skips files
-    val tree = And(Seq(Range("k", 100L, 400L),
-      Or(Seq(Range("v", 300.0, 500.0), Point("k", 380L)))))
-    val routed = store.readWhereExpr("t", tree)
+    val tree = And(Seq(between("k", 100L, 400L),
+      Or(Seq(between("v", 300.0, 500.0), Point("k", 380L)))))
+    val routed = store.readWhere("t", tree)
     assert(routed.inputFiles.length < total,
       s"mixed tree must prune (${routed.inputFiles.length} of $total)")
     val got = routed.select("k").as[Long].collect().sorted.toSeq
@@ -515,16 +518,16 @@ class ZoneMapsSpec extends SparkSpec {
     // prunes and the WHOLE tree re-applies as the residual
     clustered(store, "u")
     ZoneMaps.build(store, "u", Seq("k"))
-    val partial = And(Seq(Range("k", 100L, 400L),
-      Or(Seq(Point("tag", "s3"), Range("k", 350L, 360L)))))
-    val routedU = store.readWhereExpr("u", partial)
+    val partial = And(Seq(between("k", 100L, 400L),
+      Or(Seq(Point("tag", "s3"), between("k", 350L, 360L)))))
+    val routedU = store.readWhere("u", partial)
     assert(routedU.inputFiles.length < total, "covered AND-child must still prune")
     assert(routedU.select("k").as[Long].collect().sorted.toSeq ==
       store.read("u").get.filter(ZoneMaps.predExpr(partial))
         .select("k").as[Long].collect().sorted.toSeq)
     // nothing covered: the plain filtered scan (full listing), exact
     val uncovered = Or(Seq(Point("tag", "s3"), Point("tag", "s5")))
-    val plainPath = store.readWhereExpr("u", uncovered)
+    val plainPath = store.readWhere("u", uncovered)
     assert(plainPath.inputFiles.length == total,
       "an uncovered tree must not consult the manifest")
     assert(plainPath.select("k").as[Long].collect().sorted.toSeq ==
@@ -541,7 +544,7 @@ class ZoneMapsSpec extends SparkSpec {
         .repartition(1).write.mode("append").parquet(store.path("t"))
     def prunedEqPlain(): Unit = {
       val hi = store.read("t").get.agg(max(col("k"))).head().getLong(0)
-      val pruned = store.readRange("t", "k", 300L, hi)
+      val pruned = store.readWhere("t", ZonePred.between("k", 300L, hi))
         .select("k").as[Long].collect().sorted.toSeq
       val plain = store.read("t").get.filter(col("k") >= 300L && col("k") <= hi)
         .select("k").as[Long].collect().sorted.toSeq
@@ -602,10 +605,10 @@ class ZoneMapsSpec extends SparkSpec {
     assert(!ZoneMaps.maintain(store, "z", Seq.empty),
       "a backfilled manifest is FRESH — no heal loop")
     // routed reads work, and the empty file is never admitted
-    val (admitted, total) = ZoneMaps.planFiles(store, "z", "k", 1L, 1000L)
+    val (admitted, total) = ZoneMaps.planFiles(store, "z", ZonePred.between("k", 1L, 1000L))
     assert(total == store.read("z").get.inputFiles.length)
     assert(admitted.size == total - 1, "null stats admit nothing")
-    assert(store.readRange("z", "k", 10L, 20L)
+    assert(store.readWhere("z", ZonePred.between("k", 10L, 20L))
       .select("k").as[Long].collect().sorted.toSeq == (10L to 20L).toSeq)
     // heal path: an append batch that includes ANOTHER empty file
     (401 to 450).map(i => (i.toLong, s"s${i % 5}")).toDF("k", "tag")
@@ -616,7 +619,7 @@ class ZoneMapsSpec extends SparkSpec {
     assert(!ZoneMaps.maintain(store, "z", Seq.empty),
       "the incremental heal must converge with empty files present")
     assert(store.read("z_zones").get.filter(col("n_rows") === 0L).count() == 2)
-    assert(store.readPoint("z", "tag", "s3").count() ==
+    assert(store.readWhere("z", ZonePred.Point("tag", "s3")).count() ==
       store.read("z").get.filter(col("tag") === "s3").count())
   }
 
@@ -647,7 +650,7 @@ class ZoneMapsSpec extends SparkSpec {
     java.nio.file.Files.deleteIfExists(
       new java.io.File(vf.getParentFile, s".${vf.getName}.crc").toPath)
     val e = intercept[RuntimeException] {
-      ZoneMaps.prunedReadRange(store, "ow", "k", 1L, 100L)
+      store.readWhere("ow", ZonePred.between("k", 1L, 100L))
     }
     assert(e.getMessage.contains("STALE"), e.getMessage)
     // maintain takes the FULL rebuild (no verbatim carry-over of the
@@ -656,7 +659,7 @@ class ZoneMapsSpec extends SparkSpec {
     val plain = store.read("ow").get
       .filter(col("k") >= 1L && col("k") <= 10000L)
       .select("k").as[Long].collect().sorted.toSeq
-    assert(ZoneMaps.prunedReadRange(store, "ow", "k", 1L, 10000L)
+    assert(store.readWhere("ow", ZonePred.between("k", 1L, 10000L))
       .select("k").as[Long].collect().sorted.toSeq == plain)
     assert(plain.contains(9999L), "the overwritten file's new content " +
       "must be visible through the rebuilt manifest")
@@ -676,8 +679,8 @@ class ZoneMapsSpec extends SparkSpec {
     // two disjoint ranges: admitted = union of the per-predicate
     // admissions, still fewer files than the table
     val total = store.read("t").get.inputFiles.length
-    val ranges = store.readWhereAny("t",
-      Seq(("k", 100L, 200L), ("k", 1500L, 1600L)))
+    val ranges = store.readWhere("t", ZonePred.Or(Seq(
+      ZonePred.between("k", 100L, 200L), ZonePred.between("k", 1500L, 1600L))))
     assert(ranges.inputFiles.length < total,
       s"disjunction over covered ranges must still skip files " +
         s"(${ranges.inputFiles.length} of $total)")
@@ -688,16 +691,17 @@ class ZoneMapsSpec extends SparkSpec {
     // adding a bloom-point disjunct on a key that truly lives in every
     // file (tag cycles mod 7): the union honestly admits everything —
     // the negative control — and the result stays exact
-    val both = store.readWhereAny("t",
-      Seq(("k", 100L, 200L), ("k", 1500L, 1600L)), Seq(("tag", "s3")))
+    val both = store.readWhere("t", ZonePred.Or(Seq(
+      ZonePred.between("k", 100L, 200L), ZonePred.between("k", 1500L, 1600L),
+      ZonePred.Point("tag", "s3"))))
     assert(both.select("k", "tag", "v").as[(Long, String, Double)]
       .collect().toSet ==
       plain((col("k") >= 100L && col("k") <= 200L) ||
         (col("k") >= 1500L && col("k") <= 1600L) || col("tag") === "s3"))
     // an UNCOVERED disjunct (v has no stats) forces the full scan — the
     // fallback is the plain OR filter, result identical by construction
-    val fb = store.readWhereAny("t",
-      Seq(("k", 100L, 200L), ("v", 300.0, 310.0)))
+    val fb = store.readWhere("t", ZonePred.Or(Seq(
+      ZonePred.between("k", 100L, 200L), ZonePred.between("v", 300.0, 310.0))))
     assert(fb.inputFiles.length == total,
       "an uncovered disjunct can match anywhere: no pruning allowed")
     assert(fb.select("k", "tag", "v").as[(Long, String, Double)]
@@ -705,7 +709,8 @@ class ZoneMapsSpec extends SparkSpec {
       plain((col("k") >= 100L && col("k") <= 200L) ||
         (col("v") >= 300.0 && col("v") <= 310.0)))
     // empty disjunction result keeps the schema
-    val none = store.readWhereAny("t", Seq(("k", 99999L, 100000L)))
+    val none = store.readWhere("t", ZonePred.Or(Seq(
+      ZonePred.between("k", 99999L, 100000L))))
     assert(none.count() == 0 &&
       none.columns.toSeq == store.read("t").get.columns.toSeq)
   }
@@ -721,7 +726,7 @@ class ZoneMapsSpec extends SparkSpec {
     // rename(tmp -> dst): the table exists ONLY at _swap_t
     assert(new java.io.File(store.path("t"))
       .renameTo(new java.io.File(s"$wh/_swap_t")))
-    val got = store.readRange("t", "k", 10L, 20L)
+    val got = store.readWhere("t", ZonePred.between("k", 10L, 20L))
       .select("k").as[Long].collect().sorted.toSeq
     assert(got == (10L to 20L).toSeq,
       "routed read must restore the stranded backup and answer")
@@ -744,7 +749,8 @@ class ZoneMapsSpec extends SparkSpec {
           val lo = rnd.nextInt(n).toLong
           ("k", lo: Any, (lo + rnd.nextInt(400)): Any)
         }
-        val pruned = store.readWhereAny("t", ranges)
+        val pruned = store.readWhere("t", ZonePred.Or(ranges.map {
+            case (c, lo, hi) => ZonePred.between(c, lo, hi) }))
           .select("k").as[Long].collect().sorted.toSeq
         val plain = store.read("t").get
           .filter(ranges.map { case (_, lo, hi) =>
@@ -763,18 +769,18 @@ class ZoneMapsSpec extends SparkSpec {
     store.replace("pb", df.repartition(6))
     ZoneMaps.build(store, "pb", Seq.empty, bloomCols = Seq("k"),
       expectedPerFile = 1000L)
-    val viaBloom = store.readPoint("pb", "k", 500L)
+    val viaBloom = store.readWhere("pb", ZonePred.Point("k", 500L))
     val plain = store.read("pb").get.filter(col("k") === 500L)
       .select("id").as[Long].collect().toSet
     assert(viaBloom.select("id").as[Long].collect().toSet == plain)
     // stats-only manifest: the point read prunes as the range [v, v]
     clustered(store, "ps")
-    val viaStats = store.readPoint("ps", "k", 250L)
+    val viaStats = store.readWhere("ps", ZonePred.Point("k", 250L))
     assert(viaStats.inputFiles.length < store.read("ps").get.inputFiles.length)
     assert(viaStats.select("k").as[Long].collect().toSeq == Seq(250L))
     // no manifest at all: plain equality scan
     store.replace("pn", df)
-    assert(store.readPoint("pn", "k", 500L)
+    assert(store.readWhere("pn", ZonePred.Point("k", 500L))
       .select("id").as[Long].collect().toSet == plain)
   }
 
@@ -785,14 +791,14 @@ class ZoneMapsSpec extends SparkSpec {
     val df = (1 to 2000).map(i => (i.toLong, i * 2.0)).toDF("k", "v")
     store.replace("cl", df.repartition(8))
     ZoneMaps.build(store, "cl", Seq("k"))
-    val (before, total0) = ZoneMaps.planFiles(store, "cl", "k", 100L, 300L)
+    val (before, total0) = ZoneMaps.planFiles(store, "cl", ZonePred.between("k", 100L, 300L))
     assert(total0 == 8 && before.size == total0,
       s"round-robin files each span the key range — admission must " +
         s"degenerate to admit-all (${before.size} of $total0)")
     val plain = store.read("cl").get
       .filter(col("k") >= 100L && col("k") <= 300L)
       .select("k", "v").as[(Long, Double)].collect().toSet
-    assert(store.readRange("cl", "k", 100L, 300L)
+    assert(store.readWhere("cl", ZonePred.between("k", 100L, 300L))
       .select("k", "v").as[(Long, Double)].collect().toSet == plain)
     // one scheduled tick with clusterCols: 8 files > threshold 4 → the
     // SORTED rewrite (never plain compact — that scrambles clustering),
@@ -801,12 +807,12 @@ class ZoneMapsSpec extends SparkSpec {
       clusterCols = Seq("k"), maxDataFiles = 4)
     assert(rep.data.exists(_.compacted) && rep.zonesRebuilt,
       s"tick must rewrite AND heal in one pass: $rep")
-    val (after, total1) = ZoneMaps.planFiles(store, "cl", "k", 100L, 300L)
+    val (after, total1) = ZoneMaps.planFiles(store, "cl", ZonePred.between("k", 100L, 300L))
     assert(total1 == 4, s"sorted rewrite must hit the target file count")
     assert(after.size < before.size && after.size < total1,
       s"clustered layout must admit strictly fewer files " +
         s"(${after.size} of $total1 vs ${before.size} of $total0)")
-    assert(store.readRange("cl", "k", 100L, 300L)
+    assert(store.readWhere("cl", ZonePred.between("k", 100L, 300L))
       .select("k", "v").as[(Long, Double)].collect().toSet == plain,
       "pruning is I/O, never semantics — the answer must not move")
     // a further tick under the threshold is a no-op on the data table
@@ -825,14 +831,14 @@ class ZoneMapsSpec extends SparkSpec {
     // listed keys' ranges are skipped, the residual isin restores exact
     // membership
     val in = In("k", Seq(5L, 7L, 1900L))
-    val routed = store.readWhereExpr("t", in)
+    val routed = store.readWhere("t", in)
     assert(routed.inputFiles.length < total,
       s"IN must prune (${routed.inputFiles.length} of $total)")
     assert(routed.select("k").as[Long].collect().sorted.toSeq ==
       Seq(5L, 7L, 1900L))
     // under an AND, the In composes like any leaf
-    val mixed = And(Seq(Range("k", 1L, 100L), In("k", Seq(5L, 7L, 1900L))))
-    assert(store.readWhereExpr("t", mixed)
+    val mixed = And(Seq(between("k", 1L, 100L), In("k", Seq(5L, 7L, 1900L))))
+    assert(store.readWhere("t", mixed)
       .select("k").as[Long].collect().sorted.toSeq == Seq(5L, 7L))
     // past the cap the leaf is uncovered → the PLAIN scan answers. The
     // stale-manifest trick proves the path taken: rewrite the table
@@ -840,11 +846,11 @@ class ZoneMapsSpec extends SparkSpec {
     // scan answers silently
     store.replace("t", store.read("t").get.repartition(3))
     val big = In("k", (1L to (ZoneMaps.InAdmissionCap + 1).toLong).toSeq)
-    assert(store.readWhereExpr("t", big).select("k").as[Long]
+    assert(store.readWhere("t", big).select("k").as[Long]
       .collect().sorted.toSeq == (1L to 51L).toSeq,
       "an over-cap IN must take the plain path (no consult, no staleness)")
     val small = In("k", Seq(5L))
-    val e = intercept[RuntimeException] { store.readWhereExpr("t", small) }
+    val e = intercept[RuntimeException] { store.readWhere("t", small) }
     assert(e.getMessage.contains("STALE"),
       "…while a covered IN still consults (and fails loud on staleness)")
   }
@@ -859,7 +865,7 @@ class ZoneMapsSpec extends SparkSpec {
     store.replace("z2", df.repartition(16))
     ZoneMaps.build(store, "z2", Seq("k", "g"))
     def admits(c: String, lo: Long, hi: Long): Int =
-      ZoneMaps.planFiles(store, "z2", c, lo, hi)._1.size
+      ZoneMaps.planFiles(store, "z2", ZonePred.between(c, lo, hi))._1.size
     val total = store.read("z2").get.inputFiles.length
     assert(total == 16)
     // narrow 3% slabs on each dimension
@@ -883,9 +889,9 @@ class ZoneMapsSpec extends SparkSpec {
     relay()
     val zk = admits("k", 4000L, 4300L); val zg = admits("g", 4000L, 4300L)
     assert(zk < total && zg < total, s"z-order must prune both ($zk, $zg of $total)")
-    assert(ZoneMaps.prunedReadRange(store, "z2", "k", 4000L, 4300L)
+    assert(store.readWhere("z2", ZonePred.between("k", 4000L, 4300L))
       .select("k", "g", "v").as[(Long, Long, Double)].collect().toSet == exactK)
-    assert(ZoneMaps.prunedReadRange(store, "z2", "g", 4000L, 4300L)
+    assert(store.readWhere("z2", ZonePred.between("g", 4000L, 4300L))
       .select("k", "g", "v").as[(Long, Long, Double)].collect().toSet == exactG)
   }
 
@@ -980,7 +986,7 @@ class ZoneMapsSpec extends SparkSpec {
     java.nio.file.Files.copy(dataFile.toPath,
       nested.toPath.resolve(dataFile.getName))
     val e = intercept[RuntimeException] {
-      ZoneMaps.planFiles(store, "dup", "k", 1L, 50L)
+      ZoneMaps.planFiles(store, "dup", ZonePred.between("k", 1L, 50L))
     }
     assert(e.getMessage.contains("collapse"), e.getMessage)
     val e2 = intercept[RuntimeException] {

@@ -8,7 +8,9 @@ class GraftCatalogSpec extends SparkSpec {
   private def setup(): Unit = {
     spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
     spark.sql("DROP TABLE IF EXISTS graft.final_orders")
-    spark.sql("CREATE TABLE graft.final_orders (k BIGINT, status STRING, v DOUBLE)")
+    val dir = java.nio.file.Files.createTempDirectory("graft_catalog_spec")
+    spark.sql("CREATE TABLE graft.final_orders (k BIGINT, status STRING, v DOUBLE) " +
+      s"LOCATION '$dir/final_orders'")
   }
 
   test("v2 table: CREATE / INSERT / SELECT round-trip through SQL") {
@@ -62,5 +64,13 @@ class GraftCatalogSpec extends SparkSpec {
       .as[(Long, String, Double)].collect().toSeq
     // re-applying: k=1 updates to same values; k=2 re-inserts (status 'x')
     assert(twice == Seq((1L, "new", 11.0), (2L, "x", 0.0)))
+  }
+
+  test("CREATE TABLE without LOCATION is refused by name") {
+    spark.conf.set("spark.sql.catalog.graft", classOf[GraftCatalog].getName)
+    val e = intercept[UnsupportedOperationException] {
+      spark.sql("CREATE TABLE graft.no_location (k BIGINT)")
+    }
+    assert(e.getMessage.contains("LOCATION"), e.getMessage)
   }
 }

@@ -1,7 +1,7 @@
 package graft.sources.v2
 
 import graft.SparkSpec
-import graft.operators.{ParquetTableStore, ZoneMaps}
+import graft.operators.{ParquetTableStore, ZoneMaps, ZonePred}
 import org.apache.spark.sql.functions._
 import scala.jdk.CollectionConverters._
 
@@ -195,12 +195,96 @@ class ZoneMapSqlPushdownSpec extends SparkSpec {
     assert(rows == Set((5L, 99.0), (301L, 301.0)))
     // the manifest is now stale (files rewritten); routed reads are LOUD
     val e = intercept[RuntimeException] {
-      store.readRange("m", "k", 1L, 10L)
+      store.readWhere("m", graft.operators.ZonePred.between("k", 1L, 10L))
     }
     assert(e.getMessage.contains("STALE"), e.getMessage)
     // ...but SQL stays transparent
     val fq = store.sqlTable("m")
     assert(spark.sql(s"SELECT v FROM $fq WHERE k = 5").as[Double]
       .collect().toSeq == Seq(99.0))
+  }
+
+  test("property: routed planFiles and the SQL scan admit the same files for random ZonePred trees, both exact") {
+    // the two surfaces share one coverage rule and one admission builder;
+    // the SQL side only translates Spark's pushed filters into a tree. The
+    // equivalent WHERE must reach that translation as written, so Spark's
+    // ConstantPropagation is off here: it rewrites `p = 3 AND (p = 4 OR
+    // k > 5)` to `p = 3 AND k > 5` before pushdown — the same rows from a
+    // different predicate, whose admission legitimately differs
+    val store = freshStore()
+    val n = 2000
+    store.replace("t", (1 to n).map(i => (i.toLong, (i * 7919L) % 500L, i * 2.0))
+      .toDF("k", "p", "v").repartitionByRange(8, col("k"))
+      .sortWithinPartitions(col("k")))
+    ZoneMaps.build(store, "t", Seq("k", "v"), bloomCols = Seq("p"),
+      expectedPerFile = 1000L)
+    val fq = store.sqlTable("t")
+    def sql(pred: ZonePred): String = pred match {
+      case ZonePred.Range(c, lo, hi) =>
+        (lo.map(l => s"$c >= ${sqlLit(l)}").toSeq ++ hi.map(h => s"$c <= ${sqlLit(h)}"))
+          .mkString("(", " AND ", ")")
+      case ZonePred.Point(c, v) => s"$c = ${sqlLit(v)}"
+      case ZonePred.In(c, vs)   => vs.map(sqlLit).mkString(s"$c IN (", ", ", ")")
+      case ZonePred.And(ps)     => ps.map(sql).mkString("(", " AND ", ")")
+      case ZonePred.Or(ps)      => ps.map(sql).mkString("(", " OR ", ")")
+    }
+    def sqlLit(v: Any): String = v match {
+      case d: Double => s"${d}D"
+      case other     => other.toString
+    }
+    def leaf(rnd: scala.util.Random): ZonePred = {
+      val k = 1L + rnd.nextInt(n)
+      rnd.nextInt(6) match {
+        case 0 => ZonePred.between("k", k, k + rnd.nextInt(300))
+        case 1 => if (rnd.nextBoolean()) ZonePred.Range("k", Some(k), None)
+                  else ZonePred.Range("k", None, Some(k))
+        case 2 => ZonePred.between("v", k * 2.0, k * 2.0 + rnd.nextInt(600))
+        case 3 => ZonePred.Point("k", k)
+        case 4 => ZonePred.Point("p", rnd.nextInt(500).toLong)
+        case _ =>
+          val c = if (rnd.nextBoolean()) "k" else "p"
+          ZonePred.In(c, Seq.fill(1 + rnd.nextInt(4))(
+            (if (c == "k") k + rnd.nextInt(50) else rnd.nextInt(500).toLong): Any).distinct)
+      }
+    }
+    def tree(rnd: scala.util.Random, depth: Int): ZonePred =
+      if (depth == 0 || rnd.nextInt(3) == 0) leaf(rnd)
+      else {
+        val kids = Seq.fill(2 + rnd.nextInt(2))(tree(rnd, depth - 1))
+        if (rnd.nextBoolean()) ZonePred.And(kids) else ZonePred.Or(kids)
+      }
+    def paths(files: Seq[String]): Set[String] =
+      files.map(f => new java.net.URI(f).getPath).toSet
+    def rows(df: org.apache.spark.sql.DataFrame): Seq[Long] =
+      df.select("k").as[Long].collect().sorted.toSeq
+    val rule = "spark.sql.optimizer.excludedRules"
+    val prev = spark.conf.getOption(rule)
+    spark.conf.set(rule, "org.apache.spark.sql.catalyst.optimizer.ConstantPropagation")
+    try {
+      var pruned = 0
+      Seq(5L, 23L).foreach { seed =>
+        val rnd = new scala.util.Random(seed)
+        (1 to 12).foreach { i =>
+          val pred = tree(rnd, 3)
+          val where = sql(pred)
+          val (routedFiles, total) = ZoneMaps.planFiles(store, "t", pred)
+          val df = spark.sql(s"SELECT k FROM $fq WHERE $where")
+          val sqlFiles = df.queryExecution.optimizedPlan.collect {
+            case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+              r.scan match { case g: GraftParquetScan => g.plannedFiles.toSeq; case _ => Seq.empty }
+          }.flatten
+          assert(paths(routedFiles) == paths(sqlFiles),
+            s"seed $seed tree $i: the surfaces admit different files for $where")
+          if (routedFiles.size < total) pruned += 1
+          val plain = rows(store.read("t").get.filter(ZoneMaps.predExpr(pred)))
+          assert(rows(store.readWhere("t", pred)) == plain, s"seed $seed tree $i: routed $where")
+          assert(rows(df) == plain, s"seed $seed tree $i: SQL $where")
+        }
+      }
+      assert(pruned > 0, "no generated tree pruned a file — the property would be vacuous")
+    } finally prev match {
+      case Some(v) => spark.conf.set(rule, v)
+      case None    => spark.conf.unset(rule)
+    }
   }
 }

@@ -171,7 +171,7 @@ class StreamingIndexSpec extends SparkSpec {
     // actually run: on every tick of a foreachBatch append loop, racing
     // the stream that keeps growing the table. Each batch appends new
     // data files (store.append — the O(batch) flat sink), the tick heals
-    // the manifest, and a routed readRange between batches must answer
+    // the manifest, and a routed readWhere between batches must answer
     // exactly. Incremental-only is asserted structurally: the manifest
     // files present after the FIRST heal survive every later heal
     // byte-identically (a full rebuild swaps the directory; the append
@@ -194,7 +194,7 @@ class StreamingIndexSpec extends SparkSpec {
         // routed read through the just-healed manifest, mid-stream
         val hi = store.read("evt").get.agg(max(col("k"))).head().getLong(0)
         marks += ((hi - 49L, hi,
-          store.readRange("evt", "k", hi - 49L, hi).count()))
+          store.readWhere("evt", graft.operators.ZonePred.between("k", hi - 49L, hi)).count()))
         ()
       }
       .start()

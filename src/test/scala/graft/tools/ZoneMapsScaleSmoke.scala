@@ -1,6 +1,7 @@
 package graft.tools
 
 import org.apache.spark.sql.functions._
+import graft.operators.ZonePred
 
 /** Scale smoke for [[graft.operators.ZoneMaps]]: a 50M-row store table in
   * ~200 range-clustered files — manifest build cost (one scan), admitted
@@ -40,11 +41,11 @@ object ZoneMapsScaleSmoke {
     val hi = n / 2 + n / 1000 // 0.1% of the key space
     val (files, total) =
       t("planFiles (manifest consult + staleness attest)") {
-        graft.operators.ZoneMaps.planFiles(store, "big", "k", lo, hi)
+        graft.operators.ZoneMaps.planFiles(store, "big", ZonePred.between("k", lo, hi))
       }
     println(s"[smoke] range admits ${files.size} of $total files")
     val pruned = t("pruned range read + aggregate") {
-      graft.operators.ZoneMaps.prunedReadRange(store, "big", "k", lo, hi)
+      store.readWhere("big", ZonePred.between("k", lo, hi))
         .agg(count(lit(1)), sum(col("g"))).collect()(0)
     }
     val full = t("full-scan filter + aggregate (the unpruned plan)") {
@@ -58,8 +59,8 @@ object ZoneMapsScaleSmoke {
     // (id % 977), so range zones cannot help and the bloom admits ~all
     // files here — the honest negative control; the useful bloom case is
     // a key that lives in few files, planted by clustering g instead
-    val (pf, pt) = t("planFilesPoint on scattered key (negative control)") {
-      graft.operators.ZoneMaps.planFilesPoint(store, "big", "g", 123L)
+    val (pf, pt) = t("planFiles: point on scattered key (negative control)") {
+      graft.operators.ZoneMaps.planFiles(store, "big", ZonePred.Point("g", 123L))
     }
     println(s"[smoke] scattered-key bloom admits ${pf.size} of $pt " +
       "(expected ~all: the key truly lives everywhere)")
@@ -68,12 +69,12 @@ object ZoneMapsScaleSmoke {
         .repartitionByRange(200, col("g"), col("k")))
       graft.operators.ZoneMaps.maintain(store, "big", Seq("k", "g"))
     }
-    val (pf2, pt2) = t("planFilesPoint on clustered key") {
-      graft.operators.ZoneMaps.planFilesPoint(store, "big", "g", 123L)
+    val (pf2, pt2) = t("planFiles: point on clustered key") {
+      graft.operators.ZoneMaps.planFiles(store, "big", ZonePred.Point("g", 123L))
     }
     println(s"[smoke] clustered-key bloom admits ${pf2.size} of $pt2 files")
     val got = t("pruned point read") {
-      graft.operators.ZoneMaps.prunedReadPoint(store, "big", "g", 123L)
+      store.readWhere("big", ZonePred.Point("g", 123L))
         .count()
     }
     val want = t("full-scan point filter") {
@@ -102,15 +103,15 @@ object ZoneMapsScaleSmoke {
       sum(length(col("k_bloom"))).as("bloom_bytes"),
       sum(length(col("_file"))).as("name_bytes"),
       count(lit(1)).as("files")).collect()(0)
-    val (pfK, ptK) = t("planFilesPoint over 10k files (distributed probe)") {
-      graft.operators.ZoneMaps.planFilesPoint(store, "many", "k", 4242L)
+    val (pfK, ptK) = t("planFiles: point over 10k files (distributed probe)") {
+      graft.operators.ZoneMaps.planFiles(store, "many", ZonePred.Point("k", 4242L))
     }
     println(s"[smoke] 10k-file point: admits ${pfK.size} of $ptK; driver " +
       s"collect ≈ ${sizes.getLong(1) + sizes.getLong(2)} B (names+flags) " +
       s"vs ${sizes.getLong(0)} B of blooms the old driver-side probe " +
       "pulled — the manifest's bloom bytes now stay on executors")
     val gotK = t("pruned point read over 10k files") {
-      graft.operators.ZoneMaps.prunedReadPoint(store, "many", "k", 4242L)
+      store.readWhere("many", ZonePred.Point("k", 4242L))
         .count()
     }
     require(gotK == 1L, s"point read over 10k files returned $gotK rows")
@@ -129,8 +130,8 @@ object ZoneMapsScaleSmoke {
       require(graft.operators.ZoneMaps.maintain(store, "many", Seq.empty))
     }
     val gotK2 = t("pruned point read after incremental heal") {
-      graft.operators.ZoneMaps.prunedReadPoint(store, "many", "k",
-        10000L * 1000L + 42L).count()
+      store.readWhere("many", ZonePred.Point("k", 10000L * 1000L + 42L))
+        .count()
     }
     require(gotK2 == 1L, s"appended key not found after heal: $gotK2")
     t("zones FULL rebuild over the same table (the old heal cost)") {
@@ -182,8 +183,8 @@ object ZoneMapsScaleSmoke {
       graft.operators.ZoneMaps.build(store, "decayed", Seq("k", "g"))
     }
     val (admIl, totIl) = t("planFiles: 0.1% range on interleaved layout") {
-      graft.operators.ZoneMaps.planFiles(store, "decayed", "k",
-        nd / 2, nd / 2 + nd / 1000)
+      graft.operators.ZoneMaps.planFiles(store, "decayed",
+        ZonePred.between("k", nd / 2, nd / 2 + nd / 1000))
     }
     println(s"[smoke] interleaved 200-file: range admits ${admIl.size} " +
       s"of $totIl (expected ~all — every file spans the key range)")
@@ -192,8 +193,8 @@ object ZoneMapsScaleSmoke {
       graft.operators.ZoneMaps.maintain(store, "decayed", Seq.empty)
     }
     val (admSt, totSt) = t("planFiles: the same range on the sorted layout") {
-      graft.operators.ZoneMaps.planFiles(store, "decayed", "k",
-        nd / 2, nd / 2 + nd / 1000)
+      graft.operators.ZoneMaps.planFiles(store, "decayed",
+        ZonePred.between("k", nd / 2, nd / 2 + nd / 1000))
     }
     println(s"[smoke] sorted-compacted 200-file: range admits " +
       s"${admSt.size} of $totSt — clustering restored")
@@ -207,7 +208,7 @@ object ZoneMapsScaleSmoke {
     // z-order.
     val gLo = 400L; val gHi = 401L // 0.2% of the 977-value g space
     val (admGl, _) = t("planFiles: selective g-range on the k-SORTED layout") {
-      graft.operators.ZoneMaps.planFiles(store, "decayed", "g", gLo, gHi)
+      graft.operators.ZoneMaps.planFiles(store, "decayed", ZonePred.between("g", gLo, gHi))
     }
     println(s"[smoke] k-sorted layout: g-range admits ${admGl.size} of " +
       s"$totSt (expected ~all — lexicographic clusters only k)")
@@ -216,11 +217,11 @@ object ZoneMapsScaleSmoke {
       graft.operators.ZoneMaps.maintain(store, "decayed", Seq("k", "g"))
     }
     val (admZk, _) = t("planFiles: the k-range on the z-ordered layout") {
-      graft.operators.ZoneMaps.planFiles(store, "decayed", "k",
-        nd / 2, nd / 2 + nd / 1000)
+      graft.operators.ZoneMaps.planFiles(store, "decayed",
+        ZonePred.between("k", nd / 2, nd / 2 + nd / 1000))
     }
     val (admZg, totZ) = t("planFiles: the g-range on the z-ordered layout") {
-      graft.operators.ZoneMaps.planFiles(store, "decayed", "g", gLo, gHi)
+      graft.operators.ZoneMaps.planFiles(store, "decayed", ZonePred.between("g", gLo, gHi))
     }
     println(s"[smoke] z-ordered 200-file: k-range admits ${admZk.size}, " +
       s"g-range admits ${admZg.size} of $totZ — both dimensions prune")
@@ -287,7 +288,7 @@ object ZoneMapsScaleSmoke {
             val mFiles = store.read(s"${tbl}_zones").get.inputFiles.length
             val c0 = System.nanoTime
             val (adm, tot) = graft.operators.ZoneMaps.planFiles(
-              store, tbl, "k", next - 150L, next - 1L)
+              store, tbl, ZonePred.between("k", next - 150L, next - 1L))
             println(f"[smoke] $tbl tick $i%4d: manifest files=$mFiles%4d, " +
               f"consult=${(System.nanoTime - c0) / 1e9}%.3f s " +
               s"(admits ${adm.size} of $tot)")
