@@ -35,6 +35,10 @@ import org.apache.spark.sql.SparkSession
   *    directory it creates (153 forks in 2 timed `sync_hourly` rounds);
   *    this subclass sets the same permissions in process, so the rounds
   *    fork no `chmod`. Checksums and the `LocalFileSystem` type stay.
+  *  - `fs.AbstractFileSystem.file.impl` is [[graft.fs.GraftLocalFs]], the
+  *    same change for `FileContext`, through which a stream's offset and
+  *    commit logs write; it also answers `rename`'s link checks in
+  *    process instead of forking `readlink`.
   */
 object GraftSession {
   /** Local cores (and shuffle partitions) of a CLI main's session:
@@ -72,6 +76,7 @@ object GraftSession {
       .config("spark.ui.retainedStages", RetainedStatus.toString)
       .config("spark.ui.retainedTasks", RetainedStatus.toString)
       .config("spark.hadoop.fs.file.impl", classOf[graft.fs.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl", classOf[graft.fs.GraftLocalFs].getName)
       // InferFiltersFromGenerate is EXCLUDED (r17, guide §4.4's
       // duplicated-expensive-expression trap in optimizer-rule form):
       // above every explode() the rule synthesizes `size(e) > 0 AND

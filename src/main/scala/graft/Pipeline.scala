@@ -1,10 +1,10 @@
 package graft
 
 import java.sql.Timestamp
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.MoneyMode
-import graft.operators.{Dedup, Flatten, ParquetTableStore, SyncControl}
+import graft.operators.{Checkpoints, Dedup, Flatten, ParquetTableStore, SyncControl}
 import graft.sources.PagedNdjsonSource
 
 /** End-to-end batch pipeline — the Spark re-expression of the reference's
@@ -27,8 +27,10 @@ import graft.sources.PagedNdjsonSource
   * Steps 2-5 are one sync round, [[Pipeline.mergeRound]], the same one the
   * streaming lifecycle and its batch twin run.
   *
-  * Tables are plain parquet directories under `warehouse/`; upsert writes
-  * via temp-dir + atomic rename (SURVEY §7.4 atomicity note). At cluster
+  * Tables are plain parquet directories under `warehouse/`; a new table
+  * is published via temp-dir + atomic rename (SURVEY §7.4 atomicity
+  * note), an existing one takes a row-level MERGE that rewrites only the
+  * files holding matched keys ([[ParquetTableStore.upsert]]). At cluster
   * scale the same flow targets a transactional table format; the operator
   * composition is unchanged.
   */
@@ -149,21 +151,29 @@ object Pipeline {
     *    [[ParquetTableStore.upsertAll]], skipped on an empty batch. Each
     *    upsert reduces its table's batch to one row per null-safe key
     *    ([[graft.operators.Upsert.keyDedup]]), the only per-table dedup.
-    * `raw` holds Schemas.rawOrder rows plus `_arrival_order`. The deduped
-    * batch is cached (six consumers) and released on every exit. */
+    * `raw` holds Schemas.rawOrder rows plus `_arrival_order`.
+    *
+    * The first-wins batch is materialized once ([[Checkpoints.materialize]])
+    * and released on every exit. That one pass also observes the round's
+    * high-water mark and row count (an [[Observation]]), so no separate
+    * aggregate runs. The six flattened frames over the checkpoint hold no
+    * nondeterministic expression, so each MERGE reads its own frame
+    * directly: Spark recomputes the projection and `keyDedup` from the
+    * checkpoint's in-memory blocks, and no source is written out. */
   def mergeRound(store: ParquetTableStore, raw: DataFrame,
                  moneyMode: MoneyMode = MoneyMode.Dbl): Round = {
-    val deduped = Dedup.firstWins(raw, Seq("id"), "_arrival_order")
-      .drop("_page_file", "_arrival_order")
-      .cache()
+    val stats = Observation()
+    val deduped = Checkpoints.materialize(
+      Dedup.firstWins(raw, Seq("id"), "_arrival_order")
+        .drop("_page_file", "_arrival_order")
+        .observe(stats, max(to_timestamp(col("updated_at"))).as("hwm"), count(lit(1)).as("rows")))
     try {
-      // high-water mark and batch size in one aggregate
-      val stats = deduped.agg(max(to_timestamp(col("updated_at"))), count(lit(1))).head()
-      val rows = stats.getLong(1)
+      val seen = stats.get
+      val rows = seen("rows").asInstanceOf[Long]
       if (rows > 0)
         store.upsertAll(Flatten.all(deduped, moneyMode).toSeq.map { case (name, df) =>
           (name, df, Schemas.uniqueKeys(name)) })
-      Round(Option(stats.getTimestamp(0)), rows)
-    } finally deduped.unpersist()
+      Round(Option(seen("hwm").asInstanceOf[Timestamp]), rows)
+    } finally Checkpoints.release(deduped)
   }
 }

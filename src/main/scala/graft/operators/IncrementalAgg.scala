@@ -105,12 +105,12 @@ object IncrementalAgg {
     * (`_epoch`, `_last_batch`), committed atomically with the counts:
     * `replace` is the all-or-nothing publish (staged write + swap with
     * a recoverable mid-swap backup) — NOT `upsert`, whose row-level
-    * MERGE commit is crash-safe only under re-run convergence, exactly
-    * what a marker-skip suppresses. A replay of an already-applied
-    * (epoch, id) is detected from the stored marker and skipped; after
-    * a crash at ANY point, the table holds either the old state (old
-    * marker → the replay applies once) or the new state (new marker →
-    * the replay is skipped) — never a double count, never silent loss.
+    * MERGE commit is not atomic (see [[ParquetTableStore.replace]]). A
+    * replay of an already-applied (epoch, id) is detected from the
+    * stored marker and skipped; after a crash at ANY point, the table
+    * holds either the old state (old marker → the replay applies once)
+    * or the new state (new marker → the replay is skipped) — never a
+    * double count, never silent loss.
     *
     * Epoch semantics: Structured Streaming batch ids RESTART AT ZERO
     * under a fresh checkpoint, so the marker is only meaningful within

@@ -3,7 +3,7 @@ package graft.operators
 import scala.jdk.CollectionConverters._
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.parquet.hadoop.metadata.ParquetMetadata
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge, SaveMode, SparkSession}
 import org.apache.spark.sql.execution.datasources.parquet.{ParquetReadSupport,
   ParquetToSparkSchemaConverter}
 import org.apache.spark.sql.functions.{col, count, lit}
@@ -27,7 +27,7 @@ import graft.sources.v2.{GraftCatalog, GraftParquetTable}
   * never by a Spark job: a table's schema for the operations that open
   * their own table ([[upsert]], [[delete]], [[sqlTable]] and the
   * compactions — one footer, see [[footerSchema]]), row counts
-  * ([[rowCounts]]) and whether a MERGE stage holds any row.
+  * ([[rowCounts]]) and whether a one-file table holds any row.
   *
   * All path operations go through Hadoop's [[FileSystem]], resolved from
   * the warehouse URI itself, so `file:///`, `hdfs://` and `s3a://`
@@ -137,13 +137,7 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     // table stranded at _swap_<name> would otherwise fail every routed
     // read as "does not exist" without ever being restored
     recoverTableBackup(name)
-    listParquet(new Path(path(name)))
-  }
-
-  /** (path → byte length) of the parquet files under `root`, at any
-    * depth, skipping hidden segments — [[listDataFiles]] without the
-    * table's crash recovery. */
-  private def listParquet(root: Path): Map[String, Long] = {
+    val root = new Path(path(name))
     val f = fs(root)
     if (!f.exists(root)) return Map.empty
     val out = Map.newBuilder[String, Long]
@@ -175,6 +169,15 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
   /** Rows in `files`, summed from their footers' row-group counts. */
   private def footerRows(files: Iterable[String]): Long =
     files.iterator.map(f => footer(f).getBlocks.asScala.map(_.getRowCount).sum).sum
+
+  /** Whether `name` is one data file whose footer counts no row. A
+    * row-level MERGE would take that file as its whole rewrite group and,
+    * from an empty batch, replace it with no file at all, leaving a table
+    * without a schema; [[upsert]] publishes such a table instead. */
+  private def isEmptyOneFile(name: String): Boolean = {
+    val files = listDataFiles(name).keys
+    files.size == 1 && footerRows(files) == 0L
+  }
 
   /** `name`'s schema as `spark.read.parquet` infers it, but from one
     * data file's footer on the driver instead of an inference job:
@@ -292,8 +295,11 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * whose commit is all-or-nothing, which callers that pair data with a
     * commit MARKER in the same frame (e.g.
     * [[IncrementalAgg.foldIntoStore]]) require: the row-level MERGE's
-    * group-pruned commit is only crash-safe under re-run convergence,
-    * which a marker-skip would suppress. Intended for small
+    * group-pruned commit is not atomic. It moves the rewritten files in
+    * before it deletes the replaced ones, so a crash between the two
+    * leaves the replaced files' rows in the table twice, and re-running
+    * the MERGE updates both copies instead of removing one (ROADMAP.md
+    * item 7, one table log, is the planned fix). Intended for small
     * state/dimension tables; a fact table should use [[upsert]]. */
   def replace(name: String, df: DataFrame): Unit = publish(name, df)
 
@@ -348,15 +354,24 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * a table without a data file goes through [[read]]. Nothing is counted
     * afterwards: a caller that wants row counts reads them for all its
     * tables at once ([[rowCounts]]). A lifecycle that upserts several
-    * tables per run goes through [[upsertAll]]. */
+    * tables per run goes through [[upsertAll]].
+    *
+    * Empty batches: an empty batch into a one-file table rewrites that
+    * file with the same rows and schema (the file is its own rewrite
+    * group, see [[graft.sources.v2.GraftParquetTable]]); into a table of
+    * two or more files it rewrites nothing. A one-file table whose footer
+    * counts no row is published from the batch instead
+    * ([[isEmptyOneFile]]). */
   def upsert(name: String, updates: DataFrame, keys: Seq[String]): Unit = {
     readKnown(name) match {
       case Some((current, flat)) =>
         checkNumericParity(name, current.schema, updates.schema)
-        if (flat && canRowLevelMerge(current.schema, updates.schema))
-          mergeFromStage(name, current.schema, Upsert.keyDedup(updates, keys), keys,
-            "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
-        else publish(name, Upsert.merge(current, updates, keys))
+        val batch = Upsert.keyDedup(updates, keys)
+        if (!flat || !canRowLevelMerge(current.schema, updates.schema))
+          publish(name, Upsert.merge(current, updates, keys))
+        else if (isEmptyOneFile(name)) publish(name, batch)
+        else mergeInto(name, current.schema, batch, keys,
+          "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *")
       case None =>
         publish(name, Upsert.keyDedup(updates, keys))
     }
@@ -365,14 +380,18 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
 
   /** The per-table MERGEs of one sync round — `(name, updates, keys)`
     * each, on DISTINCT tables — OVERLAPPED on a small driver thread pool.
-    * Each upsert is a chain of small jobs (stage batch, MERGE, compaction
-    * check) whose scheduling gaps and straggler tails the next table's
-    * jobs back-fill; three in flight is enough to fill the tail without
-    * the jobs fighting for cores. The batch pipeline, the streaming
-    * lifecycle and its batch twin all publish through here.
+    * Each upsert is a chain of small jobs (the MERGE's source and group
+    * filter, its rewrite, a compaction check) whose scheduling gaps and
+    * straggler tails the next table's jobs back-fill; three in flight is
+    * enough to fill the tail without the jobs fighting for cores. Every
+    * MERGE reads its `updates` directly, so frames over one
+    * nondeterministic batch must share a materialized copy of it
+    * ([[graft.Pipeline.mergeRound]]'s checkpoint); see [[mergeInto]].
+    * The batch pipeline, the streaming lifecycle and its batch twin all
+    * publish through here.
     * Safety prerequisites, each load-bearing: [[withMicrosTimestamps]] is
     * a depth-counted per-session pin (a restore racing another table's
-    * in-flight write would flip it to INT96); the MERGE source temp view
+    * in-flight publish would flip it to INT96); the MERGE source temp view
     * is named per invocation; [[graft.sources.v2.GraftCatalog]] registers
     * per-table idents in a concurrent map. StoreConcurrencySpec pins all
     * three; the batch-twin gate (q69) and IncrementalSpec pin that the
@@ -516,43 +535,34 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * store-private catalog) from `source`, with `when` as its WHEN clauses.
     * Null-safe key equality in the ON clause mirrors [[Upsert.merge]] (a
     * NULL key part must match itself or the row is re-inserted on every
-    * run, breaking idempotence T4). The source is staged as parquet and
-    * merged FROM THE STAGE — the reference's own staging-table shape
-    * (stage → MERGE → truncate, ref :483-590). This (a) makes the MERGE
-    * source deterministic (the pipeline's arrival-order column is
-    * nondeterministic lineage, which ReplaceData rejects in its
-    * group-filter subquery) and (b) avoids recomputing the source for the
-    * runtime file-pruning subquery AND the merge join.
+    * run, breaking idempotence T4).
     *
-    * A stage whose footers count zero rows skips the MERGE: it could
-    * change nothing, and on a one-file table whose file holds no row
-    * the one-file rewrite group (see GraftParquetTable) would replace
-    * that file with none, leaving a table without a schema. */
-  private def mergeFromStage(name: String, tableSchema: StructType,
-                             source: DataFrame, keys: Seq[String], when: String): Unit = {
-    val stage = new Path(s"$warehouse/_merge_src_$name")
-    val stageFs = fs(stage)
-    // source.sparkSession, not the store's: see publish (foreachBatch
-    // frames carry a cloned session with isolated conf)
-    withMicrosTimestamps(source.sparkSession) {
-      source.write.mode(SaveMode.Overwrite).parquet(stage.toString)
-    }
-    if (footerRows(listParquet(stage).keys) == 0L) {
-      stageFs.delete(stage, true)
-      return
-    }
-    val fq = ensureV2Table(name, tableSchema)
-    val view = s"__graft_merge_src_${java.util.UUID.randomUUID().toString.take(8)}"
-    // read back with the source's own schema: inferring it from the
-    // stage's footers would cost one more job per merge
-    spark.read.schema(source.schema).parquet(stage.toString).createOrReplaceTempView(view)
+    * The MERGE reads `source` itself: it is computed once for the runtime
+    * group-filter subquery (tables of two or more files) and once for the
+    * merge join. Both reads must see the same rows, so a source whose
+    * plan holds a nondeterministic expression (an arrival-order
+    * `monotonically_increasing_id()`, say) is materialized first
+    * ([[Checkpoints.materialize]], released afterwards); Spark would
+    * reject it at analysis otherwise. A caller that feeds several MERGEs
+    * from one such batch materializes it once itself, as
+    * [[graft.Pipeline.mergeRound]] does. The source is re-homed into the
+    * store's session, where the MERGE runs: a `foreachBatch` frame
+    * belongs to a cloned session whose temp views the store cannot see. */
+  private def mergeInto(name: String, tableSchema: StructType,
+                        source: DataFrame, keys: Seq[String], when: String): Unit = {
+    val pinned =
+      if (source.queryExecution.analyzed.deterministic) None
+      else Some(Checkpoints.materialize(source))
     try {
-      val on = keys.map(k => s"t.`$k` <=> u.`$k`").mkString(" AND ")
-      spark.sql(s"MERGE INTO $fq t USING $view u ON $on $when")
-    } finally {
-      spark.catalog.dropTempView(view)
-      stageFs.delete(stage, true)
-    }
+      val fq = ensureV2Table(name, tableSchema)
+      val view = s"__graft_merge_src_${java.util.UUID.randomUUID().toString.take(8)}"
+      GraftSqlBridge.ofRows(spark, pinned.getOrElse(source).queryExecution.analyzed)
+        .createOrReplaceTempView(view)
+      try {
+        val on = keys.map(k => s"t.`$k` <=> u.`$k`").mkString(" AND ")
+        spark.sql(s"MERGE INTO $fq t USING $view u ON $on $when")
+      } finally spark.catalog.dropTempView(view)
+    } finally pinned.foreach(Checkpoints.release)
   }
 
   /** All table columns carry through the v2 delete codec. Unlike
@@ -566,7 +576,11 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
     * `matches` (null-safe, mirroring [[Upsert.merge]]'s `<=>` — a
     * NULL-keyed row must be deletable by a NULL-keyed match). Returns the
     * number of rows removed; deleting keys that are not present is a
-    * no-op, so a crashed delete converges by re-running it.
+    * no-op. A crashed delete through the swap publish converges by
+    * re-running it; one through the row-level MERGE does not: a crash
+    * between the commit's move-in and its delete leaves the replaced
+    * files' surviving rows twice, which a re-run keeps (see [[replace]];
+    * ROADMAP.md item 7).
     *
     * Flat tables of codec-supported schemas run as `MERGE INTO ... WHEN
     * MATCHED THEN DELETE` against the v2 table — runtime group filtering
@@ -612,7 +626,7 @@ class ParquetTableStore(spark: SparkSession, warehouse: String,
         "its schema and becomes unreadable. Drop or rebuild the table " +
         "instead of deleting all rows.")
     if (flat && canRowLevelDelete(current.schema))
-      mergeFromStage(name, current.schema, keyFrame, keys, "WHEN MATCHED THEN DELETE")
+      mergeInto(name, current.schema, keyFrame, keys, "WHEN MATCHED THEN DELETE")
     else publish(name, current.join(renamed, cond, "left_anti"))
     removed
   }

@@ -67,8 +67,10 @@ import org.apache.spark.util.SerializableConfiguration
   *
   * Scope/caveats (documented):
   *  - single concurrent writer assumed; the selective commit moves new
-  *    files in before deleting replaced ones, so a crash window can leave
-  *    duplicates (re-running the MERGE converges) but never loses rows;
+  *    files in before deleting replaced ones, so a crash between the two
+  *    never loses rows but leaves the replaced files' rows twice, and a
+  *    re-run of the MERGE updates both copies rather than removing one
+  *    (ROADMAP.md item 7, one table log, is the planned fix);
   *  - supported column types: boolean/int/long/double/string/timestamp.
   */
 class GraftParquetTable(tableName: String, dir: String, tableSchema: StructType)
@@ -501,8 +503,9 @@ private[v2] class GraftParquetBatchWrite(dir: String, schema: StructType,
       if (replace && pruned.isDefined) {
         // group-pruned copy-on-write: replace ONLY the scanned files; every
         // other file is untouched (not rewritten, not moved). Move-in first,
-        // delete-replaced second: a crash between the two leaves duplicate
-        // rows (re-running the MERGE converges) but never loses rows.
+        // delete-replaced second: a crash between the two never loses rows
+        // but leaves the replaced files' rows twice, which a re-run of the
+        // MERGE does not remove (see the class doc).
         committed.foreach { f =>
           val src = new Path(f)
           if (!fs.rename(src, new Path(target, src.getName)))

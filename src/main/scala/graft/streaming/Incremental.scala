@@ -55,8 +55,8 @@ object Incremental {
       .option("checkpointLocation", checkpoint)     // T2 offsets
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         // within-batch arrival order for first-wins (files can batch
-        // together); an empty batch is skipped by the round's own
-        // aggregate. T4 idempotent MERGE; nothing is counted afterwards
+        // together); an empty batch is skipped by the round's observed
+        // row count. T4 idempotent MERGE; nothing is counted afterwards
         // (the stream writes no control rows, so it reports no counts)
         Pipeline.mergeRound(store, batch.drop("updated_ts")
           .withColumn("_arrival_order", monotonically_increasing_id()))

@@ -113,6 +113,75 @@ class PipelineSpec extends SparkSpec {
     assert(leaked.isEmpty, s"runs left persisted RDDs $leaked")
   }
 
+  /** Runs `body` and returns, once the listener bus has delivered every
+    * event it posted, the Spark jobs it started and the physical plans of
+    * its SQL executions. The bus is drained by a marker job: its start
+    * event reaches the listener after every earlier event. */
+  private def observed(body: => Unit): (Int, Seq[String]) = {
+    import org.apache.spark.scheduler._
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val sc = spark.sparkContext
+    val marker = s"drain-${java.util.UUID.randomUUID()}"
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (Option(e.properties).exists(_.getProperty("spark.job.description") == marker))
+          drained.countDown()
+        else jobs.incrementAndGet()
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart => plans.add(s.physicalPlanDescription)
+        case _ => ()
+      }
+    }
+    sc.addSparkListener(listener)
+    try {
+      body
+      sc.setJobDescription(marker)
+      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS), "listener bus did not drain")
+    } finally sc.removeSparkListener(listener)
+    (jobs.get, plans.toArray(Array.empty[String]).toSeq)
+  }
+
+  test("a steady round merges without a parquet stage, within a job ceiling, and releases its checkpoint") {
+    val wh = Files.createTempDirectory("graft_wh_stagefree").toString
+    val p = new Pipeline(spark, wh)
+    p.execute(pagesDir, forceFullLoad = true, runId = "load")
+    p.execute(pagesDir, forceFullLoad = true, runId = "warm")
+    val before = spark.sparkContext.getPersistentRDDs.keySet.toSet
+    var counts = Map.empty[String, Long]
+    val (jobs, plans) = observed {
+      counts = p.execute(pagesDir, forceFullLoad = true, runId = "steady")
+    }
+    info(s"jobs in a steady round: $jobs")
+    assert(counts("orders") == 4 && counts("line_items") == 4)
+    // every table merges its batch: no MERGE source is written out first
+    assert(plans.count(_.contains("MergeRows")) == Schemas.uniqueKeys.size, plans.mkString("\n"))
+    assert(!plans.exists(_.contains("/_merge_src_")), "a MERGE source was staged")
+    assert(!new java.io.File(wh).list().exists(_.startsWith("_merge_src_")))
+    // the checkpoint pass (2), six MERGEs of 4 jobs each and the control
+    // row (1); staging each source cost 2 more jobs per table
+    assert(jobs <= 27, s"$jobs jobs in a steady round")
+    val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet -- before
+    assert(leaked.isEmpty, s"the round left persisted RDDs $leaked")
+  }
+
+  test("a round under a reliable checkpoint dir observes the same batch") {
+    val dir = Files.createTempDirectory("graft_ckpt_round").toString
+    val wh = Files.createTempDirectory("graft_wh_reliable").toString
+    spark.conf.set(graft.operators.Checkpoints.DirKey, dir)
+    val counts = try new Pipeline(spark, wh).execute(pagesDir, forceFullLoad = true, runId = "r")
+      finally spark.conf.unset(graft.operators.Checkpoints.DirKey)
+    val clean = Files.createTempDirectory("graft_wh_local").toString
+    assert(counts == new Pipeline(spark, clean).execute(pagesDir, forceFullLoad = true, runId = "l"))
+    def control(at: String) = new Pipeline(spark, at).control.all()
+      .select("records_processed", "last_sync_timestamp").collect().toSeq
+    assert(control(wh) == control(clean) && control(wh).head.getLong(0) == 4L,
+      s"control rows ${control(wh)} vs ${control(clean)}")
+  }
+
   test("a money-mode failure inside the MERGE fan-out surfaces unwrapped; a re-run converges") {
     import graft.functions.MoneyMode
     val wh = Files.createTempDirectory("graft_wh_fanout").toString
